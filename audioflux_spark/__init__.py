@@ -17,7 +17,12 @@ reference repo's observable behavior, and published IR literature
 """
 
 from audioflux_spark.config import AnalyzerConfig, BM25Config, IndexConfig
+from audioflux_spark.plans import pyworker
 from audioflux_spark.plans.session import get_spark
+
+# runs in the driver and in every Python worker that unpickles an engine
+# kernel (each kernel references this package): see plans/pyworker.py
+pyworker.install()
 
 __all__ = [
     "AnalyzerConfig",

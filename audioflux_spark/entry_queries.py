@@ -605,8 +605,10 @@ def q_doc_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode per gram width, map-side-combinable groupBys keyed by
     (doc_id, gram), then a doc-level join of two doc-cardinality aggregates.
     Nothing global is materialized; no window functions."""
-    toks = _docs(spark, sf_dir).select(
-        "doc_id", tokens_col("text").alias("toks"), F.size(tokens_col("text")).alias("n_tokens")
+    toks = (
+        _docs(spark, sf_dir)
+        .select("doc_id", tokens_col("text").alias("toks"))
+        .select("doc_id", "toks", F.size("toks").alias("n_tokens"))
     )
 
     def grams(width: int, out: str) -> DataFrame:
@@ -1533,6 +1535,41 @@ def q_dedup_embedding_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _emb_dup_pairs(spark, sf_dir).orderBy("vec_id_a", "vec_id_b")
 
 
+def _gram_pairs(pdf, tau: int, blk: int):
+    """One IVF bucket's (vec_id_a < vec_id_b, cos_e6) pairs with cos_e6 ≥ tau.
+    Module-level so that the applyInPandas closure references this package
+    and each Python worker that runs it imports it (plans/pyworker.py)."""
+    import numpy as np
+    import pandas as pd
+
+    ids = pdf["vec_id"].to_numpy().astype(np.int64)
+    order = np.argsort(ids, kind="stable")
+    ids = ids[order]
+    X = np.stack(pdf["embedding"].to_numpy()[order]).astype(np.float64)
+    nrm = np.sqrt((X * X).sum(axis=1))
+    n = ids.size
+    out_a: list = []
+    out_b: list = []
+    out_c: list = []
+    # Gram computed in row blocks: memory ∝ blk·n, not n²
+    for i0 in range(0, n, blk):
+        i1 = min(i0 + blk, n)
+        cos = (X[i0:i1] @ X.T) / (nrm[i0:i1, None] * nrm[None, :])
+        cos_e6 = np.floor(cos * 1e6 + 0.5).astype(np.int64)
+        r_loc, c = np.nonzero(cos_e6 >= tau)
+        keep = c > (r_loc + i0)  # ids ascending → index order == id order
+        out_a.append(ids[r_loc[keep] + i0])
+        out_b.append(ids[c[keep]])
+        out_c.append(cos_e6[r_loc[keep], c[keep]])
+    return pd.DataFrame(
+        {
+            "vec_id_a": np.concatenate(out_a) if out_a else np.zeros(0, np.int64),
+            "vec_id_b": np.concatenate(out_b) if out_b else np.zeros(0, np.int64),
+            "cos_e6": np.concatenate(out_c) if out_c else np.zeros(0, np.int64),
+        }
+    )
+
+
 def _emb_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Within-IVF-bucket cosine pairs ≥ τ — the shared candidate subtree of
     q_dedup_embedding_pairs and q_dedup_semdedup.
@@ -1546,42 +1583,14 @@ def _emb_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     memory is bounded by a 1024-row Gram block, not |bucket|². cos_e6 uses
     floor(x·1e6 + 0.5): identical to ROUND half-up for every value the τ
     filter can keep (τ > 0)."""
-    import numpy as np
-    import pandas as pd
-
     reader = _ivf_reader(spark, sf_dir)
     tau = int(EMB_NEAR_DUP_TAU * 1e6)
     # captured on the driver so it ships by VALUE in the task closure
     # (module globals resolve against the executor's fresh import)
     blk = _GRAM_BLK
 
-    def bucket_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf["vec_id"].to_numpy().astype(np.int64)
-        order = np.argsort(ids, kind="stable")
-        ids = ids[order]
-        X = np.stack(pdf["embedding"].to_numpy()[order]).astype(np.float64)
-        nrm = np.sqrt((X * X).sum(axis=1))
-        n = ids.size
-        out_a: list = []
-        out_b: list = []
-        out_c: list = []
-        # Gram computed in row blocks: memory ∝ blk·n, not n²
-        for i0 in range(0, n, blk):
-            i1 = min(i0 + blk, n)
-            cos = (X[i0:i1] @ X.T) / (nrm[i0:i1, None] * nrm[None, :])
-            cos_e6 = np.floor(cos * 1e6 + 0.5).astype(np.int64)
-            r_loc, c = np.nonzero(cos_e6 >= tau)
-            keep = c > (r_loc + i0)  # ids ascending → index order == id order
-            out_a.append(ids[r_loc[keep] + i0])
-            out_b.append(ids[c[keep]])
-            out_c.append(cos_e6[r_loc[keep], c[keep]])
-        return pd.DataFrame(
-            {
-                "vec_id_a": np.concatenate(out_a) if out_a else np.zeros(0, np.int64),
-                "vec_id_b": np.concatenate(out_b) if out_b else np.zeros(0, np.int64),
-                "cos_e6": np.concatenate(out_c) if out_c else np.zeros(0, np.int64),
-            }
-        )
+    def bucket_pairs(pdf):
+        return _gram_pairs(pdf, tau, blk)
 
     return (
         reader.vectors.select("bucket", "vec_id", "embedding")

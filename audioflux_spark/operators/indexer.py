@@ -348,6 +348,19 @@ MERGED_COLS = [
 ]
 
 
+def _group_offsets(arr, starts: np.ndarray) -> np.ndarray:
+    """int32 value offsets of a Binary/List array ``arr`` regrouped so that
+    output row i spans input rows [starts[i], starts[i+1]) (the last group
+    runs to the end). Module-level on purpose: the merge kernel's reference
+    to it makes every worker that runs the kernel import this package."""
+    n = len(arr)
+    off = np.frombuffer(arr.buffers()[1], dtype=np.int32)[arr.offset : arr.offset + n + 1]
+    new_off = np.empty(starts.size + 1, dtype=np.int32)
+    new_off[:-1] = off[starts]
+    new_off[-1] = off[n]
+    return new_off
+
+
 def _make_merge_stream(key_cols: list[str]):
     """Arrow merge kernel (mapInArrow): merging is pure OFFSET SUBSAMPLING.
 
@@ -416,27 +429,15 @@ def _make_merge_stream(key_cols: list[str]):
 
         def merged_binary(col: str) -> pa.Array:
             arr = tbl.column(col).combine_chunks()
-            off = np.frombuffer(arr.buffers()[1], dtype=np.int32)[
-                arr.offset : arr.offset + n + 1
-            ]
-            new_off = np.empty(n_out + 1, dtype=np.int32)
-            new_off[:-1] = off[starts]
-            new_off[-1] = off[n]
             return pa.Array.from_buffers(
                 pa.binary(), n_out,
-                [None, pa.py_buffer(np.ascontiguousarray(new_off)), arr.buffers()[2]],
+                [None, pa.py_buffer(_group_offsets(arr, starts)), arr.buffers()[2]],
             )
 
         def merged_list(col: str) -> pa.Array:
             arr = tbl.column(col).combine_chunks()
-            off = np.frombuffer(arr.buffers()[1], dtype=np.int32)[
-                arr.offset : arr.offset + n + 1
-            ]
-            new_off = np.empty(n_out + 1, dtype=np.int32)
-            new_off[:-1] = off[starts]
-            new_off[-1] = off[n]
             return pa.ListArray.from_arrays(
-                pa.array(new_off, type=pa.int32()), arr.values
+                pa.array(_group_offsets(arr, starts), type=pa.int32()), arr.values
             )
 
         yield pa.RecordBatch.from_arrays(

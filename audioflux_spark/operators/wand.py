@@ -38,9 +38,12 @@ reaches the driver):
 from __future__ import annotations
 
 import os
+import warnings
 
 import numpy as np
 import pandas as pd
+import pyspark
+from py4j.protocol import Py4JError, Py4JJavaError
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -54,6 +57,27 @@ _EPS = 1e-9
 # default docs per WAND shard: sized so a shard's postings (worst case every
 # doc matching every query term) stay comfortably in one task's memory
 DEFAULT_SHARD_DOCS = 4_000_000
+
+
+def _block_ends(firsts: np.ndarray, last_doc: int) -> np.ndarray:
+    """Safe per-block end docIDs: no doc lives between one block's last and
+    the next block's first, so next_first - 1 bounds a block; the row-level
+    last_doc bounds the final block."""
+    ends = np.empty(firsts.size, dtype=np.int64)
+    if firsts.size:
+        ends[:-1] = firsts[1:] - 1
+        ends[-1] = last_doc
+    return ends
+
+
+def _byte_offsets(lengths) -> np.ndarray:
+    """Start offset of every block in its blob (plus the end), from the
+    per-block byte lengths."""
+    ln = np.asarray(lengths, dtype=np.int64)
+    out = np.empty(ln.size + 1, dtype=np.int64)
+    out[0] = 0
+    np.cumsum(ln, out=out[1:])
+    return out
 
 
 class _TermBlocks:
@@ -76,25 +100,10 @@ class _TermBlocks:
         self.counts = np.asarray(row["block_counts"], dtype=np.int64)
         self.firsts = np.asarray(row["block_firsts"], dtype=np.int64)
         self.ubs = idf * ub_scale * np.asarray(row["block_maxes"], dtype=np.float64)
-        nb = self.counts.size
-        # safe per-block end bound: no doc lives between one block's last and
-        # the next block's first, so next_first - 1 bounds the block;
-        # the row-level last_doc bounds the final block
-        self.ends = np.empty(nb, dtype=np.int64)
-        if nb:
-            self.ends[:-1] = self.firsts[1:] - 1
-            self.ends[-1] = int(row["last_doc"])
-
-        def _off(col: str) -> np.ndarray:
-            ln = np.asarray(row[col], dtype=np.int64)
-            out = np.empty(ln.size + 1, dtype=np.int64)
-            out[0] = 0
-            np.cumsum(ln, out=out[1:])
-            return out
-
-        self.doc_off = _off("block_doc_bytes")
-        self.tf_off = _off("block_tf_bytes")
-        self.dl_off = _off("block_dl_bytes")
+        self.ends = _block_ends(self.firsts, int(row["last_doc"]))
+        self.doc_off = _byte_offsets(row["block_doc_bytes"])
+        self.tf_off = _byte_offsets(row["block_tf_bytes"])
+        self.dl_off = _byte_offsets(row["block_dl_bytes"])
         self.doc_mv = memoryview(bytes(row["doc_blob"]))
         self.tf_mv = memoryview(bytes(row["tf_blob"]))
         self.dl_mv = memoryview(bytes(row["dl_blob"]))
@@ -285,20 +294,9 @@ def _make_shard_splitter(gen_ndocs: dict[int, int], shard_docs: int,
                 n_shards = max((n_docs_g + shard_docs - 1) // shard_docs, 1)
                 firsts = np.asarray(row["block_firsts"], dtype=np.int64)
                 counts = np.asarray(row["block_counts"], dtype=np.int64)
-                nb = firsts.size
-                ends = np.empty(nb, dtype=np.int64)
-                if nb:
-                    ends[:-1] = firsts[1:] - 1
-                    ends[-1] = int(row["last_doc"])
-                offs = {}
-                blobs = {}
-                for bcol, lcol in blob_cols:
-                    ln = np.asarray(row[lcol], dtype=np.int64)
-                    o = np.empty(ln.size + 1, dtype=np.int64)
-                    o[0] = 0
-                    np.cumsum(ln, out=o[1:])
-                    offs[lcol] = o
-                    blobs[bcol] = bytes(row[bcol])
+                ends = _block_ends(firsts, int(row["last_doc"]))
+                offs = {lcol: _byte_offsets(row[lcol]) for _, lcol in blob_cols}
+                blobs = {bcol: bytes(row[bcol]) for bcol, _ in blob_cols}
                 maxes = np.asarray(row["block_maxes"], dtype=np.float64)
                 for s in range(n_shards):
                     lo = s * shard_docs
@@ -405,13 +403,19 @@ _HITS_SCHEMA_KEYS = (
 )
 
 
+# The private mapInPandas surface of _map_in_pandas_cached (3-arg
+# ``_jdf.mapInPandas`` plus ``_build_java_profile``) is verified against
+# PySpark 4.1 only; any other version takes the public API.
+_PRIVATE_MAP_VERIFIED = tuple(int(p) for p in pyspark.__version__.split(".")[:2]) == (4, 1)
+
+
 def _serving_udf(reader: IndexReader, resolve_keys: bool):
     """(pandas_udf, plain_fn, schema) for the single-(query, gen, shard)
     scoring task, cached on the reader instance. The closure captures only
     reader-constant state, so one serialized UDF serves every query — the
     per-call mapInPandas path re-cloudpickles the scoring closure on EVERY
-    query (~40 ms of the ~0.3 s single-query latency; guide §4: pay
-    heavyweight init once)."""
+    query (~40 ms of driver time per query; guide §4: pay heavyweight init
+    once)."""
     cache = getattr(reader, "_wand_udf_cache", None)
     if cache is None:
         cache = {}
@@ -443,7 +447,10 @@ def _serving_udf(reader: IndexReader, resolve_keys: bool):
         score_one, returnType=schema,
         functionType=PythonEvalType.SQL_MAP_PANDAS_ITER_UDF,
     )
-    cache[resolve_keys] = {"udf": udf, "fn": score_one, "schema": schema}
+    cache[resolve_keys] = {
+        "udf": udf, "fn": score_one, "schema": schema,
+        "private_ok": _PRIVATE_MAP_VERIFIED, "jc": {},
+    }
     return cache[resolve_keys]
 
 
@@ -454,21 +461,31 @@ def _map_in_pandas_cached(df: DataFrame, entry, cols: list[str]) -> DataFrame:
     against the cached UDF object, whose ``_judf`` — the cloudpickled
     function + JVM UserDefinedPythonFunction — is created once and reused
     (pyspark caches it on the UserDefinedFunction instance). The applied
-    UDF *expression* (UDF over the fixed serving column names, unresolved
-    attributes) is likewise built once and re-resolved against each query's
-    child plan, skipping ~20 per-query Column py4j round-trips. Falls back
-    to the public API (identical semantics, per-call pickling) if the
-    private surface moves."""
+    UDF *expression* (UDF over the given column names, unresolved
+    attributes) is likewise built once per column list and re-resolved
+    against each query's child plan, skipping ~20 per-query Column py4j
+    round-trips. If the private surface has moved (a missing attribute, a
+    changed Python or JVM signature), warns and uses the public API
+    (identical semantics, per-call pickling) for this entry from then on."""
     udf, fn, schema = entry["udf"], entry["fn"], entry["schema"]
-    try:
-        jc = entry.get("jc")
-        if jc is None:
-            jc = udf(*[F.col(c) for c in cols])._jc
-            entry["jc"] = jc
-        jdf = df._jdf.mapInPandas(jc, False, df._build_java_profile(None))
-        return DataFrame(jdf, df.sparkSession)
-    except Exception:
-        return df.mapInPandas(fn, schema=schema)
+    if entry["private_ok"]:
+        try:
+            jc = entry["jc"].get(tuple(cols))
+            if jc is None:
+                jc = entry["jc"][tuple(cols)] = udf(*[F.col(c) for c in cols])._jc
+            jdf = df._jdf.mapInPandas(jc, False, df._build_java_profile(None))
+            return DataFrame(jdf, df.sparkSession)
+        except Py4JJavaError:
+            raise  # the JVM method ran and failed: a real error, not a moved surface
+        except (AttributeError, TypeError, Py4JError) as e:
+            entry["private_ok"] = False
+            warnings.warn(
+                f"private mapInPandas surface unavailable ({e!r}); "
+                "this reader serves through the public API from now on",
+                RuntimeWarning,
+                stacklevel=2,
+            )
+    return df.mapInPandas(fn, schema=schema)
 
 
 def _sharded_hits(
@@ -518,11 +535,15 @@ def _sharded_hits(
         # SERVING FAST PATH (single query, single generation, single shard):
         # the general construction below costs ~0.15 s of DRIVER time per
         # query — a dozen withColumn/drop py4j round-trips plus a fresh
-        # cloudpickle of the scoring closure inside mapInPandas — which is
-        # ~40% of single-query latency. Build the identical plan as ONE
-        # filter + ONE select (term-IN pushdown unchanged) and score through
-        # the reader-cached, pre-serialized UDF. Same columns, same kernel,
-        # same results.
+        # cloudpickle of the scoring closure inside mapInPandas. Build the
+        # identical plan as ONE filter + ONE select (term-IN pushdown
+        # unchanged) and score through the reader-cached, pre-serialized
+        # UDF. Same columns, same kernel, same results. What a query then
+        # costs is mostly JVM CPU (analysis, scheduling, scan): on 4 cores
+        # with a warm session, per query ~0.2 s JVM, ~0.05 s Python worker
+        # and ~0.02 s driver CPU, ~0.15 s wall. The worker's share stays
+        # small only while plans/pyworker.py keeps PySpark's per-task set-up
+        # from re-reading every zip on the worker's path.
         g = reader.generations[0]
         qid, _text, k0 = queries[0]
         cached = getattr(g, "_wand_fast_cols", None)

@@ -231,7 +231,8 @@ def test_serving_fast_path_matches_general(spark, _serving_index, queries):
 def test_serving_udf_cached_per_reader(spark, _serving_index, queries):
     """The serialized scoring UDF and its applied expression are built once
     per reader and reused across queries (the per-query cloudpickle was
-    ~40 ms of single-query latency)."""
+    ~40 ms of single-query latency); the expression is keyed by its column
+    list."""
     from audioflux_spark.operators.wand import bm25_topk_indexed
     from audioflux_spark.sources.segments import IndexReader
 
@@ -239,34 +240,49 @@ def test_serving_udf_cached_per_reader(spark, _serving_index, queries):
     bm25_topk_indexed(reader, queries[0].query_text, 5).collect()
     cache = reader._wand_udf_cache
     entry = cache[True]
-    judf_before = entry["udf"].func and entry["udf"]  # same wrapped object
-    jc_before = entry.get("jc")
-    assert jc_before is not None
+    udf_before = entry["udf"]
+    (cols, jc_before), = entry["jc"].items()
+    assert isinstance(cols, tuple) and "query_id" in cols
     bm25_topk_indexed(reader, queries[1].query_text, 5).collect()
     assert reader._wand_udf_cache is cache
-    assert cache[True]["udf"] is judf_before
-    assert cache[True]["jc"] is jc_before
+    assert cache[True]["udf"] is udf_before
+    assert list(cache[True]["jc"]) == [cols]
+    assert cache[True]["jc"][cols] is jc_before
 
 
 def test_serving_fallback_public_mapinpandas(spark, _serving_index, queries, monkeypatch):
-    """If the private mapInPandas surface moves, the fast path must fall
-    back to the public API with identical results."""
+    """If the private mapInPandas surface moves, the fast path falls back to
+    the public API with identical rows, and remembers that: later queries
+    do not try the private call again."""
+    import sys
+
+    from pyspark.sql.pandas.map_ops import PandasMapOpsMixin
+
     import audioflux_spark.operators.wand as wand
     from audioflux_spark.sources.segments import IndexReader
 
+    monkeypatch.setattr(wand, "_PRIVATE_MAP_VERIFIED", True)
     reader = IndexReader(spark, _serving_index)
-    q = queries[0]
-    want = wand.bm25_topk_indexed(reader, q.query_text, q.k).collect()
+    want = [wand.bm25_topk_indexed(reader, q.query_text, q.k).collect() for q in queries[:3]]
 
+    # the real DataFrame._build_java_profile disappears for callers outside
+    # PySpark (a renamed private method), while PySpark's own public
+    # mapInPandas keeps working
+    real_profile = PandasMapOpsMixin._build_java_profile
+    refused = []
+
+    def moved_profile(self, profile=None):
+        caller = sys._getframe(1).f_globals.get("__name__", "")
+        if not caller.startswith("pyspark."):
+            refused.append(caller)
+            raise AttributeError("'DataFrame' object has no attribute '_build_java_profile'")
+        return real_profile(self, profile)
+
+    monkeypatch.setattr(PandasMapOpsMixin, "_build_java_profile", moved_profile)
     reader2 = IndexReader(spark, _serving_index)
-
-    class _Boom:
-        def __call__(self, *a, **kw):
-            raise RuntimeError("private surface moved")
-
-    def broken_map(df, entry, cols):
-        return df.mapInPandas(entry["fn"], schema=entry["schema"])
-
-    monkeypatch.setattr(wand, "_map_in_pandas_cached", broken_map)
-    got = wand.bm25_topk_indexed(reader2, q.query_text, q.k).collect()
+    with pytest.warns(RuntimeWarning, match="private mapInPandas surface unavailable"):
+        got = [wand.bm25_topk_indexed(reader2, queries[0].query_text, queries[0].k).collect()]
+    got += [wand.bm25_topk_indexed(reader2, q.query_text, q.k).collect() for q in queries[1:3]]
     assert got == want
+    assert refused == ["audioflux_spark.operators.wand"]  # tried once, then remembered
+    assert reader2._wand_udf_cache[True]["private_ok"] is False
