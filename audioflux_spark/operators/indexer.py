@@ -28,6 +28,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import uuid
 from dataclasses import dataclass
 
 import numpy as np
@@ -60,6 +61,8 @@ DOCSTORE_SCHEMA = (
     "doc_id long, conv_id string, turn_idx int, role string, text string, "
     "tool string, ts timestamp_ntz, doc_len long, seg_id int"
 )
+# one row per freshly built partition, returned by the partial writer
+LINEAGE_SCHEMA = "seg_id int, terms long, postings long, bytes long"
 
 
 @dataclass(frozen=True)
@@ -91,7 +94,7 @@ class IndexMeta:
         return IndexMeta(**d)
 
 
-def _partitioned_base(transcripts: DataFrame, n_partitions: int) -> tuple[DataFrame, bool]:
+def _partitioned_base(transcripts: DataFrame, n_partitions: int) -> tuple[DataFrame, bool, int]:
     """Build partitions = deterministic scan splits when possible.
 
     The raw-text shuffle was the build's biggest I/O (the whole corpus
@@ -109,17 +112,20 @@ def _partitioned_base(transcripts: DataFrame, n_partitions: int) -> tuple[DataFr
     only key-ordered WITHIN a partition; the query layer breaks score ties
     by the real (conv_id, turn_idx) keys, never by docID.
 
-    Returns (base, shuffled): callers persist the base only when a shuffle
-    happened (re-scanning a page-cached parquet is cheaper than a persist).
+    Returns (base, shuffled, P): callers persist the base only when a shuffle
+    happened (re-scanning a page-cached parquet is cheaper than a persist);
+    P is the base's partition count (asking the sorted base for it again
+    launches jobs).
     """
     in_parts = transcripts.rdd.getNumPartitions()
     if in_parts >= n_partitions:
-        return transcripts.sortWithinPartitions("conv_id", "turn_idx"), False
+        return transcripts.sortWithinPartitions("conv_id", "turn_idx"), False, in_parts
     return (
         transcripts.repartition(n_partitions, "conv_id").sortWithinPartitions(
             "conv_id", "turn_idx"
         ),
         True,
+        n_partitions,
     )
 
 
@@ -185,6 +191,30 @@ def _docstore_df(with_pid: DataFrame, offsets: list[int], keep: set[int], cfg: E
     )
 
 
+def _segment_fields() -> list:
+    """Arrow fields of a segment row (MERGED_SCHEMA)."""
+    import pyarrow as pa
+
+    return [
+        ("term", pa.string()),
+        ("df", pa.int64()),
+        ("first_doc", pa.int64()),
+        ("last_doc", pa.int64()),
+        ("doc_blob", pa.binary()),
+        ("tf_blob", pa.binary()),
+        ("dl_blob", pa.binary()),
+        ("pos_blob", pa.binary()),
+        ("block_counts", pa.list_(pa.int32())),
+        ("block_firsts", pa.list_(pa.int64())),
+        ("block_maxes", pa.list_(pa.float64())),
+        ("block_doc_bytes", pa.list_(pa.int32())),
+        ("block_tf_bytes", pa.list_(pa.int32())),
+        ("block_dl_bytes", pa.list_(pa.int32())),
+        ("block_pos_bytes", pa.list_(pa.int32())),
+        ("part_counts", pa.list_(pa.int64())),
+    ]
+
+
 def _make_segment_fn(offsets: list[int], keep: set[int], avgdl: float, cfg: EngineConfig):
     """Arrow-native segment kernel (mapInArrow).
 
@@ -203,27 +233,7 @@ def _make_segment_fn(offsets: list[int], keep: set[int], avgdl: float, cfg: Engi
     lowercase = cfg.analyzer.lowercase
     store_pos = cfg.index.store_positions
 
-    out_schema = pa.schema(
-        [
-            ("seg_id", pa.int32()),
-            ("term", pa.string()),
-            ("df", pa.int64()),
-            ("first_doc", pa.int64()),
-            ("last_doc", pa.int64()),
-            ("doc_blob", pa.binary()),
-            ("tf_blob", pa.binary()),
-            ("dl_blob", pa.binary()),
-            ("pos_blob", pa.binary()),
-            ("block_counts", pa.list_(pa.int32())),
-            ("block_firsts", pa.list_(pa.int64())),
-            ("block_maxes", pa.list_(pa.float64())),
-            ("block_doc_bytes", pa.list_(pa.int32())),
-            ("block_tf_bytes", pa.list_(pa.int32())),
-            ("block_dl_bytes", pa.list_(pa.int32())),
-            ("block_pos_bytes", pa.list_(pa.int32())),
-            ("part_counts", pa.list_(pa.int64())),
-        ]
-    )
+    out_schema = pa.schema([("seg_id", pa.int32()), *_segment_fields()])
 
     def build_segments(batches):
         import pyarrow.compute as pc
@@ -340,14 +350,6 @@ def _make_segment_fn(offsets: list[int], keep: set[int], avgdl: float, cfg: Engi
     return build_segments
 
 
-MERGED_COLS = [
-    "term", "df", "first_doc", "last_doc", "doc_blob", "tf_blob", "dl_blob",
-    "pos_blob", "block_counts", "block_firsts", "block_maxes",
-    "block_doc_bytes", "block_tf_bytes", "block_dl_bytes", "block_pos_bytes",
-    "part_counts",
-]
-
-
 def _group_offsets(arr, starts: np.ndarray) -> np.ndarray:
     """int32 value offsets of a Binary/List array ``arr`` regrouped so that
     output row i spans input rows [starts[i], starts[i+1]) (the last group
@@ -376,26 +378,7 @@ def _make_merge_stream(key_cols: list[str]):
     """
     import pyarrow as pa
 
-    out_schema = pa.schema(
-        [
-            ("term", pa.string()),
-            ("df", pa.int64()),
-            ("first_doc", pa.int64()),
-            ("last_doc", pa.int64()),
-            ("doc_blob", pa.binary()),
-            ("tf_blob", pa.binary()),
-            ("dl_blob", pa.binary()),
-            ("pos_blob", pa.binary()),
-            ("block_counts", pa.list_(pa.int32())),
-            ("block_firsts", pa.list_(pa.int64())),
-            ("block_maxes", pa.list_(pa.float64())),
-            ("block_doc_bytes", pa.list_(pa.int32())),
-            ("block_tf_bytes", pa.list_(pa.int32())),
-            ("block_dl_bytes", pa.list_(pa.int32())),
-            ("block_pos_bytes", pa.list_(pa.int32())),
-            ("part_counts", pa.list_(pa.int64())),
-        ]
-    )
+    out_schema = pa.schema(_segment_fields())
 
     def merge_stream(batches):
         import pyarrow.compute as pc
@@ -465,6 +448,132 @@ def _make_merge_stream(key_cols: list[str]):
     return merge_stream
 
 
+# term is unique within a file and the doc/dl blobs are near-unique varint
+# streams: a dictionary there only overflows back to PLAIN (parquet-mr made
+# the same split by fallback); every other column repeats values
+_NO_DICTIONARY = frozenset({"term", "doc_blob", "dl_blob"})
+
+
+def _write_segment_file(table, path: str) -> None:
+    """The one writer of partial and merged segment files, called by the
+    Arrow kernel that built ``table`` (the JVM never sees the blobs).
+
+    Written under a hidden temporary name in ``path``'s directory, then
+    renamed over ``path``: a retried or speculative task rewrites identical
+    bytes, and readers (Spark skips hidden files) never see a half-written
+    file. Settings: snappy (the cheapest codec to encode and decode; zstd
+    level 1 measured ~25% smaller segment files for ~10% more write CPU),
+    dictionary pages only where values repeat, no embedded Arrow schema
+    (readers pass the declared schemas), and the page index parquet-mr
+    writes by default, so `term IN (...)` can skip pages.
+    """
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    directory, name = os.path.split(path)
+    os.makedirs(directory, exist_ok=True)
+    tmp = os.path.join(directory, f".{name}.{uuid.uuid4().hex}.tmp")
+    dictionary_cols = [
+        f"{f.name}.list.element" if pa.types.is_list(f.type) else f.name
+        for f in table.schema
+        if f.name not in _NO_DICTIONARY
+    ]
+    try:
+        pq.write_table(
+            table, tmp, compression="snappy", use_dictionary=dictionary_cols,
+            store_schema=False, write_page_index=True,
+        )
+        os.replace(tmp, path)
+    finally:
+        if os.path.exists(tmp):
+            os.unlink(tmp)
+
+
+def _make_partial_writer(segment_fn, partial_dir: str):
+    """Wraps the segment kernel: each built partition is written from its
+    Arrow batch to ``seg_id=<pid>/part-00000.parquet`` under partial_dir, and
+    the task returns one lineage row (LINEAGE_SCHEMA) instead of the blobs."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    def write_partials(batches):
+        for batch in segment_fn(batches):
+            pid = batch.column("seg_id")[0].as_py()
+            tbl = pa.Table.from_batches([batch]).drop_columns(["seg_id"])
+            _write_segment_file(
+                tbl, os.path.join(partial_dir, f"seg_id={pid}", "part-00000.parquet")
+            )
+            nbytes = sum(
+                pc.sum(pc.binary_length(tbl.column(c))).as_py() or 0
+                for c in ("doc_blob", "tf_blob", "dl_blob")
+            )
+            yield pa.RecordBatch.from_pydict(
+                {
+                    "seg_id": pa.array([pid], pa.int32()),
+                    "terms": pa.array([tbl.num_rows], pa.int64()),
+                    "postings": pa.array([pc.sum(tbl.column("df")).as_py()], pa.int64()),
+                    "bytes": pa.array([nbytes], pa.int64()),
+                }
+            )
+
+    return write_partials
+
+
+def _make_merge_writer(merge_fn, out_dir: str):
+    """Wraps a merge kernel: the task writes its merged range to
+    ``part-<partition id>.parquet`` under out_dir and returns one
+    (part, terms) row."""
+    import pyarrow as pa
+
+    def write_merged(batches):
+        from pyspark import TaskContext
+
+        part = TaskContext.get().partitionId()
+        for batch in merge_fn(batches):
+            _write_segment_file(
+                pa.Table.from_batches([batch]),
+                os.path.join(out_dir, f"part-{part:05d}.parquet"),
+            )
+            yield pa.RecordBatch.from_pydict(
+                {
+                    "part": pa.array([part], pa.int32()),
+                    "terms": pa.array([batch.num_rows], pa.int64()),
+                }
+            )
+
+    return write_merged
+
+
+def write_merged_segments(partials: DataFrame, out_dir: str, n_ranges: int) -> None:
+    """Final merge stage and the only way merged segments are written
+    (build, both merge strategies, compaction): range-partition the partial
+    rows by term, merge each range in the Arrow kernel, and write it from
+    that kernel as one term-sorted file, so `term IN (...)` prunes files and
+    row groups at query time.
+
+    The files go to a hidden sibling directory that replaces out_dir only
+    once every range is written: a merge killed midway leaves no out_dir,
+    and a resumed build merges again instead of serving a partial one.
+    """
+    parent, name = os.path.split(os.path.abspath(out_dir))
+    staging = os.path.join(parent, f".{name}.tmp")
+    shutil.rmtree(staging, ignore_errors=True)
+    os.makedirs(staging)
+    try:
+        partials.repartitionByRange(n_ranges, "term").mapInArrow(
+            _make_merge_writer(_make_merge_stream(["term"]), staging),
+            schema="part int, terms long",
+        ).collect()
+        _publish(staging, out_dir)
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)
+
+
+def _publish(staging: str, out_dir: str) -> None:
+    shutil.rmtree(out_dir, ignore_errors=True)
+    os.rename(staging, out_dir)
+
+
 def _phase_timer():
     """AFSPARK_BUILD_PROFILE=1 → stage wall times on stderr (scaling triage)."""
     import sys
@@ -499,10 +608,9 @@ def build_index(
     os.makedirs(index_dir, exist_ok=True)
     mark = _phase_timer()
 
-    base, shuffled = _partitioned_base(transcripts, cfg.index.build_partitions)
+    base, shuffled, P = _partitioned_base(transcripts, cfg.index.build_partitions)
     if shuffled:
         base = base.persist()
-    P = base.rdd.getNumPartitions()
     with_pid = base.withColumn("pid", F.spark_partition_id())
     # one combined pass: fingerprints + corpus stats (no separate scan)
     fps, n_docs = _partition_stats(with_pid, cfg)
@@ -522,6 +630,9 @@ def build_index(
 
     partial_dir = os.path.join(index_dir, "segments_partial")
     docstore_dir = os.path.join(index_dir, "docstore")
+    segments_dir = os.path.join(index_dir, "segments")
+    for d in (partial_dir, docstore_dir):
+        os.makedirs(d, exist_ok=True)
 
     # ghost cleanup: a resumed index_dir may carry seg_id dirs from a PREVIOUS
     # partition layout (different split config or smaller input → fewer pids).
@@ -530,16 +641,20 @@ def build_index(
     # drop its manifest entry, and force a re-merge.
     ghosts = False
     for d in (partial_dir, docstore_dir):
-        if os.path.isdir(d):
-            for name in os.listdir(d):
-                if name.startswith("seg_id="):
-                    pid = int(name.split("=", 1)[1])
-                    if pid not in fps:
-                        shutil.rmtree(os.path.join(d, name))
-                        ghosts = True
+        for name in os.listdir(d):
+            if name.startswith("seg_id="):
+                pid = int(name.split("=", 1)[1])
+                if pid not in fps:
+                    shutil.rmtree(os.path.join(d, name))
+                    ghosts = True
     for pid in sorted(set(manifest.entries) - set(fps)):
         del manifest.entries[pid]
         ghosts = True
+    # the merged segments are stale from here on: unpublish them before the
+    # manifest records any change, so a build killed anywhere before the
+    # merge publishes again finds no segments/ and merges on resume
+    if missing or ghosts:
+        shutil.rmtree(segments_dir, ignore_errors=True)
     if ghosts:
         save_manifest(index_dir, manifest)
 
@@ -552,12 +667,10 @@ def build_index(
                 if os.path.exists(sub):
                     shutil.rmtree(sub)
 
-        # snappy for the build-side writes: the session default is zstd
-        # (right for long-lived text tables), but the docstore write is on
-        # the build's critical path and snappy encodes text ~2-3x faster at
-        # a size cost the scratch layout absorbs; the posting blobs below
-        # are varint streams (high-entropy bytes) where zstd is nearly pure
-        # CPU overhead (guide §2.3/§6: measure compression per payload)
+        # the docstore is the one build output written by Spark's JVM writer
+        # (its text never enters Python). snappy, not the session's zstd: the
+        # write is on the build's critical path and snappy encodes text ~2-3x
+        # faster at a size cost the scratch layout absorbs
         _docstore_df(with_pid, offsets, keep, cfg).write.partitionBy(
             "seg_id"
         ).mode("append").option("compression", "snappy").parquet(docstore_dir)
@@ -565,46 +678,26 @@ def build_index(
 
     # corpus token totals from the docstore's doc_len column (columnar scan
     # of one int column — the text itself is never re-tokenized for stats)
-    if os.path.isdir(docstore_dir):
-        total_tokens = int(
-            spark.read.parquet(docstore_dir).agg(F.sum("doc_len")).first()[0] or 0
-        )
-    else:
-        total_tokens = 0
+    total_tokens = int(
+        spark.read.schema(DOCSTORE_SCHEMA).parquet(docstore_dir)
+        .agg(F.sum("doc_len")).first()[0] or 0
+    )
     avgdl = (total_tokens / n_docs) if n_docs else 0.0
     mark("token_stats")
 
     if missing:
-        with_pid.select("pid", "text").mapInArrow(
-            _make_segment_fn(offsets, keep, avgdl, cfg), schema=PARTIAL_SCHEMA
-        ).write.partitionBy("seg_id").mode("append").option(
-            "compression", "snappy"
-        ).parquet(partial_dir)
+        # each task writes its partition's partial segments itself and
+        # returns that partition's lineage row: no posting blob crosses into
+        # the JVM, and no second job reads the partials back for lineage
+        lineage = with_pid.select("pid", "text").mapInArrow(
+            _make_partial_writer(
+                _make_segment_fn(offsets, keep, avgdl, cfg), os.path.abspath(partial_dir)
+            ),
+            schema=LINEAGE_SCHEMA,
+        ).collect()
         mark("partials")
 
-        # lineage metrics per freshly-built partition
-        stats = (
-            spark.read.parquet(partial_dir)
-            .filter(F.col("seg_id").isin(missing))
-            .groupBy("seg_id")
-            .agg(
-                F.count(F.lit(1)).alias("terms"),
-                F.sum("df").alias("postings"),
-                # blob sizes from the per-block byte-length arrays (their sum
-                # IS each blob's length) — octet_length on the blobs forced
-                # this stats pass to read every blob column from parquet
-                F.sum(
-                    F.aggregate("block_doc_bytes", F.lit(0).cast("long"),
-                                lambda a, x: a + x)
-                    + F.aggregate("block_tf_bytes", F.lit(0).cast("long"),
-                                  lambda a, x: a + x)
-                    + F.aggregate("block_dl_bytes", F.lit(0).cast("long"),
-                                  lambda a, x: a + x)
-                ).alias("bytes"),
-            )
-            .collect()
-        )
-        stat_by_pid = {int(r["seg_id"]): r for r in stats}
+        stat_by_pid = {int(r["seg_id"]): r for r in lineage}
         for pid in missing:
             r = stat_by_pid.get(pid)
             manifest.entries[pid] = PartitionEntry(
@@ -628,9 +721,9 @@ def build_index(
     if shuffled:
         base.unpersist()
 
-    # ---- merge phase: two-phase salted repartition-by-term ----
-    # skip when resuming an untouched, fully-merged index
-    if missing or ghosts or not os.path.exists(os.path.join(index_dir, "segments")):
+    # ---- merge phase: skipped only when resuming an untouched index whose
+    # merge was published (any change above unpublished segments/)
+    if not os.path.exists(segments_dir):
         merge_segments(spark, index_dir, cfg, n_partials=(max(fps) + 1 if fps else 0))
     mark("merge")
 
@@ -666,12 +759,12 @@ def merge_segments(
     cfg: EngineConfig = DEFAULT,
     n_partials: int | None = None,
 ) -> None:
+    """(Re)merge segments_partial/ into segments/; the previous segments/
+    stays readable until the new one is published."""
     partial_dir = os.path.join(index_dir, "segments_partial")
     out_dir = os.path.join(index_dir, "segments")
-    if os.path.exists(out_dir):
-        shutil.rmtree(out_dir)
 
-    partials = spark.read.parquet(partial_dir)
+    partials = spark.read.schema(PARTIAL_SCHEMA).parquet(partial_dir)
     S = cfg.index.salt_buckets
     # actual partition count (scan-split partitioning may exceed the config);
     # callers that know it pass it and save a scan job
@@ -691,21 +784,12 @@ def merge_segments(
         # SINGLE-PHASE: even the hottest term has ≤ hot_term_partials*S
         # partials, which one merge task absorbs comfortably — the salted
         # pre-merge would only add a full extra shuffle of the index.
-        # repartitionByRange(term) puts each term's partials in one
-        # partition AND makes every output file a term range (the kernel
-        # emits term-sorted rows), so `term IN (...)` prunes files/row
-        # groups at query time.
-        # persisted: repartitionByRange executes its child TWICE (range-
-        # boundary sampling pass + the real exchange), and the child here
-        # is a full scan of every blob column — without the persist the
-        # whole partial index is read and decoded from parquet twice
-        # (measured: merge was the largest warm build phase, 3.2 s of 8.7)
-        partials = partials.persist()
-        merged = partials.repartitionByRange(Qf, "term").mapInArrow(
-            _make_merge_stream(["term"]), schema=MERGED_SCHEMA
-        )
-        merged.write.mode("overwrite").option("compression", "snappy").parquet(out_dir)
-        partials.unpersist()
+        # Not persisted, although repartitionByRange's boundary sampler scans
+        # the partials a second time: caching every blob column in the JVM
+        # cost more than the second scan (standalone merge, 600-conversation
+        # corpus, 4 cores, medians of 6: 1.69-1.86 s JVM CPU without the
+        # persist, 1.76-1.93 s with it; lower in 4 of 4 alternating pairs)
+        write_merged_segments(partials, out_dir, Qf)
         return
 
     # TWO-PHASE (cluster scale: 10^3+ build partitions → Zipf-hot terms have
@@ -736,8 +820,5 @@ def merge_segments(
         .mapInArrow(_make_merge_stream(["term", "salt"]), schema=MERGED_SCHEMA)
         .persist()
     )
-    merged = p1.repartitionByRange(Qf, "term").mapInArrow(
-        _make_merge_stream(["term"]), schema=MERGED_SCHEMA
-    )
-    merged.write.mode("overwrite").option("compression", "snappy").parquet(out_dir)
+    write_merged_segments(p1, out_dir, Qf)
     p1.unpersist()

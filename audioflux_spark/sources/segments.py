@@ -20,7 +20,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from audioflux_spark.operators.indexer import IndexMeta
+from audioflux_spark.operators.indexer import DOCSTORE_SCHEMA, MERGED_SCHEMA, IndexMeta
 
 GENERATIONS_SUBDIR = "generations"
 
@@ -31,8 +31,14 @@ class _Generation:
         self.dir = gen_dir
         with open(os.path.join(gen_dir, "meta.json")) as f:
             self.meta = IndexMeta.from_json(f.read())
-        self.segments: DataFrame = spark.read.parquet(os.path.join(gen_dir, "segments"))
-        self.docstore: DataFrame = spark.read.parquet(os.path.join(gen_dir, "docstore"))
+        # declared schemas: no schema-inference job per open, and a merge
+        # that wrote no files still opens as an empty index
+        self.segments: DataFrame = spark.read.schema(MERGED_SCHEMA).parquet(
+            os.path.join(gen_dir, "segments")
+        )
+        self.docstore: DataFrame = spark.read.schema(DOCSTORE_SCHEMA).parquet(
+            os.path.join(gen_dir, "docstore")
+        )
 
 
 class IndexReader:

@@ -60,7 +60,7 @@ def compact_index(
     makes compaction pure metadata arithmetic: every block's delta chain is
     re-anchored by its stored first docID, so shifting a generation's docID
     space is `block_firsts + offset` (a JVM array transform) — blob bytes are
-    reused verbatim, and the existing offset-subsampling merge stream
+    reused verbatim, and the build's merge writer (write_merged_segments)
     concatenates the per-generation rows per term in docID order (generation
     doc ranges are disjoint after offsetting).
 
@@ -71,11 +71,7 @@ def compact_index(
 
     from pyspark.sql import functions as F
 
-    from audioflux_spark.operators.indexer import (
-        MERGED_SCHEMA,
-        IndexMeta,
-        _make_merge_stream,
-    )
+    from audioflux_spark.operators.indexer import IndexMeta, write_merged_segments
     from audioflux_spark.plans.checkpoint import Manifest, save_manifest
 
     reader = IndexReader(spark, index_dir)
@@ -126,10 +122,7 @@ def compact_index(
 
     seg_all = reduce(DataFrame.unionByName, seg_parts)
     Qf = max(cfg.index.build_partitions // 4, 1)
-    merged = seg_all.repartitionByRange(Qf, "term").mapInArrow(
-        _make_merge_stream(["term"]), schema=MERGED_SCHEMA
-    )
-    merged.write.mode("overwrite").parquet(os.path.join(out_dir, "segments"))
+    write_merged_segments(seg_all, os.path.join(out_dir, "segments"), Qf)
 
     ds_all = reduce(DataFrame.unionByName, ds_parts)
     # range-partition + sort by doc_id: doc_id IN (...) lookups keep their

@@ -186,6 +186,18 @@ def test_index_inspect_cli(index_dir):
     assert offs == sorted(offs) and offs[0] == 0
 
 
+def _segset(spark, d):
+    rows = (
+        spark.read.parquet(os.path.join(d, "segments"))
+        .select("term", "df", "doc_blob", "tf_blob", "dl_blob")
+        .collect()
+    )
+    return {
+        r["term"]: (r["df"], bytes(r["doc_blob"]), bytes(r["tf_blob"]), bytes(r["dl_blob"]))
+        for r in rows
+    }
+
+
 def test_resume_byte_identical(spark, transcripts_sdf, index_dir, tmp_path_factory):
     """F5: truncate the manifest + delete half the partial partitions; the
     resumed build must only rebuild those and produce blob-identical merged
@@ -214,17 +226,155 @@ def test_resume_byte_identical(spark, transcripts_sdf, index_dir, tmp_path_facto
             == mtimes_before[p]
         ), f"partition {p} was rebuilt despite valid checkpoint"
 
-    def segset(d):
-        rows = (
-            spark.read.parquet(os.path.join(d, "segments"))
-            .select("term", "df", "doc_blob", "tf_blob", "dl_blob")
-            .collect()
-        )
-        return {
-            r["term"]: (r["df"], bytes(r["doc_blob"]), bytes(r["tf_blob"]), bytes(r["dl_blob"]))
-            for r in rows
-        }
-
-    assert segset(d2) == segset(index_dir)
+    assert _segset(spark, d2) == _segset(spark, index_dir)
     m2 = load_manifest(d2)
     assert len(m2.entries) == CFG.index.build_partitions
+
+
+def test_manifest_lineage_matches_partials(spark, index_dir):
+    """Manifest terms / postings / bytes per partition equal an aggregation
+    of the partial segments as they sit on disk."""
+    from pyspark.sql import functions as F
+
+    def total(col):
+        return F.aggregate(col, F.lit(0).cast("long"), lambda a, x: a + x)
+
+    rows = (
+        spark.read.parquet(os.path.join(index_dir, "segments_partial"))
+        .groupBy("seg_id")
+        .agg(
+            F.count(F.lit(1)).alias("terms"),
+            F.sum("df").alias("postings"),
+            F.sum(
+                total("block_doc_bytes") + total("block_tf_bytes") + total("block_dl_bytes")
+            ).alias("bytes"),
+        )
+        .collect()
+    )
+    want = {int(r["seg_id"]): (r["terms"], r["postings"], r["bytes"]) for r in rows}
+    m = load_manifest(index_dir)
+    got = {pid: (e.terms, e.postings, e.bytes) for pid, e in m.entries.items()}
+    assert got == want
+
+
+def test_partial_writer_rewrite_byte_identical(tmp_path, transcripts_pdf):
+    """A retried partial task rewrites the same file: one data file, the
+    same bytes and lineage, and no temporary files left behind."""
+    import pyarrow as pa
+
+    from audioflux_spark.operators import indexer
+
+    texts = transcripts_pdf["text"].head(300).tolist()
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array([3] * len(texts), pa.int32()), pa.array(texts)], names=["pid", "text"]
+    )
+    write = indexer._make_partial_writer(
+        indexer._make_segment_fn([0, 0, 0, 0], {3}, 10.0, CFG), str(tmp_path)
+    )
+    seg_dir = tmp_path / "seg_id=3"
+    lineage, data = [], []
+    for _ in range(2):
+        lineage.append([b.to_pylist() for b in write(iter([batch]))])
+        assert sorted(os.listdir(seg_dir)) == ["part-00000.parquet"]
+        data.append((seg_dir / "part-00000.parquet").read_bytes())
+    assert data[0] == data[1]
+    assert lineage[0] == lineage[1]
+    (row,) = lineage[0][0]
+    assert row["seg_id"] == 3 and row["terms"] > 0 and row["postings"] >= row["terms"]
+
+
+def test_declared_schemas_match_written_files(spark, index_dir):
+    """Readers pass PARTIAL_SCHEMA / MERGED_SCHEMA / DOCSTORE_SCHEMA instead
+    of inferring; they must describe what the writers produce."""
+    from audioflux_spark.operators.indexer import (
+        DOCSTORE_SCHEMA,
+        MERGED_SCHEMA,
+        PARTIAL_SCHEMA,
+    )
+
+    for sub, declared in (
+        ("segments_partial", PARTIAL_SCHEMA),
+        ("segments", MERGED_SCHEMA),
+        ("docstore", DOCSTORE_SCHEMA),
+    ):
+        inferred = spark.read.parquet(os.path.join(index_dir, sub)).schema
+        want = spark.createDataFrame([], declared).schema
+        assert {f.name: f.dataType for f in inferred} == {
+            f.name: f.dataType for f in want
+        }, sub
+
+
+@pytest.mark.parametrize("lost", ["none", "half"])
+def test_resume_after_unpublished_merge(
+    spark, transcripts_sdf, index_dir, tmp_path_factory, monkeypatch, oracle, queries, lost
+):
+    """A build killed after its partials but before its merge is published
+    leaves no segments/ (a stale one is unpublished first); the resumed build
+    merges again, blob- and rank-identical to an uninterrupted build.
+    lost="none": a fresh build killed mid-merge; "half": a resume that was
+    rebuilding half the partitions of a complete index."""
+    from audioflux_spark.operators import indexer
+
+    d2 = str(tmp_path_factory.mktemp(f"unpublished_{lost}") / "idx")
+    if lost == "half":
+        shutil.copytree(index_dir, d2)
+        m = load_manifest(d2)
+        for pid in sorted(m.entries)[: len(m.entries) // 2]:
+            del m.entries[pid]
+            shutil.rmtree(os.path.join(d2, "segments_partial", f"seg_id={pid}"))
+            shutil.rmtree(os.path.join(d2, "docstore", f"seg_id={pid}"))
+        save_manifest(d2, m)
+
+    class Killed(Exception):
+        pass
+
+    def killed(staging, out_dir):
+        assert os.listdir(staging), "merge killed before it wrote its ranges"
+        raise Killed
+
+    monkeypatch.setattr(indexer, "_publish", killed)
+    with pytest.raises(Killed):
+        build_index(spark, transcripts_sdf, d2, cfg=CFG, resume=(lost == "half"))
+    monkeypatch.undo()
+    assert not os.path.exists(os.path.join(d2, "segments"))
+    assert len(load_manifest(d2).entries) == CFG.index.build_partitions
+
+    build_index(spark, transcripts_sdf, d2, cfg=CFG, resume=True)
+    assert _segset(spark, d2) == _segset(spark, index_dir)
+    reader = IndexReader(spark, d2)
+    for q in queries[:6]:
+        got = bm25_topk_indexed(reader, q.query_text, q.k).toPandas()
+        assert_rank_identical(got, oracle.topk(q.query_text, q.k), context=q.query_id)
+
+
+def test_empty_build_opens_as_empty_index(spark, transcripts_sdf, tmp_path_factory):
+    """A build whose merge writes no files still publishes segments/, and
+    the declared-schema readers open it as an empty index."""
+    d = str(tmp_path_factory.mktemp("empty") / "idx")
+    meta = build_index(spark, transcripts_sdf.limit(0), d, cfg=CFG)
+    assert meta.n_docs == 0
+    assert os.listdir(os.path.join(d, "segments")) == []
+    reader = IndexReader(spark, d)
+    assert reader.segments.count() == 0 and reader.docstore.count() == 0
+    assert bm25_topk_indexed(reader, "hotterm", 5).count() == 0
+
+
+# jobs a fresh single-phase build launches under AQE: partition stats (4),
+# docstore write (1), token totals (2), partial writer with its lineage (1),
+# merge (3: range sampling, shuffle, writer)
+FRESH_BUILD_JOBS = 11
+
+
+def test_fresh_build_job_count(spark, transcripts_sdf, tmp_path_factory):
+    d = str(tmp_path_factory.mktemp("jobs") / "idx")
+    cfg = EngineConfig(index=IndexConfig(block_size=32, build_partitions=8))
+    sc = spark.sparkContext
+    group = "afspark-fresh-build"
+    sc.setJobGroup(group, "fresh build")
+    try:
+        build_index(spark, transcripts_sdf, d, cfg=cfg, resume=False)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= FRESH_BUILD_JOBS, sorted(jobs)

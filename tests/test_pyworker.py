@@ -123,9 +123,13 @@ def _kernels():
     from audioflux_spark.config import DEFAULT
     from audioflux_spark.operators import indexer, wand
 
+    segment = indexer._make_segment_fn([0], {0}, 1.0, DEFAULT)
+    merge = indexer._make_merge_stream(["term"])
     return {
-        "segment": indexer._make_segment_fn([0], {0}, 1.0, DEFAULT),
-        "merge": indexer._make_merge_stream(["term"]),
+        "segment": segment,
+        "partial_writer": indexer._make_partial_writer(segment, "segments_partial"),
+        "merge": merge,
+        "merge_writer": indexer._make_merge_writer(merge, "segments"),
         "merge_salted": indexer._make_merge_stream(["term", "salt"]),
         "shard_splitter": wand._make_shard_splitter({0: 10}, 4),
         "phrase_splitter": wand._make_shard_splitter({0: 10}, 4, include_pos=True),
