@@ -12,10 +12,15 @@ Pipeline (the audioFlux pipeline shape, SURVEY §7.0, re-expressed):
 Scale design notes (100 TB / 10^12 turns):
 * docIDs: no global sort materialization — range partition, count per
   partition (one cheap agg), cumulative offsets on the driver (P integers),
-  then offset+cumcount inside mapInPandas. Deterministic given the input.
+  then offset+cumcount inside mapInArrow. Deterministic given the input.
 * the ONLY wide op on raw data is the initial repartitionByRange; everything
   until the merge is partition-local. The merge shuffles *compressed blobs*,
   not postings rows — ~1-2 bytes per posting instead of ~30.
+* the corpus text is regex-scanned twice: a JVM token count in the stats
+  pass (avgdl is known before any output is written) and the Python
+  tokenize in the partials job. That job's task holds each partition's rows
+  once and writes everything derived from them: the docstore file and the
+  partial segment file.
 * hot terms (Zipf head: 'hotterm' is in 40% of turns) would make
   groupBy(term) straggle; phase 1 merges within salt buckets
   (pmod(seg_id, S)), phase 2 merges ≤S pre-merged rows per term. Blob merge
@@ -130,23 +135,25 @@ def _partitioned_base(transcripts: DataFrame, n_partitions: int) -> tuple[DataFr
 
 
 def _partition_stats(base_with_pid: DataFrame, cfg: EngineConfig):
-    """ONE cheap pass over the base: per-partition fingerprint (count +
-    order-independent hash). Deliberately NO tokenization here — token totals
-    come for free from the docstore's doc_len column after the write, so the
-    corpus text is regex-scanned exactly twice (docstore + partials), not
-    three times."""
+    """ONE pass over the base, per partition: the fingerprint (count +
+    order-independent hash) and the token count (the JVM regex count of
+    doc_len_col). Returns (fingerprints, n_docs, total_tokens) over kept and
+    rebuilt partitions alike, so avgdl is known before any output is written
+    and no job reads the docstore back for it."""
     rows = (
         base_with_pid.groupBy("pid")
         .agg(
             F.count(F.lit(1)).alias("n"),
             # bit_xor: order-independent and overflow-free under ANSI mode
             F.expr("bit_xor(xxhash64(conv_id, turn_idx, text))").alias("h"),
+            F.sum(doc_len_col("text", cfg.analyzer)).alias("tokens"),
         )
         .collect()
     )
     fps = {int(r["pid"]): f"{int(r['n'])}:{int(r['h'])}" for r in rows}
     n_docs = sum(int(r["n"]) for r in rows)
-    return fps, n_docs
+    total_tokens = sum(int(r["tokens"] or 0) for r in rows)
+    return fps, n_docs, total_tokens
 
 
 def _offsets_from_counts(fingerprints: dict[int, str], n_partitions: int) -> list[int]:
@@ -159,36 +166,6 @@ def _offsets_from_counts(fingerprints: dict[int, str], n_partitions: int) -> lis
         offsets[p] = run
         run += counts[p]
     return offsets
-
-
-def _docstore_df(with_pid: DataFrame, offsets: list[int], keep: set[int], cfg: EngineConfig) -> DataFrame:
-    """Dense docID assignment, pure JVM (no Python round-trip of the text):
-    doc_id = offset[pid] + row-in-partition, where row-in-partition is the
-    low 33 bits of monotonically_increasing_id() (its documented layout:
-    partition_index << 33 | row_in_partition) over the sorted, persisted base.
-    """
-    from itertools import chain
-
-    offset_map = F.create_map(
-        *chain.from_iterable(
-            (F.lit(p), F.lit(o)) for p, o in enumerate(offsets)
-        )
-    )
-    keep_list = sorted(keep)
-    return (
-        with_pid.withColumn("doc_len", doc_len_col("text", cfg.analyzer).cast("long"))
-        .withColumn("ts", F.col("ts").cast("timestamp_ntz"))
-        .withColumn(
-            "doc_id",
-            offset_map[F.col("pid")]
-            + F.monotonically_increasing_id().bitwiseAND(F.lit((1 << 33) - 1)),
-        )
-        .filter(F.col("pid").isin(keep_list))
-        .select(
-            "doc_id", "conv_id", "turn_idx", "role", "text", "tool", "ts",
-            "doc_len", F.col("pid").alias("seg_id"),
-        )
-    )
 
 
 def _segment_fields() -> list:
@@ -215,8 +192,12 @@ def _segment_fields() -> list:
     ]
 
 
-def _make_segment_fn(offsets: list[int], keep: set[int], avgdl: float, cfg: EngineConfig):
-    """Arrow-native segment kernel (mapInArrow).
+def _make_segment_fn(avgdl: float, cfg: EngineConfig):
+    """Arrow-native segment kernel: ``build_segment(texts, first_doc)`` takes
+    one partition's text column, its rows numbered as docIDs first_doc,
+    first_doc + 1, ..., and returns (doc_len, batch): each row's token count
+    and the partition's segment rows (MERGED_SCHEMA), batch None when the
+    partition has no tokens.
 
     Everything stays in Arrow buffers / primitive NumPy: RE2 tokenization
     (utf8_lower + split_pattern_regex), dictionary-encode for term codes,
@@ -233,21 +214,12 @@ def _make_segment_fn(offsets: list[int], keep: set[int], avgdl: float, cfg: Engi
     lowercase = cfg.analyzer.lowercase
     store_pos = cfg.index.store_positions
 
-    out_schema = pa.schema([("seg_id", pa.int32()), *_segment_fields()])
+    out_schema = pa.schema(_segment_fields())
 
-    def build_segments(batches):
+    def build_segment(texts, first_doc: int):
         import pyarrow.compute as pc
 
-        batch_list = list(batches)
-        if not batch_list:
-            return
-        tbl = pa.Table.from_batches(batch_list)
-        if tbl.num_rows == 0:
-            return
-        pid = int(tbl.column("pid")[0].as_py())
-        if pid not in keep:
-            return
-        texts = tbl.column("text").combine_chunks()
+        n_rows = len(texts)
         if lowercase:
             texts = pc.utf8_lower(texts)
         toks = pc.split_pattern_regex(texts, pattern=split_pat)
@@ -256,9 +228,8 @@ def _make_segment_fn(offsets: list[int], keep: set[int], avgdl: float, cfg: Engi
         mask = pc.not_equal(flat, "")
         flat = flat.filter(mask)
         if len(flat) == 0:
-            return
+            return np.zeros(n_rows, dtype=np.int64), None
         parent = parent.filter(mask).to_numpy().astype(np.int64)
-        n_rows = tbl.num_rows
         doc_len = np.bincount(parent, minlength=n_rows).astype(np.int64)
         denc = flat.dictionary_encode()
         codes = denc.indices.to_numpy().astype(np.int64)
@@ -292,7 +263,7 @@ def _make_segment_fn(offsets: list[int], keep: set[int], avgdl: float, cfg: Engi
         )
         term_ends = np.append(term_bounds[1:], u_codes.size)
 
-        u_docs = offsets[pid] + u_local
+        u_docs = first_doc + u_local
         enc = encode_segment_batch_flat(
             u_docs, tf, doc_len[u_local], term_bounds, avgdl, k1, b, block_size
         )
@@ -319,9 +290,8 @@ def _make_segment_fn(offsets: list[int], keep: set[int], avgdl: float, cfg: Engi
                 pa.array(offs, type=pa.int32()), pa.array(vals, type=typ)
             )
 
-        yield pa.RecordBatch.from_arrays(
+        return doc_len, pa.RecordBatch.from_arrays(
             [
-                pa.array(np.full(n_terms, pid, dtype=np.int32), type=pa.int32()),
                 pc.take(dictionary, pa.array(u_codes[term_bounds], type=pa.int64())),
                 pa.array((term_ends - term_bounds).astype(np.int64), type=pa.int64()),
                 pa.array(u_docs[term_bounds], type=pa.int64()),
@@ -347,7 +317,7 @@ def _make_segment_fn(offsets: list[int], keep: set[int], avgdl: float, cfg: Engi
             schema=out_schema,
         )
 
-    return build_segments
+    return build_segment
 
 
 def _group_offsets(arr, starts: np.ndarray) -> np.ndarray:
@@ -448,24 +418,25 @@ def _make_merge_stream(key_cols: list[str]):
     return merge_stream
 
 
-# term is unique within a file and the doc/dl blobs are near-unique varint
-# streams: a dictionary there only overflows back to PLAIN (parquet-mr made
-# the same split by fallback); every other column repeats values
-_NO_DICTIONARY = frozenset({"term", "doc_blob", "dl_blob"})
+# values that are unique or near-unique within a file: term, the doc/dl
+# varint streams, doc_id, the turn text and its timestamp. A dictionary there
+# only overflows back to PLAIN (parquet-mr made the same split by fallback);
+# every other column repeats values
+_NO_DICTIONARY = frozenset({"term", "doc_blob", "dl_blob", "doc_id", "text", "ts"})
 
 
-def _write_segment_file(table, path: str) -> None:
-    """The one writer of partial and merged segment files, called by the
-    Arrow kernel that built ``table`` (the JVM never sees the blobs).
+def _write_parquet_file(table, path: str) -> None:
+    """The one writer of the build's per-task files (docstore, partial and
+    merged segments), called from the Python task that built ``table``.
 
     Written under a hidden temporary name in ``path``'s directory, then
     renamed over ``path``: a retried or speculative task rewrites identical
-    bytes, and readers (Spark skips hidden files) never see a half-written
-    file. Settings: snappy (the cheapest codec to encode and decode; zstd
-    level 1 measured ~25% smaller segment files for ~10% more write CPU),
-    dictionary pages only where values repeat, no embedded Arrow schema
-    (readers pass the declared schemas), and the page index parquet-mr
-    writes by default, so `term IN (...)` can skip pages.
+    bytes, and readers (Spark and pyarrow datasets skip hidden files) never
+    see a half-written file. Settings: snappy (the cheapest codec to encode
+    and decode; zstd level 1 measured ~25% smaller segment files for ~10%
+    more write CPU), dictionary pages only where values repeat, no embedded
+    Arrow schema (readers pass the declared schemas), and the page index
+    parquet-mr writes by default, so `term IN (...)` can skip pages.
     """
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -489,32 +460,62 @@ def _write_segment_file(table, path: str) -> None:
             os.unlink(tmp)
 
 
-def _make_partial_writer(segment_fn, partial_dir: str):
-    """Wraps the segment kernel: each built partition is written from its
-    Arrow batch to ``seg_id=<pid>/part-00000.parquet`` under partial_dir, and
-    the task returns one lineage row (LINEAGE_SCHEMA) instead of the blobs."""
+# docstore columns the partials job ships with its text (DOCSTORE_SCHEMA
+# without doc_id and doc_len, which the task computes, and seg_id, which is
+# the directory name)
+_DOCSTORE_INPUT_COLS = ("conv_id", "turn_idx", "role", "text", "tool", "ts")
+
+
+def _make_partial_writer(segment_fn, offsets: list[int], partial_dir: str, docstore_dir: str):
+    """The partials job's task: it holds one partition's rows (pid and the
+    docstore input columns) and writes both files derived from them to
+    ``seg_id=<pid>/part-00000.parquet``:
+
+    * under docstore_dir, every row with doc_id = offsets[pid] + row (the
+      numbering of the kernel's postings) and doc_len = the kernel's token
+      count, also when the partition has no tokens;
+    * under partial_dir, the kernel's segment rows.
+
+    It returns one lineage row (LINEAGE_SCHEMA) per partition with tokens,
+    instead of the blobs."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
     def write_partials(batches):
-        for batch in segment_fn(batches):
-            pid = batch.column("seg_id")[0].as_py()
-            tbl = pa.Table.from_batches([batch]).drop_columns(["seg_id"])
-            _write_segment_file(
-                tbl, os.path.join(partial_dir, f"seg_id={pid}", "part-00000.parquet")
-            )
-            nbytes = sum(
-                pc.sum(pc.binary_length(tbl.column(c))).as_py() or 0
-                for c in ("doc_blob", "tf_blob", "dl_blob")
-            )
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "seg_id": pa.array([pid], pa.int32()),
-                    "terms": pa.array([tbl.num_rows], pa.int64()),
-                    "postings": pa.array([pc.sum(tbl.column("df")).as_py()], pa.int64()),
-                    "bytes": pa.array([nbytes], pa.int64()),
-                }
-            )
+        batch_list = list(batches)
+        if not batch_list:
+            return
+        tbl = pa.Table.from_batches(batch_list)
+        if tbl.num_rows == 0:
+            return
+        pid = tbl.column("pid")[0].as_py()
+        first_doc = offsets[pid]
+        doc_len, seg = segment_fn(tbl.column("text").combine_chunks(), first_doc)
+        docs = pa.Table.from_arrays(
+            [
+                pa.array(np.arange(first_doc, first_doc + tbl.num_rows, dtype=np.int64)),
+                *(tbl.column(c) for c in _DOCSTORE_INPUT_COLS),
+                pa.array(doc_len),
+            ],
+            names=["doc_id", *_DOCSTORE_INPUT_COLS, "doc_len"],
+        )
+        leaf = os.path.join(f"seg_id={pid}", "part-00000.parquet")
+        _write_parquet_file(docs, os.path.join(docstore_dir, leaf))
+        if seg is None:
+            return
+        _write_parquet_file(pa.Table.from_batches([seg]), os.path.join(partial_dir, leaf))
+        nbytes = sum(
+            pc.sum(pc.binary_length(seg.column(c))).as_py() or 0
+            for c in ("doc_blob", "tf_blob", "dl_blob")
+        )
+        yield pa.RecordBatch.from_pydict(
+            {
+                "seg_id": pa.array([pid], pa.int32()),
+                "terms": pa.array([seg.num_rows], pa.int64()),
+                "postings": pa.array([pc.sum(seg.column("df")).as_py()], pa.int64()),
+                "bytes": pa.array([nbytes], pa.int64()),
+            }
+        )
 
     return write_partials
 
@@ -530,7 +531,7 @@ def _make_merge_writer(merge_fn, out_dir: str):
 
         part = TaskContext.get().partitionId()
         for batch in merge_fn(batches):
-            _write_segment_file(
+            _write_parquet_file(
                 pa.Table.from_batches([batch]),
                 os.path.join(out_dir, f"part-{part:05d}.parquet"),
             )
@@ -601,9 +602,15 @@ def build_index(
 ) -> IndexMeta:
     """Build (or resume) the inverted index at index_dir.
 
-    Layout: meta.json, manifest.json, docstore/ (parquet, partitioned by
-    seg_id), segments_partial/ (parquet, partitioned by seg_id),
-    segments/ (merged, range-partitioned + sorted by term).
+    Layout: meta.json, manifest.json, docstore/ and segments_partial/ (one
+    parquet file per build partition, ``seg_id=<pid>/part-00000.parquet``,
+    written by the partials job's tasks; no ``_SUCCESS`` marker, the manifest
+    records completed partitions), segments/ (merged, range-partitioned +
+    sorted by term).
+
+    Jobs: the stats pass (fingerprints, doc counts and the JVM token count
+    that gives avgdl), the partials job (Python tokenize; writes docstore and
+    partial segments, returns lineage), the merge.
     """
     os.makedirs(index_dir, exist_ok=True)
     mark = _phase_timer()
@@ -613,7 +620,8 @@ def build_index(
         base = base.persist()
     with_pid = base.withColumn("pid", F.spark_partition_id())
     # one combined pass: fingerprints + corpus stats (no separate scan)
-    fps, n_docs = _partition_stats(with_pid, cfg)
+    fps, n_docs, total_tokens = _partition_stats(with_pid, cfg)
+    avgdl = (total_tokens / n_docs) if n_docs else 0.0
     mark("stats")
     offsets = _offsets_from_counts(fps, P)
 
@@ -659,42 +667,39 @@ def build_index(
         save_manifest(index_dir, manifest)
 
     if missing:
-        keep = set(missing)
         # clean any half-written output for missing pids (idempotent re-run)
         for d in (partial_dir, docstore_dir):
             for pid in missing:
                 sub = os.path.join(d, f"seg_id={pid}")
                 if os.path.exists(sub):
                     shutil.rmtree(sub)
-
-        # the docstore is the one build output written by Spark's JVM writer
-        # (its text never enters Python). snappy, not the session's zstd: the
-        # write is on the build's critical path and snappy encodes text ~2-3x
-        # faster at a size cost the scratch layout absorbs
-        _docstore_df(with_pid, offsets, keep, cfg).write.partitionBy(
-            "seg_id"
-        ).mode("append").option("compression", "snappy").parquet(docstore_dir)
+        # the docstore is written by the partials job and the token totals
+        # come from the stats pass; both marks stay (≈0 s) so per-phase
+        # records remain comparable across builds
         mark("docstore")
-
-    # corpus token totals from the docstore's doc_len column (columnar scan
-    # of one int column — the text itself is never re-tokenized for stats)
-    total_tokens = int(
-        spark.read.schema(DOCSTORE_SCHEMA).parquet(docstore_dir)
-        .agg(F.sum("doc_len")).first()[0] or 0
-    )
-    avgdl = (total_tokens / n_docs) if n_docs else 0.0
     mark("token_stats")
 
     if missing:
-        # each task writes its partition's partial segments itself and
-        # returns that partition's lineage row: no posting blob crosses into
-        # the JVM, and no second job reads the partials back for lineage
-        lineage = with_pid.select("pid", "text").mapInArrow(
-            _make_partial_writer(
-                _make_segment_fn(offsets, keep, avgdl, cfg), os.path.abspath(partial_dir)
-            ),
-            schema=LINEAGE_SCHEMA,
-        ).collect()
+        # each task writes its partition's docstore and partial segment
+        # files itself and returns that partition's lineage row: no posting
+        # blob crosses into the JVM, and no second job reads anything back.
+        # Filtered to the missing pids, so a resume ships no kept partition
+        # to Python
+        lineage = (
+            with_pid.filter(F.col("pid").isin(missing))
+            .select("pid", *_DOCSTORE_INPUT_COLS)
+            .withColumn("ts", F.col("ts").cast("timestamp_ntz"))
+            .mapInArrow(
+                _make_partial_writer(
+                    _make_segment_fn(avgdl, cfg),
+                    offsets,
+                    os.path.abspath(partial_dir),
+                    os.path.abspath(docstore_dir),
+                ),
+                schema=LINEAGE_SCHEMA,
+            )
+            .collect()
+        )
         mark("partials")
 
         stat_by_pid = {int(r["seg_id"]): r for r in lineage}

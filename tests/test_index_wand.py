@@ -257,30 +257,107 @@ def test_manifest_lineage_matches_partials(spark, index_dir):
     assert got == want
 
 
-def test_partial_writer_rewrite_byte_identical(tmp_path, transcripts_pdf):
-    """A retried partial task rewrites the same file: one data file, the
-    same bytes and lineage, and no temporary files left behind."""
+def _partition_batch(pdf: pd.DataFrame, pid: int):
+    """One partition's rows as the partials job ships them to its task."""
     import pyarrow as pa
 
+    tbl = pa.Table.from_pandas(
+        pdf[["conv_id", "turn_idx", "role", "text", "tool", "ts"]], preserve_index=False
+    )
+    return tbl.add_column(0, "pid", pa.array([pid] * len(pdf), pa.int32())).to_batches()[0]
+
+
+def test_partial_writer_rewrite_byte_identical(tmp_path, transcripts_pdf):
+    """A retried partial task rewrites the same files: one docstore file and
+    one partial file, the same bytes and lineage, and no temporary files
+    left behind."""
     from audioflux_spark.operators import indexer
 
-    texts = transcripts_pdf["text"].head(300).tolist()
-    batch = pa.RecordBatch.from_arrays(
-        [pa.array([3] * len(texts), pa.int32()), pa.array(texts)], names=["pid", "text"]
-    )
+    batch = _partition_batch(transcripts_pdf.head(300), 3)
     write = indexer._make_partial_writer(
-        indexer._make_segment_fn([0, 0, 0, 0], {3}, 10.0, CFG), str(tmp_path)
+        indexer._make_segment_fn(10.0, CFG), [0, 0, 0, 40],
+        str(tmp_path / "partial"), str(tmp_path / "docstore"),
     )
-    seg_dir = tmp_path / "seg_id=3"
     lineage, data = [], []
     for _ in range(2):
         lineage.append([b.to_pylist() for b in write(iter([batch]))])
-        assert sorted(os.listdir(seg_dir)) == ["part-00000.parquet"]
-        data.append((seg_dir / "part-00000.parquet").read_bytes())
+        files = []
+        for sub in ("docstore", "partial"):
+            seg_dir = tmp_path / sub / "seg_id=3"
+            assert sorted(os.listdir(seg_dir)) == ["part-00000.parquet"]
+            files.append((seg_dir / "part-00000.parquet").read_bytes())
+        data.append(files)
     assert data[0] == data[1]
     assert lineage[0] == lineage[1]
     (row,) = lineage[0][0]
     assert row["seg_id"] == 3 and row["terms"] > 0 and row["postings"] >= row["terms"]
+    docs = pd.read_parquet(tmp_path / "docstore" / "seg_id=3")
+    assert docs["doc_id"].tolist() == list(range(40, 340))
+    assert docs["conv_id"].tolist() == transcripts_pdf["conv_id"].head(300).tolist()
+
+
+def test_partial_writer_tokenless_partition(tmp_path, transcripts_pdf):
+    """A partition without a single token still gets its docstore file
+    (doc_len 0 on every row) but no partial file and no lineage row."""
+    from audioflux_spark.operators import indexer
+
+    pdf = transcripts_pdf.head(4).assign(text=["", "!!", " - ", None])
+    write = indexer._make_partial_writer(
+        indexer._make_segment_fn(10.0, CFG), [0, 7],
+        str(tmp_path / "partial"), str(tmp_path / "docstore"),
+    )
+    assert list(write(iter([_partition_batch(pdf, 1)]))) == []
+    docs = pd.read_parquet(tmp_path / "docstore" / "seg_id=1" / "part-00000.parquet")
+    assert docs["doc_id"].tolist() == [7, 8, 9, 10]
+    assert docs["doc_len"].tolist() == [0, 0, 0, 0]
+    assert not os.path.exists(tmp_path / "partial")
+
+
+def test_docstore_doc_len_matches_token_stats(spark, reader):
+    """avgdl comes from the stats pass's JVM token count, the docstore's
+    doc_len from the Python tokenizer: the two analyzers must agree on
+    every row, and so on the total."""
+    from pyspark.sql import functions as F
+
+    from audioflux_spark.functions.analyzer import doc_len_col
+
+    ds = reader.docstore
+    assert ds.agg(F.sum("doc_len")).first()[0] == reader.meta.total_tokens
+    assert ds.filter(F.col("doc_len") != doc_len_col("text", CFG.analyzer)).count() == 0
+
+
+def test_resume_after_killed_partial_task(
+    spark, transcripts_sdf, index_dir, tmp_path_factory, oracle, queries
+):
+    """A partial task killed between its two writes leaves a docstore file
+    (and a writer's temporary file) but no partial file and no manifest
+    entry: the resume rebuilds that partition and the docstore holds each
+    document exactly once."""
+    from pyspark.sql import functions as F
+
+    d2 = str(tmp_path_factory.mktemp("killed_partial") / "idx")
+    shutil.copytree(index_dir, d2)
+    m = load_manifest(d2)
+    pid = sorted(m.entries)[1]
+    del m.entries[pid]
+    save_manifest(d2, m)
+    shutil.rmtree(os.path.join(d2, "segments_partial", f"seg_id={pid}"))
+    seg_docs = os.path.join(d2, "docstore", f"seg_id={pid}")
+    with open(os.path.join(seg_docs, ".part-00000.parquet.0.tmp"), "wb") as f:
+        f.write(b"half-written")
+
+    build_index(spark, transcripts_sdf, d2, cfg=CFG, resume=True)
+    assert sorted(os.listdir(seg_docs)) == ["part-00000.parquet"]
+    assert pid in load_manifest(d2).entries
+    assert _segset(spark, d2) == _segset(spark, index_dir)
+    reader = IndexReader(spark, d2)
+    ds = reader.docstore
+    assert ds.count() == oracle.N
+    assert ds.select("conv_id", "turn_idx").distinct().count() == oracle.N
+    assert ds.agg(F.countDistinct("doc_id")).first()[0] == oracle.N
+    for q in queries[:6]:
+        got = bm25_topk_indexed(reader, q.query_text, q.k).toPandas()
+        assert_rank_identical(got, oracle.topk(q.query_text, q.k), context=q.query_id)
 
 
 def test_declared_schemas_match_written_files(spark, index_dir):
@@ -359,10 +436,10 @@ def test_empty_build_opens_as_empty_index(spark, transcripts_sdf, tmp_path_facto
     assert bm25_topk_indexed(reader, "hotterm", 5).count() == 0
 
 
-# jobs a fresh single-phase build launches under AQE: partition stats (4),
-# docstore write (1), token totals (2), partial writer with its lineage (1),
-# merge (3: range sampling, shuffle, writer)
-FRESH_BUILD_JOBS = 11
+# jobs a fresh single-phase build launches under AQE: partition stats with
+# the token count (4), the partials job writing docstore and partial files and
+# returning lineage (1), merge (3: range sampling, shuffle, writer)
+FRESH_BUILD_JOBS = 8
 
 
 def test_fresh_build_job_count(spark, transcripts_sdf, tmp_path_factory):

@@ -123,11 +123,13 @@ def _kernels():
     from audioflux_spark.config import DEFAULT
     from audioflux_spark.operators import indexer, wand
 
-    segment = indexer._make_segment_fn([0], {0}, 1.0, DEFAULT)
+    segment = indexer._make_segment_fn(1.0, DEFAULT)
     merge = indexer._make_merge_stream(["term"])
     return {
         "segment": segment,
-        "partial_writer": indexer._make_partial_writer(segment, "segments_partial"),
+        "partial_writer": indexer._make_partial_writer(
+            segment, [0], "segments_partial", "docstore"
+        ),
         "merge": merge,
         "merge_writer": indexer._make_merge_writer(merge, "segments"),
         "merge_salted": indexer._make_merge_stream(["term", "salt"]),
