@@ -6,16 +6,21 @@ Pipeline (the audioFlux pipeline shape, SURVEY §7.0, re-expressed):
   assign dense docIDs (offsets + local cumcount)   | implicit positional key
   per-partition vectorized tokenize + posting build| per-frame C kernels (OMP)
   delta+varint blobs with block-max metadata       | precomputed tables
-  two-phase salted repartition-by-term merge       | filterbank grouped agg
+  term-range merge read from the partial files     | filterbank grouped agg
   resumable per-partition checkpoints + lineage    | isContinue tail carry
 
 Scale design notes (100 TB / 10^12 turns):
 * docIDs: no global sort materialization — range partition, count per
   partition (one cheap agg), cumulative offsets on the driver (P integers),
   then offset+cumcount inside mapInArrow. Deterministic given the input.
-* the ONLY wide op on raw data is the initial repartitionByRange; everything
-  until the merge is partition-local. The merge shuffles *compressed blobs*,
-  not postings rows — ~1-2 bytes per posting instead of ~30.
+* the ONLY wide op on raw data is the hash repartition of an
+  under-partitioned source; everything until the merge is partition-local.
+  The single-phase merge shuffles nothing: the partials task records term
+  splits of its partition, the driver turns them into term ranges, and each
+  merge task (one per core) reads the partial files itself, once, keeping
+  its contiguous ranges. Only the
+  two-phase merge (cluster scale) shuffles, and then *compressed blobs*, not
+  postings rows — ~1-2 bytes per posting instead of ~30.
 * the corpus text is regex-scanned twice: a JVM token count in the stats
   pass (avgdl is known before any output is written) and the Python
   tokenize in the partials job. That job's task holds each partition's rows
@@ -67,7 +72,7 @@ DOCSTORE_SCHEMA = (
     "tool string, ts timestamp_ntz, doc_len long, seg_id int"
 )
 # one row per freshly built partition, returned by the partial writer
-LINEAGE_SCHEMA = "seg_id int, terms long, postings long, bytes long"
+LINEAGE_SCHEMA = "seg_id int, terms long, postings long, bytes long, splits array<string>"
 
 
 @dataclass(frozen=True)
@@ -466,7 +471,9 @@ def _write_parquet_file(table, path: str) -> None:
 _DOCSTORE_INPUT_COLS = ("conv_id", "turn_idx", "role", "text", "tool", "ts")
 
 
-def _make_partial_writer(segment_fn, offsets: list[int], partial_dir: str, docstore_dir: str):
+def _make_partial_writer(
+    segment_fn, offsets: list[int], partial_dir: str, docstore_dir: str, n_ranges: int
+):
     """The partials job's task: it holds one partition's rows (pid and the
     docstore input columns) and writes both files derived from them to
     ``seg_id=<pid>/part-00000.parquet``:
@@ -477,7 +484,9 @@ def _make_partial_writer(segment_fn, offsets: list[int], partial_dir: str, docst
     * under partial_dir, the kernel's segment rows.
 
     It returns one lineage row (LINEAGE_SCHEMA) per partition with tokens,
-    instead of the blobs."""
+    instead of the blobs. The row's ``splits`` are n_ranges - 1 of the
+    partition's terms at even row shares in byte order, from which the
+    driver draws the merge's term ranges (_range_bounds)."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -508,12 +517,16 @@ def _make_partial_writer(segment_fn, offsets: list[int], partial_dir: str, docst
             pc.sum(pc.binary_length(seg.column(c))).as_py() or 0
             for c in ("doc_blob", "tf_blob", "dl_blob")
         )
+        terms = seg.column("term")
+        ranks = np.arange(1, n_ranges, dtype=np.int64) * seg.num_rows // n_ranges
+        splits = pc.take(terms, pc.array_sort_indices(terms).take(pa.array(ranks)))
         yield pa.RecordBatch.from_pydict(
             {
                 "seg_id": pa.array([pid], pa.int32()),
                 "terms": pa.array([seg.num_rows], pa.int64()),
                 "postings": pa.array([pc.sum(seg.column("df")).as_py()], pa.int64()),
                 "bytes": pa.array([nbytes], pa.int64()),
+                "splits": pa.array([splits.to_pylist()], pa.list_(pa.string())),
             }
         )
 
@@ -522,14 +535,15 @@ def _make_partial_writer(segment_fn, offsets: list[int], partial_dir: str, docst
 
 def _make_merge_writer(merge_fn, out_dir: str):
     """Wraps a merge kernel: the task writes its merged range to
-    ``part-<partition id>.parquet`` under out_dir and returns one
-    (part, terms) row."""
+    ``part-<part>.parquet`` under out_dir, part defaulting to its partition
+    id, and returns one (part, terms) row."""
     import pyarrow as pa
 
-    def write_merged(batches):
+    def write_merged(batches, part: int | None = None):
         from pyspark import TaskContext
 
-        part = TaskContext.get().partitionId()
+        if part is None:
+            part = TaskContext.get().partitionId()
         for batch in merge_fn(batches):
             _write_parquet_file(
                 pa.Table.from_batches([batch]),
@@ -545,34 +559,153 @@ def _make_merge_writer(merge_fn, out_dir: str):
     return write_merged
 
 
-def write_merged_segments(partials: DataFrame, out_dir: str, n_ranges: int) -> None:
-    """Final merge stage and the only way merged segments are written
-    (build, both merge strategies, compaction): range-partition the partial
-    rows by term, merge each range in the Arrow kernel, and write it from
-    that kernel as one term-sorted file, so `term IN (...)` prunes files and
-    row groups at query time.
-
-    The files go to a hidden sibling directory that replaces out_dir only
-    once every range is written: a merge killed midway leaves no out_dir,
-    and a resumed build merges again instead of serving a partial one.
-    """
+def _write_staged(out_dir: str, write) -> None:
+    """Run ``write(staging)``, which writes every merged range file to a
+    hidden sibling directory, then publish that directory as out_dir: a merge
+    killed midway leaves no out_dir, and a resumed build merges again instead
+    of serving a partial one."""
     parent, name = os.path.split(os.path.abspath(out_dir))
     staging = os.path.join(parent, f".{name}.tmp")
     shutil.rmtree(staging, ignore_errors=True)
     os.makedirs(staging)
     try:
-        partials.repartitionByRange(n_ranges, "term").mapInArrow(
-            _make_merge_writer(_make_merge_stream(["term"]), staging),
-            schema="part int, terms long",
-        ).collect()
+        write(staging)
         _publish(staging, out_dir)
     finally:
         shutil.rmtree(staging, ignore_errors=True)
 
 
+def write_merged_segments(partials: DataFrame, out_dir: str, n_ranges: int) -> None:
+    """Final stage of the two-phase merge and of compaction, whose inputs
+    are DataFrames (persisted phase-1 output; offset-shifted generations):
+    range-partition the rows by term, merge each range in the Arrow kernel,
+    and write it from that kernel as one term-sorted file, so `term IN (...)`
+    prunes files and row groups at query time."""
+    _write_staged(
+        out_dir,
+        lambda staging: partials.repartitionByRange(n_ranges, "term")
+        .mapInArrow(
+            _make_merge_writer(_make_merge_stream(["term"]), staging),
+            schema="part int, terms long",
+        )
+        .collect(),
+    )
+
+
+def _range_bounds(entries, n_ranges: int) -> list[str]:
+    """Term-range boundaries of the single-phase merge: n_ranges - 1 weighted
+    quantiles of every manifest entry's term splits, each split weighted by
+    the share of its partition's terms it stands for, deduplicated. Range i
+    is [bounds[i-1], bounds[i]) with open ends. Any boundaries give a correct
+    index (the splits only balance the ranges), so entries without splits
+    (manifests written before splits were recorded) need no special case."""
+    pooled = sorted(
+        (t, e.terms / (len(e.term_splits) + 1)) for e in entries for t in e.term_splits
+    )
+    if not pooled:
+        return []
+    cum = np.cumsum([w for _, w in pooled])
+    at = np.searchsorted(cum, np.arange(1, n_ranges) * cum[-1] / n_ranges)
+    return sorted({pooled[min(int(i), len(pooled) - 1)][0] for i in at})
+
+
+def _make_range_merge(files: list[str], bounds: list[str], out_dir: str, n_tasks: int):
+    """The single-phase merge's task: its input is one row holding its task
+    id g, which owns the contiguous term ranges [g*n/n_tasks, (g+1)*n/n_tasks)
+    of the n = len(bounds) + 1 ranges; range i is [bounds[i-1], bounds[i]).
+    The task reads the partial files itself, once, keeping the terms of its
+    ranges, then merges and writes each range i as part-<i>.parquet through
+    the merge writer. Partial files are not term-sorted, so every task
+    decodes every file: the merge decodes n_tasks x the partial bytes, and
+    a task holds its ranges' rows in memory."""
+    import pyarrow as pa
+    import pyarrow.dataset as pads
+
+    schema = pa.schema(_segment_fields())
+    write = _make_merge_writer(_make_merge_stream(["term"]), out_dir)
+    n = len(bounds) + 1
+
+    def span(first: int, end: int):
+        """Ranges first .. end-1 as one filter on term."""
+        term = pads.field("term")
+        # "" is the least string: range 0 is open below
+        keep = term >= (bounds[first - 1] if first else "")
+        if end <= len(bounds):
+            keep &= term < bounds[end - 1]
+        return keep
+
+    def merge_ranges(batches):
+        (g,) = [r for b in batches for r in b.column("id").to_pylist()]
+        first, end = g * n // n_tasks, (g + 1) * n // n_tasks
+        rows = pads.dataset(files, schema=schema, format="parquet").to_table(
+            filter=span(first, end)
+        )
+        for i in range(first, end):
+            own = rows if end - first == 1 else rows.filter(span(i, i + 1))
+            yield from write(own.to_batches(), part=i)
+
+    return merge_ranges
+
+
+def _merge_partial_files(
+    spark: SparkSession, index_dir: str, manifest: Manifest, bounds: list[str]
+) -> None:
+    """Single-phase merge in one Spark job without an exchange: each task
+    (_make_range_merge) reads the partial files directly and writes its
+    contiguous term ranges. There is one task per core, not per range, as
+    every task decodes every file. The files are those of the manifest's
+    entries with terms (a tokenless partition writes none), so the partition
+    count, the ranges and the inputs come from one place. With no partial
+    files it runs no job and publishes an empty segments/."""
+    partial_dir = os.path.join(index_dir, "segments_partial")
+    if not manifest.entries and any(
+        d.startswith("seg_id=")
+        for d in (os.listdir(partial_dir) if os.path.isdir(partial_dir) else ())
+    ):
+        raise FileNotFoundError(
+            f"{partial_dir} holds partial segments but {index_dir} has no "
+            "manifest.json listing them"
+        )
+    # the files Spark's reader would list: hidden and underscore names skipped
+    files = sorted(
+        os.path.join(index_dir, e.output_path, f)
+        for e in manifest.entries.values()
+        if e.terms
+        for f in os.listdir(os.path.join(index_dir, e.output_path))
+        if not f.startswith((".", "_"))
+    )
+
+    def write(staging: str) -> None:
+        if files:
+            n = min(len(bounds) + 1, spark.sparkContext.defaultParallelism)
+            spark.range(0, n, 1, n).mapInArrow(
+                _make_range_merge(files, bounds, staging, n), schema="part int, terms long"
+            ).collect()
+
+    _write_staged(os.path.join(index_dir, "segments"), write)
+
+
 def _publish(staging: str, out_dir: str) -> None:
     shutil.rmtree(out_dir, ignore_errors=True)
     os.rename(staging, out_dir)
+
+
+def _n_ranges(cfg: EngineConfig) -> int:
+    """Merged term ranges (Qf): fine enough that a Zipf-hot term range
+    doesn't become a straggler task (range sizes are skewed; small quanta
+    pack into waves), coarse enough to keep file counts sane. One range per
+    build partition: the r6 profile showed the merge running on half the
+    cores (Qf = P/2 left 16 tasks on 32 cores). Qf also sets the splits
+    each partials task records (Qf - 1); the single-phase merge packs the
+    ranges into one task per core (_merge_partial_files)."""
+    return max(cfg.index.build_partitions, 2)
+
+
+def _single_phase(cfg: EngineConfig, n_partials: int) -> bool:
+    """Whether the merge of n_partials build partitions runs single-phase:
+    even the hottest term then has at most hot_term_partials * salt_buckets
+    partials, which one merge task absorbs."""
+    return n_partials <= cfg.index.hot_term_partials * cfg.index.salt_buckets
 
 
 def _phase_timer():
@@ -610,7 +743,9 @@ def build_index(
 
     Jobs: the stats pass (fingerprints, doc counts and the JVM token count
     that gives avgdl), the partials job (Python tokenize; writes docstore and
-    partial segments, returns lineage), the merge.
+    partial segments, returns lineage with term splits), the merge (one job
+    whose tasks read the partial files; the two-phase merge at cluster scale
+    shuffles).
     """
     os.makedirs(index_dir, exist_ok=True)
     mark = _phase_timer()
@@ -695,6 +830,10 @@ def build_index(
                     offsets,
                     os.path.abspath(partial_dir),
                     os.path.abspath(docstore_dir),
+                    # only the single-phase merge reads splits: the two-phase
+                    # one runs at 10^3+ partitions, where P * Qf strings would
+                    # swell the lineage and the manifest
+                    _n_ranges(cfg) if _single_phase(cfg, P) else 1,
                 ),
                 schema=LINEAGE_SCHEMA,
             )
@@ -714,6 +853,7 @@ def build_index(
                 postings=int(r["postings"]) if r else 0,
                 bytes=int(r["bytes"]) if r else 0,
                 output_path=f"segments_partial/seg_id={pid}",
+                term_splits=list(r["splits"]) if r else [],
             )
         mean_postings = (
             sum(e.postings for e in manifest.entries.values()) / max(len(manifest.entries), 1)
@@ -729,7 +869,7 @@ def build_index(
     # ---- merge phase: skipped only when resuming an untouched index whose
     # merge was published (any change above unpublished segments/)
     if not os.path.exists(segments_dir):
-        merge_segments(spark, index_dir, cfg, n_partials=(max(fps) + 1 if fps else 0))
+        merge_segments(spark, index_dir, cfg, manifest)
     mark("merge")
 
     # partial rebuilds keep blocks encoded under an earlier (possibly smaller)
@@ -762,45 +902,34 @@ def merge_segments(
     spark: SparkSession,
     index_dir: str,
     cfg: EngineConfig = DEFAULT,
-    n_partials: int | None = None,
+    manifest: Manifest | None = None,
 ) -> None:
     """(Re)merge segments_partial/ into segments/; the previous segments/
-    stays readable until the new one is published."""
+    stays readable until the new one is published. The partition count and
+    the single-phase term ranges come from the manifest (build_index passes
+    its own; standalone calls read manifest.json), so no job scans for them."""
     partial_dir = os.path.join(index_dir, "segments_partial")
     out_dir = os.path.join(index_dir, "segments")
-
-    partials = spark.read.schema(PARTIAL_SCHEMA).parquet(partial_dir)
+    if manifest is None:
+        manifest = load_manifest(index_dir)
     S = cfg.index.salt_buckets
-    # actual partition count (scan-split partitioning may exceed the config);
-    # callers that know it pass it and save a scan job
-    P = (
-        n_partials
-        if n_partials is not None
-        else int(partials.agg(F.max("seg_id")).first()[0] or 0) + 1
-    )
-    # final output partitions: fine enough that a Zipf-hot term range doesn't
-    # become a straggler task (range partition sizes are skewed; small quanta
-    # pack into waves), coarse enough to keep file counts sane. One range per
-    # build partition: the r6 profile showed the merge running on half the
-    # cores (Qf = P/2 left 16 tasks on 32 cores).
-    Qf = max(cfg.index.build_partitions, 2)
+    # actual partition count (scan-split partitioning may exceed the config)
+    P = max(manifest.entries, default=-1) + 1
+    Qf = _n_ranges(cfg)
 
-    if P <= cfg.index.hot_term_partials * S:
-        # SINGLE-PHASE: even the hottest term has ≤ hot_term_partials*S
-        # partials, which one merge task absorbs comfortably — the salted
-        # pre-merge would only add a full extra shuffle of the index.
-        # Not persisted, although repartitionByRange's boundary sampler scans
-        # the partials a second time: caching every blob column in the JVM
-        # cost more than the second scan (standalone merge, 600-conversation
-        # corpus, 4 cores, medians of 6: 1.69-1.86 s JVM CPU without the
-        # persist, 1.76-1.93 s with it; lower in 4 of 4 alternating pairs)
-        write_merged_segments(partials, out_dir, Qf)
+    if _single_phase(cfg, P):
+        # SINGLE-PHASE: the salted pre-merge would only add a full extra
+        # shuffle of the index
+        _merge_partial_files(
+            spark, index_dir, manifest, _range_bounds(manifest.entries.values(), Qf)
+        )
         return
 
     # TWO-PHASE (cluster scale: 10^3+ build partitions → Zipf-hot terms have
     # one partial per partition and would straggle a single merge task).
     # Phase 1 pre-merges within contiguous salt chunks, bounding any task's
     # rows per term to P/S; phase 2 merges the ≤S pre-merged rows per term.
+    partials = spark.read.schema(PARTIAL_SCHEMA).parquet(partial_dir)
     hot = (
         partials.groupBy("term")
         .agg(F.count(F.lit(1)).alias("n_partials"))

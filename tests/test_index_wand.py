@@ -276,7 +276,7 @@ def test_partial_writer_rewrite_byte_identical(tmp_path, transcripts_pdf):
     batch = _partition_batch(transcripts_pdf.head(300), 3)
     write = indexer._make_partial_writer(
         indexer._make_segment_fn(10.0, CFG), [0, 0, 0, 40],
-        str(tmp_path / "partial"), str(tmp_path / "docstore"),
+        str(tmp_path / "partial"), str(tmp_path / "docstore"), 4,
     )
     lineage, data = [], []
     for _ in range(2):
@@ -304,7 +304,7 @@ def test_partial_writer_tokenless_partition(tmp_path, transcripts_pdf):
     pdf = transcripts_pdf.head(4).assign(text=["", "!!", " - ", None])
     write = indexer._make_partial_writer(
         indexer._make_segment_fn(10.0, CFG), [0, 7],
-        str(tmp_path / "partial"), str(tmp_path / "docstore"),
+        str(tmp_path / "partial"), str(tmp_path / "docstore"), 4,
     )
     assert list(write(iter([_partition_batch(pdf, 1)]))) == []
     docs = pd.read_parquet(tmp_path / "docstore" / "seg_id=1" / "part-00000.parquet")
@@ -436,20 +436,154 @@ def test_empty_build_opens_as_empty_index(spark, transcripts_sdf, tmp_path_facto
     assert bm25_topk_indexed(reader, "hotterm", 5).count() == 0
 
 
+# the default merge thresholds keep 8 build partitions on the single-phase
+# merge, whose tasks read the partial files themselves
+SINGLE_PHASE_CFG = EngineConfig(index=IndexConfig(block_size=32, build_partitions=8))
+
+
+@pytest.fixture(scope="module")
+def single_phase_dir(spark, transcripts_sdf, tmp_path_factory):
+    d = str(tmp_path_factory.mktemp("single_phase") / "idx")
+    build_index(spark, transcripts_sdf, d, cfg=SINGLE_PHASE_CFG, resume=False)
+    return d
+
+
+def _segment_table(d):
+    """Every merged row of the index at d, all MERGED_SCHEMA columns, by term."""
+    import pyarrow as pa
+    import pyarrow.dataset as pads
+
+    from audioflux_spark.operators.indexer import _segment_fields
+
+    schema = pa.schema(_segment_fields())
+    return pads.dataset(os.path.join(d, "segments"), schema=schema).to_table().sort_by("term")
+
+
+def test_range_merge_matches_exchange(spark, single_phase_dir, tmp_path):
+    """The range merge over the partial files and the exchange merge
+    (write_merged_segments, still used by the two-phase merge and
+    compaction) over the same partials give identical rows in every column,
+    part_counts and block lists included."""
+    from audioflux_spark.operators.indexer import PARTIAL_SCHEMA, write_merged_segments
+
+    partials = spark.read.schema(PARTIAL_SCHEMA).parquet(
+        os.path.join(single_phase_dir, "segments_partial")
+    )
+    write_merged_segments(partials, str(tmp_path / "segments"), 8)
+    got, want = _segment_table(single_phase_dir), _segment_table(str(tmp_path))
+    assert got.num_rows == want.num_rows > 0
+    for name in want.column_names:
+        assert got.column(name).equals(want.column(name)), name
+
+
+def test_range_merge_deterministic_layout(spark, transcripts_sdf, single_phase_dir, tmp_path):
+    """Term ranges come from the manifest's splits, not from a random
+    sample: two fresh builds write byte-identical segments/ files, and the
+    files hold disjoint, increasing term ranges."""
+    import pyarrow.parquet as pq
+
+    d2 = str(tmp_path / "idx")
+    build_index(spark, transcripts_sdf, d2, cfg=SINGLE_PHASE_CFG, resume=False)
+    files = sorted(os.listdir(os.path.join(single_phase_dir, "segments")))
+    assert sorted(os.listdir(os.path.join(d2, "segments"))) == files
+    assert len(files) > 1
+    ranges = []
+    for f in files:
+        a, b = (os.path.join(x, "segments", f) for x in (single_phase_dir, d2))
+        with open(a, "rb") as fa, open(b, "rb") as fb:
+            assert fa.read() == fb.read(), f
+        terms = pq.read_table(b, columns=["term"]).column("term").to_pylist()
+        assert terms == sorted(set(terms)), f
+        ranges.append((terms[0], terms[-1]))
+    for (_, hi), (lo, _) in zip(ranges, ranges[1:]):
+        assert hi < lo
+
+
+def test_range_merge_grouped_tasks_same_files(single_phase_dir, tmp_path):
+    """With fewer merge tasks than term ranges (fewer cores than
+    build_partitions), each task reads the partial files once and writes
+    several ranges: the files are byte-identical to one task per range."""
+    import pyarrow as pa
+
+    from audioflux_spark.operators.indexer import _make_range_merge, _range_bounds
+
+    entries = load_manifest(single_phase_dir).entries.values()
+    files = sorted(
+        os.path.join(single_phase_dir, e.output_path, "part-00000.parquet")
+        for e in entries
+        if e.terms
+    )
+    bounds = _range_bounds(entries, SINGLE_PHASE_CFG.index.build_partitions)
+    assert len(bounds) + 1 > 3
+    merge = _make_range_merge(files, bounds, str(tmp_path), 3)
+    for g in range(3):
+        list(merge(iter([pa.RecordBatch.from_pydict({"id": [g]})])))
+    want = os.path.join(single_phase_dir, "segments")
+    assert sorted(os.listdir(tmp_path)) == sorted(os.listdir(want))
+    for f in os.listdir(want):
+        with open(tmp_path / f, "rb") as a, open(os.path.join(want, f), "rb") as b:
+            assert a.read() == b.read(), f
+
+
+def test_range_merge_without_manifest_splits(spark, single_phase_dir, tmp_path):
+    """A manifest written before splits were recorded (no term_splits key in
+    any entry) still merges, standalone, to the same term -> blob set."""
+    from audioflux_spark.operators.indexer import merge_segments
+    from audioflux_spark.plans.checkpoint import manifest_path
+
+    d2 = str(tmp_path / "idx")
+    shutil.copytree(single_phase_dir, d2)
+    with open(manifest_path(d2)) as f:
+        raw = json.load(f)
+    for e in raw["entries"].values():
+        assert e.pop("term_splits")
+    with open(manifest_path(d2), "w") as f:
+        json.dump(raw, f)
+    assert all(e.term_splits == [] for e in load_manifest(d2).entries.values())
+
+    merge_segments(spark, d2, SINGLE_PHASE_CFG)
+    assert _segset(spark, d2) == _segset(spark, single_phase_dir)
+
+
+def test_two_phase_build_records_no_splits(index_dir, single_phase_dir):
+    """Splits are recorded only when the single-phase merge will read them:
+    the module CFG forces the two-phase merge, whose manifest would
+    otherwise grow as partitions x ranges at cluster scale."""
+    assert all(e.term_splits == [] for e in load_manifest(index_dir).entries.values())
+    assert all(e.term_splits for e in load_manifest(single_phase_dir).entries.values())
+
+
+def test_range_merge_without_manifest_refuses(spark, single_phase_dir, tmp_path):
+    """The single-phase merge takes its files from the manifest: partial
+    segments that no manifest lists are an error, not an index merged from
+    a directory listing."""
+    from audioflux_spark.operators.indexer import merge_segments
+    from audioflux_spark.plans.checkpoint import manifest_path
+
+    d2 = str(tmp_path / "idx")
+    shutil.copytree(single_phase_dir, d2)
+    os.remove(manifest_path(d2))
+    with pytest.raises(FileNotFoundError, match="manifest"):
+        merge_segments(spark, d2, SINGLE_PHASE_CFG)
+    assert sorted(os.listdir(os.path.join(d2, "segments"))) == sorted(
+        os.listdir(os.path.join(single_phase_dir, "segments"))
+    )
+
+
 # jobs a fresh single-phase build launches under AQE: partition stats with
 # the token count (4), the partials job writing docstore and partial files and
-# returning lineage (1), merge (3: range sampling, shuffle, writer)
-FRESH_BUILD_JOBS = 8
+# returning lineage with term splits (1), the merge job whose tasks read the
+# partial files (1)
+FRESH_BUILD_JOBS = 6
 
 
 def test_fresh_build_job_count(spark, transcripts_sdf, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("jobs") / "idx")
-    cfg = EngineConfig(index=IndexConfig(block_size=32, build_partitions=8))
     sc = spark.sparkContext
     group = "afspark-fresh-build"
     sc.setJobGroup(group, "fresh build")
     try:
-        build_index(spark, transcripts_sdf, d, cfg=cfg, resume=False)
+        build_index(spark, transcripts_sdf, d, cfg=SINGLE_PHASE_CFG, resume=False)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)

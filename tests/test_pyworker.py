@@ -128,11 +128,12 @@ def _kernels():
     return {
         "segment": segment,
         "partial_writer": indexer._make_partial_writer(
-            segment, [0], "segments_partial", "docstore"
+            segment, [0], "segments_partial", "docstore", 2
         ),
         "merge": merge,
         "merge_writer": indexer._make_merge_writer(merge, "segments"),
         "merge_salted": indexer._make_merge_stream(["term", "salt"]),
+        "range_merge": indexer._make_range_merge(["part-00000.parquet"], ["m"], "segments", 1),
         "shard_splitter": wand._make_shard_splitter({0: 10}, 4),
         "phrase_splitter": wand._make_shard_splitter({0: 10}, 4, include_pos=True),
         "score_shard": wand._make_score_shard({0: "ds"}, {0: 1.0}, 10, 1.0, 1.2, 0.75, True),
