@@ -8,8 +8,8 @@ reduction → peak-pick/top-k — re-expressed stage-for-stage as an idiomatic
 Spark DataFrame program:
 
     transcripts scan → vectorized tokenize → per-partition posting-segment
-    build (delta+varint blobs, block-max metadata) → salted repartition-by-term
-    merge → broadcast corpus stats → block-max-WAND top-k BM25 scoring.
+    build (delta+varint blobs, block-max metadata) → term-range merge →
+    broadcast corpus stats → block-max-WAND top-k BM25 scoring.
 
 Everything here derives from public knowledge only: the PySpark API, the
 reference repo's observable behavior, and published IR literature

@@ -88,17 +88,11 @@ class IndexConfig:
     """Physical index layout knobs.
 
     block_size: postings per block-max block (Ding & Suel 2011 use 64-128).
-    hot_term_partials: a term whose number of per-partition partial segments
-        exceeds this gets salted in the two-phase merge (SURVEY §7.1 M3 —
-        the Zipf-hot-term analog of the filterbank's dense hot rows).
-    salt_buckets: fan-out for salted partial merges.
     build_partitions: target partitions for the segment build (the OMP-block
         analog, /root/reference/src/stft_algorithm.c:756-787).
     """
 
     block_size: int = 128
-    hot_term_partials: int = 8
-    salt_buckets: int = 8
     build_partitions: int = 32
     # store token positions (varint per-posting deltas) — the substrate for
     # exact-phrase queries; adds one stable argsort + one varint stream to

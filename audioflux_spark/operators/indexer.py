@@ -1,4 +1,4 @@
-"""Index build — per-partition segment construction + salted hierarchical merge.
+"""Index build — per-partition segment construction + term-range merge.
 
 Pipeline (the audioFlux pipeline shape, SURVEY §7.0, re-expressed):
 
@@ -15,22 +15,24 @@ Scale design notes (100 TB / 10^12 turns):
   then offset+cumcount inside mapInArrow. Deterministic given the input.
 * the ONLY wide op on raw data is the hash repartition of an
   under-partitioned source; everything until the merge is partition-local.
-  The single-phase merge shuffles nothing: the partials task records term
+  The range merge shuffles nothing: the partials task records term
   splits of its partition, the driver turns them into term ranges, and each
   merge task (one per core) reads the partial files itself, once, keeping
-  its contiguous ranges. Only the
-  two-phase merge (cluster scale) shuffles, and then *compressed blobs*, not
-  postings rows — ~1-2 bytes per posting instead of ~30.
+  its contiguous ranges. Past _RANGE_MERGE_MAX_PARTIALS partial files the
+  build merges through the exchange compaction uses, which shuffles
+  *compressed blobs*, not postings rows — ~1-2 bytes per posting instead
+  of ~30.
 * the corpus text is regex-scanned twice: a JVM token count in the stats
   pass (avgdl is known before any output is written) and the Python
   tokenize in the partials job. That job's task holds each partition's rows
   once and writes everything derived from them: the docstore file and the
   partial segment file.
-* hot terms (Zipf head: 'hotterm' is in 40% of turns) would make
-  groupBy(term) straggle; phase 1 merges within salt buckets
-  (pmod(seg_id, S)), phase 2 merges ≤S pre-merged rows per term. Blob merge
-  is O(1) per boundary (rebase_first_gap) because segment doc ranges are
-  disjoint and ordered by seg_id.
+* hot terms (Zipf head: 'hotterm' is in 40% of turns) have one partial row
+  per partition. Merging them writes no byte: partial blobs are
+  self-contained and segment doc ranges are disjoint, so a merged row is
+  its partials' bytes back to back in first_doc order (_make_merge_stream).
+  A hot term costs its merge task its posting bytes and a sort over its
+  rows, whichever merge runs.
 """
 
 from __future__ import annotations
@@ -338,14 +340,14 @@ def _group_offsets(arr, starts: np.ndarray) -> np.ndarray:
     return new_off
 
 
-def _make_merge_stream(key_cols: list[str]):
+def _make_merge_stream():
     """Arrow merge kernel (mapInArrow): merging is pure OFFSET SUBSAMPLING.
 
     Partial blobs are self-contained (first gap absolute), so a merged
     posting list is simply the partials' bytes back-to-back with
     ``part_counts`` recording the reset boundaries (decoded by a vectorized
     segmented cumsum — functions/codec.delta_decode_segmented). The kernel
-    therefore never touches blob bytes: sort rows by (key..., first_doc),
+    therefore never touches blob bytes: sort rows by (term, first_doc),
     find group boundaries, and emit Binary/List arrays that REUSE the input
     data buffers with group-boundary offsets. No per-group Python, no byte
     rewriting — this was the worst-scaling stage as a pandas kernel
@@ -364,7 +366,7 @@ def _make_merge_stream(key_cols: list[str]):
         tbl = pa.Table.from_batches(batch_list)
         if tbl.num_rows == 0:
             return
-        sort_keys = [(c, "ascending") for c in [*key_cols, "first_doc"]]
+        sort_keys = [("term", "ascending"), ("first_doc", "ascending")]
         tbl = tbl.take(pc.sort_indices(tbl, sort_keys=sort_keys)).combine_chunks()
         n = tbl.num_rows
 
@@ -372,11 +374,7 @@ def _make_merge_stream(key_cols: list[str]):
         codes = term_arr.dictionary_encode().indices.to_numpy().astype(np.int64)
         change = np.ones(n, dtype=bool)
         if n > 1:
-            diff = codes[1:] != codes[:-1]
-            if "salt" in key_cols:
-                salt = tbl.column("salt").combine_chunks().to_numpy()
-                diff = diff | (salt[1:] != salt[:-1])
-            change[1:] = diff
+            change[1:] = codes[1:] != codes[:-1]
         starts = np.flatnonzero(change)
         ends = np.append(starts[1:], n)
         n_out = starts.size
@@ -576,8 +574,8 @@ def _write_staged(out_dir: str, write) -> None:
 
 
 def write_merged_segments(partials: DataFrame, out_dir: str, n_ranges: int) -> None:
-    """Final stage of the two-phase merge and of compaction, whose inputs
-    are DataFrames (persisted phase-1 output; offset-shifted generations):
+    """The exchange merge, of compaction (offset-shifted generations) and of
+    builds with more than _RANGE_MERGE_MAX_PARTIALS partial files:
     range-partition the rows by term, merge each range in the Arrow kernel,
     and write it from that kernel as one term-sorted file, so `term IN (...)`
     prunes files and row groups at query time."""
@@ -585,7 +583,7 @@ def write_merged_segments(partials: DataFrame, out_dir: str, n_ranges: int) -> N
         out_dir,
         lambda staging: partials.repartitionByRange(n_ranges, "term")
         .mapInArrow(
-            _make_merge_writer(_make_merge_stream(["term"]), staging),
+            _make_merge_writer(_make_merge_stream(), staging),
             schema="part int, terms long",
         )
         .collect(),
@@ -593,7 +591,7 @@ def write_merged_segments(partials: DataFrame, out_dir: str, n_ranges: int) -> N
 
 
 def _range_bounds(entries, n_ranges: int) -> list[str]:
-    """Term-range boundaries of the single-phase merge: n_ranges - 1 weighted
+    """Term-range boundaries of the range merge: n_ranges - 1 weighted
     quantiles of every manifest entry's term splits, each split weighted by
     the share of its partition's terms it stands for, deduplicated. Range i
     is [bounds[i-1], bounds[i]) with open ends. Any boundaries give a correct
@@ -610,7 +608,7 @@ def _range_bounds(entries, n_ranges: int) -> list[str]:
 
 
 def _make_range_merge(files: list[str], bounds: list[str], out_dir: str, n_tasks: int):
-    """The single-phase merge's task: its input is one row holding its task
+    """The range merge's task: its input is one row holding its task
     id g, which owns the contiguous term ranges [g*n/n_tasks, (g+1)*n/n_tasks)
     of the n = len(bounds) + 1 ranges; range i is [bounds[i-1], bounds[i]).
     The task reads the partial files itself, once, keeping the terms of its
@@ -622,7 +620,7 @@ def _make_range_merge(files: list[str], bounds: list[str], out_dir: str, n_tasks
     import pyarrow.dataset as pads
 
     schema = pa.schema(_segment_fields())
-    write = _make_merge_writer(_make_merge_stream(["term"]), out_dir)
+    write = _make_merge_writer(_make_merge_stream(), out_dir)
     n = len(bounds) + 1
 
     def span(first: int, end: int):
@@ -650,7 +648,7 @@ def _make_range_merge(files: list[str], bounds: list[str], out_dir: str, n_tasks
 def _merge_partial_files(
     spark: SparkSession, index_dir: str, manifest: Manifest, bounds: list[str]
 ) -> None:
-    """Single-phase merge in one Spark job without an exchange: each task
+    """The range merge, in one Spark job without an exchange: each task
     (_make_range_merge) reads the partial files directly and writes its
     contiguous term ranges. There is one task per core, not per range, as
     every task decodes every file. The files are those of the manifest's
@@ -696,16 +694,18 @@ def _n_ranges(cfg: EngineConfig) -> int:
     pack into waves), coarse enough to keep file counts sane. One range per
     build partition: the r6 profile showed the merge running on half the
     cores (Qf = P/2 left 16 tasks on 32 cores). Qf also sets the splits
-    each partials task records (Qf - 1); the single-phase merge packs the
-    ranges into one task per core (_merge_partial_files)."""
+    each partials task records (Qf - 1); the range merge packs the ranges
+    into one task per core (_merge_partial_files), the exchange merge
+    writes one file per range."""
     return max(cfg.index.build_partitions, 2)
 
 
-def _single_phase(cfg: EngineConfig, n_partials: int) -> bool:
-    """Whether the merge of n_partials build partitions runs single-phase:
-    even the hottest term then has at most hot_term_partials * salt_buckets
-    partials, which one merge task absorbs."""
-    return n_partials <= cfg.index.hot_term_partials * cfg.index.salt_buckets
+# The most partial files the range merge reads. Partial files are not
+# term-sorted, so each range-merge task decodes every one of them: the merge
+# reads (tasks x partial bytes). Past this many files the build merges
+# through the exchange (write_merged_segments), which reads each file once
+# and shuffles its blobs.
+_RANGE_MERGE_MAX_PARTIALS = 64
 
 
 def _phase_timer():
@@ -744,8 +744,8 @@ def build_index(
     Jobs: the stats pass (fingerprints, doc counts and the JVM token count
     that gives avgdl), the partials job (Python tokenize; writes docstore and
     partial segments, returns lineage with term splits), the merge (one job
-    whose tasks read the partial files; the two-phase merge at cluster scale
-    shuffles).
+    whose tasks read the partial files; past _RANGE_MERGE_MAX_PARTIALS
+    partitions, the exchange merge's sampling and shuffle jobs).
     """
     os.makedirs(index_dir, exist_ok=True)
     mark = _phase_timer()
@@ -830,10 +830,9 @@ def build_index(
                     offsets,
                     os.path.abspath(partial_dir),
                     os.path.abspath(docstore_dir),
-                    # only the single-phase merge reads splits: the two-phase
-                    # one runs at 10^3+ partitions, where P * Qf strings would
-                    # swell the lineage and the manifest
-                    _n_ranges(cfg) if _single_phase(cfg, P) else 1,
+                    # only the range merge reads splits: past its limit P * Qf
+                    # strings would swell the lineage and the manifest
+                    _n_ranges(cfg) if P <= _RANGE_MERGE_MAX_PARTIALS else 1,
                 ),
                 schema=LINEAGE_SCHEMA,
             )
@@ -906,53 +905,24 @@ def merge_segments(
 ) -> None:
     """(Re)merge segments_partial/ into segments/; the previous segments/
     stays readable until the new one is published. The partition count and
-    the single-phase term ranges come from the manifest (build_index passes
-    its own; standalone calls read manifest.json), so no job scans for them."""
-    partial_dir = os.path.join(index_dir, "segments_partial")
-    out_dir = os.path.join(index_dir, "segments")
+    the range merge's term ranges come from the manifest (build_index passes
+    its own; standalone calls read manifest.json), so no job scans for them.
+    Past _RANGE_MERGE_MAX_PARTIALS partitions the exchange merge reads the
+    partial files instead."""
     if manifest is None:
         manifest = load_manifest(index_dir)
-    S = cfg.index.salt_buckets
     # actual partition count (scan-split partitioning may exceed the config)
     P = max(manifest.entries, default=-1) + 1
     Qf = _n_ranges(cfg)
-
-    if _single_phase(cfg, P):
-        # SINGLE-PHASE: the salted pre-merge would only add a full extra
-        # shuffle of the index
+    if P <= _RANGE_MERGE_MAX_PARTIALS:
         _merge_partial_files(
             spark, index_dir, manifest, _range_bounds(manifest.entries.values(), Qf)
         )
-        return
-
-    # TWO-PHASE (cluster scale: 10^3+ build partitions → Zipf-hot terms have
-    # one partial per partition and would straggle a single merge task).
-    # Phase 1 pre-merges within contiguous salt chunks, bounding any task's
-    # rows per term to P/S; phase 2 merges the ≤S pre-merged rows per term.
-    partials = spark.read.schema(PARTIAL_SCHEMA).parquet(partial_dir)
-    hot = (
-        partials.groupBy("term")
-        .agg(F.count(F.lit(1)).alias("n_partials"))
-        .filter(F.col("n_partials") > cfg.index.hot_term_partials)
-        .select("term", F.lit(True).alias("is_hot"))
-    )
-    salted = (
-        partials.join(F.broadcast(hot), on="term", how="left")
-        .withColumn(
-            "salt",
-            F.when(
-                F.col("is_hot"),
-                F.floor(F.col("seg_id").cast("long") * S / P).cast("int"),
-            ).otherwise(F.lit(0)),
+    else:
+        write_merged_segments(
+            spark.read.schema(PARTIAL_SCHEMA).parquet(
+                os.path.join(index_dir, "segments_partial")
+            ),
+            os.path.join(index_dir, "segments"),
+            Qf,
         )
-        .drop("is_hot")
-    )
-    Q = max(cfg.index.build_partitions // 2, 1)
-    # persisted so the range sampler below doesn't recompute the shuffle
-    p1 = (
-        salted.repartition(Q, "term", "salt")
-        .mapInArrow(_make_merge_stream(["term", "salt"]), schema=MERGED_SCHEMA)
-        .persist()
-    )
-    write_merged_segments(p1, out_dir, Qf)
-    p1.unpersist()

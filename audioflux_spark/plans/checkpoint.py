@@ -11,9 +11,10 @@ fingerprint is missing or stale.
 Manifest row: (partition_id, input_fingerprint, status, doc_offset, terms,
 postings, bytes, skew_ratio, output_path, term_splits) — FIXTURES.md F5.
 term_splits are the partition's terms at even shares in byte order, from
-which the single-phase merge draws its term ranges; a kept partition keeps
+which the range merge draws its term ranges; a kept partition keeps
 them, so a resumed build merges over the same ranges. They are empty when
-the build's partition count sends the merge down the two-phase path.
+the build has more partitions than the range merge reads, and merges
+through the exchange instead.
 """
 
 from __future__ import annotations
@@ -41,9 +42,9 @@ class PartitionEntry:
     bytes: int = 0
     skew_ratio: float = 0.0
     output_path: str = ""
-    # empty for two-phase builds and in manifests written before splits were
-    # recorded: the merge's ranges are then drawn from the other entries
-    # (any ranges are correct)
+    # empty for exchange-merged builds and in manifests written before
+    # splits were recorded: the merge's ranges are then drawn from the other
+    # entries (any ranges are correct)
     term_splits: list[str] = field(default_factory=list)
 
 

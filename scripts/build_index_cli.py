@@ -32,16 +32,7 @@ def main() -> None:
     spark = SparkSession.builder.appName("afspark-build-index").getOrCreate()
     cfg = DEFAULT
     if args.partitions:
-        cfg = EngineConfig(
-            analyzer=DEFAULT.analyzer,
-            bm25=DEFAULT.bm25,
-            index=IndexConfig(
-                block_size=DEFAULT.index.block_size,
-                hot_term_partials=DEFAULT.index.hot_term_partials,
-                salt_buckets=DEFAULT.index.salt_buckets,
-                build_partitions=args.partitions,
-            ),
-        )
+        cfg = EngineConfig(index=IndexConfig(build_partitions=args.partitions))
     t = read_transcripts(spark, args.input)
     meta = build_index(spark, t, args.index_dir, cfg=cfg, resume=not args.no_resume)
     print(json.dumps({"n_docs": meta.n_docs, "avgdl": meta.avgdl,

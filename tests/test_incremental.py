@@ -14,9 +14,7 @@ from audioflux_spark.operators.indexer import build_index
 from audioflux_spark.sources.segments import IndexReader
 from tests.test_topk_exhaustive import assert_rank_identical
 
-CFG = EngineConfig(
-    index=IndexConfig(block_size=32, hot_term_partials=4, salt_buckets=4, build_partitions=4)
-)
+CFG = EngineConfig(index=IndexConfig(block_size=32, build_partitions=4))
 
 
 @pytest.fixture(scope="module")

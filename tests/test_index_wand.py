@@ -19,12 +19,9 @@ from audioflux_spark.plans.checkpoint import load_manifest, save_manifest
 from audioflux_spark.sources.segments import IndexReader
 from tests.test_topk_exhaustive import assert_rank_identical
 
-# hot_term_partials=1, salt_buckets=2 forces the TWO-PHASE salted merge even
-# at 8 build partitions (threshold 1*2 < 8); the incremental tests cover the
-# single-phase path
-CFG = EngineConfig(
-    index=IndexConfig(block_size=32, hot_term_partials=1, salt_buckets=2, build_partitions=8)
-)
+# 8 build partitions take the range merge, whose tasks read the partial
+# files themselves; the exchange_build fixture passes its limit
+CFG = EngineConfig(index=IndexConfig(block_size=32, build_partitions=8))
 
 
 @pytest.fixture(scope="module")
@@ -91,11 +88,13 @@ def test_hot_term_was_merged_from_many_partials(reader, index_dir, spark):
     assert merged == 1
 
 
-def test_wand_rank_identity_all_queries(reader, oracle, queries):
-    for q in queries:
-        got = bm25_topk_indexed(reader, q.query_text, q.k).toPandas()
-        want = oracle.topk(q.query_text, q.k)
-        assert_rank_identical(got, want, context=f"{q.query_id} '{q.query_text}'")
+def test_wand_rank_identity_all_queries(spark, reader, exchange_build, oracle, queries):
+    """Every query, on the range-merged index and the exchange-merged one."""
+    for r in (reader, IndexReader(spark, exchange_build[0])):
+        for q in queries:
+            got = bm25_topk_indexed(r, q.query_text, q.k).toPandas()
+            want = oracle.topk(q.query_text, q.k)
+            assert_rank_identical(got, want, context=f"{q.query_id} '{q.query_text}'")
 
 
 def test_wand_equals_exhaustive_random_queries(reader, oracle):
@@ -436,18 +435,6 @@ def test_empty_build_opens_as_empty_index(spark, transcripts_sdf, tmp_path_facto
     assert bm25_topk_indexed(reader, "hotterm", 5).count() == 0
 
 
-# the default merge thresholds keep 8 build partitions on the single-phase
-# merge, whose tasks read the partial files themselves
-SINGLE_PHASE_CFG = EngineConfig(index=IndexConfig(block_size=32, build_partitions=8))
-
-
-@pytest.fixture(scope="module")
-def single_phase_dir(spark, transcripts_sdf, tmp_path_factory):
-    d = str(tmp_path_factory.mktemp("single_phase") / "idx")
-    build_index(spark, transcripts_sdf, d, cfg=SINGLE_PHASE_CFG, resume=False)
-    return d
-
-
 def _segment_table(d):
     """Every merged row of the index at d, all MERGED_SCHEMA columns, by term."""
     import pyarrow as pa
@@ -459,37 +446,77 @@ def _segment_table(d):
     return pads.dataset(os.path.join(d, "segments"), schema=schema).to_table().sort_by("term")
 
 
-def test_range_merge_matches_exchange(spark, single_phase_dir, tmp_path):
+def _build_jobs(spark, transcripts, d) -> list[int]:
+    """Build a fresh index with CFG at d; the ids of the jobs it launched."""
+    sc = spark.sparkContext
+    group = f"afspark-fresh-build-{d}"
+    sc.setJobGroup(group, "fresh build")
+    try:
+        build_index(spark, transcripts, d, cfg=CFG, resume=False)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture(scope="module")
+def exchange_build(spark, transcripts_sdf, tmp_path_factory):
+    """(index dir, job ids) of a fresh build from more scan splits than the
+    range merge reads, which is how real inputs pass its limit: it merges
+    through the exchange."""
+    from audioflux_spark.operators.indexer import _RANGE_MERGE_MAX_PARTIALS
+
+    d = str(tmp_path_factory.mktemp("exchange") / "idx")
+    jobs = _build_jobs(spark, transcripts_sdf.repartition(_RANGE_MERGE_MAX_PARTIALS + 1), d)
+    assert len(load_manifest(d).entries) == _RANGE_MERGE_MAX_PARTIALS + 1
+    return d, jobs
+
+
+def test_range_merge_matches_exchange(spark, index_dir, exchange_build, tmp_path):
     """The range merge over the partial files and the exchange merge
-    (write_merged_segments, still used by the two-phase merge and
+    (write_merged_segments, used past the range merge's limit and by
     compaction) over the same partials give identical rows in every column,
-    part_counts and block lists included."""
-    from audioflux_spark.operators.indexer import PARTIAL_SCHEMA, write_merged_segments
+    part_counts and block lists included: for the range-merged index and
+    for the exchange-merged one."""
+    from audioflux_spark.operators.indexer import (
+        PARTIAL_SCHEMA,
+        _merge_partial_files,
+        _range_bounds,
+        write_merged_segments,
+    )
 
     partials = spark.read.schema(PARTIAL_SCHEMA).parquet(
-        os.path.join(single_phase_dir, "segments_partial")
+        os.path.join(index_dir, "segments_partial")
     )
-    write_merged_segments(partials, str(tmp_path / "segments"), 8)
-    got, want = _segment_table(single_phase_dir), _segment_table(str(tmp_path))
-    assert got.num_rows == want.num_rows > 0
-    for name in want.column_names:
-        assert got.column(name).equals(want.column(name)), name
+    exchanged = str(tmp_path / "exchanged")
+    write_merged_segments(partials, os.path.join(exchanged, "segments"), 8)
+
+    ranged = str(tmp_path / "ranged")
+    shutil.copytree(exchange_build[0], ranged)
+    m = load_manifest(ranged)
+    _merge_partial_files(spark, ranged, m, _range_bounds(m.entries.values(), 8))
+
+    for got_dir, want_dir in ((index_dir, exchanged), (ranged, exchange_build[0])):
+        got, want = _segment_table(got_dir), _segment_table(want_dir)
+        assert got.num_rows == want.num_rows > 0
+        for name in want.column_names:
+            assert got.column(name).equals(want.column(name)), (got_dir, name)
 
 
-def test_range_merge_deterministic_layout(spark, transcripts_sdf, single_phase_dir, tmp_path):
+def test_range_merge_deterministic_layout(spark, transcripts_sdf, index_dir, tmp_path):
     """Term ranges come from the manifest's splits, not from a random
     sample: two fresh builds write byte-identical segments/ files, and the
     files hold disjoint, increasing term ranges."""
     import pyarrow.parquet as pq
 
     d2 = str(tmp_path / "idx")
-    build_index(spark, transcripts_sdf, d2, cfg=SINGLE_PHASE_CFG, resume=False)
-    files = sorted(os.listdir(os.path.join(single_phase_dir, "segments")))
+    build_index(spark, transcripts_sdf, d2, cfg=CFG, resume=False)
+    files = sorted(os.listdir(os.path.join(index_dir, "segments")))
     assert sorted(os.listdir(os.path.join(d2, "segments"))) == files
     assert len(files) > 1
     ranges = []
     for f in files:
-        a, b = (os.path.join(x, "segments", f) for x in (single_phase_dir, d2))
+        a, b = (os.path.join(x, "segments", f) for x in (index_dir, d2))
         with open(a, "rb") as fa, open(b, "rb") as fb:
             assert fa.read() == fb.read(), f
         terms = pq.read_table(b, columns=["term"]).column("term").to_pylist()
@@ -499,7 +526,7 @@ def test_range_merge_deterministic_layout(spark, transcripts_sdf, single_phase_d
         assert hi < lo
 
 
-def test_range_merge_grouped_tasks_same_files(single_phase_dir, tmp_path):
+def test_range_merge_grouped_tasks_same_files(index_dir, tmp_path):
     """With fewer merge tasks than term ranges (fewer cores than
     build_partitions), each task reads the partial files once and writes
     several ranges: the files are byte-identical to one task per range."""
@@ -507,32 +534,32 @@ def test_range_merge_grouped_tasks_same_files(single_phase_dir, tmp_path):
 
     from audioflux_spark.operators.indexer import _make_range_merge, _range_bounds
 
-    entries = load_manifest(single_phase_dir).entries.values()
+    entries = load_manifest(index_dir).entries.values()
     files = sorted(
-        os.path.join(single_phase_dir, e.output_path, "part-00000.parquet")
+        os.path.join(index_dir, e.output_path, "part-00000.parquet")
         for e in entries
         if e.terms
     )
-    bounds = _range_bounds(entries, SINGLE_PHASE_CFG.index.build_partitions)
+    bounds = _range_bounds(entries, CFG.index.build_partitions)
     assert len(bounds) + 1 > 3
     merge = _make_range_merge(files, bounds, str(tmp_path), 3)
     for g in range(3):
         list(merge(iter([pa.RecordBatch.from_pydict({"id": [g]})])))
-    want = os.path.join(single_phase_dir, "segments")
+    want = os.path.join(index_dir, "segments")
     assert sorted(os.listdir(tmp_path)) == sorted(os.listdir(want))
     for f in os.listdir(want):
         with open(tmp_path / f, "rb") as a, open(os.path.join(want, f), "rb") as b:
             assert a.read() == b.read(), f
 
 
-def test_range_merge_without_manifest_splits(spark, single_phase_dir, tmp_path):
+def test_range_merge_without_manifest_splits(spark, index_dir, tmp_path):
     """A manifest written before splits were recorded (no term_splits key in
     any entry) still merges, standalone, to the same term -> blob set."""
     from audioflux_spark.operators.indexer import merge_segments
     from audioflux_spark.plans.checkpoint import manifest_path
 
     d2 = str(tmp_path / "idx")
-    shutil.copytree(single_phase_dir, d2)
+    shutil.copytree(index_dir, d2)
     with open(manifest_path(d2)) as f:
         raw = json.load(f)
     for e in raw["entries"].values():
@@ -541,51 +568,50 @@ def test_range_merge_without_manifest_splits(spark, single_phase_dir, tmp_path):
         json.dump(raw, f)
     assert all(e.term_splits == [] for e in load_manifest(d2).entries.values())
 
-    merge_segments(spark, d2, SINGLE_PHASE_CFG)
-    assert _segset(spark, d2) == _segset(spark, single_phase_dir)
+    merge_segments(spark, d2, CFG)
+    assert _segset(spark, d2) == _segset(spark, index_dir)
 
 
-def test_two_phase_build_records_no_splits(index_dir, single_phase_dir):
-    """Splits are recorded only when the single-phase merge will read them:
-    the module CFG forces the two-phase merge, whose manifest would
-    otherwise grow as partitions x ranges at cluster scale."""
-    assert all(e.term_splits == [] for e in load_manifest(index_dir).entries.values())
-    assert all(e.term_splits for e in load_manifest(single_phase_dir).entries.values())
+def test_exchange_build_records_no_splits(index_dir, exchange_build):
+    """Splits are recorded only when the range merge will read them: past
+    its limit the build merges through the exchange, and the manifest would
+    otherwise grow as partitions x ranges."""
+    assert all(e.term_splits == [] for e in load_manifest(exchange_build[0]).entries.values())
+    assert all(e.term_splits for e in load_manifest(index_dir).entries.values())
 
 
-def test_range_merge_without_manifest_refuses(spark, single_phase_dir, tmp_path):
-    """The single-phase merge takes its files from the manifest: partial
+def test_range_merge_without_manifest_refuses(spark, index_dir, tmp_path):
+    """The range merge takes its files from the manifest: partial
     segments that no manifest lists are an error, not an index merged from
     a directory listing."""
     from audioflux_spark.operators.indexer import merge_segments
     from audioflux_spark.plans.checkpoint import manifest_path
 
     d2 = str(tmp_path / "idx")
-    shutil.copytree(single_phase_dir, d2)
+    shutil.copytree(index_dir, d2)
     os.remove(manifest_path(d2))
     with pytest.raises(FileNotFoundError, match="manifest"):
-        merge_segments(spark, d2, SINGLE_PHASE_CFG)
+        merge_segments(spark, d2, CFG)
     assert sorted(os.listdir(os.path.join(d2, "segments"))) == sorted(
-        os.listdir(os.path.join(single_phase_dir, "segments"))
+        os.listdir(os.path.join(index_dir, "segments"))
     )
 
 
-# jobs a fresh single-phase build launches under AQE: partition stats with
+# jobs a fresh range-merge build launches under AQE: partition stats with
 # the token count (4), the partials job writing docstore and partial files and
 # returning lineage with term splits (1), the merge job whose tasks read the
 # partial files (1)
 FRESH_BUILD_JOBS = 6
+# jobs of the fresh exchange-merge build (exchange_build), whose input is a
+# repartitioned DataFrame: partition stats (4), the partials job, which
+# re-runs the input's shuffle (2), and the exchange merge (4): listing the
+# 65 seg_id directories (past Spark's parallel-listing threshold), range
+# sampling, the shuffle map stage and the merge writers
+EXCHANGE_BUILD_JOBS = 10
 
 
-def test_fresh_build_job_count(spark, transcripts_sdf, tmp_path_factory):
+def test_fresh_build_job_count(spark, transcripts_sdf, exchange_build, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("jobs") / "idx")
-    sc = spark.sparkContext
-    group = "afspark-fresh-build"
-    sc.setJobGroup(group, "fresh build")
-    try:
-        build_index(spark, transcripts_sdf, d, cfg=SINGLE_PHASE_CFG, resume=False)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert len(jobs) <= FRESH_BUILD_JOBS, sorted(jobs)
+    jobs = _build_jobs(spark, transcripts_sdf, d)
+    assert len(jobs) <= FRESH_BUILD_JOBS, jobs
+    assert len(exchange_build[1]) <= EXCHANGE_BUILD_JOBS, exchange_build[1]

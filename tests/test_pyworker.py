@@ -124,7 +124,7 @@ def _kernels():
     from audioflux_spark.operators import indexer, wand
 
     segment = indexer._make_segment_fn(1.0, DEFAULT)
-    merge = indexer._make_merge_stream(["term"])
+    merge = indexer._make_merge_stream()
     return {
         "segment": segment,
         "partial_writer": indexer._make_partial_writer(
@@ -132,7 +132,6 @@ def _kernels():
         ),
         "merge": merge,
         "merge_writer": indexer._make_merge_writer(merge, "segments"),
-        "merge_salted": indexer._make_merge_stream(["term", "salt"]),
         "range_merge": indexer._make_range_merge(["part-00000.parquet"], ["m"], "segments", 1),
         "shard_splitter": wand._make_shard_splitter({0: 10}, 4),
         "phrase_splitter": wand._make_shard_splitter({0: 10}, 4, include_pos=True),
