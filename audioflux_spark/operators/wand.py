@@ -31,24 +31,28 @@ reaches the driver):
   scored per (query, generation, shard) via applyInPandas, then k-way merged
   with a rank window. Per-task memory is bounded by the shard size, not by
   the hottest term's full posting list.
-* ``bm25_topk_indexed`` — single-query convenience wrapper over the same
-  path.
+* ``bm25_topk_indexed`` — one query, one job of one Python task
+  (``_serve_query``) that reads the query terms' segment rows and the hits'
+  docstore keys from the files the reader listed at open, refusing files
+  changed since, and returns the sorted top k. A generation larger than one
+  shard sends the query through ``bm25_topk_many`` instead.
 """
 
 from __future__ import annotations
 
+import json
+import operator
 import os
-import warnings
+from functools import reduce
 
 import numpy as np
 import pandas as pd
-import pyspark
-from py4j.protocol import Py4JError, Py4JJavaError
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from audioflux_spark.functions.bm25 import idf_value
 from audioflux_spark.functions.codec import varint_decode
+from audioflux_spark.operators.indexer import _segment_fields
 from audioflux_spark.operators.topk import query_terms
 from audioflux_spark.sources.segments import IndexReader
 
@@ -330,48 +334,160 @@ def _make_shard_splitter(gen_ndocs: dict[int, int], shard_docs: int,
     return split
 
 
-def _docstore_keys(docstore_dir: str, doc_ids: np.ndarray) -> pd.DataFrame:
-    """(doc_id, conv_id, turn_idx) for the given docIDs, read with pyarrow
-    directly inside the executor task: docstore files are doc_id-sorted, so
-    the isin filter prunes to ~|doc_ids| row groups via parquet statistics.
-    This folds the key lookup into the scoring job — serving pays ONE Spark
-    job instead of scoring + lookup."""
+def _ub_scale(avgdl: float, encode_avgdl: float) -> float:
+    """Block-max widening for a generation encoded under encode_avgdl and
+    scored under the global avgdl: tf-norm is monotone in avgdl, bounded by
+    their ratio."""
+    return max(1.0, avgdl / encode_avgdl) if encode_avgdl else 1.0
+
+
+def _check_stamps(files) -> None:
+    """Raise unless every (path, size, mtime_ns) still matches its file:
+    the index was rebuilt or removed since the reader listed it."""
+    for path, size, mtime_ns in files:
+        try:
+            st = os.stat(path)
+        except FileNotFoundError:
+            st = None
+        if st is None or (st.st_size, st.st_mtime_ns) != (size, mtime_ns):
+            raise RuntimeError(
+                f"index file {path} changed or vanished since its IndexReader "
+                "opened; open a new IndexReader"
+            )
+
+
+def _term_filter(terms: list[str]):
+    """Segment rows of the query terms. An OR of equalities, not ``isin``:
+    pyarrow checks this form against each row group's min/max statistics,
+    so a segment file whose term range holds no query term is skipped
+    without decoding (4 term-range files, one term: 21 ms of CPU with isin,
+    7.6 ms with ==). The OR's cost grows faster than linearly with its
+    width (200 values: 43 ms), so a query of more than 64 terms takes isin,
+    which decodes every file once."""
     import pyarrow.dataset as pads
 
-    dset = pads.dataset(docstore_dir, format="parquet", partitioning="hive")
-    tbl = dset.to_table(
-        columns=["doc_id", "conv_id", "turn_idx"],
-        filter=pads.field("doc_id").isin([int(d) for d in doc_ids]),
+    field = pads.field("term")
+    if len(terms) > 64:
+        return field.isin(terms)
+    return reduce(operator.or_, [field == t for t in terms])
+
+
+def _read_stamped(files, schema, columns: list[str], filter):
+    """The rows of ``files`` (listed with stamps at reader open) that pass
+    ``filter``, read with pyarrow; the stamps are checked before and after
+    the read, so rows from a replaced file are never returned."""
+    import pyarrow.dataset as pads
+
+    if not files:
+        return schema.empty_table().select(columns)
+    _check_stamps(files)
+    tbl = pads.dataset(
+        [f[0] for f in files], schema=schema, format="parquet"
+    ).to_table(columns=columns, filter=filter)
+    _check_stamps(files)
+    return tbl
+
+
+def _docstore_keys(docstore_files, doc_ids: np.ndarray) -> dict[int, tuple[str, int]]:
+    """doc_id → (conv_id, turn_idx) for the given docIDs, read with pyarrow
+    inside the serving task. Docstore files are doc_id-sorted; the range
+    conjuncts let pyarrow skip files and row groups outside the hits' span
+    by their statistics, and isin picks the rows."""
+    import pyarrow as pa
+    import pyarrow.dataset as pads
+
+    schema = pa.schema(
+        [("doc_id", pa.int64()), ("conv_id", pa.string()), ("turn_idx", pa.int32())]
     )
-    return tbl.to_pandas()
+    field = pads.field("doc_id")
+    ids = doc_ids.tolist()
+    tbl = _read_stamped(
+        docstore_files, schema, schema.names,
+        field.isin(ids) & (field >= min(ids)) & (field <= max(ids)),
+    )
+    return dict(zip(
+        tbl.column("doc_id").to_pylist(),
+        zip(tbl.column("conv_id").to_pylist(), tbl.column("turn_idx").to_pylist()),
+    ))
+
+
+# the segment columns the WAND kernel reads (no positions, no part counts)
+_KERNEL_COLS = [
+    "term", "df", "last_doc", "doc_blob", "tf_blob", "dl_blob", "block_counts",
+    "block_firsts", "block_maxes", "block_doc_bytes", "block_tf_bytes",
+    "block_dl_bytes",
+]
+_SERVE_SCHEMA = "conv_id string, turn_idx int, score double"
+
+
+def _serve_query(batches):
+    """The single-query task (mapInArrow over one parameter row, a JSON
+    object built by bm25_topk_indexed). It reads the query terms' segment
+    rows of every generation from the files listed at reader open, sums df
+    across generations for the global idf, runs the WAND kernel once per
+    generation over its whole docID range, resolves the hits' keys from the
+    generation's docstore files, and returns the top k by (score desc,
+    conv_id, turn_idx). Module-level, so unpickling it imports the package
+    (plans/pyworker.py) and ships no closure."""
+    import pyarrow as pa
+
+    (p,) = [json.loads(s) for b in batches for s in b.column("params").to_pylist()]
+    k, n_docs, avgdl = p["k"], p["n_docs"], p["avgdl"]
+    seg_schema = pa.schema(_segment_fields())
+    has_term = _term_filter(p["terms"])
+    gen_rows = [
+        _read_stamped(g["segments"], seg_schema, _KERNEL_COLS, has_term).to_pylist()
+        for g in p["gens"]
+    ]
+    gdf: dict[str, int] = {}
+    for rows in gen_rows:
+        for r in rows:
+            gdf[r["term"]] = gdf.get(r["term"], 0) + r["df"]
+    hits = []  # (-score, conv_id, turn_idx): ascending = the result order
+    for g, rows in zip(p["gens"], gen_rows):
+        doc_ids, scores = wand_topk_kernel(
+            rows, n_docs, avgdl, p["k1"], p["b"], k,
+            idfs=[idf_value(n_docs, gdf[r["term"]]) for r in rows],
+            ub_scale=_ub_scale(avgdl, g["encode_avgdl"]),
+            doc_lo=0, doc_hi=g["n_docs"],
+        )
+        if doc_ids.size:
+            keys = _docstore_keys(g["docstore"], doc_ids)
+            hits += [(-s, *keys[d]) for d, s in zip(doc_ids.tolist(), scores.tolist())]
+    top = sorted(hits)[:k]
+    if top:
+        neg_scores, conv_ids, turn_idxs = zip(*top)
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array(conv_ids, pa.string()),
+                pa.array(turn_idxs, pa.int32()),
+                pa.array([-s for s in neg_scores], pa.float64()),
+            ],
+            names=["conv_id", "turn_idx", "score"],
+        )
 
 
 def _make_score_shard(
-    gen_docstore: dict[int, str],
     gen_avgdl: dict[int, float],
     n_docs: int,
     avgdl: float,
     k1: float,
     b: float,
-    resolve_keys: bool,
 ):
-    """Per-(query, gen, shard) scoring function over READER-CONSTANT state
-    only (no per-query capture) — so the single-query path can build its
-    serialized UDF once per reader and reuse it across queries."""
+    """Per-(query, gen, shard) scoring function of the batch path."""
 
     def score_shard(pdf: pd.DataFrame) -> pd.DataFrame:
         k = int(pdf["k"].iloc[0])
         gen_id = int(pdf["gen"].iloc[0])
         rows = pdf.to_dict("records")  # one C-level conversion, no .iloc loop
         idfs = [idf_value(n_docs, int(r["gdf"])) for r in rows]
-        ga = gen_avgdl.get(gen_id, avgdl)
-        ub_scale = max(1.0, avgdl / ga) if ga else 1.0
         doc_ids, scores = wand_topk_kernel(
-            rows, n_docs, avgdl, k1, b, k, idfs=idfs, ub_scale=ub_scale,
+            rows, n_docs, avgdl, k1, b, k, idfs=idfs,
+            ub_scale=_ub_scale(avgdl, gen_avgdl.get(gen_id, avgdl)),
             doc_lo=int(pdf["range_lo"].iloc[0]),
             doc_hi=int(pdf["range_hi"].iloc[0]),
         )
-        out = pd.DataFrame(
+        return pd.DataFrame(
             {
                 "query_id": pdf["query_id"].iloc[0],
                 "gen": gen_id,
@@ -380,132 +496,23 @@ def _make_score_shard(
                 "k": k,
             }
         )
-        if resolve_keys:
-            if len(out):
-                keys = _docstore_keys(gen_docstore[gen_id], doc_ids)
-                out = out.merge(keys, on="doc_id", how="left")
-            else:
-                out = out.assign(
-                    conv_id=pd.Series(dtype=str), turn_idx=pd.Series(dtype="int32")
-                )
-            out = out[
-                ["query_id", "gen", "doc_id", "conv_id", "turn_idx", "score", "k"]
-            ]
-        return out
 
     return score_shard
 
 
 _HITS_SCHEMA = "query_id string, gen int, doc_id long, score double, k int"
-_HITS_SCHEMA_KEYS = (
-    "query_id string, gen int, doc_id long, conv_id string, "
-    "turn_idx int, score double, k int"
-)
-
-
-# The private mapInPandas surface of _map_in_pandas_cached (3-arg
-# ``_jdf.mapInPandas`` plus ``_build_java_profile``) is verified against
-# PySpark 4.1 only; any other version takes the public API.
-_PRIVATE_MAP_VERIFIED = tuple(int(p) for p in pyspark.__version__.split(".")[:2]) == (4, 1)
-
-
-def _serving_udf(reader: IndexReader, resolve_keys: bool):
-    """(pandas_udf, plain_fn, schema) for the single-(query, gen, shard)
-    scoring task, cached on the reader instance. The closure captures only
-    reader-constant state, so one serialized UDF serves every query — the
-    per-call mapInPandas path re-cloudpickles the scoring closure on EVERY
-    query (~40 ms of driver time per query; guide §4: pay heavyweight init
-    once)."""
-    cache = getattr(reader, "_wand_udf_cache", None)
-    if cache is None:
-        cache = {}
-        reader._wand_udf_cache = cache
-    hit = cache.get(resolve_keys)
-    if hit is not None:
-        return hit
-
-    from pyspark.sql.pandas.functions import pandas_udf
-    from pyspark.util import PythonEvalType
-
-    score_shard = _make_score_shard(
-        {g.gen_id: os.path.join(g.dir, "docstore") for g in reader.generations},
-        {g.gen_id: (g.meta.encode_avgdl or g.meta.avgdl) for g in reader.generations},
-        reader.n_docs,
-        reader.avgdl,
-        reader.meta.k1,
-        reader.meta.b,
-        resolve_keys,
-    )
-
-    def score_one(batches):
-        frames = [p for p in batches if len(p)]
-        if frames:
-            yield score_shard(pd.concat(frames, ignore_index=True))
-
-    schema = _HITS_SCHEMA_KEYS if resolve_keys else _HITS_SCHEMA
-    udf = pandas_udf(
-        score_one, returnType=schema,
-        functionType=PythonEvalType.SQL_MAP_PANDAS_ITER_UDF,
-    )
-    cache[resolve_keys] = {
-        "udf": udf, "fn": score_one, "schema": schema,
-        "private_ok": _PRIVATE_MAP_VERIFIED, "jc": {},
-    }
-    return cache[resolve_keys]
-
-
-def _map_in_pandas_cached(df: DataFrame, entry, cols: list[str]) -> DataFrame:
-    """df.mapInPandas with a pre-built (already-serialized) pandas UDF.
-
-    Replicates mapInPandas's four lines (pyspark/sql/pandas/map_ops.py)
-    against the cached UDF object, whose ``_judf`` — the cloudpickled
-    function + JVM UserDefinedPythonFunction — is created once and reused
-    (pyspark caches it on the UserDefinedFunction instance). The applied
-    UDF *expression* (UDF over the given column names, unresolved
-    attributes) is likewise built once per column list and re-resolved
-    against each query's child plan, skipping ~20 per-query Column py4j
-    round-trips. If the private surface has moved (a missing attribute, a
-    changed Python or JVM signature), warns and uses the public API
-    (identical semantics, per-call pickling) for this entry from then on."""
-    udf, fn, schema = entry["udf"], entry["fn"], entry["schema"]
-    if entry["private_ok"]:
-        try:
-            jc = entry["jc"].get(tuple(cols))
-            if jc is None:
-                jc = entry["jc"][tuple(cols)] = udf(*[F.col(c) for c in cols])._jc
-            jdf = df._jdf.mapInPandas(jc, False, df._build_java_profile(None))
-            return DataFrame(jdf, df.sparkSession)
-        except Py4JJavaError:
-            raise  # the JVM method ran and failed: a real error, not a moved surface
-        except (AttributeError, TypeError, Py4JError) as e:
-            entry["private_ok"] = False
-            warnings.warn(
-                f"private mapInPandas surface unavailable ({e!r}); "
-                "this reader serves through the public API from now on",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-    return df.mapInPandas(fn, schema=schema)
 
 
 def _sharded_hits(
     reader: IndexReader,
     queries: list[tuple[str, str, int]],
     shard_docs: int,
-    resolve_keys: bool = False,
 ) -> DataFrame | None:
     """Scored candidates per (query, generation, shard):
     (query_id, gen, doc_id, score, k) with exact global BM25 scores and whole
     tie groups kept. All scoring runs in executor tasks; no posting blob ever
-    reaches the driver. With ``resolve_keys``, each scoring task also resolves
-    its hits' (conv_id, turn_idx) against the generation's docstore via a
-    pyarrow row-group-pruned read — the single-job serving path."""
-    from functools import reduce
-
+    reaches the driver."""
     spark = reader.spark
-    gen_docstore = {
-        g.gen_id: os.path.join(g.dir, "docstore") for g in reader.generations
-    }
     k1, b = reader.meta.k1, reader.meta.b
     n_docs, avgdl = reader.n_docs, reader.avgdl
     # per-generation ENCODE avgdl (≤ the gen's final avgdl after partial
@@ -527,66 +534,6 @@ def _sharded_hits(
     # alone would probe every segment row
     terms_all = sorted({t for _, t, _ in qrows})
 
-    if (
-        len(queries) == 1
-        and len(reader.generations) == 1
-        and reader.generations[0].meta.n_docs <= shard_docs
-    ):
-        # SERVING FAST PATH (single query, single generation, single shard):
-        # the general construction below costs ~0.15 s of DRIVER time per
-        # query — a dozen withColumn/drop py4j round-trips plus a fresh
-        # cloudpickle of the scoring closure inside mapInPandas. Build the
-        # identical plan as ONE filter + ONE select (term-IN pushdown
-        # unchanged) and score through the reader-cached, pre-serialized
-        # UDF. Same columns, same kernel, same results. What a query then
-        # costs is mostly JVM CPU (analysis, scheduling, scan): on 4 cores
-        # with a warm session, per query ~0.2 s JVM, ~0.05 s Python worker
-        # and ~0.02 s driver CPU, ~0.15 s wall. The worker's share stays
-        # small only while plans/pyworker.py keeps PySpark's per-task set-up
-        # from re-reading every zip on the worker's path.
-        g = reader.generations[0]
-        qid, _text, k0 = queries[0]
-        cached = getattr(g, "_wand_fast_cols", None)
-        if cached is None:
-            keep = [
-                c for c in g.segments.columns
-                if c not in ("pos_blob", "block_pos_bytes")
-            ]
-            # reader-constant Column expressions built once (unresolved
-            # attribute/literal trees are immutable — safe to re-resolve
-            # against each query's child plan); only query_id/k vary per call
-            cached = (
-                keep,
-                [
-                    F.lit(g.gen_id).alias("gen"),
-                ],
-                [
-                    F.col("df").alias("gdf"),
-                    F.lit(0).alias("shard"),
-                    F.lit(0).cast("long").alias("range_lo"),
-                    F.lit(int(g.meta.n_docs)).cast("long").alias("range_hi"),
-                ],
-            )
-            g._wand_fast_cols = cached
-        keep, gen_cols, tail_cols = cached
-        plan = (
-            g.segments.filter(F.col("term").isin(terms_all))
-            .select(
-                *keep,
-                *gen_cols,
-                F.lit(qid).alias("query_id"),
-                F.lit(int(k0)).alias("k"),
-                *tail_cols,
-            )
-            .coalesce(1)
-        )
-        plan_cols = keep + [
-            "gen", "query_id", "k", "gdf", "shard", "range_lo", "range_hi"
-        ]
-        return _map_in_pandas_cached(
-            plan, _serving_udf(reader, resolve_keys), plan_cols
-        )
-
     seg_union = reduce(
         DataFrame.unionByName,
         [
@@ -596,16 +543,8 @@ def _sharded_hits(
             for g in reader.generations
         ],
     )
-    if len(queries) == 1:
-        # single query: query_id/k become literal columns — no query-table
-        # createDataFrame, no broadcast-exchange job (serving latency path)
-        qid, _text, k0 = queries[0]
-        joined = seg_union.withColumn("query_id", F.lit(qid)).withColumn(
-            "k", F.lit(int(k0))
-        )
-    else:
-        qdf = spark.createDataFrame(qrows, "query_id string, term string, k int")
-        joined = seg_union.join(F.broadcast(qdf), on="term")
+    qdf = spark.createDataFrame(qrows, "query_id string, term string, k int")
+    joined = seg_union.join(F.broadcast(qdf), on="term")
     if len(reader.generations) == 1:
         # a term appears at most once per generation → df IS the global df
         joined = joined.withColumn("gdf", F.col("df"))
@@ -632,14 +571,9 @@ def _sharded_hits(
             _make_shard_splitter(gen_ndocs, shard_docs), schema=_SHARDED_SCHEMA
         )
 
-    score_shard = _make_score_shard(
-        gen_docstore, gen_avgdl, n_docs, avgdl, k1, b, resolve_keys
-    )
-    out_schema = _HITS_SCHEMA_KEYS if resolve_keys else _HITS_SCHEMA
-    # (the single-query/single-gen/single-shard case returned above through
-    # the cached-UDF fast path — this is the distributed many-group shape)
+    score_shard = _make_score_shard(gen_avgdl, n_docs, avgdl, k1, b)
     return sharded.groupBy("query_id", "gen", "shard").applyInPandas(
-        score_shard, schema=out_schema
+        score_shard, schema=_HITS_SCHEMA
     )
 
 
@@ -668,7 +602,6 @@ def bm25_topk_many(
     scale the docstore shuffle it removes grows with N while the hits side
     stays O(Σk)).
     """
-    from functools import reduce
 
     from pyspark.sql.window import Window
 
@@ -707,34 +640,43 @@ def bm25_topk_indexed(
     """Single-query top-k via the compressed index; returns
     (conv_id, turn_idx, score) in (score desc, conv_id, turn_idx) order.
 
-    Serving-latency shape: ONE Spark job at collect time. The scoring kernel
-    runs in executor tasks against byte-sliced blobs (same path as
-    bm25_topk_many), and each scoring task also resolves its hits'
-    (conv_id, turn_idx) keys against the generation's docstore via a pyarrow
-    row-group-pruned read (docIDs are sorted within docstore partitions, so
-    the isin filter reads ~k row groups). The final top-k is Sort+Limit over
-    the ≤k+ties hit rows — planned as TakeOrderedAndProject, so the driver
-    receives only RESULT rows, never posting blobs. Multi-generation stats
-    (N, avgdl, df) are global, so scores are exact global BM25; ties resolve
-    by the real (conv_id, turn_idx) keys (rank-identical to the oracle
-    regardless of docID assignment order)."""
-    hits = _sharded_hits(reader, [("q", query_text, k)], shard_docs, resolve_keys=True)
-    if hits is None or k <= 0:
-        # empty frame built only on this cold branch — the createDataFrame
-        # (py4j + DDL parse) cost ~15 ms per query when unconditional
+    When every generation holds ≤ shard_docs docs, the query is ONE Spark
+    job of one task: a one-row Range carries the query and the reader's
+    stamped file lists to _serve_query (mapInArrow), which reads the query
+    terms' segment rows and the hits' docstore keys with pyarrow, scores
+    every generation with the WAND kernel and returns the final k rows
+    already sorted. No plan over the segment table is built, so the query
+    costs the JVM one trivial job, not a scan plan to analyse and compile.
+    Any other single query takes bm25_topk_many's doc-range sharded shape.
+    Multi-generation stats (N, avgdl, df) are global, so scores are exact
+    global BM25; ties resolve by the real (conv_id, turn_idx) keys
+    (rank-identical to the oracle regardless of docID assignment order)."""
+    terms = query_terms(query_text)
+    if not terms or k <= 0:
         return reader.spark.createDataFrame(
             [], "conv_id string, turn_idx int, score double"
         )
-    # final top-k as Sort+Limit over the ≤ k+ties/shard hit rows: Spark plans
-    # it as TakeOrderedAndProject (bounded per-partition heaps, no exchange),
-    # so the whole query stays ONE job at collect time — the previous
-    # toPandas-merge-createDataFrame shape paid a second (trivial but
-    # job-scheduled) round trip of ~30-80 ms per query just to re-wrap the
-    # driver-merged rows. Full ordering key ⇒ deterministic, identical rows.
-    return (
-        hits.select("conv_id", "turn_idx", "score")
-        .orderBy(
-            F.col("score").desc(), F.col("conv_id").asc(), F.col("turn_idx").asc()
+    if any(g.meta.n_docs > shard_docs for g in reader.generations):
+        return (
+            bm25_topk_many(reader, [("q", query_text, k)], shard_docs)
+            .orderBy("rank")
+            .select("conv_id", "turn_idx", "score")
         )
-        .limit(k)
+    params = json.dumps({
+        "terms": terms, "k": int(k), "n_docs": reader.n_docs,
+        "avgdl": reader.avgdl, "k1": reader.meta.k1, "b": reader.meta.b,
+        "gens": [
+            {
+                "n_docs": g.meta.n_docs,
+                "encode_avgdl": g.meta.encode_avgdl or g.meta.avgdl,
+                "segments": g.segment_files,
+                "docstore": g.docstore_files,
+            }
+            for g in reader.generations
+        ],
+    })
+    return (
+        reader.spark.range(0, 1, 1, 1)
+        .select(F.lit(params).alias("params"))
+        .mapInArrow(_serve_query, _SERVE_SCHEMA)
     )

@@ -12,6 +12,11 @@ stft_algorithm.c:41,536-586 — new data appended without recomputing old):
 
 Query-time stats (N, avgdl, df) are summed across generations, so BM25
 scores stay EXACT global values — generations only partition the doc space.
+
+Each generation's segment and docstore files are listed once, at open, with
+their (size, mtime_ns) stamps. The single-query task reads only those files
+and refuses to answer if one is gone or its stamp changed (an index rebuilt
+under an open reader), so a stale reader raises instead of serving wrong rows.
 """
 
 from __future__ import annotations
@@ -23,6 +28,21 @@ from pyspark.sql import DataFrame, SparkSession
 from audioflux_spark.operators.indexer import DOCSTORE_SCHEMA, MERGED_SCHEMA, IndexMeta
 
 GENERATIONS_SUBDIR = "generations"
+
+
+def _stamped_files(root: str) -> list[tuple[str, int, int]]:
+    """(path, size, mtime_ns) of every data file under root, sorted; names
+    starting with "." or "_" (staging files, _SUCCESS, checksums) are
+    skipped at every level, as Spark's reader skips them."""
+    out = []
+    for d, dirs, files in os.walk(os.path.abspath(root)):
+        dirs[:] = sorted(x for x in dirs if not x.startswith((".", "_")))
+        for name in sorted(files):
+            if not name.startswith((".", "_")):
+                path = os.path.join(d, name)
+                st = os.stat(path)
+                out.append((path, st.st_size, st.st_mtime_ns))
+    return out
 
 
 class _Generation:
@@ -39,6 +59,8 @@ class _Generation:
         self.docstore: DataFrame = spark.read.schema(DOCSTORE_SCHEMA).parquet(
             os.path.join(gen_dir, "docstore")
         )
+        self.segment_files = _stamped_files(os.path.join(gen_dir, "segments"))
+        self.docstore_files = _stamped_files(os.path.join(gen_dir, "docstore"))
 
 
 class IndexReader:
@@ -73,9 +95,10 @@ class IndexReader:
         return self.generations[0].docstore
 
     def warm(self) -> "IndexReader":
-        """Pin segments + docstore in executor memory for serving (the
-        reference's precompute-once operator-handle discipline): repeated
-        queries then skip parquet decode entirely."""
+        """Pin segments + docstore in executor memory for the batch path
+        (bm25_topk_many and phrase queries), whose repeated plans then skip
+        parquet decode. Single queries read the files listed at open
+        directly and never touch the persisted frames."""
         for g in self.generations:
             g.segments = g.segments.persist()
             g.segments.count()

@@ -12,6 +12,7 @@ from audioflux_spark.operators.wand import bm25_topk_indexed, bm25_topk_many
 from audioflux_spark.streaming.incremental import add_generation, streaming_index_sink
 from audioflux_spark.operators.indexer import build_index
 from audioflux_spark.sources.segments import IndexReader
+from tests.test_index_wand import assert_indexed_matches_oracle
 from tests.test_topk_exhaustive import assert_rank_identical
 
 CFG = EngineConfig(index=IndexConfig(block_size=32, build_partitions=4))
@@ -42,11 +43,11 @@ def test_generations_present(incr_reader):
 
 
 def test_incremental_rank_identity(incr_reader, oracle, queries):
-    """Scores/ranks over base+generation must equal a full-corpus oracle."""
-    for q in queries:
-        got = bm25_topk_indexed(incr_reader, q.query_text, q.k).toPandas()
-        want = oracle.topk(q.query_text, q.k)
-        assert_rank_identical(got, want, context=f"incr {q.query_id} '{q.query_text}'")
+    """Scores/ranks over base+generation must equal a full-corpus oracle, on
+    the one-task path (which sums df across the generations' files itself)
+    and on the sharded route 200-doc shards force."""
+    assert_indexed_matches_oracle(incr_reader, oracle, queries)
+    assert_indexed_matches_oracle(incr_reader, oracle, queries[:6], shard_docs=200)
 
 
 def test_incremental_batch_path(incr_reader, oracle, queries):

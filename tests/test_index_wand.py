@@ -88,13 +88,36 @@ def test_hot_term_was_merged_from_many_partials(reader, index_dir, spark):
     assert merged == 1
 
 
+# single queries at the edges of the serving path: k above the match count,
+# a term absent from the index, alone and beside a present one
+EDGE_QUERIES = [
+    ("needle_unique_0", 50),
+    ("needle_pair_0 needle_unique_1", 40),
+    ("zzqx_absent_term", 10),
+    ("hotterm zzqx_absent_term", 7),
+]
+
+
+def assert_indexed_matches_oracle(reader, oracle, queries, shard_docs=None):
+    """bm25_topk_indexed over the reference queries and EDGE_QUERIES is
+    rank-identical to the oracle; shard_docs below a generation's size
+    routes every query through bm25_topk_many's sharded shape."""
+    kw = {} if shard_docs is None else {"shard_docs": shard_docs}
+    for text, k in [(q.query_text, q.k) for q in queries] + EDGE_QUERIES:
+        got = bm25_topk_indexed(reader, text, k, **kw).toPandas()
+        assert_rank_identical(got, oracle.topk(text, k), context=f"'{text}' k={k} {kw}")
+
+
 def test_wand_rank_identity_all_queries(spark, reader, exchange_build, oracle, queries):
     """Every query, on the range-merged index and the exchange-merged one."""
     for r in (reader, IndexReader(spark, exchange_build[0])):
-        for q in queries:
-            got = bm25_topk_indexed(r, q.query_text, q.k).toPandas()
-            want = oracle.topk(q.query_text, q.k)
-            assert_rank_identical(got, want, context=f"{q.query_id} '{q.query_text}'")
+        assert_indexed_matches_oracle(r, oracle, queries)
+
+
+def test_indexed_sharded_route_rank_identity(reader, oracle, queries):
+    """With 200-doc shards, single queries take bm25_topk_many's sharded
+    shape instead of the one-task path."""
+    assert_indexed_matches_oracle(reader, oracle, queries[:6], shard_docs=200)
 
 
 def test_wand_equals_exhaustive_random_queries(reader, oracle):

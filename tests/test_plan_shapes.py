@@ -72,17 +72,28 @@ def test_exhaustive_topk_is_bounded(spark):
 
 
 def test_indexed_serving_single_job_shape(spark):
-    """The single-query serving path must stay ONE job: term-pruned scan →
-    coalesce → MapInPandas → TakeOrderedAndProject, with NO Exchange (an
-    exchange here means the latency path grew a shuffle stage)."""
+    """A single query is ONE job of one Python task: MapInArrow over a
+    one-partition Range carrying the query, with no scan of the segment
+    table or its persisted copy, no Exchange and no TakeOrderedAndProject
+    (the task returns its k rows already sorted)."""
     import audioflux_spark.entry_queries as eq
     from audioflux_spark.operators.wand import bm25_topk_indexed
 
     reader = eq._reader(spark, SF_DIR)
     df = bm25_topk_indexed(reader, "join hash row", 10)
     plan = _plan(df)
-    assert "TakeOrderedAndProject" in plan
-    assert "MapInPandas" in plan
-    assert "Coalesce" in plan
-    assert "Exchange" not in plan
-    assert "SortMergeJoin" not in plan
+    assert "MapInArrow" in plan
+    assert "Range (0, 1, step=1, splits=1)" in plan
+    for op in ("InMemoryTableScan", "FileScan", "Exchange", "TakeOrderedAndProject"):
+        assert op not in plan, f"{op} in the single-query plan:\n{plan[:2000]}"
+
+    sc = spark.sparkContext
+    group = "afspark-single-query-jobs"
+    sc.setJobGroup(group, "one single query")
+    try:
+        rows = df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert rows
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1

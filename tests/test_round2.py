@@ -223,12 +223,9 @@ def test_compaction_rank_identity(spark, transcripts_pdf, tmp_path_factory, orac
     assert compacted.meta.n_docs == oracle.N
     assert abs(compacted.avgdl - oracle.avgdl) < 1e-9
 
-    from audioflux_spark.operators.wand import bm25_topk_indexed
+    from tests.test_index_wand import assert_indexed_matches_oracle
 
-    for q in queries[:6]:
-        got = bm25_topk_indexed(compacted, q.query_text, q.k).toPandas()
-        want = oracle.topk(q.query_text, q.k)
-        assert_rank_identical(got, want, context=f"compacted {q.query_id}")
+    assert_indexed_matches_oracle(compacted, oracle, queries[:6])
 
     # phrase queries survive compaction (positions + block re-anchoring)
     import re

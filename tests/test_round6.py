@@ -186,7 +186,7 @@ def test_session_cache_evicts_on_corpus_change(spark, tmp_path):
     assert rebuilt.count() == len(pdf) // 2 != n1
 
 
-# ---- serving fast path (cached-UDF single-query shape) ----
+# ---- single-query serving: one Python task over the segment files ----
 
 
 @pytest.fixture(scope="module")
@@ -199,90 +199,39 @@ def _serving_index(spark, transcripts_sdf, tmp_path_factory):
 
 
 def test_serving_fast_path_matches_general(spark, _serving_index, queries):
-    """The single-query cached-UDF fast path must return exactly what the
-    general (applyInPandas) path computes — same rows, same order."""
-    from pyspark.sql import functions as F
-
-    from audioflux_spark.operators.wand import _sharded_hits, bm25_topk_indexed
+    """The one-task single-query path returns exactly what the distributed
+    bm25_topk_many shape computes for the same query: same rows, same
+    order."""
+    from audioflux_spark.operators.wand import bm25_topk_indexed, bm25_topk_many
     from audioflux_spark.sources.segments import IndexReader
 
     reader = IndexReader(spark, _serving_index)
-    keys = (
-        reader.docstore.select("doc_id", "conv_id", "turn_idx").toPandas()
-        .set_index("doc_id")
-    )
     for q in queries[:6]:
         fast = bm25_topk_indexed(reader, q.query_text, q.k).collect()
-        # two queries => the general (groupBy+applyInPandas) path
-        hits = _sharded_hits(
-            reader,
-            [("q", q.query_text, q.k), ("zz", "zzz_no_such_term", 1)],
-            10**18,
+        general = (
+            bm25_topk_many(reader, [("q", q.query_text, q.k)])
+            .orderBy("rank")
+            .select("conv_id", "turn_idx", "score")
+            .collect()
         )
-        gen = []
-        for r in hits.filter(F.col("query_id") == "q").collect():
-            conv_id, turn_idx = keys.loc[int(r["doc_id"])]
-            gen.append((-r["score"], conv_id, int(turn_idx)))
-        gen = sorted(gen)[: q.k]
-        got = [(-r["score"], r["conv_id"], int(r["turn_idx"])) for r in fast]
-        assert got == gen, q.query_text
+        assert fast == general, q.query_text
 
 
-def test_serving_udf_cached_per_reader(spark, _serving_index, queries):
-    """The serialized scoring UDF and its applied expression are built once
-    per reader and reused across queries (the per-query cloudpickle was
-    ~40 ms of single-query latency); the expression is keyed by its column
-    list."""
+def test_serving_refuses_rebuilt_index(spark, transcripts_sdf, tmp_path):
+    """A reader lists its files with their stamps at open; once the index
+    directory is rebuilt under it, the next single query raises instead of
+    reading the new files, and a reader opened afterwards serves again."""
+    from audioflux_spark.operators.indexer import build_index
     from audioflux_spark.operators.wand import bm25_topk_indexed
     from audioflux_spark.sources.segments import IndexReader
 
-    reader = IndexReader(spark, _serving_index)
-    bm25_topk_indexed(reader, queries[0].query_text, 5).collect()
-    cache = reader._wand_udf_cache
-    entry = cache[True]
-    udf_before = entry["udf"]
-    (cols, jc_before), = entry["jc"].items()
-    assert isinstance(cols, tuple) and "query_id" in cols
-    bm25_topk_indexed(reader, queries[1].query_text, 5).collect()
-    assert reader._wand_udf_cache is cache
-    assert cache[True]["udf"] is udf_before
-    assert list(cache[True]["jc"]) == [cols]
-    assert cache[True]["jc"][cols] is jc_before
-
-
-def test_serving_fallback_public_mapinpandas(spark, _serving_index, queries, monkeypatch):
-    """If the private mapInPandas surface moves, the fast path falls back to
-    the public API with identical rows, and remembers that: later queries
-    do not try the private call again."""
-    import sys
-
-    from pyspark.sql.pandas.map_ops import PandasMapOpsMixin
-
-    import audioflux_spark.operators.wand as wand
-    from audioflux_spark.sources.segments import IndexReader
-
-    monkeypatch.setattr(wand, "_PRIVATE_MAP_VERIFIED", True)
-    reader = IndexReader(spark, _serving_index)
-    want = [wand.bm25_topk_indexed(reader, q.query_text, q.k).collect() for q in queries[:3]]
-
-    # the real DataFrame._build_java_profile disappears for callers outside
-    # PySpark (a renamed private method), while PySpark's own public
-    # mapInPandas keeps working
-    real_profile = PandasMapOpsMixin._build_java_profile
-    refused = []
-
-    def moved_profile(self, profile=None):
-        caller = sys._getframe(1).f_globals.get("__name__", "")
-        if not caller.startswith("pyspark."):
-            refused.append(caller)
-            raise AttributeError("'DataFrame' object has no attribute '_build_java_profile'")
-        return real_profile(self, profile)
-
-    monkeypatch.setattr(PandasMapOpsMixin, "_build_java_profile", moved_profile)
-    reader2 = IndexReader(spark, _serving_index)
-    with pytest.warns(RuntimeWarning, match="private mapInPandas surface unavailable"):
-        got = [wand.bm25_topk_indexed(reader2, queries[0].query_text, queries[0].k).collect()]
-    got += [wand.bm25_topk_indexed(reader2, q.query_text, q.k).collect() for q in queries[1:3]]
-    assert got == want
-    assert refused == ["audioflux_spark.operators.wand"]  # tried once, then remembered
-    assert reader2._wand_udf_cache[True]["private_ok"] is False
+    d = str(tmp_path / "idx")
+    small = transcripts_sdf.limit(300)
+    build_index(spark, small, d)
+    reader = IndexReader(spark, d)
+    want = bm25_topk_indexed(reader, "hotterm", 5).collect()
+    assert want
+    build_index(spark, small, d, resume=False)
+    with pytest.raises(Exception, match="changed or vanished since its IndexReader opened"):
+        bm25_topk_indexed(reader, "hotterm", 5).collect()
+    assert bm25_topk_indexed(IndexReader(spark, d), "hotterm", 5).collect() == want
