@@ -294,8 +294,8 @@ def encode_positions_flat(
     for Arrow Binary construction. ``posting_block_starts`` is the global
     posting index of each block-max block's first posting (aligned with the
     doc/tf/dl block structure); per-block position byte lengths are what let
-    the WAND shard splitter byte-slice pos blobs to a docID range without
-    decoding — sharded phrase matching. Positions give the index the
+    a serving task decode only the blocks of its docID range — sharded
+    phrase matching. Positions give the index the
     reference framing operators' order preservation
     (/root/reference/src/stft_algorithm.c:813-833) — the substrate for
     exact-phrase queries."""

@@ -18,30 +18,35 @@ Matched docs are scored with standard BM25 over the phrase terms (global
 N/avgdl/df — exact corpus-level scores), so results rank like any other
 query.
 
-Scale shape: the same doc-range shard splitter as WAND serving
-(operators/wand._make_shard_splitter with include_pos) byte-slices each
-phrase term's posting AND position blobs to the docID ranges they overlap
-(per-block byte lengths make slicing pure arithmetic), so matching runs per
-(generation, shard) in executor tasks and a Zipf-HEAD phrase term's full
-posting/position list never lands in one task. Boundary blocks are sent to
-both sides; the kernel clips matched docs to [range_lo, range_hi), so every
-doc matches in exactly one shard with all its terms present.
+Scale shape: a phrase query is one item of the serving task
+(operators/wand._serve_query), one per (generation, doc-range shard). The
+task reads each phrase term's segment row, positions included, and
+decodes only the blocks overlapping its range (per-block byte lengths give
+each block's bytes, and each block re-anchors its docIDs), so a Zipf-HEAD
+phrase term's full posting/position list is never decoded in one task.
+Matches are clipped to the range, so every doc matches in exactly one
+shard with all its terms present, and each shard keeps only its top k plus
+the k-th-score tie group before keys are resolved.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from audioflux_spark.functions.bm25 import idf_value
 from audioflux_spark.functions.codec import (
     decode_positions,
     delta_decode_segmented,
     varint_decode,
 )
 from audioflux_spark.operators.topk import query_terms
+from audioflux_spark.operators.wand import (
+    _HIT_COLS,
+    DEFAULT_SHARD_DOCS,
+    _block_ends,
+    _byte_offsets,
+    _topk_plan,
+)
 from audioflux_spark.sources.segments import IndexReader
 
 # position-key stride: must exceed any doc_len + phrase length; doc ids up to
@@ -49,51 +54,62 @@ from audioflux_spark.sources.segments import IndexReader
 _POS_STRIDE = 1 << 22
 
 
-def _decode_full(row) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """(doc_ids, tf, dl, positions) for one merged term row — full row OR a
-    shard-splitter byte slice (posting count comes from the sliced
-    block_counts, not the row-level df, so both decode identically).
+def _decode_full(
+    row, lo: int = 0, hi: int | None = None
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """(doc_ids, tf, dl, positions) of the blocks of one merged term row
+    that overlap docID range [lo, hi); the whole row by default.
 
     Doc ids are BLOCK-anchored (each block's first docID re-anchors its delta
     chain) rather than partial-anchored: block_firsts is then the only
     absolute docID state in the whole row, which is what lets generation
-    compaction shift docID spaces — and the shard splitter slice blobs —
-    without touching a single blob byte."""
+    compaction shift docID spaces without touching a single blob byte, and
+    lets a range's blocks decode straight from their per-block byte
+    offsets."""
     counts = np.asarray(row["block_counts"], dtype=np.int64)
-    n = int(counts.sum())
-    gaps = varint_decode(bytes(row["doc_blob"]), n).astype(np.int64)
     firsts = np.asarray(row["block_firsts"], dtype=np.int64)
+    bi = int(np.searchsorted(_block_ends(firsts, int(row["last_doc"])), lo, side="left"))
+    bj = counts.size if hi is None else int(np.searchsorted(firsts, hi, side="left"))
+    counts, firsts = counts[bi:bj], firsts[bi:bj]
+    n = int(counts.sum())
+
+    def blocks(blob: str, lengths: str) -> memoryview:
+        off = _byte_offsets(row[lengths])
+        return memoryview(row[blob])[off[bi]:off[bj]]
+
+    gaps = varint_decode(blocks("doc_blob", "block_doc_bytes"), n).astype(np.int64)
     rel = delta_decode_segmented(gaps, counts)
     block_starts = np.cumsum(counts) - counts
     doc_ids = rel - np.repeat(rel[block_starts], counts) + np.repeat(firsts, counts)
-    tf = varint_decode(bytes(row["tf_blob"]), n).astype(np.int64)
-    dl = varint_decode(bytes(row["dl_blob"]), n).astype(np.int64)
-    pos = decode_positions(bytes(row["pos_blob"]), tf)
+    tf = varint_decode(blocks("tf_blob", "block_tf_bytes"), n).astype(np.int64)
+    dl = varint_decode(blocks("dl_blob", "block_dl_bytes"), n).astype(np.int64)
+    pos = decode_positions(blocks("pos_blob", "block_pos_bytes"), tf)
     return doc_ids, tf, dl, pos
 
 
 def phrase_match_kernel(
     term_rows: list,
     terms: list[str],
-    n_docs: int,
     avgdl: float,
     k1: float,
     b: float,
     idfs: dict[str, float],
-    doc_lo: int | None = None,
+    doc_lo: int = 0,
     doc_hi: int | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
     """One (generation, shard)'s phrase match + BM25 scoring.
 
-    term_rows: one decoded segment row per phrase term (same generation,
-    blobs possibly byte-sliced to a doc range). doc_lo/doc_hi clip matches to
-    the shard's exact docID range (boundary blocks are duplicated across
-    shards). Returns (doc_ids, scores) for docs containing the sequence."""
+    term_rows: one segment row per phrase term (same generation). Only the
+    blocks overlapping [doc_lo, doc_hi) are decoded, and matches are clipped
+    to that exact range (a boundary block is decoded by both shards).
+    Returns (doc_ids, scores) for docs containing the sequence, by doc_id."""
     by_term = {r["term"]: r for r in term_rows}
     if any(t not in by_term for t in terms):
         return np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.float64)
 
-    decoded = {t: _decode_full(by_term[t]) for t in dict.fromkeys(terms)}
+    decoded = {
+        t: _decode_full(by_term[t], doc_lo, doc_hi) for t in dict.fromkeys(terms)
+    }
 
     # packed-key safety: a position ≥ _POS_STRIDE would silently corrupt the
     # (doc, position) keys and produce wrong matches — fail loudly instead
@@ -118,8 +134,7 @@ def phrase_match_kernel(
             return np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.float64)
 
     match_docs = np.unique(keys // _POS_STRIDE)
-    if doc_lo is not None:
-        match_docs = match_docs[match_docs >= doc_lo]
+    match_docs = match_docs[match_docs >= doc_lo]
     if doc_hi is not None:
         match_docs = match_docs[match_docs < doc_hi]
     if match_docs.size == 0:
@@ -137,149 +152,17 @@ def phrase_match_kernel(
     return match_docs, scores
 
 
-def phrase_hits(
-    reader: IndexReader,
-    phrase: str,
-    k: int = 10,
-    shard_docs: int | None = None,
-) -> DataFrame | None:
-    """Bounded per-shard phrase matches: (gen, doc_id, score) rows, at most
-    k+ties per (generation, doc-range shard). None when the phrase has no
-    resolvable terms or a term is absent from the index (empty result)."""
-    from functools import reduce
-
-    from audioflux_spark.operators.wand import (
-        DEFAULT_SHARD_DOCS,
-        _SHARDED_POS_SCHEMA,
-        _make_shard_splitter,
-    )
-
-    if shard_docs is None:
-        shard_docs = DEFAULT_SHARD_DOCS
-    spark = reader.spark
-    terms = query_terms(phrase)
-    if not terms or k <= 0:
-        return None
-    k1, b = reader.meta.k1, reader.meta.b
-    n_docs, avgdl = reader.n_docs, reader.avgdl
-    gen_ndocs = {g.gen_id: g.meta.n_docs for g in reader.generations}
-
-    seg_union = reduce(
-        DataFrame.unionByName,
-        [
-            g.segments.filter(F.col("term").isin(list(set(terms))))
-            .withColumn("gen", F.lit(g.gen_id))
-            for g in reader.generations
-        ],
-    )
-    # global df per term for exact idf (tiny agg on pruned columns)
-    gdf_rows = seg_union.groupBy("term").agg(F.sum("df").alias("gdf")).collect()
-    gdf = {r["term"]: int(r["gdf"]) for r in gdf_rows}
-    if any(t not in gdf for t in terms):
-        return None
-    idfs = {t: idf_value(n_docs, gdf[t]) for t in set(terms)}
-
-    single_shard = all(n <= shard_docs for n in gen_ndocs.values())
-    if single_shard:
-        # one shard per generation — skip the splitter's Python exchange
-        range_hi = F.lit(0).cast("long")
-        for gid, n in gen_ndocs.items():
-            range_hi = F.when(F.col("gen") == gid, F.lit(n)).otherwise(range_hi)
-        sharded = (
-            seg_union.withColumn("shard", F.lit(0))
-            .withColumn("range_lo", F.lit(0).cast("long"))
-            .withColumn("range_hi", range_hi.cast("long"))
-        )
-    else:
-        gdf_map = F.create_map(
-            *[x for t, v in gdf.items() for x in (F.lit(t), F.lit(v))]
-        )
-        sharded = (
-            seg_union.withColumn("query_id", F.lit("q"))
-            .withColumn("k", F.lit(int(k)))
-            .withColumn("gdf", gdf_map[F.col("term")])
-            .mapInPandas(
-                _make_shard_splitter(gen_ndocs, shard_docs, include_pos=True),
-                schema=_SHARDED_POS_SCHEMA,
-            )
-        )
-
-    def match_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        # one C-level conversion, not a per-row .iloc loop (the kernel wants
-        # one mapping per segment row; the row count is bounded by
-        # terms x generations per shard, but the discipline is uniform)
-        rows = pdf.to_dict("records")
-        doc_ids, scores = phrase_match_kernel(
-            rows, terms, n_docs, avgdl, k1, b, idfs,
-            doc_lo=int(pdf["range_lo"].iloc[0]),
-            doc_hi=int(pdf["range_hi"].iloc[0]),
-        )
-        # per-shard top-(k+ties): scores are exact global BM25 already, so a
-        # doc beaten by >= k docs in its own shard can never reach the global
-        # top-k — truncate HERE so the final rank window's input is bounded by
-        # shards*(k+ties), not the match count (a stopword-ish phrase at 100x
-        # would otherwise funnel every match through one window task). Keep
-        # the whole k-th-score tie group: the final (conv_id, turn_idx)
-        # tie-break must see all of it (same discipline as
-        # wand.wand_topk_kernel's theta cut).
-        if doc_ids.size > k:
-            order = np.lexsort((doc_ids, -scores))
-            s_sorted = scores[order]
-            kth = s_sorted[k - 1]
-            cutoff = int(np.searchsorted(-s_sorted, -kth, side="right"))
-            keep = order[:cutoff]
-            doc_ids, scores = doc_ids[keep], scores[keep]
-        return pd.DataFrame(
-            {
-                "gen": int(pdf["gen"].iloc[0]),
-                "doc_id": doc_ids,
-                "score": scores,
-            }
-        )
-
-    return sharded.groupBy("gen", "shard").applyInPandas(
-        match_shard, schema="gen int, doc_id long, score double"
-    )
-
-
 def bm25_topk_phrase(
     reader: IndexReader,
     phrase: str,
     k: int = 10,
-    shard_docs: int | None = None,
+    shard_docs: int = DEFAULT_SHARD_DOCS,
 ) -> DataFrame:
     """Exact-phrase top-k: docs containing the token sequence, ranked by the
     BM25 score of the phrase's terms (global corpus stats), ties broken by
     (conv_id, turn_idx). Requires an index built with store_positions.
 
-    All matching runs in executor tasks, one per (generation, doc-range
-    shard); posting + position blobs reach each task byte-sliced to its
-    range, never whole, and each shard emits at most k+ties rows — the final
-    rank window sorts a bounded union, not the full match set."""
-    from functools import reduce
-
-    from pyspark.sql.window import Window
-
-    spark = reader.spark
-    hits = phrase_hits(reader, phrase, k, shard_docs)
-    if hits is None:
-        return spark.createDataFrame(
-            [], "conv_id string, turn_idx int, score double"
-        )
-    ds_union = reduce(
-        DataFrame.unionByName,
-        [
-            g.docstore.select(
-                F.lit(g.gen_id).alias("gen"), "doc_id", "conv_id", "turn_idx"
-            )
-            for g in reader.generations
-        ],
-    )
-    w = Window.orderBy(F.col("score").desc(), "conv_id", "turn_idx")
-    return (
-        hits.join(ds_union, on=["gen", "doc_id"])
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("conv_id", "turn_idx", "score")
-        .orderBy(F.col("score").desc(), "conv_id", "turn_idx")
-    )
+    The serving plan of operators/wand with one phrase query: matching runs
+    in its tasks, one item per (generation, doc-range shard), and each
+    shard sends at most k rows on to the final rank."""
+    return _topk_plan(reader, [("q", query_terms(phrase), k, True)], shard_docs, _HIT_COLS)

@@ -23,19 +23,18 @@ next bound cannot reach θ (with a 1e-9 float-safety margin). Pruning power is
 identical to doc-at-a-time BMW up to block resolution; all inner loops are
 NumPy. Property-tested against exhaustive scoring (tests/test_index_wand.py).
 
-Serving shapes (all scoring runs in EXECUTOR tasks — no posting blob ever
-reaches the driver):
-* ``bm25_topk_many``    — a DataFrame of queries broadcast-joined to the
-  term-pruned segment scan, doc-range SHARDED (each shard owns an exact
-  docID range; a term's blocks are byte-sliced to the ranges they overlap),
-  scored per (query, generation, shard) via applyInPandas, then k-way merged
-  with a rank window. Per-task memory is bounded by the shard size, not by
-  the hottest term's full posting list.
-* ``bm25_topk_indexed`` — one query, one job of one Python task
-  (``_serve_query``) that reads the query terms' segment rows and the hits'
-  docstore keys from the files the reader listed at open, refusing files
-  changed since, and returns the sorted top k. A generation larger than one
-  shard sends the query through ``bm25_topk_many`` instead.
+Serving shape: one for every query. ``_topk_plan`` builds spark.range with
+one partition per task, each row one task's JSON parameters, mapped by
+``_serve_query`` (mapInArrow). A task owns items — (query, generation,
+docID range), WAND or phrase — reads its terms' segment rows and its hits'
+docstore keys from the files the reader listed at open (refusing files
+changed since), takes global df across generations itself, scores each
+item with the kernel's doc_lo/doc_hi, and returns each query's top k. When
+every generation fits one shard a task owns whole queries, so the plan has
+no Exchange; only when a query's ranges span tasks does a per-query
+row_number merge the tasks' top k rows. No posting blob reaches the driver.
+``bm25_topk_many`` is a batch, ``bm25_topk_indexed`` a batch of one and
+``operators.phrase.bm25_topk_phrase`` a phrase item.
 """
 
 from __future__ import annotations
@@ -46,7 +45,6 @@ import os
 from functools import reduce
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -58,8 +56,9 @@ from audioflux_spark.sources.segments import IndexReader
 
 _EPS = 1e-9
 
-# default docs per WAND shard: sized so a shard's postings (worst case every
-# doc matching every query term) stay comfortably in one task's memory
+# default docs per WAND shard: sized so a shard's decoded postings (worst
+# case every doc matching every query term) stay comfortably in one task's
+# memory
 DEFAULT_SHARD_DOCS = 4_000_000
 
 
@@ -152,6 +151,20 @@ class _TermBlocks:
         return out_d, out_c
 
 
+def _top_with_ties(
+    doc_ids: np.ndarray, scores: np.ndarray, k: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """The k best (score desc, doc_id asc) docs plus every doc tying the
+    k-th score, in that order. docIDs are only key-ordered within a build
+    partition, so the caller breaks boundary ties by the real
+    (conv_id, turn_idx) keys and must see the whole tie group."""
+    sel = np.lexsort((doc_ids, -scores))
+    if sel.size > k:
+        s_sorted = scores[sel]
+        sel = sel[:int(np.searchsorted(-s_sorted, -s_sorted[k - 1], side="right"))]
+    return doc_ids[sel], scores[sel]
+
+
 def wand_topk_kernel(
     term_rows: list,
     n_docs: int,
@@ -228,17 +241,9 @@ def wand_topk_kernel(
         u_docs, inv = np.unique(docs, return_inverse=True)
         u_scores = np.zeros(u_docs.size, dtype=np.float64)
         np.add.at(u_scores, inv, scores)
-        all_d = np.concatenate([top_d, u_docs])
-        all_s = np.concatenate([top_s, u_scores])
-        sel = np.lexsort((all_d, -all_s))
-        if sel.size > k:
-            s_sorted = all_s[sel]
-            kth = s_sorted[k - 1]
-            # keep every doc tying the k-th score (never truncate the tie
-            # group: the caller's key-based tie-break must see all of them)
-            cutoff = int(np.searchsorted(-s_sorted, -kth, side="right"))
-            sel = sel[:cutoff]
-        top_d, top_s = all_d[sel], all_s[sel]
+        top_d, top_s = _top_with_ties(
+            np.concatenate([top_d, u_docs]), np.concatenate([top_s, u_scores]), k
+        )
         if top_d.size >= k:
             theta = top_s[k - 1]
 
@@ -246,92 +251,6 @@ def wand_topk_kernel(
         stats_out["blocks_total"] = int(sum(t.counts.size for t in terms))
         stats_out["blocks_decoded"] = int(sum(t.blocks_decoded for t in terms))
     return top_d, top_s
-
-
-_SHARDED_COLS = (
-    "query_id string, gen int, shard int, k int, term string, gdf long, "
-    "df long, last_doc long, doc_blob binary, tf_blob binary, dl_blob binary, "
-    "block_counts array<int>, block_firsts array<long>, block_maxes array<double>, "
-    "block_doc_bytes array<int>, block_tf_bytes array<int>, block_dl_bytes array<int>"
-)
-_SHARDED_SCHEMA = _SHARDED_COLS + ", range_lo long, range_hi long"
-# phrase path: position blobs ride along, sliced by the same block arithmetic
-_SHARDED_POS_SCHEMA = (
-    _SHARDED_COLS + ", pos_blob binary, block_pos_bytes array<int>, "
-    "range_lo long, range_hi long"
-)
-
-
-def _make_shard_splitter(gen_ndocs: dict[int, int], shard_docs: int,
-                         include_pos: bool = False):
-    """mapInPandas splitter: one (query, term, gen) segment row → one sub-row
-    per docID-range shard it overlaps, with posting blobs BYTE-SLICED to the
-    overlapping block range (per-block byte lengths make slicing pure
-    arithmetic — no decode). Shards partition the docID space exactly; a
-    block straddling a boundary is sent to both sides and the kernel clips to
-    [range_lo, range_hi), so every doc is scored in exactly one shard with
-    all its terms present. With ``include_pos``, position blobs are sliced by
-    the same per-block byte lengths (block_pos_bytes) — the substrate for
-    doc-range-sharded PHRASE matching (a Zipf-head phrase term's positions
-    never land in one task)."""
-    blob_cols = [("doc_blob", "block_doc_bytes"), ("tf_blob", "block_tf_bytes"),
-                 ("dl_blob", "block_dl_bytes")]
-    if include_pos:
-        blob_cols.append(("pos_blob", "block_pos_bytes"))
-
-    def split(batches):
-        for pdf in batches:
-            out: dict[str, list] = {c: [] for c in [
-                "query_id", "gen", "shard", "k", "term", "gdf", "df",
-                "last_doc", "doc_blob", "tf_blob", "dl_blob", "block_counts",
-                "block_firsts", "block_maxes", "block_doc_bytes",
-                "block_tf_bytes", "block_dl_bytes",
-                *(["pos_blob", "block_pos_bytes"] if include_pos else []),
-                "range_lo", "range_hi",
-            ]}
-            # loop over SEGMENT rows (per-term metadata — bounded by query
-            # terms × generations, not by postings); all per-posting work
-            # inside is numpy slicing on flat buffers
-            for row in pdf.to_dict("records"):
-                gen = int(row["gen"])
-                n_docs_g = gen_ndocs.get(gen, 0)
-                n_shards = max((n_docs_g + shard_docs - 1) // shard_docs, 1)
-                firsts = np.asarray(row["block_firsts"], dtype=np.int64)
-                counts = np.asarray(row["block_counts"], dtype=np.int64)
-                ends = _block_ends(firsts, int(row["last_doc"]))
-                offs = {lcol: _byte_offsets(row[lcol]) for _, lcol in blob_cols}
-                blobs = {bcol: bytes(row[bcol]) for bcol, _ in blob_cols}
-                maxes = np.asarray(row["block_maxes"], dtype=np.float64)
-                for s in range(n_shards):
-                    lo = s * shard_docs
-                    hi = min((s + 1) * shard_docs, n_docs_g) if n_shards > 1 else n_docs_g
-                    bi = int(np.searchsorted(ends, lo, side="left"))
-                    bj = int(np.searchsorted(firsts, hi, side="left"))
-                    if bj <= bi:
-                        continue
-                    out["query_id"].append(row["query_id"])
-                    out["gen"].append(gen)
-                    out["shard"].append(s)
-                    out["k"].append(int(row["k"]))
-                    out["term"].append(row["term"])
-                    out["gdf"].append(int(row["gdf"]))
-                    out["df"].append(int(row["df"]))
-                    out["last_doc"].append(int(ends[bj - 1]))
-                    for col, bo in blob_cols:
-                        o = offs[bo]
-                        out[col].append(blobs[col][o[bi]:o[bj]])
-                        out[bo].append(
-                            (o[bi + 1:bj + 1] - o[bi:bj]).astype(np.int32)
-                        )
-                    out["block_counts"].append(counts[bi:bj].astype(np.int32))
-                    out["block_firsts"].append(firsts[bi:bj])
-                    out["block_maxes"].append(maxes[bi:bj])
-                    out["range_lo"].append(lo)
-                    out["range_hi"].append(hi)
-            if out["query_id"]:
-                yield pd.DataFrame(out)
-
-    return split
 
 
 def _ub_scale(avgdl: float, encode_avgdl: float) -> float:
@@ -362,8 +281,8 @@ def _term_filter(terms: list[str]):
     so a segment file whose term range holds no query term is skipped
     without decoding (4 term-range files, one term: 21 ms of CPU with isin,
     7.6 ms with ==). The OR's cost grows faster than linearly with its
-    width (200 values: 43 ms), so a query of more than 64 terms takes isin,
-    which decodes every file once."""
+    width (200 values: 43 ms), so a task whose queries hold more than 64
+    distinct terms takes isin, which decodes every file once."""
     import pyarrow.dataset as pads
 
     field = pads.field("term")
@@ -411,169 +330,199 @@ def _docstore_keys(docstore_files, doc_ids: np.ndarray) -> dict[int, tuple[str, 
     ))
 
 
-# the segment columns the WAND kernel reads (no positions, no part counts)
+# the segment columns the WAND kernel reads; phrase items add the positions
 _KERNEL_COLS = [
     "term", "df", "last_doc", "doc_blob", "tf_blob", "dl_blob", "block_counts",
     "block_firsts", "block_maxes", "block_doc_bytes", "block_tf_bytes",
     "block_dl_bytes",
 ]
-_SERVE_SCHEMA = "conv_id string, turn_idx int, score double"
+_POS_COLS = ["pos_blob", "block_pos_bytes"]
+# the serving task's output columns and their types
+_TOPK_TYPES = {
+    "query_id": "string", "conv_id": "string", "turn_idx": "int",
+    "score": "double", "rank": "int",
+}
+_HIT_COLS = ("conv_id", "turn_idx", "score")
+
+
+def _ddl(cols) -> str:
+    return ", ".join(f"{c} {_TOPK_TYPES[c]}" for c in cols)
+
+
+def _task_items(p: dict, task: int) -> list[tuple]:
+    """The (query, range) items of task number ``task``: a contiguous run
+    of the queries, each over every range, when every generation is one
+    range; otherwise a contiguous run of the ranges, each for every
+    query."""
+    queries, ranges, n = p["queries"], p["ranges"], p["n_tasks"]
+    units = queries if p["whole"] else ranges
+    mine = units[task * len(units) // n:(task + 1) * len(units) // n]
+    if p["whole"]:
+        return [(q, r) for q in mine for r in ranges]
+    return [(q, r) for r in mine for q in queries]
 
 
 def _serve_query(batches):
-    """The single-query task (mapInArrow over one parameter row, a JSON
-    object built by bm25_topk_indexed). It reads the query terms' segment
-    rows of every generation from the files listed at reader open, sums df
-    across generations for the global idf, runs the WAND kernel once per
-    generation over its whole docID range, resolves the hits' keys from the
-    generation's docstore files, and returns the top k by (score desc,
-    conv_id, turn_idx). Module-level, so unpickling it imports the package
+    """A serving task: mapInArrow over one (id, params) row, params being
+    the JSON object built by _task_params, id the task's number. Its items
+    are (query, generation docID range) pairs, scored by WAND or, for a
+    phrase, by phrase matching. It reads the items' terms' segment rows of
+    every generation from the files listed at reader open (term and df only
+    where it scores nothing), sums df across generations for the global
+    idf, scores each item over its range, resolves the hits' keys from the
+    generations' docstore files, and returns each query's top k by
+    (score desc, conv_id, turn_idx), ranked from 0, in the columns params
+    names. Module-level, so unpickling it imports the package
     (plans/pyworker.py) and ships no closure."""
     import pyarrow as pa
 
-    (p,) = [json.loads(s) for b in batches for s in b.column("params").to_pylist()]
-    k, n_docs, avgdl = p["k"], p["n_docs"], p["avgdl"]
+    from audioflux_spark.operators.phrase import phrase_match_kernel
+
     seg_schema = pa.schema(_segment_fields())
-    has_term = _term_filter(p["terms"])
-    gen_rows = [
-        _read_stamped(g["segments"], seg_schema, _KERNEL_COLS, has_term).to_pylist()
-        for g in p["gens"]
+    rows_in = [
+        r for b in batches
+        for r in zip(b.column("id").to_pylist(), b.column("params").to_pylist())
     ]
-    gdf: dict[str, int] = {}
-    for rows in gen_rows:
-        for r in rows:
-            gdf[r["term"]] = gdf.get(r["term"], 0) + r["df"]
-    hits = []  # (-score, conv_id, turn_idx): ascending = the result order
-    for g, rows in zip(p["gens"], gen_rows):
-        doc_ids, scores = wand_topk_kernel(
-            rows, n_docs, avgdl, p["k1"], p["b"], k,
-            idfs=[idf_value(n_docs, gdf[r["term"]]) for r in rows],
-            ub_scale=_ub_scale(avgdl, g["encode_avgdl"]),
-            doc_lo=0, doc_hi=g["n_docs"],
-        )
-        if doc_ids.size:
-            keys = _docstore_keys(g["docstore"], doc_ids)
-            hits += [(-s, *keys[d]) for d, s in zip(doc_ids.tolist(), scores.tolist())]
-    top = sorted(hits)[:k]
-    if top:
-        neg_scores, conv_ids, turn_idxs = zip(*top)
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(conv_ids, pa.string()),
-                pa.array(turn_idxs, pa.int32()),
-                pa.array([-s for s in neg_scores], pa.float64()),
-            ],
-            names=["conv_id", "turn_idx", "score"],
-        )
+    for task, params in rows_in:
+        p = json.loads(params)
+        gens, n_docs, avgdl, k1, b = p["gens"], p["n_docs"], p["avgdl"], p["k1"], p["b"]
+        items = _task_items(p, task)
+        cols = _KERNEL_COLS + (_POS_COLS if any(q[3] for q, _ in items) else [])
+        scored = {r[0] for _, r in items}
+        has_term = _term_filter(sorted({t for q, _ in items for t in q[1]}))
+        gen_rows = [
+            {r["term"]: r for r in _read_stamped(
+                g["segments"], seg_schema, cols if gi in scored else ["term", "df"],
+                has_term,
+            ).to_pylist()}
+            for gi, g in enumerate(gens)
+        ]
+        gdf: dict[str, int] = {}
+        for rows in gen_rows:
+            for t, r in rows.items():
+                gdf[t] = gdf.get(t, 0) + r["df"]
+        idf = {t: idf_value(n_docs, df) for t, df in gdf.items()}
+        found = []  # (query_id, gen, doc_ids, scores) per item with hits
+        for (qid, terms, k, phrase), (gi, lo, hi) in items:
+            rows = [gen_rows[gi][t] for t in terms if t in gen_rows[gi]]
+            if phrase:
+                doc_ids, scores = _top_with_ties(*phrase_match_kernel(
+                    rows, terms, avgdl, k1, b, idf, lo, hi
+                ), k)
+            else:
+                doc_ids, scores = wand_topk_kernel(
+                    rows, n_docs, avgdl, k1, b, k,
+                    idfs=[idf[r["term"]] for r in rows],
+                    ub_scale=_ub_scale(avgdl, gens[gi]["encode_avgdl"]),
+                    doc_lo=lo, doc_hi=hi,
+                )
+            if doc_ids.size:
+                found.append((qid, gi, doc_ids, scores))
+        keys = {
+            gi: _docstore_keys(
+                gens[gi]["docstore"], np.concatenate([f[2] for f in found if f[1] == gi])
+            )
+            for gi in {f[1] for f in found}
+        }
+        hits: dict[str, list] = {}  # query_id -> [(-score, conv_id, turn_idx)]
+        for qid, gi, doc_ids, scores in found:
+            hits.setdefault(qid, []).extend(
+                (-s, *keys[gi][d]) for d, s in zip(doc_ids.tolist(), scores.tolist())
+            )
+        k_of = {q[0]: q[2] for q in p["queries"]}
+        out = [
+            (qid, conv_id, turn_idx, -neg, rank)
+            for qid, h in hits.items()
+            for rank, (neg, conv_id, turn_idx) in enumerate(sorted(h)[:k_of[qid]])
+        ]
+        if out:
+            qids, conv_ids, turn_idxs, scores, ranks = zip(*out)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(qids, pa.string()),
+                    pa.array(conv_ids, pa.string()),
+                    pa.array(turn_idxs, pa.int32()),
+                    pa.array(scores, pa.float64()),
+                    pa.array(ranks, pa.int32()),
+                ],
+                names=list(_TOPK_TYPES),
+            ).select(p["cols"])
 
 
-def _make_score_shard(
-    gen_avgdl: dict[int, float],
-    n_docs: int,
-    avgdl: float,
-    k1: float,
-    b: float,
-):
-    """Per-(query, gen, shard) scoring function of the batch path."""
-
-    def score_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        k = int(pdf["k"].iloc[0])
-        gen_id = int(pdf["gen"].iloc[0])
-        rows = pdf.to_dict("records")  # one C-level conversion, no .iloc loop
-        idfs = [idf_value(n_docs, int(r["gdf"])) for r in rows]
-        doc_ids, scores = wand_topk_kernel(
-            rows, n_docs, avgdl, k1, b, k, idfs=idfs,
-            ub_scale=_ub_scale(avgdl, gen_avgdl.get(gen_id, avgdl)),
-            doc_lo=int(pdf["range_lo"].iloc[0]),
-            doc_hi=int(pdf["range_hi"].iloc[0]),
-        )
-        return pd.DataFrame(
-            {
-                "query_id": pdf["query_id"].iloc[0],
-                "gen": gen_id,
-                "doc_id": doc_ids,
-                "score": scores,
-                "k": k,
-            }
-        )
-
-    return score_shard
-
-
-_HITS_SCHEMA = "query_id string, gen int, doc_id long, score double, k int"
-
-
-def _sharded_hits(
+def _task_params(
     reader: IndexReader,
-    queries: list[tuple[str, str, int]],
+    queries: list[tuple[str, list[str], int, bool]],
     shard_docs: int,
-) -> DataFrame | None:
-    """Scored candidates per (query, generation, shard):
-    (query_id, gen, doc_id, score, k) with exact global BM25 scores and whole
-    tie groups kept. All scoring runs in executor tasks; no posting blob ever
-    reaches the driver."""
-    spark = reader.spark
-    k1, b = reader.meta.k1, reader.meta.b
-    n_docs, avgdl = reader.n_docs, reader.avgdl
-    # per-generation ENCODE avgdl (≤ the gen's final avgdl after partial
-    # rebuilds): bounds widen by the ratio so block maxes stay safe
-    gen_avgdl = {
-        g.gen_id: (g.meta.encode_avgdl or g.meta.avgdl) for g in reader.generations
-    }
-    gen_ndocs = {g.gen_id: g.meta.n_docs for g in reader.generations}
-
-    qrows = []
-    for qid, text, k in queries:
-        for t in query_terms(text):
-            qrows.append((qid, t, k))
-    if not qrows:
-        return None
-    # literal `term IN (...)` BEFORE any join: the query terms are known on
-    # the driver, and the predicate prunes term-sorted parquet files / row
-    # groups (or the cached table) without touching blob columns — a join
-    # alone would probe every segment row
-    terms_all = sorted({t for _, t, _ in qrows})
-
-    seg_union = reduce(
-        DataFrame.unionByName,
-        [
-            g.segments.drop("pos_blob", "block_pos_bytes")
-            .filter(F.col("term").isin(terms_all))
-            .withColumn("gen", F.lit(g.gen_id))
-            for g in reader.generations
+    n_tasks: int,
+    cols=tuple(_TOPK_TYPES),
+) -> tuple[dict, bool]:
+    """The JSON parameters every serving task receives, and whether a
+    query's items span tasks. queries holds (query_id, terms, k, phrase).
+    Each generation is cut into docID ranges of shard_docs docs; an item is
+    one query over one range. When every generation is one range, each of
+    at most n_tasks tasks owns whole queries (_task_items) and returns
+    ``cols``; otherwise each owns ranges, and returns every column for the
+    per-query rank."""
+    gens = reader.generations
+    queries = [[q, terms, int(k), phrase] for q, terms, k, phrase in queries if terms and k > 0]
+    ranges = [
+        [gi, lo, min(lo + shard_docs, g.meta.n_docs)]
+        for gi, g in enumerate(gens) for lo in range(0, g.meta.n_docs, shard_docs)
+    ]
+    whole = all(g.meta.n_docs <= shard_docs for g in gens)
+    n = min(len(queries if whole else ranges), n_tasks) if queries and ranges else 0
+    spans = n > 1 and not whole
+    return {
+        "n_docs": reader.n_docs, "avgdl": reader.avgdl,
+        "k1": reader.meta.k1, "b": reader.meta.b,
+        "gens": [
+            {
+                "encode_avgdl": g.meta.encode_avgdl or g.meta.avgdl,
+                "segments": g.segment_files,
+                "docstore": g.docstore_files,
+            }
+            for g in gens
         ],
+        "queries": queries, "ranges": ranges, "whole": whole, "n_tasks": n,
+        "cols": list(_TOPK_TYPES) if spans else list(cols),
+    }, spans
+
+
+def _topk_plan(
+    reader: IndexReader,
+    queries: list[tuple[str, list[str], int, bool]],
+    shard_docs: int,
+    cols=tuple(_TOPK_TYPES),
+) -> DataFrame:
+    """``cols`` of (query_id, conv_id, turn_idx, score, rank) for
+    (query_id, terms, k, phrase) queries: spark.range with one partition
+    per task, every row carrying the same JSON parameters, mapped by
+    _serve_query. Only when a query's items span tasks does a per-query
+    row_number rank the tasks' rows."""
+    from pyspark.sql.window import Window
+
+    spark = reader.spark
+    p, spans = _task_params(
+        reader, queries, shard_docs, spark.sparkContext.defaultParallelism, cols
     )
-    qdf = spark.createDataFrame(qrows, "query_id string, term string, k int")
-    joined = seg_union.join(F.broadcast(qdf), on="term")
-    if len(reader.generations) == 1:
-        # a term appears at most once per generation → df IS the global df
-        joined = joined.withColumn("gdf", F.col("df"))
-    else:
-        # global df per (query, term) = sum over generations — aggregated on
-        # the pruned columns only and broadcast back (blobs shuffle exactly
-        # once, into the shard split)
-        gdf = joined.groupBy("query_id", "term").agg(F.sum("df").alias("gdf"))
-        joined = joined.join(F.broadcast(gdf), on=["query_id", "term"])
-
-    single_shard = all(n <= shard_docs for n in gen_ndocs.values())
-    if single_shard:
-        # one shard per generation — skip the splitter's Python exchange
-        range_hi = F.col("gen")
-        for gid, n in gen_ndocs.items():
-            range_hi = F.when(F.col("gen") == gid, F.lit(n)).otherwise(range_hi)
-        sharded = (
-            joined.withColumn("shard", F.lit(0))
-            .withColumn("range_lo", F.lit(0).cast("long"))
-            .withColumn("range_hi", range_hi.cast("long"))
-        )
-    else:
-        sharded = joined.mapInPandas(
-            _make_shard_splitter(gen_ndocs, shard_docs), schema=_SHARDED_SCHEMA
-        )
-
-    score_shard = _make_score_shard(gen_avgdl, n_docs, avgdl, k1, b)
-    return sharded.groupBy("query_id", "gen", "shard").applyInPandas(
-        score_shard, schema=_HITS_SCHEMA
+    n = p["n_tasks"]
+    if not n:
+        return spark.createDataFrame([], _ddl(cols))
+    df = (
+        spark.range(0, n, 1, n)
+        .select("id", F.lit(json.dumps(p)).alias("params"))
+        .mapInArrow(_serve_query, _ddl(p["cols"]))
+    )
+    if not spans:
+        return df
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("score").desc(), F.col("conv_id").asc(), F.col("turn_idx").asc()
+    )
+    k_of = F.create_map(*[F.lit(x) for q in p["queries"] for x in (q[0], q[2])])
+    return (
+        df.withColumn("rank", F.row_number().over(w) - 1)
+        .filter(F.col("rank") < k_of[F.col("query_id")])
+        .select(*cols)
     )
 
 
@@ -582,52 +531,22 @@ def bm25_topk_many(
     queries: list[tuple[str, str, int]],
     shard_docs: int = DEFAULT_SHARD_DOCS,
 ) -> DataFrame:
-    """Distributed batch query path: [(query_id, query_text, k)] → doc-range
-    sharded block-max WAND, one task per (query, generation, shard).
+    """Batch top-k: [(query_id, query_text, k)] → (query_id, conv_id,
+    turn_idx, score, rank), rank from 0, through _topk_plan.
 
-    Scale shape: the query table is tiny and broadcast into a join against
-    the term-sorted segment table (broadcast-hash join whose probe side is
-    pruned by term min/max); the shard splitter byte-slices each matching
-    blob so the shuffle into applyInPandas carries each posting byte exactly
-    once (± boundary blocks) and NO task ever holds a hot term's full list.
-    Per-shard top-k with global (N, avgdl, df) is exact, so the final rank
-    window is a pure k-way merge. No posting blob ever reaches the driver.
-
-    r6: the hits side (≤ Σ k+ties rows) is explicitly BROADCAST into the
-    docstore key join — the planner has no size estimate for the
-    applyInPandas output, so it previously picked a sort-merge join that
-    shuffled and sorted the ENTIRE docstore to attach keys to a few
-    hundred result rows (guide §3.1: hint the join when you know a side is
-    small; measured 1.68 s → 1.55 s on the 24-query batch, and at corpus
-    scale the docstore shuffle it removes grows with N while the hits side
-    stays O(Σk)).
-    """
-
-    from pyspark.sql.window import Window
-
-    hits = _sharded_hits(reader, queries, shard_docs)
-    if hits is None:
-        return reader.spark.createDataFrame(
-            [],
-            "query_id string, conv_id string, turn_idx int, score double, rank int",
-        )
-    ds_union = reduce(
-        DataFrame.unionByName,
-        [
-            g.docstore.select(
-                F.lit(g.gen_id).alias("gen"), "doc_id", "conv_id", "turn_idx"
-            )
-            for g in reader.generations
-        ],
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("conv_id").asc(), F.col("turn_idx").asc()
-    )
-    return (
-        F.broadcast(hits).join(ds_union, on=["gen", "doc_id"])
-        .withColumn("rank", F.row_number().over(w) - 1)
-        .filter(F.col("rank") < F.col("k"))
-        .select("query_id", "conv_id", "turn_idx", "score", "rank")
+    With every generation within shard_docs docs, the batch is one job of
+    one task per core, each owning whole queries and returning them ranked:
+    no shuffle. Past that, each task owns docID ranges and returns every
+    query's top k over them, and a per-query row_number over at most
+    tasks × k rows per query ranks the union. Per-shard top-k with global
+    (N, avgdl, df) is exact, and keys are resolved inside the tasks, so the
+    rank is a pure merge. No posting blob ever reaches the driver. Query
+    ids must be unique: rows are ranked per query_id."""
+    ids = [qid for qid, _, _ in queries]
+    if len(set(ids)) != len(ids):
+        raise ValueError("bm25_topk_many: duplicate query_id in the batch")
+    return _topk_plan(
+        reader, [(qid, query_terms(text), k, False) for qid, text, k in queries], shard_docs
     )
 
 
@@ -640,43 +559,15 @@ def bm25_topk_indexed(
     """Single-query top-k via the compressed index; returns
     (conv_id, turn_idx, score) in (score desc, conv_id, turn_idx) order.
 
-    When every generation holds ≤ shard_docs docs, the query is ONE Spark
-    job of one task: a one-row Range carries the query and the reader's
-    stamped file lists to _serve_query (mapInArrow), which reads the query
-    terms' segment rows and the hits' docstore keys with pyarrow, scores
-    every generation with the WAND kernel and returns the final k rows
-    already sorted. No plan over the segment table is built, so the query
-    costs the JVM one trivial job, not a scan plan to analyse and compile.
-    Any other single query takes bm25_topk_many's doc-range sharded shape.
-    Multi-generation stats (N, avgdl, df) are global, so scores are exact
-    global BM25; ties resolve by the real (conv_id, turn_idx) keys
-    (rank-identical to the oracle regardless of docID assignment order)."""
-    terms = query_terms(query_text)
-    if not terms or k <= 0:
-        return reader.spark.createDataFrame(
-            [], "conv_id string, turn_idx int, score double"
-        )
-    if any(g.meta.n_docs > shard_docs for g in reader.generations):
-        return (
-            bm25_topk_many(reader, [("q", query_text, k)], shard_docs)
-            .orderBy("rank")
-            .select("conv_id", "turn_idx", "score")
-        )
-    params = json.dumps({
-        "terms": terms, "k": int(k), "n_docs": reader.n_docs,
-        "avgdl": reader.avgdl, "k1": reader.meta.k1, "b": reader.meta.b,
-        "gens": [
-            {
-                "n_docs": g.meta.n_docs,
-                "encode_avgdl": g.meta.encode_avgdl or g.meta.avgdl,
-                "segments": g.segment_files,
-                "docstore": g.docstore_files,
-            }
-            for g in reader.generations
-        ],
-    })
-    return (
-        reader.spark.range(0, 1, 1, 1)
-        .select(F.lit(params).alias("params"))
-        .mapInArrow(_serve_query, _SERVE_SCHEMA)
+    A batch of one. When every generation holds ≤ shard_docs docs that is
+    ONE Spark job of one task over a one-row Range: the task reads the
+    query terms' segment rows and the hits' docstore keys with pyarrow,
+    scores every generation with the WAND kernel and returns the k rows
+    already sorted, so no plan over the segment table is built. Otherwise
+    the per-query rank sorts its partition into rank order. Multi-generation
+    stats (N, avgdl, df) are global, so scores are exact global BM25; ties
+    resolve by the real (conv_id, turn_idx) keys (rank-identical to the
+    oracle regardless of docID assignment order)."""
+    return _topk_plan(
+        reader, [("q", query_terms(query_text), k, False)], shard_docs, _HIT_COLS
     )

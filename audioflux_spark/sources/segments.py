@@ -2,7 +2,7 @@
 
 Analog of the reference's opaque operator handle holding precomputed state
 (/root/reference/python/audioflux/base.py:4-8): meta + segment/docstore
-DataFrames bound once, reused across queries.
+DataFrames and stamped file lists bound once, reused across queries.
 
 Incremental layout (the isContinue analog, /root/reference/src/
 stft_algorithm.c:41,536-586 — new data appended without recomputing old):
@@ -14,7 +14,7 @@ Query-time stats (N, avgdl, df) are summed across generations, so BM25
 scores stay EXACT global values — generations only partition the doc space.
 
 Each generation's segment and docstore files are listed once, at open, with
-their (size, mtime_ns) stamps. The single-query task reads only those files
+their (size, mtime_ns) stamps. Every serving task reads only those files
 and refuses to answer if one is gone or its stamp changed (an index rebuilt
 under an open reader), so a stale reader raises instead of serving wrong rows.
 """
@@ -95,15 +95,9 @@ class IndexReader:
         return self.generations[0].docstore
 
     def warm(self) -> "IndexReader":
-        """Pin segments + docstore in executor memory for the batch path
-        (bm25_topk_many and phrase queries), whose repeated plans then skip
-        parquet decode. Single queries read the files listed at open
-        directly and never touch the persisted frames."""
-        for g in self.generations:
-            g.segments = g.segments.persist()
-            g.segments.count()
-            g.docstore = g.docstore.persist()
-            g.docstore.count()
+        """A no-op that returns the reader, kept for callers that warm a
+        reader before serving: every query reads the files listed at open,
+        so there is nothing to pin."""
         return self
 
     # -- global (cross-generation) statistics: exact, not stale --

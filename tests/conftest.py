@@ -3,9 +3,14 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 
+from audioflux_spark.config import EngineConfig, IndexConfig
 from audioflux_spark.fixtures import SF_TO_NCONVS, gen_queries, gen_transcripts
 from audioflux_spark.oracle import BM25Oracle
 from audioflux_spark.plans.session import get_spark
+
+POS_CFG = EngineConfig(
+    index=IndexConfig(block_size=32, build_partitions=8, store_positions=True)
+)
 
 
 @pytest.fixture(scope="session")
@@ -42,3 +47,15 @@ def oracle(transcripts_pdf) -> BM25Oracle:
 @pytest.fixture(scope="session")
 def queries(transcripts_pdf):
     return gen_queries(transcripts_pdf)
+
+
+@pytest.fixture(scope="session")
+def pos_reader(spark, transcripts_sdf, tmp_path_factory):
+    """A reader over the fixture corpus indexed with positions (phrase
+    queries) and 32-posting blocks."""
+    from audioflux_spark.operators.indexer import build_index
+    from audioflux_spark.sources.segments import IndexReader
+
+    d = str(tmp_path_factory.mktemp("pos_index") / "idx")
+    build_index(spark, transcripts_sdf, d, cfg=POS_CFG)
+    return IndexReader(spark, d)

@@ -14,7 +14,16 @@ import pytest
 from audioflux_spark.config import DEFAULT, EngineConfig, IndexConfig
 from audioflux_spark.functions.codec import delta_decode_segmented, varint_decode
 from audioflux_spark.operators.indexer import build_index
-from audioflux_spark.operators.wand import bm25_topk_indexed, bm25_topk_many
+from audioflux_spark.operators.topk import query_terms
+from audioflux_spark.operators.wand import (
+    DEFAULT_SHARD_DOCS,
+    _serve_query,
+    _task_items,
+    _task_params,
+    _top_with_ties,
+    bm25_topk_indexed,
+    bm25_topk_many,
+)
 from audioflux_spark.plans.checkpoint import load_manifest, save_manifest
 from audioflux_spark.sources.segments import IndexReader
 from tests.test_topk_exhaustive import assert_rank_identical
@@ -101,7 +110,8 @@ EDGE_QUERIES = [
 def assert_indexed_matches_oracle(reader, oracle, queries, shard_docs=None):
     """bm25_topk_indexed over the reference queries and EDGE_QUERIES is
     rank-identical to the oracle; shard_docs below a generation's size
-    routes every query through bm25_topk_many's sharded shape."""
+    spreads each query's doc ranges over several tasks and ranks their
+    rows per query."""
     kw = {} if shard_docs is None else {"shard_docs": shard_docs}
     for text, k in [(q.query_text, q.k) for q in queries] + EDGE_QUERIES:
         got = bm25_topk_indexed(reader, text, k, **kw).toPandas()
@@ -115,8 +125,8 @@ def test_wand_rank_identity_all_queries(spark, reader, exchange_build, oracle, q
 
 
 def test_indexed_sharded_route_rank_identity(reader, oracle, queries):
-    """With 200-doc shards, single queries take bm25_topk_many's sharded
-    shape instead of the one-task path."""
+    """With 200-doc shards, a single query's ranges span several tasks and
+    a per-query rank merges their rows."""
     assert_indexed_matches_oracle(reader, oracle, queries[:6], shard_docs=200)
 
 
@@ -146,6 +156,115 @@ def test_batch_query_path(reader, oracle, queries):
         )
         want = oracle.topk(text, k)
         assert_rank_identical(got, want, context=f"batch {qid}")
+
+
+def test_batch_rejects_duplicate_query_ids(reader):
+    """Rows are ranked per query_id, so a batch repeating one is refused
+    up front in both plan shapes (whole queries per task, or doc ranges
+    merged by the per-query rank)."""
+    batch = [("a", "hotterm", 3), ("a", "tie", 3)]
+    for shard_docs in (DEFAULT_SHARD_DOCS, 200):
+        with pytest.raises(ValueError, match="duplicate query_id"):
+            bm25_topk_many(reader, batch, shard_docs)
+
+
+def serve_locally(params: dict, task: int) -> list[dict]:
+    """The rows serving task number ``task`` returns for ``params`` (built
+    by _task_params), run in this process."""
+    import pyarrow as pa
+
+    batch = pa.RecordBatch.from_pydict({"id": [task], "params": [json.dumps(params)]})
+    return [r for b in _serve_query([batch]) for r in b.to_pylist()]
+
+
+def test_batch_rows_equal_single_query_rows(reader, queries):
+    """Each query's rows inside a 24-query batch spread over several tasks
+    equal its single-query rows (same rows, same order), whether a task
+    owns whole queries or, with 200-doc shards, doc ranges of every
+    query."""
+    batch = [(q.query_id, q.query_text, q.k) for q in queries]
+    assert len(batch) == 24
+    for shard_docs in (DEFAULT_SHARD_DOCS, 200):
+        params, _ = _task_params(
+            reader, [(qid, query_terms(text), k, False) for qid, text, k in batch],
+            shard_docs, reader.spark.sparkContext.defaultParallelism,
+        )
+        assert params["n_tasks"] > 1
+        rows = bm25_topk_many(reader, batch, shard_docs).collect()
+        for qid, text, k in batch:
+            mine = sorted((r for r in rows if r["query_id"] == qid), key=lambda r: r["rank"])
+            assert [r["rank"] for r in mine] == list(range(len(mine)))
+            got = [(r["conv_id"], r["turn_idx"], r["score"]) for r in mine]
+            want = [tuple(r) for r in bm25_topk_indexed(reader, text, k, shard_docs).collect()]
+            assert got == want, (text, shard_docs)
+
+
+def test_wide_batch_in_one_task_rank_identity(reader, oracle):
+    """A batch served by ONE task whose queries hold more than 64 distinct
+    terms (the task's term filter is then isin, not an OR of equalities),
+    and a single query of more than 64 terms through Spark, both
+    rank-identical to the oracle."""
+    vocab = sorted(oracle.postings)
+    rng = np.random.default_rng(64)
+    batch = [
+        (f"w{i}", [vocab[j] for j in rng.choice(len(vocab), 8, replace=False)], k, False)
+        for i, k in enumerate([3, 10, 50, 10, 10, 1, 10, 20, 10, 5])
+    ]
+    assert len({t for _, terms, _, _ in batch for t in terms}) > 64
+    params, spans = _task_params(reader, batch, DEFAULT_SHARD_DOCS, n_tasks=1)
+    assert params["n_tasks"] == 1 and not spans
+    rows = serve_locally(params, 0)
+    for qid, terms, k, _ in batch:
+        mine = [r for r in rows if r["query_id"] == qid]
+        assert [r["rank"] for r in mine] == list(range(len(mine)))
+        got = pd.DataFrame(
+            [(r["conv_id"], r["turn_idx"], r["score"]) for r in mine],
+            columns=["conv_id", "turn_idx", "score"],
+        )
+        text = " ".join(terms)
+        assert_rank_identical(got, oracle.topk(text, k), context=f"one-task '{text}' k={k}")
+
+    text = " ".join(vocab[j] for j in rng.choice(len(vocab), 70, replace=False))
+    got = bm25_topk_indexed(reader, text, 25).toPandas()
+    assert_rank_identical(got, oracle.topk(text, 25), context="70-term query")
+
+
+def test_top_with_ties_keeps_whole_kth_tie_group():
+    """The one tie cut (WAND kernel, phrase items): the k best by
+    (score desc, doc_id asc), then every further doc tying the k-th score,
+    never a doc below it — against a sorted-list reference."""
+    rng = np.random.default_rng(7)
+    for _ in range(200):
+        n = int(rng.integers(0, 40))
+        doc_ids = rng.permutation(1000)[:n].astype(np.int64)
+        scores = rng.integers(0, 5, n).astype(np.float64)  # many ties
+        k = int(rng.integers(1, 12))
+        ref = sorted(zip((-scores).tolist(), doc_ids.tolist()))
+        if len(ref) > k:
+            ref = [r for r in ref if r[0] <= ref[k - 1][0]]
+        got_d, got_s = _top_with_ties(doc_ids, scores, k)
+        assert list(zip((-got_s).tolist(), got_d.tolist())) == ref
+
+
+def test_task_items_partition_every_item_once():
+    """Every (query, range) item goes to exactly one task: tasks own whole
+    queries when each generation is one range, else runs of ranges."""
+    queries = [[f"q{i}", ["t"], 5, False] for i in range(7)]
+    for ranges, whole in (([[0, 0, 10], [1, 0, 4]], True),
+                          ([[0, lo, lo + 3] for lo in range(0, 30, 3)], False)):
+        for n in range(1, 12):
+            p = {"queries": queries, "ranges": ranges, "whole": whole,
+                 "n_tasks": min(n, len(queries if whole else ranges))}
+            items = [
+                (q[0], tuple(r)) for t in range(p["n_tasks"]) for q, r in _task_items(p, t)
+            ]
+            want = [(q[0], tuple(r)) for q in queries for r in ranges]
+            assert sorted(items) == sorted(want), (whole, n)
+            if whole:  # a query's items never span tasks
+                owner = {}
+                for t in range(p["n_tasks"]):
+                    for q, _ in _task_items(p, t):
+                        assert owner.setdefault(q[0], t) == t
 
 
 def test_per_turn_text_roundtrip(reader, transcripts_pdf):

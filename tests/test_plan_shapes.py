@@ -21,9 +21,9 @@ def _plan(df) -> str:
 
 
 def test_segments_term_in_pushdown(spark):
-    """The serving path's `term IN (...)` predicate must reach the segments
-    parquet scan (file/row-group pruning on the term-sorted layout) — the
-    property that makes query cost ~O(query terms), not O(vocabulary)."""
+    """A `term IN (...)` filter on the segment table must reach the parquet
+    scan (file/row-group pruning on the term-sorted layout) — the property
+    that makes a term lookup cost ~O(query terms), not O(vocabulary)."""
     import audioflux_spark.entry_queries as eq
 
     reader = eq._reader(spark, SF_DIR)
@@ -97,3 +97,50 @@ def test_indexed_serving_single_job_shape(spark):
         sc.setLocalProperty("spark.job.description", None)
     assert rows
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
+def _collect_jobs(spark, df, group: str) -> tuple[list, int]:
+    """df.collect() under a job group: (rows, jobs launched)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        rows = df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return rows, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_batch_and_phrase_single_job_shape(spark):
+    """On an index whose generations each fit one shard, a 24-query batch
+    and a phrase query each plan as MapInArrow over a Range — no Exchange,
+    no scan of the segment table or a persisted copy — and run as exactly
+    one job per collect(). With 200-doc shards the only Exchange is the
+    final per-query rank."""
+    import audioflux_spark.entry_queries as eq
+    from audioflux_spark.operators.phrase import bm25_topk_phrase
+    from audioflux_spark.operators.wand import bm25_topk_many
+
+    reader = eq._reader(spark, SF_DIR)
+    words = ["join", "hash", "row", "table", "window", "dup", "the", "data"]
+    batch = [
+        (f"q{i}", f"{words[i % 8]} {words[(3 * i + 1) % 8]}", 5 + i) for i in range(24)
+    ]
+    shapes = {
+        "batch": bm25_topk_many(reader, batch),
+        "phrase": bm25_topk_phrase(reader, "table window", 15),
+    }
+    for name, df in shapes.items():
+        plan = _plan(df)
+        assert "MapInArrow" in plan and "Range (0, " in plan, plan[:2000]
+        for op in ("Exchange", "FileScan", "InMemoryTableScan"):
+            assert op not in plan, f"{op} in the {name} plan:\n{plan[:2000]}"
+        rows, jobs = _collect_jobs(spark, df, f"afspark-{name}-jobs")
+        assert rows
+        assert jobs == 1, f"{name}: {jobs} jobs"
+
+    plan = _plan(bm25_topk_many(reader, batch, shard_docs=200))
+    assert plan.count("Exchange") == 1, plan[:3000]
+    assert "Exchange hashpartitioning(query_id" in plan
+    for op in ("FileScan", "InMemoryTableScan"):
+        assert op not in plan, f"{op} in the sharded batch plan:\n{plan[:3000]}"

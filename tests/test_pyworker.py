@@ -133,9 +133,6 @@ def _kernels():
         "merge": merge,
         "merge_writer": indexer._make_merge_writer(merge, "segments"),
         "range_merge": indexer._make_range_merge(["part-00000.parquet"], ["m"], "segments", 1),
-        "shard_splitter": wand._make_shard_splitter({0: 10}, 4),
-        "phrase_splitter": wand._make_shard_splitter({0: 10}, 4, include_pos=True),
-        "score_shard": wand._make_score_shard({0: 1.0}, 10, 1.0, 1.2, 0.75),
         "serve_query": wand._serve_query,
     }
 

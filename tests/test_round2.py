@@ -1,6 +1,6 @@
-"""Round-2 operators: Baum-Welch training, positional/phrase queries,
-doc-range-sharded WAND, byte-skipping, LSH banded dedup pairs, generation
-compaction, ghost-partition resume cleanup, multimodal real-decoder path."""
+"""Round-2 operators: Baum-Welch training, doc-range-sharded WAND,
+byte-skipping, LSH banded dedup pairs, generation compaction,
+ghost-partition resume cleanup, multimodal real-decoder path."""
 
 from __future__ import annotations
 
@@ -14,28 +14,12 @@ import pytest
 
 from audioflux_spark.config import EngineConfig, IndexConfig
 from audioflux_spark.operators.indexer import build_index
-from audioflux_spark.operators.phrase import bm25_topk_phrase, phrase_match_kernel
+from audioflux_spark.operators.phrase import bm25_topk_phrase
 from audioflux_spark.operators.sequence import GaussianHMM, baum_welch, hmm_fit
 from audioflux_spark.operators.wand import bm25_topk_many, wand_topk_kernel
 from audioflux_spark.sources.segments import IndexReader
+from tests.test_phrase import _brute_phrase_docs
 from tests.test_topk_exhaustive import assert_rank_identical
-
-POS_CFG = EngineConfig(
-    index=IndexConfig(block_size=32, build_partitions=8, store_positions=True)
-)
-
-
-@pytest.fixture(scope="module")
-def pos_index_dir(spark, transcripts_sdf, tmp_path_factory):
-    d = str(tmp_path_factory.mktemp("pos_index") / "idx")
-    build_index(spark, transcripts_sdf, d, cfg=POS_CFG)
-    return d
-
-
-@pytest.fixture(scope="module")
-def pos_reader(spark, pos_index_dir):
-    return IndexReader(spark, pos_index_dir)
-
 
 # ------------------------------------------------------------- Baum-Welch
 
@@ -98,53 +82,6 @@ def test_hmm_fit_spark_matches_local(spark):
         want = np.sort(np.asarray(fitted.means))
         rows = got[got["group"] == uid].sort_values("state")
         np.testing.assert_allclose(rows["mean"].to_numpy(), want, rtol=1e-9)
-
-
-# ------------------------------------------------------- positions / phrase
-
-
-def _brute_phrase_docs(pdf: pd.DataFrame, terms: list[str]) -> set:
-    import re
-
-    out = set()
-    pat = re.compile("[a-z0-9_]+")
-    for _, row in pdf.iterrows():
-        toks = pat.findall(row["text"].lower())
-        for i in range(len(toks) - len(terms) + 1):
-            if toks[i : i + len(terms)] == terms:
-                out.add((row["conv_id"], int(row["turn_idx"])))
-                break
-    return out
-
-
-def test_phrase_matches_brute_force(spark, pos_reader, transcripts_pdf):
-    # pick a phrase that actually occurs: first doc's first two tokens
-    import re
-
-    toks = re.findall("[a-z0-9_]+", transcripts_pdf.iloc[0]["text"].lower())
-    phrase_terms = toks[:2]
-    phrase = " ".join(phrase_terms)
-    want = _brute_phrase_docs(transcripts_pdf, phrase_terms)
-    assert want, "fixture phrase must occur at least once"
-    got = bm25_topk_phrase(pos_reader, phrase, k=len(want) + 50).toPandas()
-    got_keys = set(zip(got["conv_id"], got["turn_idx"].astype(int)))
-    assert got_keys == want
-
-
-def test_phrase_order_sensitivity(pos_reader, transcripts_pdf):
-    """A phrase and its reversal match different doc sets (order matters)."""
-    import re
-
-    toks = re.findall("[a-z0-9_]+", transcripts_pdf.iloc[0]["text"].lower())
-    a, b = toks[0], toks[1]
-    if a == b:
-        pytest.skip("degenerate fixture head")
-    fwd = _brute_phrase_docs(transcripts_pdf, [a, b])
-    rev = _brute_phrase_docs(transcripts_pdf, [b, a])
-    got_fwd = bm25_topk_phrase(pos_reader, f"{a} {b}", k=10_000).toPandas()
-    got_rev = bm25_topk_phrase(pos_reader, f"{b} {a}", k=10_000).toPandas()
-    assert set(zip(got_fwd["conv_id"], got_fwd["turn_idx"].astype(int))) == fwd
-    assert set(zip(got_rev["conv_id"], got_rev["turn_idx"].astype(int))) == rev
 
 
 # ------------------------------------------------- sharded WAND + byte skip
@@ -369,38 +306,3 @@ def test_multimodal_fake_fallback_warns_on_bad_payload(monkeypatch):
     with pytest.warns(UserWarning):
         out = multimodal._decode_image(b"junk", 4, 3, 3)
     assert out.shape == (3, 4, 3)  # deterministic fake with metadata shape
-
-
-def test_phrase_hits_bounded_per_shard(pos_reader, transcripts_pdf):
-    """Forced-small shard_docs: every (gen, shard) emits at most k rows plus
-    the k-th-score tie group, so the final rank window's input is bounded by
-    shards*(k+ties) — never the full match set. Top-k itself stays identical
-    to the unbounded (huge-k) ranking."""
-    import re
-
-    from audioflux_spark.operators.phrase import phrase_hits
-
-    toks = re.findall("[a-z0-9_]+", transcripts_pdf.iloc[0]["text"].lower())
-    phrase = " ".join(toks[:2])
-    n_matches = len(_brute_phrase_docs(transcripts_pdf, toks[:2]))
-    k = 3
-    hits = phrase_hits(pos_reader, phrase, k=k, shard_docs=200).toPandas()
-    # hits carries (gen, doc_id, score); shard_docs=200 → shard = doc_id // 200
-    shard_of = hits["doc_id"] // 200
-    for sh, g in hits.groupby(shard_of):
-        scores = g["score"].sort_values(ascending=False).to_numpy()
-        if len(g) > k:
-            # everything past position k must tie the k-th score exactly
-            assert (scores[k:] == scores[k - 1]).all(), (
-                f"shard {sh} emitted rows past a non-tied k-th score"
-            )
-    # the final window's input is the bounded union, not the match set
-    if n_matches > shard_of.nunique() * k:
-        assert len(hits) < n_matches
-
-    # rank identity vs the unbounded path
-    bounded = bm25_topk_phrase(pos_reader, phrase, k=k, shard_docs=200).toPandas()
-    full = bm25_topk_phrase(pos_reader, phrase, k=10_000).toPandas().head(len(bounded))
-    pd.testing.assert_frame_equal(
-        bounded.reset_index(drop=True), full.reset_index(drop=True)
-    )

@@ -1,5 +1,5 @@
 """Round-3 hardening: resumed-build offset-shift invalidation, incomplete-
-generation resume, sharded phrase path, folded-docstore serving."""
+generation resume, folded-docstore serving."""
 
 from __future__ import annotations
 
@@ -64,70 +64,6 @@ def test_resume_offset_shift_rebuilds_later_partitions(
     assert same_count, "fixture did not exercise the unchanged-partition path"
     for p, e in m2.entries.items():
         assert e.doc_offset >= 0
-
-
-POS_CFG = EngineConfig(
-    index=IndexConfig(block_size=32, build_partitions=8, store_positions=True)
-)
-
-
-@pytest.fixture(scope="module")
-def pos_reader(spark, transcripts_sdf, tmp_path_factory):
-    d = str(tmp_path_factory.mktemp("r3_pos_index") / "idx")
-    build_index(spark, transcripts_sdf, d, cfg=POS_CFG)
-    return IndexReader(spark, d)
-
-
-def _brute_phrase_docs(pdf: pd.DataFrame, terms: list[str]) -> set:
-    import re
-
-    out = set()
-    needle = " " + " ".join(terms) + " "
-    for _, row in pdf.iterrows():
-        toks = re.findall("[a-z0-9_]+", str(row["text"]).lower())
-        if needle in " " + " ".join(toks) + " ":
-            out.add((row["conv_id"], int(row["turn_idx"])))
-    return out
-
-
-def test_phrase_sharded_equals_unsharded(spark, pos_reader, transcripts_pdf):
-    """Tiny shard size forces the multi-shard phrase path (blob + position
-    byte-slicing, per-shard match, cross-shard union): results must be
-    identical to the single-shard path and to brute force — including a
-    Zipf-HEAD phrase (hotterm appears in ~40% of turns), the exact case the
-    sharding exists for."""
-    from audioflux_spark.operators.phrase import bm25_topk_phrase
-
-    import re
-
-    # a tail phrase (first doc's first two tokens) and a head phrase: the
-    # first 'hotterm X' bigram found in the corpus
-    toks0 = re.findall("[a-z0-9_]+", transcripts_pdf.iloc[0]["text"].lower())
-    phrases = [toks0[:2]]
-    for _, row in transcripts_pdf.iterrows():
-        toks = re.findall("[a-z0-9_]+", str(row["text"]).lower())
-        for i, t in enumerate(toks[:-1]):
-            if t == "hotterm":
-                phrases.append([toks[i], toks[i + 1]])
-                break
-        if len(phrases) == 2:
-            break
-    assert len(phrases) == 2, "fixture must contain a hotterm bigram"
-
-    for terms in phrases:
-        phrase = " ".join(terms)
-        want = _brute_phrase_docs(transcripts_pdf, terms)
-        assert want, f"fixture phrase {phrase!r} must occur"
-        kk = len(want) + 50
-        one = bm25_topk_phrase(pos_reader, phrase, k=kk).toPandas()
-        many = bm25_topk_phrase(pos_reader, phrase, k=kk, shard_docs=200).toPandas()
-        got_one = set(zip(one["conv_id"], one["turn_idx"].astype(int)))
-        got_many = set(zip(many["conv_id"], many["turn_idx"].astype(int)))
-        assert got_one == want, f"single-shard phrase wrong for {phrase!r}"
-        assert got_many == want, f"multi-shard phrase wrong for {phrase!r}"
-        pd.testing.assert_frame_equal(
-            one.reset_index(drop=True), many.reset_index(drop=True)
-        )
 
 
 def test_simhash_pairs_find_planted_near_dup(spark, tmp_path_factory):

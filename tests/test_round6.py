@@ -186,52 +186,36 @@ def test_session_cache_evicts_on_corpus_change(spark, tmp_path):
     assert rebuilt.count() == len(pdf) // 2 != n1
 
 
-# ---- single-query serving: one Python task over the segment files ----
-
-
-@pytest.fixture(scope="module")
-def _serving_index(spark, transcripts_sdf, tmp_path_factory):
-    from audioflux_spark.operators.indexer import build_index
-
-    d = str(tmp_path_factory.mktemp("serving_idx") / "idx")
-    build_index(spark, transcripts_sdf, d)
-    return d
-
-
-def test_serving_fast_path_matches_general(spark, _serving_index, queries):
-    """The one-task single-query path returns exactly what the distributed
-    bm25_topk_many shape computes for the same query: same rows, same
-    order."""
-    from audioflux_spark.operators.wand import bm25_topk_indexed, bm25_topk_many
-    from audioflux_spark.sources.segments import IndexReader
-
-    reader = IndexReader(spark, _serving_index)
-    for q in queries[:6]:
-        fast = bm25_topk_indexed(reader, q.query_text, q.k).collect()
-        general = (
-            bm25_topk_many(reader, [("q", q.query_text, q.k)])
-            .orderBy("rank")
-            .select("conv_id", "turn_idx", "score")
-            .collect()
-        )
-        assert fast == general, q.query_text
+# ---- serving: tasks over the files a reader stamped at open ----
 
 
 def test_serving_refuses_rebuilt_index(spark, transcripts_sdf, tmp_path):
     """A reader lists its files with their stamps at open; once the index
-    directory is rebuilt under it, the next single query raises instead of
-    reading the new files, and a reader opened afterwards serves again."""
+    directory is rebuilt under it, the next single query, batch or phrase
+    query raises instead of reading the new files, and a reader opened
+    afterwards serves again."""
+    from audioflux_spark.config import EngineConfig, IndexConfig
     from audioflux_spark.operators.indexer import build_index
-    from audioflux_spark.operators.wand import bm25_topk_indexed
+    from audioflux_spark.operators.phrase import bm25_topk_phrase
+    from audioflux_spark.operators.wand import bm25_topk_indexed, bm25_topk_many
     from audioflux_spark.sources.segments import IndexReader
 
     d = str(tmp_path / "idx")
+    cfg = EngineConfig(index=IndexConfig(store_positions=True))
     small = transcripts_sdf.limit(300)
-    build_index(spark, small, d)
+    build_index(spark, small, d, cfg=cfg)
     reader = IndexReader(spark, d)
     want = bm25_topk_indexed(reader, "hotterm", 5).collect()
     assert want
-    build_index(spark, small, d, resume=False)
-    with pytest.raises(Exception, match="changed or vanished since its IndexReader opened"):
+    batch = [("a", "hotterm", 5), ("b", "tie hotterm", 3)]
+    assert bm25_topk_many(reader, batch).collect()
+    assert bm25_topk_phrase(reader, "hotterm", 5).collect()
+    build_index(spark, small, d, cfg=cfg, resume=False)
+    stale = "changed or vanished since its IndexReader opened"
+    with pytest.raises(Exception, match=stale):
         bm25_topk_indexed(reader, "hotterm", 5).collect()
+    with pytest.raises(Exception, match=stale):
+        bm25_topk_many(reader, batch).collect()
+    with pytest.raises(Exception, match=stale):
+        bm25_topk_phrase(reader, "hotterm", 5).collect()
     assert bm25_topk_indexed(IndexReader(spark, d), "hotterm", 5).collect() == want
