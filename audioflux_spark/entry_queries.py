@@ -110,7 +110,7 @@ def _reader(spark: SparkSession, sf_dir: str) -> IndexReader:
     ent = _READERS.get(sf_dir)
     if ent is not None and ent[0] is spark:
         return ent[1]
-    tag = hashlib.md5(f"{sf_dir}:fmt4pos".encode()).hexdigest()[:10]
+    tag = hashlib.md5(f"{sf_dir}:fmt5pos".encode()).hexdigest()[:10]
     idx = os.path.join("/tmp/afspark_entry_idx", tag)
     t = documents_as_transcripts(spark, sf_dir)
     build_index(spark, t, idx, cfg=_ENTRY_CFG, resume=True)
@@ -225,7 +225,7 @@ def _incr_readers(spark: SparkSession, sf_dir: str) -> tuple[IndexReader, IndexR
     if ent is None or ent[0] is not spark:
         from audioflux_spark.streaming.incremental import add_generation, compact_index
 
-        tag = hashlib.md5(f"{sf_dir}:incr-fmt4".encode()).hexdigest()[:10]
+        tag = hashlib.md5(f"{sf_dir}:incr-fmt5".encode()).hexdigest()[:10]
         base = os.path.join("/tmp/afspark_entry_idx", f"incr_{tag}")
         compacted = base + "_compacted"
         first = documents_as_transcripts(spark, sf_dir, where="doc_id % 2 = 0")

@@ -22,11 +22,6 @@ def idf_value(n_docs: int, df: int) -> float:
     return math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
 
 
-def idf_col(n_docs: int, df: Column) -> Column:
-    n = F.lit(float(n_docs))
-    return F.log(F.lit(1.0) + (n - df + F.lit(0.5)) / (df + F.lit(0.5)))
-
-
 def tf_norm_col(
     tf: Column, doc_len: Column, avgdl: float, cfg: BM25Config = DEFAULT.bm25
 ) -> Column:
@@ -35,9 +30,3 @@ def tf_norm_col(
     tf_d = tf.cast("double")
     denom = tf_d + k1 * (F.lit(1.0) - b + b * doc_len.cast("double") / F.lit(avgdl))
     return tf_d * (k1 + F.lit(1.0)) / denom
-
-
-def tf_norm_np(tf, doc_len, avgdl: float, cfg: BM25Config = DEFAULT.bm25):
-    """NumPy twin of tf_norm_col — used by the blob kernels and block maxes."""
-    denom = tf + cfg.k1 * (1.0 - cfg.b + cfg.b * doc_len / avgdl)
-    return tf * (cfg.k1 + 1.0) / denom

@@ -146,72 +146,6 @@ def rebase_first_gap(blob: bytes, first_doc: int, new_base: int) -> bytes:
     return bytes(head) + blob[i + 1 :]
 
 
-def encode_segment_batch(
-    doc_ids: np.ndarray,
-    tf: np.ndarray,
-    doc_len: np.ndarray,
-    term_starts: np.ndarray,
-    avgdl: float,
-    k1: float,
-    b: float,
-    block_size: int,
-):
-    """Encode the postings of MANY terms in one vectorized pass.
-
-    Inputs are flat arrays sorted by (term, doc_id); ``term_starts`` marks
-    each term's first posting. This is the whole-batch fusion the reference
-    applies inside its C kernels (one pass over the frame matrix,
-    /root/reference/src/bft_algorithm.c:397-541) — per-term NumPy calls would
-    pay ~100x in tiny-array overhead at vocabulary scale.
-
-    Returns per-term lists: doc_blobs, tf_blobs, dl_blobs, block_counts,
-    block_firsts, block_maxes (NumPy views / bytes).
-    """
-    n = doc_ids.size
-    n_terms = term_starts.size
-    term_ends = np.append(term_starts[1:], n)
-
-    # delta gaps with reset at each term start (base = -1 → gap = id + 1)
-    gaps = np.empty(n, dtype=np.int64)
-    gaps[1:] = doc_ids[1:] - doc_ids[:-1]
-    gaps[term_starts] = doc_ids[term_starts] + 1
-    doc_buf, doc_lens_b = varint_encode_with_lengths(gaps.astype(np.uint64))
-    tf_buf, tf_lens_b = varint_encode_with_lengths(tf.astype(np.uint64))
-    dl_buf, dl_lens_b = varint_encode_with_lengths(doc_len.astype(np.uint64))
-
-    def _split(buf: bytes, lens: np.ndarray) -> list[bytes]:
-        ends = np.cumsum(lens)
-        starts = ends - lens
-        byte_starts = starts[term_starts]
-        byte_ends = np.append(byte_starts[1:], len(buf))
-        mv = memoryview(buf)
-        return [bytes(mv[s:e]) for s, e in zip(byte_starts, byte_ends)]
-
-    doc_blobs = _split(doc_buf, doc_lens_b)
-    tf_blobs = _split(tf_buf, tf_lens_b)
-    dl_blobs = _split(dl_buf, dl_lens_b)
-
-    # block boundaries: every block_size postings within each term
-    local_ix = np.arange(n) - np.repeat(term_starts, term_ends - term_starts)
-    blk_start_mask = (local_ix % block_size) == 0
-    blk_starts = np.flatnonzero(blk_start_mask)
-    blk_ends = np.append(blk_starts[1:], n)
-    counts_flat = (blk_ends - blk_starts).astype(np.int32)
-    firsts_flat = doc_ids[blk_starts]
-    tfn = tf.astype(np.float64) * (k1 + 1.0) / (
-        tf.astype(np.float64) + k1 * (1.0 - b + b * doc_len.astype(np.float64) / avgdl)
-    )
-    maxes_flat = np.maximum.reduceat(tfn, blk_starts) if n else np.zeros(0)
-
-    blocks_per_term = ((term_ends - term_starts) + block_size - 1) // block_size
-    blk_bounds = np.cumsum(blocks_per_term)[:-1]
-    block_counts = np.split(counts_flat, blk_bounds)
-    block_firsts = np.split(firsts_flat, blk_bounds)
-    block_maxes = np.split(maxes_flat, blk_bounds)
-    assert len(block_counts) == n_terms
-    return doc_blobs, tf_blobs, dl_blobs, block_counts, block_firsts, block_maxes
-
-
 def encode_segment_batch_flat(
     doc_ids: np.ndarray,
     tf: np.ndarray,
@@ -222,10 +156,18 @@ def encode_segment_batch_flat(
     b: float,
     block_size: int,
 ) -> dict:
-    """Like encode_segment_batch but returns FLAT buffers + per-term offset
-    arrays instead of per-term Python lists — callers build Arrow Binary/List
-    arrays directly from (offsets, values) with ZERO per-term Python objects.
-    This is what keeps the kernel memory-bandwidth-light at high parallelism.
+    """Encode the postings of MANY terms in one vectorized pass.
+
+    Inputs are flat arrays sorted by (term, doc_id); ``term_starts`` marks
+    each term's first posting. This is the whole-batch fusion the reference
+    applies inside its C kernels (one pass over the frame matrix,
+    src/bft_algorithm.c:397-541) — per-term NumPy calls would pay ~100x in
+    tiny-array overhead at vocabulary scale.
+
+    Returns FLAT buffers + per-term offset arrays — callers build Arrow
+    Binary/List arrays directly from (offsets, values) with ZERO per-term
+    Python objects, which keeps the kernel memory-bandwidth-light at high
+    parallelism.
     """
     n = doc_ids.size
     term_ends = np.append(term_starts[1:], n)

@@ -2,17 +2,24 @@
 
 Pipeline (the audioFlux pipeline shape, SURVEY §7.0, re-expressed):
 
-  range-partition docs by (conv_id, turn_idx)      | block partitioning
-  assign dense docIDs (offsets + local cumcount)   | implicit positional key
+  partition docs, sorted by (conv_id, turn_idx)    | block partitioning
+  local docIDs (row number within the partition)   | implicit positional key
   per-partition vectorized tokenize + posting build| per-frame C kernels (OMP)
   delta+varint blobs with block-max metadata       | precomputed tables
-  term-range merge read from the partial files     | filterbank grouped agg
+  term-range merge read from the partial files,    | filterbank grouped agg
+  each shifted by its partition's docID offset     |
   resumable per-partition checkpoints + lineage    | isContinue tail carry
 
 Scale design notes (100 TB / 10^12 turns):
-* docIDs: no global sort materialization — range partition, count per
-  partition (one cheap agg), cumulative offsets on the driver (P integers),
-  then offset+cumcount inside mapInArrow. Deterministic given the input.
+* one pass over the text: the partials task encodes its partition with
+  0-based docIDs and the partition's own avgdl, so it needs nothing from
+  the other partitions. The driver learns each partition's doc and token
+  counts from the lineage rows (P integers), and the merge adds the
+  partition's docID offset to first_doc, last_doc, block_firsts and the
+  partition's first doc gap of each term, and widens its block maxes to
+  the corpus avgdl (_read_partial) — one varint per partial row is
+  re-encoded, the rest of the blobs is copied. Deterministic given the
+  input.
 * the ONLY wide op on raw data is the hash repartition of an
   under-partitioned source; everything until the merge is partition-local.
   The range merge shuffles nothing: the partials task records term
@@ -22,11 +29,10 @@ Scale design notes (100 TB / 10^12 turns):
   build merges through the exchange compaction uses, which shuffles
   *compressed blobs*, not postings rows — ~1-2 bytes per posting instead
   of ~30.
-* the corpus text is regex-scanned twice: a JVM token count in the stats
-  pass (avgdl is known before any output is written) and the Python
-  tokenize in the partials job. That job's task holds each partition's rows
-  once and writes everything derived from them: the docstore file and the
-  partial segment file.
+* the partials task holds each partition's rows once: it fingerprints
+  them, and unless the manifest already records that fingerprint with its
+  files present, writes everything derived from them: the docstore file and
+  the partial segment file.
 * hot terms (Zipf head: 'hotterm' is in 40% of turns) have one partial row
   per partition. Merging them writes no byte: partial blobs are
   self-contained and segment doc ranges are disjoint, so a merged row is
@@ -41,17 +47,17 @@ import json
 import os
 import shutil
 import uuid
-from dataclasses import dataclass
+from dataclasses import asdict, dataclass
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from audioflux_spark.config import DEFAULT, EngineConfig
-from audioflux_spark.functions.analyzer import doc_len_col
 from audioflux_spark.functions.codec import (
     encode_positions_flat,
     encode_segment_batch_flat,
+    varint_encode_with_lengths,
 )
 from audioflux_spark.plans.checkpoint import (
     Manifest,
@@ -60,21 +66,22 @@ from audioflux_spark.plans.checkpoint import (
     save_manifest,
 )
 
-_SEG_COLS = (
+MERGED_SCHEMA = (
     "term string, df long, first_doc long, last_doc long, "
     "doc_blob binary, tf_blob binary, dl_blob binary, pos_blob binary, "
     "block_counts array<int>, block_firsts array<long>, block_maxes array<double>, "
     "block_doc_bytes array<int>, block_tf_bytes array<int>, block_dl_bytes array<int>, "
     "block_pos_bytes array<int>, part_counts array<long>"
 )
-PARTIAL_SCHEMA = "seg_id int, " + _SEG_COLS
-MERGED_SCHEMA = _SEG_COLS
+# doc_id is the row's number within its partition (seg_id) in a build's
+# files; IndexReader.docstore adds the partition's offset
 DOCSTORE_SCHEMA = (
     "doc_id long, conv_id string, turn_idx int, role string, text string, "
     "tool string, ts timestamp_ntz, doc_len long, seg_id int"
 )
-# one row per freshly built partition, returned by the partial writer
-LINEAGE_SCHEMA = "seg_id int, terms long, postings long, bytes long, splits array<string>"
+# one row per partition, returned by the partials task: its manifest
+# entry (PartitionEntry) as JSON, recorded or freshly built
+LINEAGE_SCHEMA = "entry string"
 
 
 @dataclass(frozen=True)
@@ -87,10 +94,10 @@ class IndexMeta:
     n_partitions: int
     offsets: list[int]
     total_tokens: int = 0  # exact Σ doc_len (for exact cross-generation avgdl)
-    # smallest avgdl any surviving partial was ENCODED with: a resumed partial
-    # rebuild can shift the corpus avgdl upward, and stored block maxes from
-    # the earlier encode would then under-bound scores — readers widen bounds
-    # by avgdl/encode_avgdl (tf-norm is monotone in avgdl, bounded by ratio)
+    # the avgdl the stored block maxes bound scores under: readers scoring
+    # under a larger avgdl (several generations) widen them by the ratio
+    # (tf-norm is monotone in avgdl, bounded by the ratio). A build's merge
+    # widens every partition's maxes to the build's avgdl
     encode_avgdl: float = 0.0
 
     def to_json(self) -> str:
@@ -106,16 +113,17 @@ class IndexMeta:
         return IndexMeta(**d)
 
 
-def _partitioned_base(transcripts: DataFrame, n_partitions: int) -> tuple[DataFrame, bool, int]:
+def _partitioned_base(transcripts: DataFrame, n_partitions: int) -> tuple[DataFrame, int]:
     """Build partitions = deterministic scan splits when possible.
 
     The raw-text shuffle was the build's biggest I/O (the whole corpus
-    written+read through shuffle files, plus a persist) and the disk is the
-    one truly serial resource on a node — so when the source already has
-    enough partitions (parquet/Iceberg splits: deterministic given files and
-    split config), we index each split directly: ZERO wide ops before the
-    blob merge. Only under-partitioned sources get a deterministic hash
-    repartition by conv_id.
+    written+read through shuffle files) and the disk is the one truly
+    serial resource on a node — so when the source already has enough
+    partitions (parquet/Iceberg splits: deterministic given files and split
+    config), we index each split directly: ZERO wide ops before the blob
+    merge. Only under-partitioned sources get a deterministic hash
+    repartition by conv_id. The base is scanned once, by the partials job,
+    so it is never persisted.
 
     NOT repartitionByRange: Spark's RangePartitioner samples with a seed
     derived from the RDD id, so boundaries differ on every invocation — a
@@ -124,55 +132,18 @@ def _partitioned_base(transcripts: DataFrame, n_partitions: int) -> tuple[DataFr
     only key-ordered WITHIN a partition; the query layer breaks score ties
     by the real (conv_id, turn_idx) keys, never by docID.
 
-    Returns (base, shuffled, P): callers persist the base only when a shuffle
-    happened (re-scanning a page-cached parquet is cheaper than a persist);
-    P is the base's partition count (asking the sorted base for it again
-    launches jobs).
+    Returns (base, P), P being the base's partition count (asking the
+    sorted base for it again launches jobs).
     """
     in_parts = transcripts.rdd.getNumPartitions()
     if in_parts >= n_partitions:
-        return transcripts.sortWithinPartitions("conv_id", "turn_idx"), False, in_parts
+        return transcripts.sortWithinPartitions("conv_id", "turn_idx"), in_parts
     return (
         transcripts.repartition(n_partitions, "conv_id").sortWithinPartitions(
             "conv_id", "turn_idx"
         ),
-        True,
         n_partitions,
     )
-
-
-def _partition_stats(base_with_pid: DataFrame, cfg: EngineConfig):
-    """ONE pass over the base, per partition: the fingerprint (count +
-    order-independent hash) and the token count (the JVM regex count of
-    doc_len_col). Returns (fingerprints, n_docs, total_tokens) over kept and
-    rebuilt partitions alike, so avgdl is known before any output is written
-    and no job reads the docstore back for it."""
-    rows = (
-        base_with_pid.groupBy("pid")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            # bit_xor: order-independent and overflow-free under ANSI mode
-            F.expr("bit_xor(xxhash64(conv_id, turn_idx, text))").alias("h"),
-            F.sum(doc_len_col("text", cfg.analyzer)).alias("tokens"),
-        )
-        .collect()
-    )
-    fps = {int(r["pid"]): f"{int(r['n'])}:{int(r['h'])}" for r in rows}
-    n_docs = sum(int(r["n"]) for r in rows)
-    total_tokens = sum(int(r["tokens"] or 0) for r in rows)
-    return fps, n_docs, total_tokens
-
-
-def _offsets_from_counts(fingerprints: dict[int, str], n_partitions: int) -> list[int]:
-    counts = [0] * n_partitions
-    for pid, fp in fingerprints.items():
-        counts[pid] = int(fp.split(":", 1)[0])
-    offsets = [0] * n_partitions
-    run = 0
-    for p in range(n_partitions):
-        offsets[p] = run
-        run += counts[p]
-    return offsets
 
 
 def _segment_fields() -> list:
@@ -199,11 +170,12 @@ def _segment_fields() -> list:
     ]
 
 
-def _make_segment_fn(avgdl: float, cfg: EngineConfig):
-    """Arrow-native segment kernel: ``build_segment(texts, first_doc)`` takes
-    one partition's text column, its rows numbered as docIDs first_doc,
-    first_doc + 1, ..., and returns (doc_len, batch): each row's token count
-    and the partition's segment rows (MERGED_SCHEMA), batch None when the
+def _make_segment_fn(cfg: EngineConfig):
+    """Arrow-native segment kernel: ``build_segment(texts)`` takes one
+    partition's text column, its rows numbered as docIDs 0, 1, ..., and
+    returns (doc_len, batch): each row's token count and the partition's
+    segment rows (MERGED_SCHEMA), block maxes computed under the
+    partition's own avgdl (sum(doc_len) / rows); batch is None when the
     partition has no tokens.
 
     Everything stays in Arrow buffers / primitive NumPy: RE2 tokenization
@@ -223,7 +195,7 @@ def _make_segment_fn(avgdl: float, cfg: EngineConfig):
 
     out_schema = pa.schema(_segment_fields())
 
-    def build_segment(texts, first_doc: int):
+    def build_segment(texts):
         import pyarrow.compute as pc
 
         n_rows = len(texts)
@@ -238,6 +210,7 @@ def _make_segment_fn(avgdl: float, cfg: EngineConfig):
             return np.zeros(n_rows, dtype=np.int64), None
         parent = parent.filter(mask).to_numpy().astype(np.int64)
         doc_len = np.bincount(parent, minlength=n_rows).astype(np.int64)
+        avgdl = int(doc_len.sum()) / n_rows
         denc = flat.dictionary_encode()
         codes = denc.indices.to_numpy().astype(np.int64)
         dictionary = denc.dictionary
@@ -270,9 +243,8 @@ def _make_segment_fn(avgdl: float, cfg: EngineConfig):
         )
         term_ends = np.append(term_bounds[1:], u_codes.size)
 
-        u_docs = first_doc + u_local
         enc = encode_segment_batch_flat(
-            u_docs, tf, doc_len[u_local], term_bounds, avgdl, k1, b, block_size
+            u_local, tf, doc_len[u_local], term_bounds, avgdl, k1, b, block_size
         )
         n_terms = term_bounds.size
         counts_flat = enc["counts_flat"].astype(np.int64)
@@ -301,8 +273,8 @@ def _make_segment_fn(avgdl: float, cfg: EngineConfig):
             [
                 pc.take(dictionary, pa.array(u_codes[term_bounds], type=pa.int64())),
                 pa.array((term_ends - term_bounds).astype(np.int64), type=pa.int64()),
-                pa.array(u_docs[term_bounds], type=pa.int64()),
-                pa.array(u_docs[term_ends - 1], type=pa.int64()),
+                pa.array(u_local[term_bounds], type=pa.int64()),
+                pa.array(u_local[term_ends - 1], type=pa.int64()),
                 bin_arr(enc["doc_buf"], enc["doc_offsets"]),
                 bin_arr(enc["tf_buf"], enc["tf_offsets"]),
                 bin_arr(enc["dl_buf"], enc["dl_offsets"]),
@@ -343,12 +315,14 @@ def _group_offsets(arr, starts: np.ndarray) -> np.ndarray:
 def _make_merge_stream():
     """Arrow merge kernel (mapInArrow): merging is pure OFFSET SUBSAMPLING.
 
-    Partial blobs are self-contained (first gap absolute), so a merged
-    posting list is simply the partials' bytes back-to-back with
-    ``part_counts`` recording the reset boundaries (decoded by a vectorized
-    segmented cumsum — functions/codec.delta_decode_segmented). The kernel
-    therefore never touches blob bytes: sort rows by (term, first_doc),
-    find group boundaries, and emit Binary/List arrays that REUSE the input
+    Partial blobs are self-contained (first gap absolute, in the index's
+    docIDs once _read_partial has shifted it), so a merged posting list is
+    simply the partials' bytes back-to-back with ``part_counts`` recording
+    the reset boundaries (decoded by a vectorized segmented cumsum —
+    functions/codec.delta_decode_segmented), and every block also
+    re-anchors at its stored first docID. The kernel therefore never
+    touches blob bytes: sort rows by (term, first_doc), find group
+    boundaries, and emit Binary/List arrays that REUSE the input
     data buffers with group-boundary offsets. No per-group Python, no byte
     rewriting — this was the worst-scaling stage as a pandas kernel
     (objects + per-boundary rebase).
@@ -470,23 +444,34 @@ _DOCSTORE_INPUT_COLS = ("conv_id", "turn_idx", "role", "text", "tool", "ts")
 
 
 def _make_partial_writer(
-    segment_fn, offsets: list[int], partial_dir: str, docstore_dir: str, n_ranges: int
+    segment_fn, entries: dict[int, PartitionEntry], index_dir: str, n_ranges: int
 ):
-    """The partials job's task: it holds one partition's rows (pid and the
-    docstore input columns) and writes both files derived from them to
+    """The partials job's task, the build's one pass over the text. It holds
+    one partition's rows (pid, the JVM row hash h and the docstore input
+    columns) and fingerprints them as "<rows>:<XOR of h>", independent of
+    row order. When ``entries`` (the manifest's) records that fingerprint
+    for the partition and its files are present, it writes nothing.
+    Otherwise it unpublishes index_dir/segments (no longer the merge of the
+    partials), clears the partition's directories and writes, to
     ``seg_id=<pid>/part-00000.parquet``:
 
-    * under docstore_dir, every row with doc_id = offsets[pid] + row (the
-      numbering of the kernel's postings) and doc_len = the kernel's token
-      count, also when the partition has no tokens;
-    * under partial_dir, the kernel's segment rows.
+    * under docstore/, every row with doc_id = its row number (the kernel's
+      docIDs) and doc_len = the kernel's token count;
+    * under segments_partial/, the kernel's segment rows, if it has tokens.
 
-    It returns one lineage row (LINEAGE_SCHEMA) per partition with tokens,
-    instead of the blobs. The row's ``splits`` are n_ranges - 1 of the
-    partition's terms at even row shares in byte order, from which the
-    driver draws the merge's term ranges (_range_bounds)."""
+    Either way it returns its entry as one lineage row (LINEAGE_SCHEMA): the
+    fingerprint, rows, tokens, the avgdl its block maxes were encoded under,
+    terms, postings, blob bytes, and as ``term_splits`` n_ranges - 1 of its
+    terms at even row shares in byte order, from which the driver draws the
+    merge's term ranges (_range_bounds)."""
     import pyarrow as pa
     import pyarrow.compute as pc
+
+    partial_dir = os.path.join(index_dir, "segments_partial")
+    docstore_dir = os.path.join(index_dir, "docstore")
+
+    def lineage(e: PartitionEntry):
+        return pa.RecordBatch.from_pydict({"entry": [json.dumps(asdict(e))]})
 
     def write_partials(batches):
         batch_list = list(batches)
@@ -496,37 +481,54 @@ def _make_partial_writer(
         if tbl.num_rows == 0:
             return
         pid = tbl.column("pid")[0].as_py()
-        first_doc = offsets[pid]
-        doc_len, seg = segment_fn(tbl.column("text").combine_chunks(), first_doc)
+        n = tbl.num_rows
+        fp = f"{n}:{int(np.bitwise_xor.reduce(tbl.column('h').to_numpy()))}"
+        leaf = os.path.join(f"seg_id={pid}", "part-00000.parquet")
+        kept = entries.get(pid)
+        if (
+            kept is not None
+            and (kept.n, kept.input_fingerprint) == (n, fp)
+            and os.path.exists(os.path.join(docstore_dir, leaf))
+            and (not kept.terms or os.path.exists(os.path.join(partial_dir, leaf)))
+        ):
+            yield lineage(kept)
+            return
+        shutil.rmtree(os.path.join(index_dir, "segments"), ignore_errors=True)
+        for d in (docstore_dir, partial_dir):
+            shutil.rmtree(os.path.join(d, f"seg_id={pid}"), ignore_errors=True)
+        doc_len, seg = segment_fn(tbl.column("text").combine_chunks())
         docs = pa.Table.from_arrays(
             [
-                pa.array(np.arange(first_doc, first_doc + tbl.num_rows, dtype=np.int64)),
+                pa.array(np.arange(n, dtype=np.int64)),
                 *(tbl.column(c) for c in _DOCSTORE_INPUT_COLS),
                 pa.array(doc_len),
             ],
             names=["doc_id", *_DOCSTORE_INPUT_COLS, "doc_len"],
         )
-        leaf = os.path.join(f"seg_id={pid}", "part-00000.parquet")
         _write_parquet_file(docs, os.path.join(docstore_dir, leaf))
-        if seg is None:
-            return
-        _write_parquet_file(pa.Table.from_batches([seg]), os.path.join(partial_dir, leaf))
-        nbytes = sum(
-            pc.sum(pc.binary_length(seg.column(c))).as_py() or 0
-            for c in ("doc_blob", "tf_blob", "dl_blob")
+        tokens = int(doc_len.sum())
+        e = PartitionEntry(
+            partition_id=pid,
+            input_fingerprint=fp,
+            n=n,
+            tokens=tokens,
+            avgdl=tokens / n,
+            output_path=f"segments_partial/seg_id={pid}",
         )
-        terms = seg.column("term")
-        ranks = np.arange(1, n_ranges, dtype=np.int64) * seg.num_rows // n_ranges
-        splits = pc.take(terms, pc.array_sort_indices(terms).take(pa.array(ranks)))
-        yield pa.RecordBatch.from_pydict(
-            {
-                "seg_id": pa.array([pid], pa.int32()),
-                "terms": pa.array([seg.num_rows], pa.int64()),
-                "postings": pa.array([pc.sum(seg.column("df")).as_py()], pa.int64()),
-                "bytes": pa.array([nbytes], pa.int64()),
-                "splits": pa.array([splits.to_pylist()], pa.list_(pa.string())),
-            }
-        )
+        if seg is not None:
+            _write_parquet_file(pa.Table.from_batches([seg]), os.path.join(partial_dir, leaf))
+            terms = seg.column("term")
+            ranks = np.arange(1, n_ranges, dtype=np.int64) * seg.num_rows // n_ranges
+            e.terms = seg.num_rows
+            e.postings = pc.sum(seg.column("df")).as_py()
+            e.bytes = sum(
+                pc.sum(pc.binary_length(seg.column(c))).as_py() or 0
+                for c in ("doc_blob", "tf_blob", "dl_blob")
+            )
+            e.term_splits = pc.take(
+                terms, pc.array_sort_indices(terms).take(pa.array(ranks))
+            ).to_pylist()
+        yield lineage(e)
 
     return write_partials
 
@@ -573,23 +575,6 @@ def _write_staged(out_dir: str, write) -> None:
         shutil.rmtree(staging, ignore_errors=True)
 
 
-def write_merged_segments(partials: DataFrame, out_dir: str, n_ranges: int) -> None:
-    """The exchange merge, of compaction (offset-shifted generations) and of
-    builds with more than _RANGE_MERGE_MAX_PARTIALS partial files:
-    range-partition the rows by term, merge each range in the Arrow kernel,
-    and write it from that kernel as one term-sorted file, so `term IN (...)`
-    prunes files and row groups at query time."""
-    _write_staged(
-        out_dir,
-        lambda staging: partials.repartitionByRange(n_ranges, "term")
-        .mapInArrow(
-            _make_merge_writer(_make_merge_stream(), staging),
-            schema="part int, terms long",
-        )
-        .collect(),
-    )
-
-
 def _range_bounds(entries, n_ranges: int) -> list[str]:
     """Term-range boundaries of the range merge: n_ranges - 1 weighted
     quantiles of every manifest entry's term splits, each split weighted by
@@ -607,19 +592,130 @@ def _range_bounds(entries, n_ranges: int) -> list[str]:
     return sorted({pooled[min(int(i), len(pooled) - 1)][0] for i in at})
 
 
-def _make_range_merge(files: list[str], bounds: list[str], out_dir: str, n_tasks: int):
+def _layout(entries: dict[int, PartitionEntry], n_partitions: int):
+    """(docID offset of each of n_partitions partitions, n_docs,
+    total_tokens) from the entries' row and token counts: partition p's
+    docs follow those of partitions 0 .. p-1."""
+    counts = np.zeros(n_partitions, dtype=np.int64)
+    for pid, e in entries.items():
+        counts[pid] = e.n
+    offsets = (np.cumsum(counts) - counts).tolist()
+    return offsets, int(counts.sum()), sum(e.tokens for e in entries.values())
+
+
+def _ub_scale(avgdl: float, encode_avgdl: float) -> float:
+    """The factor that widens block maxes encoded under encode_avgdl into
+    bounds on scores under avgdl: tf-norm grows with avgdl, by at most their
+    ratio. The build's merge, compaction and serving all widen by it."""
+    return max(1.0, avgdl / encode_avgdl) if encode_avgdl else 1.0
+
+
+def _partial_inputs(index_dir: str, entries: dict[int, PartitionEntry]):
+    """(path, docID offset, block-max scale) of every partial file the
+    entries list (a tokenless partition writes none), in pid order, as
+    _read_partial takes them: each partition's maxes are widened from its
+    own avgdl to the index's."""
+    offsets, n_docs, tokens = _layout(entries, max(entries, default=-1) + 1)
+    avgdl = tokens / n_docs if n_docs else 0.0
+    return [
+        (
+            os.path.join(index_dir, e.output_path, "part-00000.parquet"),
+            offsets[pid],
+            _ub_scale(avgdl, e.avgdl),
+        )
+        for pid, e in sorted(entries.items())
+        if e.terms
+    ]
+
+
+def _shift_first_gaps(tbl, doc_offset: int):
+    """doc_blob and block_doc_bytes of ``tbl`` with the first doc gap of
+    every partial in each row re-encoded for docIDs shifted by doc_offset.
+    That gap is absolute (the partial's first docID + 1) while every other
+    gap is relative, so part_counts decodes a merged blob to the index's
+    docIDs (codec.delta_decode_segmented). The other bytes are copied as
+    they are."""
+    import pyarrow as pa
+
+    blob = tbl.column("doc_blob").chunk(0)
+    n = len(blob)
+    off = np.frombuffer(blob.buffers()[1], dtype=np.int32)[blob.offset : blob.offset + n + 1]
+    data = np.frombuffer(blob.buffers()[2], dtype=np.uint8)[off[0] : off[-1]]
+    cols = ("block_counts", "part_counts", "block_firsts", "block_doc_bytes")
+    counts, parts, firsts, nbytes = (tbl.column(c).chunk(0).flatten().to_numpy() for c in cols)
+    # blocks that start a partial: their first posting starts a part_counts run
+    first = np.isin(np.cumsum(counts) - counts, np.cumsum(parts) - parts)
+    _, old_len = varint_encode_with_lengths(firsts[first] + 1)
+    new_buf, new_len = varint_encode_with_lengths(firsts[first] + doc_offset + 1)
+    # each first gap's byte position once the old first gaps are cut out
+    at = (np.cumsum(nbytes) - nbytes)[first] - (np.cumsum(old_len) - old_len)
+    out = np.insert(
+        np.delete(data, np.repeat(at, old_len) + np.arange(old_len.sum())),
+        np.repeat(at, new_len),
+        np.frombuffer(new_buf, dtype=np.uint8),
+    )
+    rows = np.repeat(np.arange(n), tbl.column("block_counts").chunk(0).value_lengths())
+    grow = np.bincount(rows[first], weights=new_len - old_len, minlength=n)
+    new_off = (off - off[0] + np.concatenate(([0], np.cumsum(grow)))).astype(np.int32)
+    nbytes = nbytes.copy()
+    nbytes[first] += (new_len - old_len).astype(np.int32)
+    bytes_off = tbl.column("block_doc_bytes").chunk(0).offsets.to_numpy()
+    return (
+        pa.Array.from_buffers(
+            pa.binary(), n, [None, pa.py_buffer(new_off), pa.py_buffer(out.tobytes())]
+        ),
+        pa.ListArray.from_arrays(pa.array(bytes_off - bytes_off[0]), pa.array(nbytes)),
+    )
+
+
+def _read_partial(path: str, doc_offset: int, ub_scale: float, filter=None):
+    """The segment rows of one partial file that pass ``filter``, in the
+    index's numbering: doc_offset added to first_doc, last_doc,
+    block_firsts and each partial's absolute first doc gap
+    (_shift_first_gaps), and block_maxes multiplied by ub_scale. Decoding
+    re-anchors every block at its block_firsts; the rest of the blobs is
+    copied as it is. Both merges read their input through it."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.dataset as pads
+
+    tbl = pads.dataset(
+        path, schema=pa.schema(_segment_fields()), format="parquet"
+    ).to_table(filter=filter).combine_chunks()
+    if tbl.num_rows == 0 or not doc_offset and ub_scale == 1.0:
+        return tbl
+
+    def list_values(name: str, fn):
+        arr = tbl.column(name).chunk(0)
+        return pa.ListArray.from_arrays(arr.offsets, fn(arr.values))
+
+    doc_blob, doc_bytes = _shift_first_gaps(tbl, doc_offset)
+    for name, col in (
+        ("first_doc", pc.add(tbl.column("first_doc"), doc_offset)),
+        ("last_doc", pc.add(tbl.column("last_doc"), doc_offset)),
+        ("doc_blob", doc_blob),
+        ("block_doc_bytes", doc_bytes),
+        ("block_firsts", list_values("block_firsts", lambda v: pc.add(v, doc_offset))),
+        ("block_maxes", list_values("block_maxes", lambda v: pc.multiply(v, ub_scale))),
+    ):
+        i = tbl.schema.get_field_index(name)
+        tbl = tbl.set_column(i, tbl.schema.field(i), col)
+    return tbl
+
+
+def _make_range_merge(inputs: list, bounds: list[str], out_dir: str, n_tasks: int):
     """The range merge's task: its input is one row holding its task
     id g, which owns the contiguous term ranges [g*n/n_tasks, (g+1)*n/n_tasks)
     of the n = len(bounds) + 1 ranges; range i is [bounds[i-1], bounds[i]).
-    The task reads the partial files itself, once, keeping the terms of its
-    ranges, then merges and writes each range i as part-<i>.parquet through
-    the merge writer. Partial files are not term-sorted, so every task
-    decodes every file: the merge decodes n_tasks x the partial bytes, and
-    a task holds its ranges' rows in memory."""
+    The task reads the partial files (``inputs``, from _partial_inputs)
+    itself, once, keeping the terms of its ranges, then merges and writes
+    each range i as part-<i>.parquet through the merge writer. Partial
+    files are not term-sorted, so every task decodes every file: the merge
+    decodes n_tasks x the partial bytes, and a task holds its ranges' rows
+    in memory."""
     import pyarrow as pa
     import pyarrow.dataset as pads
 
-    schema = pa.schema(_segment_fields())
     write = _make_merge_writer(_make_merge_stream(), out_dir)
     n = len(bounds) + 1
 
@@ -635,9 +731,7 @@ def _make_range_merge(files: list[str], bounds: list[str], out_dir: str, n_tasks
     def merge_ranges(batches):
         (g,) = [r for b in batches for r in b.column("id").to_pylist()]
         first, end = g * n // n_tasks, (g + 1) * n // n_tasks
-        rows = pads.dataset(files, schema=schema, format="parquet").to_table(
-            filter=span(first, end)
-        )
+        rows = pa.concat_tables([_read_partial(*f, filter=span(first, end)) for f in inputs])
         for i in range(first, end):
             own = rows if end - first == 1 else rows.filter(span(i, i + 1))
             yield from write(own.to_batches(), part=i)
@@ -645,42 +739,54 @@ def _make_range_merge(files: list[str], bounds: list[str], out_dir: str, n_tasks
     return merge_ranges
 
 
-def _merge_partial_files(
-    spark: SparkSession, index_dir: str, manifest: Manifest, bounds: list[str]
-) -> None:
+def _range_merge(spark: SparkSession, index_dir: str, inputs: list, bounds: list[str]) -> None:
     """The range merge, in one Spark job without an exchange: each task
     (_make_range_merge) reads the partial files directly and writes its
     contiguous term ranges. There is one task per core, not per range, as
-    every task decodes every file. The files are those of the manifest's
-    entries with terms (a tokenless partition writes none), so the partition
-    count, the ranges and the inputs come from one place. With no partial
-    files it runs no job and publishes an empty segments/."""
-    partial_dir = os.path.join(index_dir, "segments_partial")
-    if not manifest.entries and any(
-        d.startswith("seg_id=")
-        for d in (os.listdir(partial_dir) if os.path.isdir(partial_dir) else ())
-    ):
-        raise FileNotFoundError(
-            f"{partial_dir} holds partial segments but {index_dir} has no "
-            "manifest.json listing them"
-        )
-    # the files Spark's reader would list: hidden and underscore names skipped
-    files = sorted(
-        os.path.join(index_dir, e.output_path, f)
-        for e in manifest.entries.values()
-        if e.terms
-        for f in os.listdir(os.path.join(index_dir, e.output_path))
-        if not f.startswith((".", "_"))
-    )
+    every task decodes every file. With no inputs it runs no job and
+    publishes an empty segments/."""
 
     def write(staging: str) -> None:
-        if files:
-            n = min(len(bounds) + 1, spark.sparkContext.defaultParallelism)
+        n = min(len(bounds) + 1, spark.sparkContext.defaultParallelism)
+        if inputs:
             spark.range(0, n, 1, n).mapInArrow(
-                _make_range_merge(files, bounds, staging, n), schema="part int, terms long"
+                _make_range_merge(inputs, bounds, staging, n), schema="part int, terms long"
             ).collect()
 
     _write_staged(os.path.join(index_dir, "segments"), write)
+
+
+def _make_partial_reader(inputs: list):
+    """The exchange merge's input task: each input row holds the index of a
+    partial file in ``inputs`` (from _partial_inputs), read through
+    _read_partial."""
+
+    def read_partials(batches):
+        for b in batches:
+            for i in b.column("id").to_pylist():
+                yield from _read_partial(*inputs[i]).to_batches()
+
+    return read_partials
+
+
+def _exchange_merge(spark: SparkSession, out_dir: str, inputs: list, n_ranges: int) -> None:
+    """The exchange merge, of compaction and of builds with more than
+    _RANGE_MERGE_MAX_PARTIALS partial files: one task per input file reads
+    it (_make_partial_reader), the rows are range-partitioned by term, and
+    each range is merged in the Arrow kernel and written from that kernel as
+    one term-sorted file under out_dir/segments, so `term IN (...)` prunes
+    files and row groups at query time. No job lists the input files."""
+    _write_staged(
+        os.path.join(out_dir, "segments"),
+        lambda staging: spark.range(0, len(inputs), 1, max(len(inputs), 1))
+        .mapInArrow(_make_partial_reader(inputs), MERGED_SCHEMA)
+        .repartitionByRange(n_ranges, "term")
+        .mapInArrow(
+            _make_merge_writer(_make_merge_stream(), staging),
+            schema="part int, terms long",
+        )
+        .collect(),
+    )
 
 
 def _publish(staging: str, out_dir: str) -> None:
@@ -703,7 +809,7 @@ def _n_ranges(cfg: EngineConfig) -> int:
 # The most partial files the range merge reads. Partial files are not
 # term-sorted, so each range-merge task decodes every one of them: the merge
 # reads (tasks x partial bytes). Past this many files the build merges
-# through the exchange (write_merged_segments), which reads each file once
+# through the exchange (_exchange_merge), which reads each file once
 # and shuffles its blobs.
 _RANGE_MERGE_MAX_PARTIALS = 64
 
@@ -737,133 +843,78 @@ def build_index(
 
     Layout: meta.json, manifest.json, docstore/ and segments_partial/ (one
     parquet file per build partition, ``seg_id=<pid>/part-00000.parquet``,
-    written by the partials job's tasks; no ``_SUCCESS`` marker, the manifest
-    records completed partitions), segments/ (merged, range-partitioned +
-    sorted by term).
+    docIDs local to the partition, written by the partials job's tasks; no
+    ``_SUCCESS`` marker, the manifest records completed partitions),
+    segments/ (merged, global docIDs, range-partitioned + sorted by term).
 
-    Jobs: the stats pass (fingerprints, doc counts and the JVM token count
-    that gives avgdl), the partials job (Python tokenize; writes docstore and
-    partial segments, returns lineage with term splits), the merge (one job
-    whose tasks read the partial files; past _RANGE_MERGE_MAX_PARTIALS
-    partitions, the exchange merge's sampling and shuffle jobs).
+    Jobs: the partials job, the one pass over the text (each task
+    fingerprints its partition and, unless the manifest records it, writes
+    its docstore and partial segment files; every task returns lineage with
+    term splits), and the merge (one job whose tasks read the partial files;
+    past _RANGE_MERGE_MAX_PARTIALS partitions, the exchange merge's sampling
+    and shuffle jobs). An input whose plan ends in a shuffle, or an
+    under-partitioned one that the build repartitions, adds that shuffle's
+    map stage as one more job.
     """
-    os.makedirs(index_dir, exist_ok=True)
+    # docstore/ exists even when no partition has rows: readers open it
+    os.makedirs(os.path.join(index_dir, "docstore"), exist_ok=True)
     mark = _phase_timer()
 
-    base, shuffled, P = _partitioned_base(transcripts, cfg.index.build_partitions)
-    if shuffled:
-        base = base.persist()
-    with_pid = base.withColumn("pid", F.spark_partition_id())
-    # one combined pass: fingerprints + corpus stats (no separate scan)
-    fps, n_docs, total_tokens = _partition_stats(with_pid, cfg)
-    avgdl = (total_tokens / n_docs) if n_docs else 0.0
-    mark("stats")
-    offsets = _offsets_from_counts(fps, P)
+    base, P = _partitioned_base(transcripts, cfg.index.build_partitions)
+    old = load_manifest(index_dir) if resume else Manifest()
+    # the phases of the two-pass build, kept so phase records stay
+    # comparable: "stats" times the input's partition count (a job for an
+    # input ending in a shuffle), the other two ≈0 s
+    for phase in ("stats", "docstore", "token_stats"):
+        mark(phase)
+    lineage = (
+        base.select(
+            F.spark_partition_id().alias("pid"),
+            F.xxhash64("conv_id", "turn_idx", "text").alias("h"),
+            *_DOCSTORE_INPUT_COLS,
+        )
+        .withColumn("ts", F.col("ts").cast("timestamp_ntz"))
+        .mapInArrow(
+            _make_partial_writer(
+                _make_segment_fn(cfg),
+                old.entries,
+                os.path.abspath(index_dir),
+                # only the range merge reads splits: past its limit P * Qf
+                # strings would swell the lineage and the manifest
+                _n_ranges(cfg) if P <= _RANGE_MERGE_MAX_PARTIALS else 1,
+            ),
+            schema=LINEAGE_SCHEMA,
+        )
+        .collect()
+    )
+    mark("partials")
 
-    manifest = load_manifest(index_dir) if resume else Manifest()
-    done = manifest.completed_for(fps)
-    # offset-shift invalidation: a fingerprint match proves THIS partition's
-    # bytes are unchanged, but its docID base is a prefix-sum of EARLIER
-    # partitions' counts — if any of those changed, this partition's stored
-    # docIDs (docstore + partial blobs) encode the OLD base and would collide
-    # with the new layout. Rebuild any done partition whose recorded offset
-    # moved (or is unrecorded: legacy manifest).
-    done = {pid for pid in done if manifest.entries[pid].doc_offset == offsets[pid]}
-    missing = sorted(set(fps) - done)
+    entries = {e.partition_id: e for e in (PartitionEntry(**json.loads(r[0])) for r in lineage)}
+    offsets, n_docs, total_tokens = _layout(entries, P)
+    mean_postings = sum(e.postings for e in entries.values()) / max(len(entries), 1)
+    for pid, e in entries.items():
+        e.doc_offset = offsets[pid]
+        e.skew_ratio = (e.postings / mean_postings) if mean_postings else 0.0
 
-    partial_dir = os.path.join(index_dir, "segments_partial")
-    docstore_dir = os.path.join(index_dir, "docstore")
+    # ghost cleanup: seg_id dirs and manifest entries of partitions that are
+    # now empty or gone (an earlier, different partition layout) would be
+    # merged with the new ones. Delete them, unpublishing the merged
+    # segments first, as a changed partition's task did before its writes
     segments_dir = os.path.join(index_dir, "segments")
-    for d in (partial_dir, docstore_dir):
-        os.makedirs(d, exist_ok=True)
-
-    # ghost cleanup: a resumed index_dir may carry seg_id dirs from a PREVIOUS
-    # partition layout (different split config or smaller input → fewer pids).
-    # Stale dirs would be swept into the merge with docIDs that collide with
-    # the new offsets — delete any seg_id not in the current fingerprint set,
-    # drop its manifest entry, and force a re-merge.
-    ghosts = False
-    for d in (partial_dir, docstore_dir):
-        for name in os.listdir(d):
-            if name.startswith("seg_id="):
-                pid = int(name.split("=", 1)[1])
-                if pid not in fps:
-                    shutil.rmtree(os.path.join(d, name))
-                    ghosts = True
-    for pid in sorted(set(manifest.entries) - set(fps)):
-        del manifest.entries[pid]
-        ghosts = True
-    # the merged segments are stale from here on: unpublish them before the
-    # manifest records any change, so a build killed anywhere before the
-    # merge publishes again finds no segments/ and merges on resume
-    if missing or ghosts:
+    ghosts = [
+        os.path.join(d, name)
+        for d in (os.path.join(index_dir, "segments_partial"), os.path.join(index_dir, "docstore"))
+        if os.path.isdir(d)
+        for name in os.listdir(d)
+        if name.startswith("seg_id=") and int(name.split("=", 1)[1]) not in entries
+    ]
+    if ghosts or set(old.entries) - set(entries):
         shutil.rmtree(segments_dir, ignore_errors=True)
-    if ghosts:
-        save_manifest(index_dir, manifest)
-
-    if missing:
-        # clean any half-written output for missing pids (idempotent re-run)
-        for d in (partial_dir, docstore_dir):
-            for pid in missing:
-                sub = os.path.join(d, f"seg_id={pid}")
-                if os.path.exists(sub):
-                    shutil.rmtree(sub)
-        # the docstore is written by the partials job and the token totals
-        # come from the stats pass; both marks stay (≈0 s) so per-phase
-        # records remain comparable across builds
-        mark("docstore")
-    mark("token_stats")
-
-    if missing:
-        # each task writes its partition's docstore and partial segment
-        # files itself and returns that partition's lineage row: no posting
-        # blob crosses into the JVM, and no second job reads anything back.
-        # Filtered to the missing pids, so a resume ships no kept partition
-        # to Python
-        lineage = (
-            with_pid.filter(F.col("pid").isin(missing))
-            .select("pid", *_DOCSTORE_INPUT_COLS)
-            .withColumn("ts", F.col("ts").cast("timestamp_ntz"))
-            .mapInArrow(
-                _make_partial_writer(
-                    _make_segment_fn(avgdl, cfg),
-                    offsets,
-                    os.path.abspath(partial_dir),
-                    os.path.abspath(docstore_dir),
-                    # only the range merge reads splits: past its limit P * Qf
-                    # strings would swell the lineage and the manifest
-                    _n_ranges(cfg) if P <= _RANGE_MERGE_MAX_PARTIALS else 1,
-                ),
-                schema=LINEAGE_SCHEMA,
-            )
-            .collect()
-        )
-        mark("partials")
-
-        stat_by_pid = {int(r["seg_id"]): r for r in lineage}
-        for pid in missing:
-            r = stat_by_pid.get(pid)
-            manifest.entries[pid] = PartitionEntry(
-                partition_id=pid,
-                input_fingerprint=fps[pid],
-                status="done",
-                doc_offset=offsets[pid],
-                terms=int(r["terms"]) if r else 0,
-                postings=int(r["postings"]) if r else 0,
-                bytes=int(r["bytes"]) if r else 0,
-                output_path=f"segments_partial/seg_id={pid}",
-                term_splits=list(r["splits"]) if r else [],
-            )
-        mean_postings = (
-            sum(e.postings for e in manifest.entries.values()) / max(len(manifest.entries), 1)
-        )
-        for e in manifest.entries.values():
-            e.skew_ratio = (e.postings / mean_postings) if mean_postings else 0.0
-        save_manifest(index_dir, manifest)
-        mark("lineage")
-
-    if shuffled:
-        base.unpersist()
+    for path in ghosts:
+        shutil.rmtree(path)
+    manifest = Manifest(entries=dict(sorted(entries.items())))
+    save_manifest(index_dir, manifest)
+    mark("lineage")
 
     # ---- merge phase: skipped only when resuming an untouched index whose
     # merge was published (any change above unpublished segments/)
@@ -871,16 +922,7 @@ def build_index(
         merge_segments(spark, index_dir, cfg, manifest)
     mark("merge")
 
-    # partial rebuilds keep blocks encoded under an earlier (possibly smaller)
-    # avgdl — track the smallest so readers can widen bounds safely
-    encode_avgdl = avgdl
-    meta_path = os.path.join(index_dir, "meta.json")
-    if resume and done and os.path.exists(meta_path):
-        with open(meta_path) as f:
-            old = IndexMeta.from_json(f.read())
-        if old.encode_avgdl:
-            encode_avgdl = min(encode_avgdl, old.encode_avgdl)
-
+    avgdl = (total_tokens / n_docs) if n_docs else 0.0
     meta = IndexMeta(
         n_docs=n_docs,
         avgdl=avgdl,
@@ -890,7 +932,8 @@ def build_index(
         n_partitions=P,
         offsets=offsets,
         total_tokens=total_tokens,
-        encode_avgdl=encode_avgdl,
+        # the merge widened every partition's block maxes to this avgdl
+        encode_avgdl=avgdl,
     )
     with open(os.path.join(index_dir, "meta.json"), "w") as f:
         f.write(meta.to_json())
@@ -904,25 +947,27 @@ def merge_segments(
     manifest: Manifest | None = None,
 ) -> None:
     """(Re)merge segments_partial/ into segments/; the previous segments/
-    stays readable until the new one is published. The partition count and
-    the range merge's term ranges come from the manifest (build_index passes
-    its own; standalone calls read manifest.json), so no job scans for them.
-    Past _RANGE_MERGE_MAX_PARTIALS partitions the exchange merge reads the
-    partial files instead."""
+    stays readable until the new one is published. The partial files, their
+    docID offsets and block-max scales, the partition count and the range
+    merge's term ranges all come from the manifest (build_index passes its
+    own; standalone calls read manifest.json), so no job scans or lists for
+    them. Up to _RANGE_MERGE_MAX_PARTIALS partitions the range merge runs,
+    past it the exchange merge."""
     if manifest is None:
         manifest = load_manifest(index_dir)
-    # actual partition count (scan-split partitioning may exceed the config)
-    P = max(manifest.entries, default=-1) + 1
+    partial_dir = os.path.join(index_dir, "segments_partial")
+    if not manifest.entries and any(
+        d.startswith("seg_id=")
+        for d in (os.listdir(partial_dir) if os.path.isdir(partial_dir) else ())
+    ):
+        raise FileNotFoundError(
+            f"{partial_dir} holds partial segments but {index_dir} has no "
+            "manifest.json listing them"
+        )
+    inputs = _partial_inputs(index_dir, manifest.entries)
     Qf = _n_ranges(cfg)
-    if P <= _RANGE_MERGE_MAX_PARTIALS:
-        _merge_partial_files(
-            spark, index_dir, manifest, _range_bounds(manifest.entries.values(), Qf)
-        )
+    # actual partition count (scan-split partitioning may exceed the config)
+    if max(manifest.entries, default=-1) + 1 > _RANGE_MERGE_MAX_PARTIALS:
+        _exchange_merge(spark, index_dir, inputs, Qf)
     else:
-        write_merged_segments(
-            spark.read.schema(PARTIAL_SCHEMA).parquet(
-                os.path.join(index_dir, "segments_partial")
-            ),
-            os.path.join(index_dir, "segments"),
-            Qf,
-        )
+        _range_merge(spark, index_dir, inputs, _range_bounds(manifest.entries.values(), Qf))

@@ -50,7 +50,7 @@ from pyspark.sql import functions as F
 
 from audioflux_spark.functions.bm25 import idf_value
 from audioflux_spark.functions.codec import varint_decode
-from audioflux_spark.operators.indexer import _segment_fields
+from audioflux_spark.operators.indexer import _segment_fields, _ub_scale
 from audioflux_spark.operators.topk import query_terms
 from audioflux_spark.sources.segments import IndexReader
 
@@ -253,13 +253,6 @@ def wand_topk_kernel(
     return top_d, top_s
 
 
-def _ub_scale(avgdl: float, encode_avgdl: float) -> float:
-    """Block-max widening for a generation encoded under encode_avgdl and
-    scored under the global avgdl: tf-norm is monotone in avgdl, bounded by
-    their ratio."""
-    return max(1.0, avgdl / encode_avgdl) if encode_avgdl else 1.0
-
-
 def _check_stamps(files) -> None:
     """Raise unless every (path, size, mtime_ns) still matches its file:
     the index was rebuilt or removed since the reader listed it."""
@@ -307,27 +300,40 @@ def _read_stamped(files, schema, columns: list[str], filter):
     return tbl
 
 
-def _docstore_keys(docstore_files, doc_ids: np.ndarray) -> dict[int, tuple[str, int]]:
-    """doc_id → (conv_id, turn_idx) for the given docIDs, read with pyarrow
-    inside the serving task. Docstore files are doc_id-sorted; the range
-    conjuncts let pyarrow skip files and row groups outside the hits' span
-    by their statistics, and isin picks the rows."""
+def _docstore_keys(docstore_parts, doc_ids: np.ndarray) -> dict[int, tuple[str, int]]:
+    """doc_id → (conv_id, turn_idx) for the given global docIDs, read with
+    pyarrow inside the serving task. ``docstore_parts`` is the generation's
+    (first docID, stamped files) list (IndexReader): a hit is row
+    doc_id - first of its part's files, so only the hits' parts' files are
+    read, in one scan that names each row's file. Docstore files are
+    doc_id-sorted; the range conjuncts let pyarrow skip row groups outside
+    the rows' span by their statistics, and isin picks the rows."""
     import pyarrow as pa
     import pyarrow.dataset as pads
 
     schema = pa.schema(
         [("doc_id", pa.int64()), ("conv_id", pa.string()), ("turn_idx", pa.int32())]
     )
+    firsts = np.array([p[0] for p in docstore_parts], dtype=np.int64)
+    part_of = np.searchsorted(firsts, doc_ids, side="right") - 1
+    files, rows = [], {}  # rows: (file, row doc_id) -> global docID
+    for j in np.unique(part_of).tolist():
+        first, part_files = docstore_parts[j]
+        files += part_files
+        rows.update(
+            ((f[0], d - first), d) for d in doc_ids[part_of == j].tolist() for f in part_files
+        )
+    ids = sorted({r for _, r in rows})
     field = pads.field("doc_id")
-    ids = doc_ids.tolist()
     tbl = _read_stamped(
-        docstore_files, schema, schema.names,
-        field.isin(ids) & (field >= min(ids)) & (field <= max(ids)),
+        files, schema, [*schema.names, "__filename"],
+        field.isin(ids) & (field >= ids[0]) & (field <= ids[-1]),
     )
-    return dict(zip(
-        tbl.column("doc_id").to_pylist(),
-        zip(tbl.column("conv_id").to_pylist(), tbl.column("turn_idx").to_pylist()),
-    ))
+    keys: dict[int, tuple[str, int]] = {}
+    for path, d, conv_id, turn_idx in zip(*(tbl.column(i).to_pylist() for i in (3, 0, 1, 2))):
+        if (path, d) in rows:
+            keys[rows[path, d]] = (conv_id, turn_idx)
+    return keys
 
 
 # the segment columns the WAND kernel reads; phrase items add the positions
@@ -479,7 +485,7 @@ def _task_params(
             {
                 "encode_avgdl": g.meta.encode_avgdl or g.meta.avgdl,
                 "segments": g.segment_files,
-                "docstore": g.docstore_files,
+                "docstore": g.docstore_parts,
             }
             for g in gens
         ],

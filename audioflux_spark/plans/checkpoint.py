@@ -8,8 +8,15 @@ resume needs this explicit lineage: each build partition records its input
 fingerprint + metrics, and a re-run recomputes only partitions whose
 fingerprint is missing or stale.
 
-Manifest row: (partition_id, input_fingerprint, status, doc_offset, terms,
-postings, bytes, skew_ratio, output_path, term_splits) — FIXTURES.md F5.
+Manifest row: (partition_id, input_fingerprint, status, n, tokens, avgdl,
+doc_offset, terms, postings, bytes, skew_ratio, output_path, term_splits) —
+FIXTURES.md F5. The partials task writes its partition's files with
+partition-local docIDs and block maxes under the partition's own avgdl
+(n rows, tokens tokens), so a kept partition stays valid whatever the other
+partitions hold: the merge shifts and widens it (indexer._read_partial).
+The fingerprint is "<rows>:<XOR of xxhash64(conv_id, turn_idx, text)>",
+computed by the partials task itself; a task whose partition matches its
+entry, with its files present, writes nothing.
 term_splits are the partition's terms at even shares in byte order, from
 which the range merge draws its term ranges; a kept partition keeps
 them, so a resumed build merges over the same ranges. They are empty when
@@ -30,12 +37,15 @@ class PartitionEntry:
     partition_id: int
     input_fingerprint: str
     status: str = "done"
-    # dense docID base this partition's postings/docstore were ENCODED with.
-    # Offsets are a prefix-sum of partition counts, so an earlier partition's
-    # count changing on a resumed build shifts every later offset — a "done"
-    # partition whose recorded offset no longer matches must be rebuilt, or
-    # its stored docIDs collide with the new layout. -1 = legacy manifest
-    # (pre-offset tracking): always treated as stale.
+    # rows and tokens of the partition, and the avgdl (tokens / n) its block
+    # maxes were encoded under. n = 0 marks an entry written before these
+    # were recorded, whose files hold global docIDs: it is rebuilt
+    n: int = 0
+    tokens: int = 0
+    avgdl: float = 0.0
+    # the docID of the partition's first row in the merged index (the rows
+    # of partitions 0 .. pid-1). Derived from the entries' n at every build;
+    # recorded for inspection, it decides nothing on resume
     doc_offset: int = -1
     terms: int = 0
     postings: int = 0
@@ -52,16 +62,6 @@ class PartitionEntry:
 class Manifest:
     version: int = 1
     entries: dict[int, PartitionEntry] = field(default_factory=dict)
-
-    def completed_for(self, fingerprints: dict[int, str]) -> set[int]:
-        """Partitions already built against the SAME input bytes."""
-        return {
-            pid
-            for pid, fp in fingerprints.items()
-            if pid in self.entries
-            and self.entries[pid].status == "done"
-            and self.entries[pid].input_fingerprint == fp
-        }
 
 
 def manifest_path(index_dir: str) -> str:

@@ -53,16 +53,19 @@ def compact_index(
     cfg: EngineConfig = DEFAULT,
 ) -> IndexReader:
     """Merge all generations into one serving base — WITHOUT re-tokenizing
-    and without rewriting a single posting byte.
+    and without rewriting a posting blob beyond its partials' first doc
+    gaps.
 
     Generations accumulate (each query pays per-generation segment fetches);
-    Lucene answers this with forceMerge. Here the new block-anchored format
+    Lucene answers this with forceMerge. Here the block-anchored format
     makes compaction pure metadata arithmetic: every block's delta chain is
     re-anchored by its stored first docID, so shifting a generation's docID
-    space is `block_firsts + offset` (a JVM array transform) — blob bytes are
-    reused verbatim, and the build's merge writer (write_merged_segments)
-    concatenates the per-generation rows per term in docID order (generation
-    doc ranges are disjoint after offsetting).
+    space is an offset added to first_doc, last_doc and block_firsts (and to
+    each partial's absolute first gap, so part_counts still decodes). The
+    build's exchange merge (_exchange_merge) reads each generation's segment
+    files through that shift (_read_partial) and concatenates the
+    per-generation rows per term in docID order (generation doc ranges are
+    disjoint after offsetting).
 
     Writes a complete single-generation index at out_dir and returns a reader
     over it. Rank-identity vs the multi-generation reader is exercised by
@@ -71,58 +74,31 @@ def compact_index(
 
     from pyspark.sql import functions as F
 
-    from audioflux_spark.operators.indexer import IndexMeta, write_merged_segments
+    from audioflux_spark.operators.indexer import IndexMeta, _exchange_merge, _ub_scale
     from audioflux_spark.plans.checkpoint import Manifest, save_manifest
 
     reader = IndexReader(spark, index_dir)
     gens = reader.generations
-    offs: dict[int, int] = {}
-    run = 0
-    for g in gens:
-        offs[g.gen_id] = run
-        run += g.meta.n_docs
 
     shutil.rmtree(out_dir, ignore_errors=True)
     os.makedirs(out_dir, exist_ok=True)
 
-    combined_avgdl = (
-        sum(g.meta.total_tokens for g in gens) / max(sum(g.meta.n_docs for g in gens), 1)
-    )
-    seg_parts = []
+    combined_avgdl = reader.avgdl
+    inputs = []
     ds_parts = []
+    off = 0
     for g in gens:
-        off = offs[g.gen_id]
-        seg = g.segments
-        if off:
-            seg = (
-                seg.withColumn("first_doc", F.col("first_doc") + off)
-                .withColumn("last_doc", F.col("last_doc") + off)
-                .withColumn(
-                    "block_firsts",
-                    F.transform("block_firsts", lambda x: x + F.lit(off)),
-                )
-            )
-        # block maxes were computed with THIS generation's build avgdl; the
-        # compacted reader scores with the combined avgdl. tf-norm is monotone
-        # increasing in avgdl, bounded by the ratio — widen so bounds stay safe
-        enc = g.meta.encode_avgdl or g.meta.avgdl
-        ub_scale = max(1.0, combined_avgdl / enc) if enc else 1.0
-        if ub_scale > 1.0:
-            seg = seg.withColumn(
-                "block_maxes",
-                F.transform("block_maxes", lambda x: x * F.lit(ub_scale)),
-            )
-        seg_parts.append(seg)
-        ds = g.docstore
-        if off:
-            ds = ds.withColumn("doc_id", F.col("doc_id") + off)
-        ds_parts.append(ds)
+        # block maxes bound scores under THIS generation's avgdl; the
+        # compacted reader scores with the combined avgdl
+        scale = _ub_scale(combined_avgdl, g.meta.encode_avgdl or g.meta.avgdl)
+        inputs += [(path, off, scale) for path, _, _ in g.segment_files]
+        ds_parts.append(g.docstore.withColumn("doc_id", F.col("doc_id") + off))
+        off += g.meta.n_docs
 
     from functools import reduce
 
-    seg_all = reduce(DataFrame.unionByName, seg_parts)
     Qf = max(cfg.index.build_partitions // 4, 1)
-    write_merged_segments(seg_all, os.path.join(out_dir, "segments"), Qf)
+    _exchange_merge(spark, out_dir, inputs, Qf)
 
     ds_all = reduce(DataFrame.unionByName, ds_parts)
     # range-partition + sort by doc_id: doc_id IN (...) lookups keep their
@@ -134,17 +110,15 @@ def compact_index(
         .parquet(os.path.join(out_dir, "docstore"))
     )
 
-    total_tokens = sum(g.meta.total_tokens for g in gens)
-    n_docs = sum(g.meta.n_docs for g in gens)
     meta = IndexMeta(
-        n_docs=n_docs,
-        avgdl=(total_tokens / n_docs) if n_docs else 0.0,
+        n_docs=reader.n_docs,
+        avgdl=combined_avgdl,
         k1=cfg.bm25.k1,
         b=cfg.bm25.b,
         block_size=cfg.index.block_size,
         n_partitions=sum(g.meta.n_partitions for g in gens),
         offsets=[],  # compacted artifact: per-partition resume no longer applies
-        total_tokens=total_tokens,
+        total_tokens=sum(g.meta.total_tokens for g in gens),
         encode_avgdl=combined_avgdl,  # bounds were widened to this at compaction
     )
     with open(os.path.join(out_dir, "meta.json"), "w") as f:

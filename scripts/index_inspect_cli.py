@@ -1,8 +1,8 @@
 #!/usr/bin/env python
 """Index observability CLI: per-partition lineage + metrics for a built
 index — the operator-facing view of the manifest the build writes
-(terms, postings, bytes, skew ratio per partition; resume status;
-corpus-level meta). Pure metadata: reads manifest.json + meta.json, no
+(rows, tokens, avgdl, docID offset, terms, postings, bytes, skew ratio
+per partition; resume status; corpus-level meta). Pure metadata: reads manifest.json + meta.json, no
 Spark session and no segment scan, so it is safe to run against a live
 index at any scale.
 
@@ -36,6 +36,9 @@ def inspect(index_dir: str) -> dict:
         {
             "partition_id": e.partition_id,
             "status": e.status,
+            "n": e.n,
+            "tokens": e.tokens,
+            "avgdl": e.avgdl,
             "doc_offset": e.doc_offset,
             "terms": e.terms,
             "postings": e.postings,
@@ -97,10 +100,14 @@ def main() -> None:
             f"terms {t['terms']}, postings {t['postings']}, "
             f"bytes {t['bytes']}, max skew {out['max_skew_ratio']:.3f}"
         )
-        print("pid  status  doc_offset      terms   postings      bytes  skew")
+        print(
+            "pid  status           n     tokens    avgdl  doc_offset"
+            "      terms   postings      bytes  skew"
+        )
         for p in out["partitions"]:
             print(
-                f"{p['partition_id']:>3}  {p['status']:<6} {p['doc_offset']:>10} "
+                f"{p['partition_id']:>3}  {p['status']:<6} {p['n']:>10} {p['tokens']:>10} "
+                f"{p['avgdl']:>8.3f} {p['doc_offset']:>11} "
                 f"{p['terms']:>10} {p['postings']:>10} {p['bytes']:>10} "
                 f"{p['skew_ratio']:>5.2f}"
             )

@@ -130,12 +130,10 @@ def test_indexed_sharded_route_rank_identity(reader, oracle, queries):
     assert_indexed_matches_oracle(reader, oracle, queries[:6], shard_docs=200)
 
 
-def test_wand_equals_exhaustive_random_queries(reader, oracle):
-    """Property (SURVEY §5/M4): WAND pruning == exhaustive scoring, random
-    multi-term queries drawn from the corpus vocabulary."""
-    rng = np.random.default_rng(123)
+def _assert_wand_equals_exhaustive(reader, oracle, seed=123, trials=10):
+    rng = np.random.default_rng(seed)
     vocab = sorted(oracle.postings.keys())
-    for trial in range(10):
+    for trial in range(trials):
         n_terms = int(rng.integers(1, 5))
         terms = [vocab[i] for i in rng.integers(0, len(vocab), n_terms)]
         qtext = " ".join(terms)
@@ -145,7 +143,13 @@ def test_wand_equals_exhaustive_random_queries(reader, oracle):
         assert_rank_identical(got, want, context=f"random '{qtext}' k={k}")
 
 
-def test_batch_query_path(reader, oracle, queries):
+def test_wand_equals_exhaustive_random_queries(reader, oracle):
+    """Property (SURVEY §5/M4): WAND pruning == exhaustive scoring, random
+    multi-term queries drawn from the corpus vocabulary."""
+    _assert_wand_equals_exhaustive(reader, oracle)
+
+
+def _assert_batch_matches_oracle(reader, oracle, queries):
     batch = [(q.query_id, q.query_text, q.k) for q in queries[:8]]
     res = bm25_topk_many(reader, batch).toPandas()
     for qid, text, k in batch:
@@ -156,6 +160,66 @@ def test_batch_query_path(reader, oracle, queries):
         )
         want = oracle.topk(text, k)
         assert_rank_identical(got, want, context=f"batch {qid}")
+
+
+def test_batch_query_path(reader, oracle, queries):
+    _assert_batch_matches_oracle(reader, oracle, queries)
+
+
+def test_skewed_partition_avgdl_rank_identity(spark, transcripts_pdf, queries, tmp_path_factory):
+    """Build partitions whose mean turn lengths differ several-fold: each
+    partial's block maxes are encoded under its own avgdl, far from the
+    corpus avgdl, and the merge widens them by max(1, avgdl / avgdl_pid).
+    The bounds stay safe and scoring exact: WAND == exhaustive, and single
+    (also over 200-doc shards), batch and phrase queries are rank-identical
+    to the oracle."""
+    from audioflux_spark.oracle import BM25Oracle
+    from audioflux_spark.operators.phrase import bm25_topk_phrase
+
+    pdf = transcripts_pdf.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
+    # createDataFrame slices the rows into contiguous partitions, each a
+    # build partition: long turns in some slices, two-word turns in others
+    part = np.arange(len(pdf)) * 8 // len(pdf)
+    pdf["text"] = [
+        " ".join([t] * 6) if j % 3 == 0 else " ".join(t.split()[:2]) if j % 3 == 1 else t
+        for t, j in zip(pdf["text"], part)
+    ]
+    d = str(tmp_path_factory.mktemp("skewed") / "idx")
+    cfg = EngineConfig(
+        index=IndexConfig(block_size=32, build_partitions=4, store_positions=True)
+    )
+    build_index(spark, spark.createDataFrame(pdf), d, cfg=cfg)
+    reader = IndexReader(spark, d)
+    oracle = BM25Oracle(pdf)
+    assert reader.meta.n_docs == oracle.N
+    assert abs(reader.meta.avgdl - oracle.avgdl) < 1e-9
+    part_avgdl = [e.avgdl for e in load_manifest(d).entries.values()]
+    assert len(part_avgdl) >= 4
+    assert max(part_avgdl) / oracle.avgdl > 2 and oracle.avgdl / min(part_avgdl) > 2
+
+    _assert_wand_equals_exhaustive(reader, oracle, seed=7, trials=12)
+    assert_indexed_matches_oracle(reader, oracle, queries)
+    assert_indexed_matches_oracle(reader, oracle, queries[:6], shard_docs=200)
+    _assert_batch_matches_oracle(reader, oracle, queries)
+
+    from audioflux_spark.functions.analyzer import tokenize_series
+
+    toks = [" ".join(t) for t in tokenize_series(pdf["text"])]
+    assert (oracle.conv_id == pdf["conv_id"].to_numpy()).all()  # oracle docs = rows
+    for row in (0, len(pdf) * 3 // 16):  # a long-turn and a two-word-turn slice
+        phrase = " ".join(toks[row].split()[:2])
+        assert len(query_terms(phrase)) == 2, phrase
+        scores = oracle.score_query(phrase)
+        hits = [i for i, t in enumerate(toks) if f" {phrase} " in f" {t} "]
+        order = sorted(hits, key=lambda i: (-scores[i], i))[:10]
+        want = pd.DataFrame({
+            "conv_id": oracle.conv_id[order],
+            "turn_idx": oracle.turn_idx[order].astype(np.int32),
+            "score": scores[order],
+        })
+        for shard_docs in (DEFAULT_SHARD_DOCS, 200):
+            got = bm25_topk_phrase(reader, phrase, 10, shard_docs=shard_docs).toPandas()
+            assert_rank_identical(got, want, context=f"phrase '{phrase}' {shard_docs}")
 
 
 def test_batch_rejects_duplicate_query_ids(reader):
@@ -291,14 +355,16 @@ def test_per_turn_text_roundtrip(reader, transcripts_pdf):
         assert (np.diff(d) == 1).all(), "doc_id not key-contiguous within partition"
 
 
-def test_manifest_lineage(index_dir):
+def test_manifest_lineage(index_dir, oracle):
     m = load_manifest(index_dir)
     assert len(m.entries) == CFG.index.build_partitions
     for e in m.entries.values():
         assert e.status == "done"
         assert e.postings > 0 and e.bytes > 0 and e.terms > 0
-        assert e.input_fingerprint
+        assert e.input_fingerprint.split(":")[0] == str(e.n)
+        assert e.avgdl == e.tokens / e.n
         assert 0 < e.skew_ratio < 10
+    assert sum(e.n for e in m.entries.values()) == oracle.N
 
 
 def test_index_inspect_cli(index_dir):
@@ -325,6 +391,10 @@ def test_index_inspect_cli(index_dir):
     assert out["meta"]["n_docs"] > 0 and out["meta"]["avgdl"] > 0
     offs = [p["doc_offset"] for p in out["partitions"]]
     assert offs == sorted(offs) and offs[0] == 0
+    ns = [p["n"] for p in out["partitions"]]
+    assert offs[1:] == np.cumsum(ns)[:-1].tolist()
+    assert sum(p["tokens"] for p in out["partitions"]) == out["meta"]["total_tokens"]
+    assert all(p["avgdl"] > 0 for p in out["partitions"])
 
 
 def _segset(spark, d):
@@ -399,65 +469,93 @@ def test_manifest_lineage_matches_partials(spark, index_dir):
 
 
 def _partition_batch(pdf: pd.DataFrame, pid: int):
-    """One partition's rows as the partials job ships them to its task."""
+    """One partition's rows as the partials job ships them to its task (h
+    stands in for the JVM row hash)."""
     import pyarrow as pa
 
     tbl = pa.Table.from_pandas(
         pdf[["conv_id", "turn_idx", "role", "text", "tool", "ts"]], preserve_index=False
     )
+    tbl = tbl.add_column(0, "h", pa.array(np.arange(len(pdf), dtype=np.int64) * 7919))
     return tbl.add_column(0, "pid", pa.array([pid] * len(pdf), pa.int32())).to_batches()[0]
+
+
+def _lineage_entry(batches):
+    """The manifest entry of a partial task's one lineage row."""
+    from audioflux_spark.plans.checkpoint import PartitionEntry
+
+    (batch,) = batches
+    (row,) = batch.to_pylist()
+    return PartitionEntry(**json.loads(row["entry"]))
 
 
 def test_partial_writer_rewrite_byte_identical(tmp_path, transcripts_pdf):
     """A retried partial task rewrites the same files: one docstore file and
     one partial file, the same bytes and lineage, and no temporary files
-    left behind."""
+    left behind; before writing it unpublishes the merged segments/. Given
+    its own lineage as the manifest's entry, the task returns that row and
+    writes and unpublishes nothing."""
     from audioflux_spark.operators import indexer
 
     batch = _partition_batch(transcripts_pdf.head(300), 3)
+    entries = {}
     write = indexer._make_partial_writer(
-        indexer._make_segment_fn(10.0, CFG), [0, 0, 0, 40],
-        str(tmp_path / "partial"), str(tmp_path / "docstore"), 4,
+        indexer._make_segment_fn(CFG), entries, str(tmp_path), 4
     )
     lineage, data = [], []
-    for _ in range(2):
-        lineage.append([b.to_pylist() for b in write(iter([batch]))])
+    for i in range(3):
+        if i == 2:  # the third call finds the partition recorded
+            entries[3] = lineage[0]
+        os.makedirs(tmp_path / "segments", exist_ok=True)
+        lineage.append(_lineage_entry(list(write(iter([batch])))))
+        assert os.path.isdir(tmp_path / "segments") == (i == 2)
         files = []
-        for sub in ("docstore", "partial"):
+        for sub in ("docstore", "segments_partial"):
             seg_dir = tmp_path / sub / "seg_id=3"
             assert sorted(os.listdir(seg_dir)) == ["part-00000.parquet"]
-            files.append((seg_dir / "part-00000.parquet").read_bytes())
+            files.append(
+                ((seg_dir / "part-00000.parquet").read_bytes(),
+                 os.stat(seg_dir / "part-00000.parquet").st_mtime_ns)
+            )
         data.append(files)
-    assert data[0] == data[1]
-    assert lineage[0] == lineage[1]
-    (row,) = lineage[0][0]
-    assert row["seg_id"] == 3 and row["terms"] > 0 and row["postings"] >= row["terms"]
+    assert [f[0] for f in data[0]] == [f[0] for f in data[1]]
+    assert data[2] == data[1]
+    assert lineage[0] == lineage[1] == lineage[2]
+    e = lineage[0]
+    assert e.partition_id == 3 and e.terms > 0 and e.postings >= e.terms
+    assert e.n == 300 and e.avgdl == e.tokens / 300
+    assert e.output_path == "segments_partial/seg_id=3" and len(e.term_splits) == 3
+    h = np.bitwise_xor.reduce(np.arange(300, dtype=np.int64) * 7919)
+    assert e.input_fingerprint == f"300:{h}"
     docs = pd.read_parquet(tmp_path / "docstore" / "seg_id=3")
-    assert docs["doc_id"].tolist() == list(range(40, 340))
+    assert docs["doc_id"].tolist() == list(range(300))
     assert docs["conv_id"].tolist() == transcripts_pdf["conv_id"].head(300).tolist()
+    assert int(docs["doc_len"].sum()) == e.tokens
 
 
 def test_partial_writer_tokenless_partition(tmp_path, transcripts_pdf):
     """A partition without a single token still gets its docstore file
-    (doc_len 0 on every row) but no partial file and no lineage row."""
+    (doc_len 0 on every row) and a lineage row without terms, but no
+    partial file."""
     from audioflux_spark.operators import indexer
 
     pdf = transcripts_pdf.head(4).assign(text=["", "!!", " - ", None])
     write = indexer._make_partial_writer(
-        indexer._make_segment_fn(10.0, CFG), [0, 7],
-        str(tmp_path / "partial"), str(tmp_path / "docstore"), 4,
+        indexer._make_segment_fn(CFG), {}, str(tmp_path), 4
     )
-    assert list(write(iter([_partition_batch(pdf, 1)]))) == []
+    e = _lineage_entry(list(write(iter([_partition_batch(pdf, 1)]))))
+    assert (e.n, e.tokens, e.terms, e.term_splits) == (4, 0, 0, [])
     docs = pd.read_parquet(tmp_path / "docstore" / "seg_id=1" / "part-00000.parquet")
-    assert docs["doc_id"].tolist() == [7, 8, 9, 10]
+    assert docs["doc_id"].tolist() == [0, 1, 2, 3]
     assert docs["doc_len"].tolist() == [0, 0, 0, 0]
-    assert not os.path.exists(tmp_path / "partial")
+    assert not os.path.exists(tmp_path / "segments_partial")
 
 
 def test_docstore_doc_len_matches_token_stats(spark, reader):
-    """avgdl comes from the stats pass's JVM token count, the docstore's
-    doc_len from the Python tokenizer: the two analyzers must agree on
-    every row, and so on the total."""
+    """total_tokens is the sum of the partials kernel's token counts (its
+    lineage), which also gives the docstore's doc_len; the registry's JVM
+    token count (doc_len_col) must agree with it on every row, and the
+    docstore with the meta on the total."""
     from pyspark.sql import functions as F
 
     from audioflux_spark.functions.analyzer import doc_len_col
@@ -501,17 +599,43 @@ def test_resume_after_killed_partial_task(
         assert_rank_identical(got, oracle.topk(q.query_text, q.k), context=q.query_id)
 
 
+def test_index_without_row_counts_is_refused_then_rebuilt(
+    spark, transcripts_sdf, index_dir, tmp_path
+):
+    """Manifest entries without a row count come from builds whose docstore
+    files held global docIDs: a reader refuses such an index instead of
+    mapping its keys as local rows, and a resumed build rebuilds every
+    partition of it."""
+    from audioflux_spark.plans.checkpoint import manifest_path
+
+    d2 = str(tmp_path / "idx")
+    shutil.copytree(index_dir, d2)
+    with open(manifest_path(d2)) as f:
+        raw = json.load(f)
+    for e in raw["entries"].values():
+        for k in ("n", "tokens", "avgdl"):
+            del e[k]
+    with open(manifest_path(d2), "w") as f:
+        json.dump(raw, f)
+    with pytest.raises(RuntimeError, match="partition-local"):
+        IndexReader(spark, d2)
+
+    partial = os.path.join(d2, "segments_partial", "seg_id=0", "part-00000.parquet")
+    before = os.stat(partial).st_mtime_ns
+    build_index(spark, transcripts_sdf, d2, cfg=CFG, resume=True)
+    assert os.stat(partial).st_mtime_ns != before
+    assert _segset(spark, d2) == _segset(spark, index_dir)
+    assert IndexReader(spark, d2).meta == IndexReader(spark, index_dir).meta
+
+
 def test_declared_schemas_match_written_files(spark, index_dir):
-    """Readers pass PARTIAL_SCHEMA / MERGED_SCHEMA / DOCSTORE_SCHEMA instead
-    of inferring; they must describe what the writers produce."""
-    from audioflux_spark.operators.indexer import (
-        DOCSTORE_SCHEMA,
-        MERGED_SCHEMA,
-        PARTIAL_SCHEMA,
-    )
+    """Readers pass MERGED_SCHEMA / DOCSTORE_SCHEMA instead of inferring;
+    they must describe what the writers produce. Partial files hold merged
+    rows, partitioned by seg_id."""
+    from audioflux_spark.operators.indexer import DOCSTORE_SCHEMA, MERGED_SCHEMA
 
     for sub, declared in (
-        ("segments_partial", PARTIAL_SCHEMA),
+        ("segments_partial", "seg_id int, " + MERGED_SCHEMA),
         ("segments", MERGED_SCHEMA),
         ("docstore", DOCSTORE_SCHEMA),
     ):
@@ -615,28 +739,26 @@ def exchange_build(spark, transcripts_sdf, tmp_path_factory):
 
 
 def test_range_merge_matches_exchange(spark, index_dir, exchange_build, tmp_path):
-    """The range merge over the partial files and the exchange merge
-    (write_merged_segments, used past the range merge's limit and by
-    compaction) over the same partials give identical rows in every column,
+    """The range merge and the exchange merge (used past the range merge's
+    limit; its writer also serves compaction), each reading the partial
+    files through the same shift, give identical rows in every column,
     part_counts and block lists included: for the range-merged index and
     for the exchange-merged one."""
     from audioflux_spark.operators.indexer import (
-        PARTIAL_SCHEMA,
-        _merge_partial_files,
+        _exchange_merge,
+        _partial_inputs,
         _range_bounds,
-        write_merged_segments,
+        _range_merge,
     )
 
-    partials = spark.read.schema(PARTIAL_SCHEMA).parquet(
-        os.path.join(index_dir, "segments_partial")
-    )
     exchanged = str(tmp_path / "exchanged")
-    write_merged_segments(partials, os.path.join(exchanged, "segments"), 8)
+    shutil.copytree(index_dir, exchanged)
+    _exchange_merge(spark, exchanged, _partial_inputs(exchanged, load_manifest(exchanged).entries), 8)
 
     ranged = str(tmp_path / "ranged")
     shutil.copytree(exchange_build[0], ranged)
     m = load_manifest(ranged)
-    _merge_partial_files(spark, ranged, m, _range_bounds(m.entries.values(), 8))
+    _range_merge(spark, ranged, _partial_inputs(ranged, m.entries), _range_bounds(m.entries.values(), 8))
 
     for got_dir, want_dir in ((index_dir, exchanged), (ranged, exchange_build[0])):
         got, want = _segment_table(got_dir), _segment_table(want_dir)
@@ -674,17 +796,16 @@ def test_range_merge_grouped_tasks_same_files(index_dir, tmp_path):
     several ranges: the files are byte-identical to one task per range."""
     import pyarrow as pa
 
-    from audioflux_spark.operators.indexer import _make_range_merge, _range_bounds
-
-    entries = load_manifest(index_dir).entries.values()
-    files = sorted(
-        os.path.join(index_dir, e.output_path, "part-00000.parquet")
-        for e in entries
-        if e.terms
+    from audioflux_spark.operators.indexer import (
+        _make_range_merge,
+        _partial_inputs,
+        _range_bounds,
     )
-    bounds = _range_bounds(entries, CFG.index.build_partitions)
+
+    entries = load_manifest(index_dir).entries
+    bounds = _range_bounds(entries.values(), CFG.index.build_partitions)
     assert len(bounds) + 1 > 3
-    merge = _make_range_merge(files, bounds, str(tmp_path), 3)
+    merge = _make_range_merge(_partial_inputs(index_dir, entries), bounds, str(tmp_path), 3)
     for g in range(3):
         list(merge(iter([pa.RecordBatch.from_pydict({"id": [g]})])))
     want = os.path.join(index_dir, "segments")
@@ -739,21 +860,33 @@ def test_range_merge_without_manifest_refuses(spark, index_dir, tmp_path):
     )
 
 
-# jobs a fresh range-merge build launches under AQE: partition stats with
-# the token count (4), the partials job writing docstore and partial files and
-# returning lineage with term splits (1), the merge job whose tasks read the
-# partial files (1)
-FRESH_BUILD_JOBS = 6
+# jobs a fresh range-merge build launches under AQE. Its input (one cached
+# partition) has fewer partitions than CFG builds, so the build repartitions
+# it: that shuffle's map stage (1), the partials job, the one pass over the
+# text, writing docstore and partial files and returning lineage with term
+# splits (1), and the merge job whose tasks read the partial files (1)
+FRESH_BUILD_JOBS = 3
+# jobs of a fresh build whose input is already split into enough partitions
+# by its scan: the partials job and the merge
+SCAN_SPLIT_BUILD_JOBS = 2
 # jobs of the fresh exchange-merge build (exchange_build), whose input is a
-# repartitioned DataFrame: partition stats (4), the partials job, which
-# re-runs the input's shuffle (2), and the exchange merge (4): listing the
-# 65 seg_id directories (past Spark's parallel-listing threshold), range
-# sampling, the shuffle map stage and the merge writers
-EXCHANGE_BUILD_JOBS = 10
+# repartitioned DataFrame: the input's shuffle map stage, run once when
+# build_index asks the input for its partition count (DataFrame.rdd runs
+# an adaptive plan's shuffles) and again by the partials job (2), the
+# partials job (1), and the exchange merge (3): range sampling, the shuffle
+# map stage and the merge writers, its input tasks reading the partial
+# files the manifest lists
+EXCHANGE_BUILD_JOBS = 6
 
 
 def test_fresh_build_job_count(spark, transcripts_sdf, exchange_build, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("jobs") / "idx")
-    jobs = _build_jobs(spark, transcripts_sdf, d)
-    assert len(jobs) <= FRESH_BUILD_JOBS, jobs
-    assert len(exchange_build[1]) <= EXCHANGE_BUILD_JOBS, exchange_build[1]
+    assert len(_build_jobs(spark, transcripts_sdf, d)) == FRESH_BUILD_JOBS
+    assert len(exchange_build[1]) == EXCHANGE_BUILD_JOBS, exchange_build[1]
+    # one parquet file per partition, each its own scan split
+    src = str(tmp_path_factory.mktemp("split_src") / "t.parquet")
+    transcripts_sdf.repartition(CFG.index.build_partitions, "conv_id").write.parquet(src)
+    split = spark.read.parquet(src)
+    assert split.rdd.getNumPartitions() == CFG.index.build_partitions
+    d = str(tmp_path_factory.mktemp("jobs_split") / "idx")
+    assert len(_build_jobs(spark, split, d)) == SCAN_SPLIT_BUILD_JOBS

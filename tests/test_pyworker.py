@@ -123,16 +123,16 @@ def _kernels():
     from audioflux_spark.config import DEFAULT
     from audioflux_spark.operators import indexer, wand
 
-    segment = indexer._make_segment_fn(1.0, DEFAULT)
+    segment = indexer._make_segment_fn(DEFAULT)
     merge = indexer._make_merge_stream()
+    inputs = [("part-00000.parquet", 0, 1.0)]
     return {
         "segment": segment,
-        "partial_writer": indexer._make_partial_writer(
-            segment, [0], "segments_partial", "docstore", 2
-        ),
+        "partial_writer": indexer._make_partial_writer(segment, {}, "idx", 2),
         "merge": merge,
         "merge_writer": indexer._make_merge_writer(merge, "segments"),
-        "range_merge": indexer._make_range_merge(["part-00000.parquet"], ["m"], "segments", 1),
+        "range_merge": indexer._make_range_merge(inputs, ["m"], "segments", 1),
+        "partial_reader": indexer._make_partial_reader(inputs),
         "serve_query": wand._serve_query,
     }
 
