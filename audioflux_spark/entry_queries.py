@@ -225,7 +225,7 @@ def _incr_readers(spark: SparkSession, sf_dir: str) -> tuple[IndexReader, IndexR
     if ent is None or ent[0] is not spark:
         from audioflux_spark.streaming.incremental import add_generation, compact_index
 
-        tag = hashlib.md5(f"{sf_dir}:incr-fmt5".encode()).hexdigest()[:10]
+        tag = hashlib.md5(f"{sf_dir}:incr-fmt6".encode()).hexdigest()[:10]
         base = os.path.join("/tmp/afspark_entry_idx", f"incr_{tag}")
         compacted = base + "_compacted"
         first = documents_as_transcripts(spark, sf_dir, where="doc_id % 2 = 0")
@@ -264,8 +264,9 @@ def q_bm25_topk_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_bm25_topk_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same query over the COMPACTED index (generations folded into one base
-    without rewriting a posting byte): must also match the one-shot oracle."""
+    """Same query over the COMPACTED index (the generations' partitions
+    folded into one build without re-tokenizing): must also match the
+    one-shot oracle."""
     _multi, comp = _incr_readers(spark, sf_dir)
     return _topk_to_docids(bm25_topk_indexed(comp, "join hash row", 20))
 

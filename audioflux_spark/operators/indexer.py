@@ -25,14 +25,13 @@ Scale design notes (100 TB / 10^12 turns):
   The range merge shuffles nothing: the partials task records term
   splits of its partition, the driver turns them into term ranges, and each
   merge task (one per core) reads the partial files itself, once, keeping
-  its contiguous ranges. Past _RANGE_MERGE_MAX_PARTIALS partial files the
-  build merges through the exchange compaction uses, which shuffles
-  *compressed blobs*, not postings rows — ~1-2 bytes per posting instead
-  of ~30.
+  its contiguous ranges. Past _RANGE_MERGE_MAX_PARTIALS partitions the
+  merge runs through an exchange instead, which shuffles *compressed
+  blobs*, not postings rows — ~1-2 bytes per posting instead of ~30.
 * the partials task holds each partition's rows once: it fingerprints
-  them, and unless the manifest already records that fingerprint with its
-  files present, writes everything derived from them: the docstore file and
-  the partial segment file.
+  them, and unless the manifest and the partition's own marker already
+  record that fingerprint with its files present, writes everything derived
+  from them: the docstore file, the partial segment file and the marker.
 * hot terms (Zipf head: 'hotterm' is in 40% of turns) have one partial row
   per partition. Merging them writes no byte: partial blobs are
   self-contained and segment doc ranges are disjoint, so a merged row is
@@ -45,6 +44,7 @@ from __future__ import annotations
 
 import json
 import os
+import pathlib
 import shutil
 import uuid
 from dataclasses import asdict, dataclass
@@ -94,11 +94,6 @@ class IndexMeta:
     n_partitions: int
     offsets: list[int]
     total_tokens: int = 0  # exact Σ doc_len (for exact cross-generation avgdl)
-    # the avgdl the stored block maxes bound scores under: readers scoring
-    # under a larger avgdl (several generations) widen them by the ratio
-    # (tf-norm is monotone in avgdl, bounded by the ratio). A build's merge
-    # widens every partition's maxes to the build's avgdl
-    encode_avgdl: float = 0.0
 
     def to_json(self) -> str:
         return json.dumps(self.__dict__, sort_keys=True)
@@ -108,8 +103,9 @@ class IndexMeta:
         d = json.loads(s)
         if not d.get("total_tokens"):
             d["total_tokens"] = round(d["avgdl"] * d["n_docs"])
-        if not d.get("encode_avgdl"):
-            d["encode_avgdl"] = d["avgdl"]
+        # written by builds that recorded the avgdl of the block maxes apart:
+        # the merge widens them to the index's avgdl
+        d.pop("encode_avgdl", None)
         return IndexMeta(**d)
 
 
@@ -442,6 +438,10 @@ def _write_parquet_file(table, path: str) -> None:
 # the directory name)
 _DOCSTORE_INPUT_COLS = ("conv_id", "turn_idx", "role", "text", "tool", "ts")
 
+# docstore/seg_id=<pid>/<this>: the fingerprint of the input the
+# partition's files hold ("_": Spark and the reader skip it)
+FINGERPRINT_FILE = "_fingerprint"
+
 
 def _make_partial_writer(
     segment_fn, entries: dict[int, PartitionEntry], index_dir: str, n_ranges: int
@@ -449,15 +449,18 @@ def _make_partial_writer(
     """The partials job's task, the build's one pass over the text. It holds
     one partition's rows (pid, the JVM row hash h and the docstore input
     columns) and fingerprints them as "<rows>:<XOR of h>", independent of
-    row order. When ``entries`` (the manifest's) records that fingerprint
-    for the partition and its files are present, it writes nothing.
-    Otherwise it unpublishes index_dir/segments (no longer the merge of the
-    partials), clears the partition's directories and writes, to
-    ``seg_id=<pid>/part-00000.parquet``:
+    row order. When ``entries`` (the manifest's) and the partition's marker
+    (FINGERPRINT_FILE) both record that fingerprint and its files are
+    present, it writes nothing. Otherwise it unpublishes index_dir/segments
+    (no longer the merge of the partials), clears the partition's
+    directories and writes, to ``seg_id=<pid>/part-00000.parquet``:
 
     * under docstore/, every row with doc_id = its row number (the kernel's
       docIDs) and doc_len = the kernel's token count;
-    * under segments_partial/, the kernel's segment rows, if it has tokens.
+    * under segments_partial/, the kernel's segment rows, if it has tokens;
+
+    and last the marker: a run killed after rewriting the partition, before
+    the driver saves the manifest, leaves a marker that differs from it.
 
     Either way it returns its entry as one lineage row (LINEAGE_SCHEMA): the
     fingerprint, rows, tokens, the avgdl its block maxes were encoded under,
@@ -484,10 +487,13 @@ def _make_partial_writer(
         n = tbl.num_rows
         fp = f"{n}:{int(np.bitwise_xor.reduce(tbl.column('h').to_numpy()))}"
         leaf = os.path.join(f"seg_id={pid}", "part-00000.parquet")
+        marker = os.path.join(docstore_dir, f"seg_id={pid}", FINGERPRINT_FILE)
         kept = entries.get(pid)
         if (
             kept is not None
             and (kept.n, kept.input_fingerprint) == (n, fp)
+            and os.path.exists(marker)
+            and pathlib.Path(marker).read_text() == fp
             and os.path.exists(os.path.join(docstore_dir, leaf))
             and (not kept.terms or os.path.exists(os.path.join(partial_dir, leaf)))
         ):
@@ -528,6 +534,9 @@ def _make_partial_writer(
             e.term_splits = pc.take(
                 terms, pc.array_sort_indices(terms).take(pa.array(ranks))
             ).to_pylist()
+        tmp = os.path.join(os.path.dirname(marker), f".{FINGERPRINT_FILE}.{uuid.uuid4().hex}.tmp")
+        pathlib.Path(tmp).write_text(fp)
+        os.replace(tmp, marker)
         yield lineage(e)
 
     return write_partials
@@ -603,11 +612,13 @@ def _layout(entries: dict[int, PartitionEntry], n_partitions: int):
     return offsets, int(counts.sum()), sum(e.tokens for e in entries.values())
 
 
-def _ub_scale(avgdl: float, encode_avgdl: float) -> float:
-    """The factor that widens block maxes encoded under encode_avgdl into
+def _ub_scale(avgdl: float, from_avgdl: float) -> float:
+    """The factor that widens block maxes encoded under from_avgdl into
     bounds on scores under avgdl: tf-norm grows with avgdl, by at most their
-    ratio. The build's merge, compaction and serving all widen by it."""
-    return max(1.0, avgdl / encode_avgdl) if encode_avgdl else 1.0
+    ratio. The merge widens each partition's maxes from its own avgdl to
+    the index's, and serving widens a generation's from the generation's
+    avgdl to that of all generations."""
+    return max(1.0, avgdl / from_avgdl) if from_avgdl else 1.0
 
 
 def _partial_inputs(index_dir: str, entries: dict[int, PartitionEntry]):
@@ -770,8 +781,8 @@ def _make_partial_reader(inputs: list):
 
 
 def _exchange_merge(spark: SparkSession, out_dir: str, inputs: list, n_ranges: int) -> None:
-    """The exchange merge, of compaction and of builds with more than
-    _RANGE_MERGE_MAX_PARTIALS partial files: one task per input file reads
+    """The exchange merge, of indexes with more than
+    _RANGE_MERGE_MAX_PARTIALS partitions: one task per input file reads
     it (_make_partial_reader), the rows are range-partitioned by term, and
     each range is merged in the Arrow kernel and written from that kernel as
     one term-sorted file under out_dir/segments, so `term IN (...)` prunes
@@ -801,8 +812,8 @@ def _n_ranges(cfg: EngineConfig) -> int:
     build partition: the r6 profile showed the merge running on half the
     cores (Qf = P/2 left 16 tasks on 32 cores). Qf also sets the splits
     each partials task records (Qf - 1); the range merge packs the ranges
-    into one task per core (_merge_partial_files), the exchange merge
-    writes one file per range."""
+    into one task per core (_range_merge), the exchange merge writes one
+    file per range."""
     return max(cfg.index.build_partitions, 2)
 
 
@@ -844,8 +855,10 @@ def build_index(
     Layout: meta.json, manifest.json, docstore/ and segments_partial/ (one
     parquet file per build partition, ``seg_id=<pid>/part-00000.parquet``,
     docIDs local to the partition, written by the partials job's tasks; no
-    ``_SUCCESS`` marker, the manifest records completed partitions),
-    segments/ (merged, global docIDs, range-partitioned + sorted by term).
+    ``_SUCCESS`` marker, the manifest records completed partitions, and
+    ``docstore/seg_id=<pid>/_fingerprint`` the input each partition's files
+    hold), segments/ (merged, global docIDs, range-partitioned + sorted by
+    term). The driver then commits them (commit_index).
 
     Jobs: the partials job, the one pass over the text (each task
     fingerprints its partition and, unless the manifest records it, writes
@@ -890,17 +903,10 @@ def build_index(
     mark("partials")
 
     entries = {e.partition_id: e for e in (PartitionEntry(**json.loads(r[0])) for r in lineage)}
-    offsets, n_docs, total_tokens = _layout(entries, P)
-    mean_postings = sum(e.postings for e in entries.values()) / max(len(entries), 1)
-    for pid, e in entries.items():
-        e.doc_offset = offsets[pid]
-        e.skew_ratio = (e.postings / mean_postings) if mean_postings else 0.0
-
     # ghost cleanup: seg_id dirs and manifest entries of partitions that are
     # now empty or gone (an earlier, different partition layout) would be
     # merged with the new ones. Delete them, unpublishing the merged
     # segments first, as a changed partition's task did before its writes
-    segments_dir = os.path.join(index_dir, "segments")
     ghosts = [
         os.path.join(d, name)
         for d in (os.path.join(index_dir, "segments_partial"), os.path.join(index_dir, "docstore"))
@@ -909,31 +915,51 @@ def build_index(
         if name.startswith("seg_id=") and int(name.split("=", 1)[1]) not in entries
     ]
     if ghosts or set(old.entries) - set(entries):
-        shutil.rmtree(segments_dir, ignore_errors=True)
+        shutil.rmtree(os.path.join(index_dir, "segments"), ignore_errors=True)
     for path in ghosts:
         shutil.rmtree(path)
+    mark("lineage")
+    meta = commit_index(spark, index_dir, entries, P, cfg)
+    mark("merge")
+    return meta
+
+
+def commit_index(
+    spark: SparkSession,
+    index_dir: str,
+    entries: dict[int, PartitionEntry],
+    n_partitions: int,
+    cfg: EngineConfig = DEFAULT,
+) -> IndexMeta:
+    """Make index_dir the index of the partitions ``entries`` lists, whose
+    docstore and partial segment files are in place under index_dir: lay
+    out their docIDs (partition p's follow those of partitions 0 .. p-1 of
+    n_partitions) and record each one's offset and skew, save the manifest,
+    merge segments/ unless it is published, and write meta.json last. Its
+    avgdl is the one the merge widens every partition's block maxes to.
+    build_index commits through it after the partials job, compact_index
+    after copying its generations' partitions."""
+    offsets, n_docs, total_tokens = _layout(entries, n_partitions)
+    mean_postings = sum(e.postings for e in entries.values()) / max(len(entries), 1)
+    for pid, e in entries.items():
+        e.doc_offset = offsets[pid]
+        e.skew_ratio = (e.postings / mean_postings) if mean_postings else 0.0
     manifest = Manifest(entries=dict(sorted(entries.items())))
     save_manifest(index_dir, manifest)
-    mark("lineage")
-
-    # ---- merge phase: skipped only when resuming an untouched index whose
-    # merge was published (any change above unpublished segments/)
-    if not os.path.exists(segments_dir):
+    # skipped only when resuming an untouched index whose merge was
+    # published (any change to its partitions unpublished segments/)
+    if not os.path.exists(os.path.join(index_dir, "segments")):
         merge_segments(spark, index_dir, cfg, manifest)
-    mark("merge")
 
-    avgdl = (total_tokens / n_docs) if n_docs else 0.0
     meta = IndexMeta(
         n_docs=n_docs,
-        avgdl=avgdl,
+        avgdl=(total_tokens / n_docs) if n_docs else 0.0,
         k1=cfg.bm25.k1,
         b=cfg.bm25.b,
         block_size=cfg.index.block_size,
-        n_partitions=P,
+        n_partitions=n_partitions,
         offsets=offsets,
         total_tokens=total_tokens,
-        # the merge widened every partition's block maxes to this avgdl
-        encode_avgdl=avgdl,
     )
     with open(os.path.join(index_dir, "meta.json"), "w") as f:
         f.write(meta.to_json())

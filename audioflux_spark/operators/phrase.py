@@ -62,10 +62,10 @@ def _decode_full(
 
     Doc ids are BLOCK-anchored (each block's first docID re-anchors its delta
     chain) rather than partial-anchored: block_firsts is then the only
-    absolute docID state in the whole row, which is what lets generation
-    compaction shift docID spaces without touching a single blob byte, and
-    lets a range's blocks decode straight from their per-block byte
-    offsets."""
+    absolute docID state in the whole row besides each partial's first
+    gap, which is what lets the merge shift a partition's docID space by
+    rewriting one varint per partial, and lets a range's blocks decode
+    straight from their per-block byte offsets."""
     counts = np.asarray(row["block_counts"], dtype=np.int64)
     firsts = np.asarray(row["block_firsts"], dtype=np.int64)
     bi = int(np.searchsorted(_block_ends(firsts, int(row["last_doc"])), lo, side="left"))

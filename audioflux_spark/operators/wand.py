@@ -419,7 +419,7 @@ def _serve_query(batches):
                 doc_ids, scores = wand_topk_kernel(
                     rows, n_docs, avgdl, k1, b, k,
                     idfs=[idf[r["term"]] for r in rows],
-                    ub_scale=_ub_scale(avgdl, gens[gi]["encode_avgdl"]),
+                    ub_scale=_ub_scale(avgdl, gens[gi]["avgdl"]),
                     doc_lo=lo, doc_hi=hi,
                 )
             if doc_ids.size:
@@ -483,7 +483,7 @@ def _task_params(
         "k1": reader.meta.k1, "b": reader.meta.b,
         "gens": [
             {
-                "encode_avgdl": g.meta.encode_avgdl or g.meta.avgdl,
+                "avgdl": g.meta.avgdl,
                 "segments": g.segment_files,
                 "docstore": g.docstore_parts,
             }

@@ -13,11 +13,12 @@ stft_algorithm.c:41,536-586 — new data appended without recomputing old):
 Query-time stats (N, avgdl, df) are summed across generations, so BM25
 scores stay EXACT global values — generations only partition the doc space.
 
-A build's docstore files hold partition-local row numbers as doc_id
-(``seg_id=<pid>/``); the generation's ``meta.offsets`` map them to global
-docIDs. ``docstore`` exposes the global doc_id, and ``docstore_parts``
-groups the files by the first global docID they hold, so a serving task
-reads only the files of its hits' partitions.
+Every index, built or compacted, has the build's layout: its docstore
+files hold partition-local row numbers as doc_id (``seg_id=<pid>/``), and
+the generation's ``meta.offsets`` map them to global docIDs. ``docstore``
+exposes the global doc_id, and ``docstore_parts`` groups the files by the
+first global docID they hold, so a serving task reads only the files of its
+hits' partitions.
 
 Each generation's segment and docstore files are listed once, at open, with
 their (size, mtime_ns) stamps. Every serving task reads only those files
@@ -69,25 +70,24 @@ class _Generation:
         )
         self.segment_files = _stamped_files(os.path.join(gen_dir, "segments"))
         files = _stamped_files(os.path.join(gen_dir, "docstore"))
+        # one file per partition, doc_id local to it. Older indexes whose
+        # docstore held global docIDs would be misread, so they are refused
         offsets = self.meta.offsets
-        if offsets:
-            # a build: one file per partition, doc_id local to it. Manifest
-            # entries without a row count come from builds whose docstore
-            # held global docIDs, which this mapping would misread
-            if any(not e.n for e in load_manifest(gen_dir).entries.values()):
-                raise RuntimeError(
-                    f"{gen_dir} was built before docstore files held "
-                    "partition-local docIDs; rebuild it with build_index(resume=True)"
-                )
-            docstore = docstore.withColumn(
-                "doc_id", F.col("doc_id") + F.element_at(F.lit(offsets), F.col("seg_id") + 1)
+        if not offsets:
+            raise RuntimeError(
+                f"{gen_dir} was compacted before compaction kept partition-local "
+                "docstore files; compact again with compact_index"
             )
-            pids = [int(os.path.basename(os.path.dirname(f[0]))[len("seg_id="):]) for f in files]
-            self.docstore_parts = sorted((offsets[p], [f]) for p, f in zip(pids, files))
-        else:
-            # a compacted index (offsets []): doc_id is global in every file
-            self.docstore_parts = [(0, files)] if files else []
-        self.docstore: DataFrame = docstore
+        if any(not e.n for e in load_manifest(gen_dir).entries.values()):
+            raise RuntimeError(
+                f"{gen_dir} was built before docstore files held "
+                "partition-local docIDs; rebuild it with build_index(resume=True)"
+            )
+        self.docstore: DataFrame = docstore.withColumn(
+            "doc_id", F.col("doc_id") + F.element_at(F.lit(offsets), F.col("seg_id") + 1)
+        )
+        pids = [int(os.path.basename(os.path.dirname(f[0]))[len("seg_id="):]) for f in files]
+        self.docstore_parts = sorted((offsets[p], [f]) for p, f in zip(pids, files))
 
 
 class IndexReader:

@@ -9,6 +9,8 @@ becomes an index *generation* — a complete mini-index built by the normal
 (resumable) build path — and the query layer sums stats across generations,
 so scores equal a from-scratch rebuild exactly (verified by
 tests/test_incremental.py rank-identity vs the oracle on the full corpus).
+Compaction folds the generations into the index a build of their
+partitions writes.
 
 Also provides a Structured Streaming sink: foreachBatch → add_generation,
 turning a stream of transcript files into a continuously-updated index.
@@ -16,12 +18,15 @@ turning a stream of transcript files into a continuously-updated index.
 
 from __future__ import annotations
 
+import dataclasses
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
 from audioflux_spark.config import DEFAULT, EngineConfig
-from audioflux_spark.operators.indexer import build_index
+from audioflux_spark.operators.indexer import build_index, commit_index
+from audioflux_spark.plans.checkpoint import PartitionEntry, load_manifest
 from audioflux_spark.sources.segments import GENERATIONS_SUBDIR, IndexReader
 
 
@@ -52,78 +57,36 @@ def compact_index(
     out_dir: str,
     cfg: EngineConfig = DEFAULT,
 ) -> IndexReader:
-    """Merge all generations into one serving base — WITHOUT re-tokenizing
-    and without rewriting a posting blob beyond its partials' first doc
-    gaps.
-
-    Generations accumulate (each query pays per-generation segment fetches);
-    Lucene answers this with forceMerge. Here the block-anchored format
-    makes compaction pure metadata arithmetic: every block's delta chain is
-    re-anchored by its stored first docID, so shifting a generation's docID
-    space is an offset added to first_doc, last_doc and block_firsts (and to
-    each partial's absolute first gap, so part_counts still decodes). The
-    build's exchange merge (_exchange_merge) reads each generation's segment
-    files through that shift (_read_partial) and concatenates the
-    per-generation rows per term in docID order (generation doc ranges are
-    disjoint after offsetting).
-
-    Writes a complete single-generation index at out_dir and returns a reader
-    over it. Rank-identity vs the multi-generation reader is exercised by
-    tests/test_incremental.py."""
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from audioflux_spark.operators.indexer import IndexMeta, _exchange_merge, _ub_scale
-    from audioflux_spark.plans.checkpoint import Manifest, save_manifest
-
+    """Fold all generations into one index at out_dir without re-tokenizing
+    (Lucene's forceMerge: each generation costs every query its segment
+    reads), and return a reader over it. The index is the one build_index
+    writes from the generations' partitions in generation order: a
+    partition's files hold local docIDs and block maxes under its own
+    avgdl, so partition p of generation g is copied unchanged as partition
+    Σ n_partitions of the earlier generations + p, its manifest entry
+    renumbered, and the build's commit (commit_index) merges segments/ and
+    writes meta.json last. Run again, a killed compaction starts over."""
     reader = IndexReader(spark, index_dir)
-    gens = reader.generations
-
     shutil.rmtree(out_dir, ignore_errors=True)
-    os.makedirs(out_dir, exist_ok=True)
-
-    combined_avgdl = reader.avgdl
-    inputs = []
-    ds_parts = []
-    off = 0
-    for g in gens:
-        # block maxes bound scores under THIS generation's avgdl; the
-        # compacted reader scores with the combined avgdl
-        scale = _ub_scale(combined_avgdl, g.meta.encode_avgdl or g.meta.avgdl)
-        inputs += [(path, off, scale) for path, _, _ in g.segment_files]
-        ds_parts.append(g.docstore.withColumn("doc_id", F.col("doc_id") + off))
-        off += g.meta.n_docs
-
-    from functools import reduce
-
-    Qf = max(cfg.index.build_partitions // 4, 1)
-    _exchange_merge(spark, out_dir, inputs, Qf)
-
-    ds_all = reduce(DataFrame.unionByName, ds_parts)
-    # range-partition + sort by doc_id: doc_id IN (...) lookups keep their
-    # row-group min/max pruning in the compacted docstore
-    (
-        ds_all.repartitionByRange(Qf, "doc_id")
-        .sortWithinPartitions("doc_id")
-        .write.mode("overwrite")
-        .parquet(os.path.join(out_dir, "docstore"))
-    )
-
-    meta = IndexMeta(
-        n_docs=reader.n_docs,
-        avgdl=combined_avgdl,
-        k1=cfg.bm25.k1,
-        b=cfg.bm25.b,
-        block_size=cfg.index.block_size,
-        n_partitions=sum(g.meta.n_partitions for g in gens),
-        offsets=[],  # compacted artifact: per-partition resume no longer applies
-        total_tokens=sum(g.meta.total_tokens for g in gens),
-        encode_avgdl=combined_avgdl,  # bounds were widened to this at compaction
-    )
-    with open(os.path.join(out_dir, "meta.json"), "w") as f:
-        f.write(meta.to_json())
-    save_manifest(out_dir, Manifest())  # serving artifact; lineage in gens' dirs
+    os.makedirs(os.path.join(out_dir, "docstore"))
+    entries: dict[int, PartitionEntry] = {}
+    first = 0
+    for g in reader.generations:
+        for p, e in load_manifest(g.dir).entries.items():
+            pid = first + p
+            for sub in ("docstore", "segments_partial"):
+                src = os.path.join(g.dir, sub, f"seg_id={p}")
+                if os.path.isdir(src):  # a tokenless partition has no partial
+                    shutil.copytree(
+                        src, os.path.join(out_dir, sub, f"seg_id={pid}"),
+                        copy_function=shutil.copyfile,
+                        ignore=shutil.ignore_patterns(".*"),  # staging files
+                    )
+            entries[pid] = dataclasses.replace(
+                e, partition_id=pid, output_path=f"segments_partial/seg_id={pid}"
+            )
+        first += g.meta.n_partitions
+    commit_index(spark, out_dir, entries, first, cfg)
     return IndexReader(spark, out_dir)
 
 

@@ -66,7 +66,6 @@ def inspect(index_dir: str) -> dict:
         out["meta"] = {
             "n_docs": meta.n_docs,
             "avgdl": meta.avgdl,
-            "encode_avgdl": meta.encode_avgdl,
             "total_tokens": meta.total_tokens,
             "k1": meta.k1,
             "b": meta.b,

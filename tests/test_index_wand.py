@@ -367,12 +367,9 @@ def test_manifest_lineage(index_dir, oracle):
     assert sum(e.n for e in m.entries.values()) == oracle.N
 
 
-def test_index_inspect_cli(index_dir):
-    """The observability CLI surfaces the manifest + meta faithfully: totals
-    equal the manifest sums, every partition row carries the lineage fields,
-    and a complete index reports no incomplete partitions."""
+def inspect_cli(index_dir: str) -> dict:
+    """scripts/index_inspect_cli.inspect over index_dir."""
     import importlib.util
-    import os
 
     spec = importlib.util.spec_from_file_location(
         "index_inspect_cli",
@@ -380,8 +377,14 @@ def test_index_inspect_cli(index_dir):
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
+    return mod.inspect(index_dir)
 
-    out = mod.inspect(index_dir)
+
+def test_index_inspect_cli(index_dir):
+    """The observability CLI surfaces the manifest + meta faithfully: totals
+    equal the manifest sums, every partition row carries the lineage fields,
+    and a complete index reports no incomplete partitions."""
+    out = inspect_cli(index_dir)
     m = load_manifest(index_dir)
     assert out["n_partitions_built"] == len(m.entries)
     assert out["incomplete_partitions"] == []
@@ -490,9 +493,9 @@ def _lineage_entry(batches):
 
 
 def test_partial_writer_rewrite_byte_identical(tmp_path, transcripts_pdf):
-    """A retried partial task rewrites the same files: one docstore file and
-    one partial file, the same bytes and lineage, and no temporary files
-    left behind; before writing it unpublishes the merged segments/. Given
+    """A retried partial task rewrites the same files: one docstore file, its
+    fingerprint marker and one partial file, the same bytes and lineage, and
+    no temporary files left behind; before writing it unpublishes the merged segments/. Given
     its own lineage as the manifest's entry, the task returns that row and
     writes and unpublishes nothing."""
     from audioflux_spark.operators import indexer
@@ -510,9 +513,9 @@ def test_partial_writer_rewrite_byte_identical(tmp_path, transcripts_pdf):
         lineage.append(_lineage_entry(list(write(iter([batch])))))
         assert os.path.isdir(tmp_path / "segments") == (i == 2)
         files = []
-        for sub in ("docstore", "segments_partial"):
+        for sub, extra in (("docstore", ["_fingerprint"]), ("segments_partial", [])):
             seg_dir = tmp_path / sub / "seg_id=3"
-            assert sorted(os.listdir(seg_dir)) == ["part-00000.parquet"]
+            assert sorted(os.listdir(seg_dir)) == extra + ["part-00000.parquet"]
             files.append(
                 ((seg_dir / "part-00000.parquet").read_bytes(),
                  os.stat(seg_dir / "part-00000.parquet").st_mtime_ns)
@@ -527,6 +530,7 @@ def test_partial_writer_rewrite_byte_identical(tmp_path, transcripts_pdf):
     assert e.output_path == "segments_partial/seg_id=3" and len(e.term_splits) == 3
     h = np.bitwise_xor.reduce(np.arange(300, dtype=np.int64) * 7919)
     assert e.input_fingerprint == f"300:{h}"
+    assert (tmp_path / "docstore" / "seg_id=3" / "_fingerprint").read_text() == e.input_fingerprint
     docs = pd.read_parquet(tmp_path / "docstore" / "seg_id=3")
     assert docs["doc_id"].tolist() == list(range(300))
     assert docs["conv_id"].tolist() == transcripts_pdf["conv_id"].head(300).tolist()
@@ -586,7 +590,7 @@ def test_resume_after_killed_partial_task(
         f.write(b"half-written")
 
     build_index(spark, transcripts_sdf, d2, cfg=CFG, resume=True)
-    assert sorted(os.listdir(seg_docs)) == ["part-00000.parquet"]
+    assert sorted(os.listdir(seg_docs)) == ["_fingerprint", "part-00000.parquet"]
     assert pid in load_manifest(d2).entries
     assert _segset(spark, d2) == _segset(spark, index_dir)
     reader = IndexReader(spark, d2)
@@ -740,7 +744,7 @@ def exchange_build(spark, transcripts_sdf, tmp_path_factory):
 
 def test_range_merge_matches_exchange(spark, index_dir, exchange_build, tmp_path):
     """The range merge and the exchange merge (used past the range merge's
-    limit; its writer also serves compaction), each reading the partial
+    limit), each reading the partial
     files through the same shift, give identical rows in every column,
     part_counts and block lists included: for the range-merged index and
     for the exchange-merged one."""

@@ -1,5 +1,5 @@
 """Round-2 operators: Baum-Welch training, doc-range-sharded WAND,
-byte-skipping, LSH banded dedup pairs, generation compaction,
+byte-skipping, LSH banded dedup pairs,
 ghost-partition resume cleanup, multimodal real-decoder path."""
 
 from __future__ import annotations
@@ -14,11 +14,9 @@ import pytest
 
 from audioflux_spark.config import EngineConfig, IndexConfig
 from audioflux_spark.operators.indexer import build_index
-from audioflux_spark.operators.phrase import bm25_topk_phrase
 from audioflux_spark.operators.sequence import GaussianHMM, baum_welch, hmm_fit
 from audioflux_spark.operators.wand import bm25_topk_many, wand_topk_kernel
 from audioflux_spark.sources.segments import IndexReader
-from tests.test_phrase import _brute_phrase_docs
 from tests.test_topk_exhaustive import assert_rank_identical
 
 # ------------------------------------------------------------- Baum-Welch
@@ -135,43 +133,6 @@ def test_lazy_block_decode_equals_full(pos_reader):
     ds, _cs = tb.candidates(0, int(row["last_doc"]) + 1)
     got = np.concatenate(ds)
     np.testing.assert_array_equal(got, want_docs)
-
-
-# -------------------------------------------------------------- compaction
-
-
-def test_compaction_rank_identity(spark, transcripts_pdf, tmp_path_factory, oracle, queries):
-    from audioflux_spark.streaming.incremental import add_generation, compact_index
-
-    base = str(tmp_path_factory.mktemp("compact") / "idx")
-    out = str(tmp_path_factory.mktemp("compact") / "compacted")
-    keys = sorted(transcripts_pdf["conv_id"].unique())
-    half = len(keys) // 2
-    first = transcripts_pdf[transcripts_pdf.conv_id.isin(keys[:half])]
-    second = transcripts_pdf[transcripts_pdf.conv_id.isin(keys[half:])]
-    cfg = EngineConfig(index=IndexConfig(block_size=32, build_partitions=4,
-                                         store_positions=True))
-    build_index(spark, spark.createDataFrame(first), base, cfg=cfg, resume=False)
-    multi = add_generation(spark, spark.createDataFrame(second), base, cfg=cfg)
-    assert len(multi.generations) == 2
-
-    compacted = compact_index(spark, base, out, cfg=cfg)
-    assert len(compacted.generations) == 1
-    assert compacted.meta.n_docs == oracle.N
-    assert abs(compacted.avgdl - oracle.avgdl) < 1e-9
-
-    from tests.test_index_wand import assert_indexed_matches_oracle
-
-    assert_indexed_matches_oracle(compacted, oracle, queries[:6])
-
-    # phrase queries survive compaction (positions + block re-anchoring)
-    import re
-
-    toks = re.findall("[a-z0-9_]+", transcripts_pdf.iloc[0]["text"].lower())
-    phrase_terms = toks[:2]
-    want_docs = _brute_phrase_docs(transcripts_pdf, phrase_terms)
-    got = bm25_topk_phrase(compacted, " ".join(phrase_terms), k=len(want_docs) + 50).toPandas()
-    assert set(zip(got["conv_id"], got["turn_idx"].astype(int))) == want_docs
 
 
 # ------------------------------------------------------------ ghost cleanup
