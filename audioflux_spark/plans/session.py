@@ -5,6 +5,13 @@ heuristic in one spot too — /root/reference/src/stft_algorithm.c:96-104).
 AQE on for runtime coalesce + skew-join; Arrow on for all pandas UDF
 exchanges; shuffle partitions sized to cores locally (on a real cluster this
 would be ~2-3x total cores and AQE coalesces down).
+
+Python workers are forked from ``plans/daemon.py``, set here as PySpark's
+daemon (``spark.python.daemon.module``). It imports the engine's worker-side
+modules once and freezes that heap before any fork, so a reused worker's
+per-task ``gc.collect()`` walks only the task's own garbage instead of ~76k
+import-time objects (see ``plans/pyworker.py``). Workers must therefore be
+able to import this package; sessions not built here keep PySpark's daemon.
 """
 
 from __future__ import annotations
@@ -46,6 +53,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.python.daemon.module", "audioflux_spark.plans.daemon")
     )
     if extra_conf:
         for k, v in extra_conf.items():

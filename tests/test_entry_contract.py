@@ -4,11 +4,15 @@ column names, and order-insensitive values — the driver's own gate."""
 
 from __future__ import annotations
 
+import os
+
 import duckdb
+import numpy as np
 import pandas as pd
 import pytest
 
 import __spark_entry__ as entry_mod
+import audioflux_spark.entry_queries as eq
 
 SF_DIR = "/root/testdata/sf0.01"
 TABLES = [
@@ -124,9 +128,6 @@ def test_materialized_artifact_reuse(spark):
     persist caches dropped — must reuse the artifact (manifest untouched)
     and return identical values."""
     import glob
-    import os
-
-    import audioflux_spark.entry_queries as eq
 
     q = entry_mod.queries()["dedup_shingle_jaccard"]
     first = _normalize(q(spark, SF_DIR).toPandas())
@@ -355,3 +356,134 @@ def test_semdedup_planted_exact_duplicates(spark, tmp_path_factory):
     # with equal centroid cosine and smaller vec_id precedes them)
     for ids in triples:
         assert got[ids[1]] == 0 and got[ids[2]] == 0
+
+
+# ---- registry rewrites: each pins the equivalence an operator rewrite
+# relies on, on the sf0.001 tables (beyond the DuckDB parity sweep above)
+
+SF_SMALL = os.path.join(os.path.dirname(eq.ORACLE_SF_DIR), "sf0.001")
+
+
+def test_doc_lens_matches_doc_len_col(spark):
+    """The _doc_lens spine (Σtf over the _doc_tf artifact, left-joined to
+    the doc_id spine) must equal doc_len_col for every document — the
+    invariant every r6 length-consumer swap rests on."""
+    from audioflux_spark.functions.analyzer import doc_len_col
+
+    got = (
+        eq._doc_lens(spark, SF_SMALL)
+        .toPandas()
+        .set_index("doc_id")["len"]
+        .sort_index()
+    )
+    want = (
+        eq._docs(spark, SF_SMALL)
+        .select("doc_id", doc_len_col("text").cast("long").alias("len"))
+        .toPandas()
+        .set_index("doc_id")["len"]
+        .sort_index()
+    )
+    assert got.equals(want)
+    assert len(got) == eq._docs(spark, SF_SMALL).count()  # token-less docs kept
+
+
+def _brute_pairs(vec, tau):
+    """Independent per-pair cosine (np.dot per pair — different summation
+    order than the kernel's BLAS matmul) over the same bucketing."""
+    exp = []
+    for _, grp in vec.groupby("bucket"):
+        grp = grp.sort_values("vec_id")
+        ids = grp["vec_id"].to_numpy()
+        X = np.stack(grp["embedding"].to_numpy()).astype(np.float64)
+        nrm = np.sqrt((X * X).sum(axis=1))
+        for i in range(len(ids)):
+            for j in range(i + 1, len(ids)):
+                c = float(np.dot(X[i], X[j])) / (nrm[i] * nrm[j])
+                ce6 = int(np.floor(c * 1e6 + 0.5))
+                if ce6 >= tau:
+                    exp.append((int(ids[i]), int(ids[j]), ce6))
+    return sorted(exp)
+
+
+def test_emb_dup_pairs_match_bruteforce(spark):
+    """The per-bucket Gram kernel must emit exactly the pairs an
+    independent per-pair cosine finds (same τ filter, same rounding)."""
+    reader = eq._ivf_reader(spark, SF_SMALL)
+    vec = reader.vectors.select("bucket", "vec_id", "embedding").toPandas()
+    tau = int(eq.EMB_NEAR_DUP_TAU * 1e6)
+    got = sorted(
+        tuple(r)
+        for r in eq._emb_dup_pairs(spark, SF_SMALL)
+        .toPandas()
+        .itertuples(index=False)
+    )
+    assert got == _brute_pairs(vec, tau)
+    assert len(got) > 0  # the fixture plants near-duplicates
+
+
+def test_emb_dup_pairs_block_boundary(spark, monkeypatch):
+    """Shrinking the Gram row-block below every bucket size must not change
+    the pair set: blocks partition rows, the upper-triangle mask uses
+    global indices, so boundary pairs appear exactly once."""
+    big = eq._emb_dup_pairs(spark, SF_SMALL).toPandas()
+    monkeypatch.setattr(eq, "_GRAM_BLK", 7)
+    small = eq._emb_dup_pairs(spark, SF_SMALL).toPandas()
+    key = ["vec_id_a", "vec_id_b", "cos_e6"]
+    assert sorted(map(tuple, big[key].itertuples(index=False))) == sorted(
+        map(tuple, small[key].itertuples(index=False))
+    )
+
+
+def test_simhash_tf_weighting_matches_occurrences(spark):
+    """The tf-weighted bit sums must equal per-occurrence ±1 sums: rebuild
+    the signature from the exploded token table and compare bands."""
+    from pyspark.sql import functions as F
+
+    got = eq.queries()["dedup_simhash"](spark, SF_SMALL).toPandas()
+
+    tok = (
+        eq._doc_tokens(spark, SF_SMALL)
+        .withColumn("h1", F.md5("term"))
+        .withColumn("h2", F.md5(F.concat(F.lit("simhash2|"), F.col("term"))))
+    )
+
+    def bit_src(b):
+        col, off = ("h1", b) if b < 32 else ("h2", b - 32)
+        return F.when(
+            F.ascii(F.substring(col, off + 1, 1)) % 2 == 1, 1
+        ).otherwise(-1)
+
+    agg = tok.groupBy("doc_id").agg(
+        *[F.sum(bit_src(b)).alias(f"s{b}") for b in range(eq.N_SIMHASH_BITS)]
+    )
+    bands = []
+    for j in range(eq.SIMHASH_BANDS):
+        v = None
+        for i in range(16):
+            b = 16 * j + i
+            bit = F.when(F.col(f"s{b}") > 0, F.lit(1 << i)).otherwise(F.lit(0))
+            v = bit if v is None else v + bit
+        bands.append(v.cast("long").alias(f"sim{j}"))
+    want = agg.select("doc_id", *bands).orderBy("doc_id").toPandas()
+    assert got.reset_index(drop=True).equals(want.reset_index(drop=True))
+
+
+def test_session_cache_evicts_on_corpus_change(spark, tmp_path):
+    """Regenerating a corpus dir in place must invalidate the in-session
+    cached subtrees (the r6 corpus-fingerprint key), not serve stale rows."""
+    import shutil
+
+    d = tmp_path / "corpus"
+    d.mkdir()
+    shutil.copy(f"{SF_SMALL}/documents.parquet", d / "documents.parquet")
+    sf = str(d)
+    first = eq._doc_lens(spark, sf)
+    n1 = first.count()
+    again = eq._doc_lens(spark, sf)
+    assert again is first  # cache hit while the corpus is unchanged
+    # regenerate in place: halve the corpus (different size => new fingerprint)
+    pdf = pd.read_parquet(d / "documents.parquet")
+    pdf.iloc[: len(pdf) // 2].to_parquet(d / "documents.parquet", index=False)
+    rebuilt = eq._doc_lens(spark, sf)
+    assert rebuilt is not first
+    assert rebuilt.count() == len(pdf) // 2 != n1

@@ -263,6 +263,34 @@ def test_batch_rows_equal_single_query_rows(reader, queries):
             assert got == want, (text, shard_docs)
 
 
+def test_serving_refuses_rebuilt_index(spark, transcripts_sdf, tmp_path):
+    """A reader lists its files with their stamps at open; once the index
+    directory is rebuilt under it, the next single query, batch or phrase
+    query raises instead of reading the new files, and a reader opened
+    afterwards serves again."""
+    from audioflux_spark.operators.phrase import bm25_topk_phrase
+
+    d = str(tmp_path / "idx")
+    cfg = EngineConfig(index=IndexConfig(store_positions=True))
+    small = transcripts_sdf.limit(300)
+    build_index(spark, small, d, cfg=cfg)
+    reader = IndexReader(spark, d)
+    want = bm25_topk_indexed(reader, "hotterm", 5).collect()
+    assert want
+    batch = [("a", "hotterm", 5), ("b", "tie hotterm", 3)]
+    assert bm25_topk_many(reader, batch).collect()
+    assert bm25_topk_phrase(reader, "hotterm", 5).collect()
+    build_index(spark, small, d, cfg=cfg, resume=False)
+    stale = "changed or vanished since its IndexReader opened"
+    with pytest.raises(Exception, match=stale):
+        bm25_topk_indexed(reader, "hotterm", 5).collect()
+    with pytest.raises(Exception, match=stale):
+        bm25_topk_many(reader, batch).collect()
+    with pytest.raises(Exception, match=stale):
+        bm25_topk_phrase(reader, "hotterm", 5).collect()
+    assert bm25_topk_indexed(IndexReader(spark, d), "hotterm", 5).collect() == want
+
+
 def test_wide_batch_in_one_task_rank_identity(reader, oracle):
     """A batch served by ONE task whose queries hold more than 64 distinct
     terms (the task's term filter is then isin, not an OR of equalities),

@@ -1,8 +1,11 @@
 """plans/pyworker.py against the real zipimport machinery (no Spark): after
 ``importlib.invalidate_caches()`` an unchanged archive keeps its directory,
 a changed one is read again, and the install is a no-op where CPython
-already invalidates lazily. Also: every build and serving kernel, unpickled
-in a fresh interpreter, imports the package (and so installs the patch)."""
+already invalidates lazily. Every build and serving kernel, unpickled in a
+fresh interpreter, imports the package (and so installs the patch), which
+sessions that keep PySpark's daemon rely on. ``freeze_imports`` freezes the
+import-time heap, and a ``get_spark`` session's workers are forked from
+``plans/daemon.py`` with that heap already imported and frozen."""
 
 from __future__ import annotations
 
@@ -156,3 +159,49 @@ def test_kernel_unpickle_installs_patch(name):
     ).stdout.decode().split()
     assert out[0] == "True"
     assert out[1] == str(sys.version_info < (3, 12))
+
+
+def test_freeze_imports_moves_import_heap_to_permanent_generation():
+    probe = (
+        "import gc; from audioflux_spark.plans import pyworker; "
+        "before = len(gc.get_objects()); pyworker.freeze_imports(); "
+        "print(gc.get_freeze_count(), before, len(gc.get_objects()))"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    frozen, before, after = map(int, subprocess.run(
+        [sys.executable, "-c", probe], capture_output=True, cwd=root, check=True,
+        timeout=120,
+    ).stdout.decode().split())
+    assert frozen > before > after
+
+
+def test_session_workers_fork_from_frozen_daemon(spark):
+    """A task of a ``get_spark`` session starts in a worker forked from
+    ``plans/daemon.py``: the worker-side modules are imported before the task
+    is, and the import-time heap is frozen, so the collection the daemon runs
+    after each task walks only that task's objects."""
+    import json
+
+    def probe(batches):
+        import gc
+        import sys
+
+        import pyarrow as pa
+
+        preloaded = [m in sys.modules for m in ("pyarrow.dataset", "audioflux_spark.operators.wand")]
+        for _ in batches:
+            pass
+        yield pa.RecordBatch.from_pylist([{"r": json.dumps({
+            "frozen": gc.get_freeze_count(),
+            "tracked": len(gc.get_objects()),
+            "argv": sys.orig_argv,
+            "preloaded": preloaded,
+        })}])
+
+    got = json.loads(spark.range(0, 1, 1, 1).mapInArrow(probe, "r string").collect()[0].r)
+    # runpy points sys.argv[0] at pyspark/daemon.py; the command line keeps the module
+    i = got["argv"].index("-m")
+    assert got["argv"][i + 1] == "audioflux_spark.plans.daemon"
+    assert got["preloaded"] == [True, True]
+    assert got["frozen"] > 0
+    assert got["tracked"] < got["frozen"] // 10

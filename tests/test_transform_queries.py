@@ -16,6 +16,8 @@ import pytest
 
 from audioflux_spark import entry_queries as eq
 
+SF_SMALL = os.path.join(os.path.dirname(eq.ORACLE_SF_DIR), "sf0.001")
+
 
 @pytest.fixture(scope="module")
 def tiny_dir(tmp_path_factory):
@@ -108,6 +110,50 @@ def test_hps_picks_fundamental(spark, tiny_dir):
     # doc 1 has 6 distinct terms -> k in {1,2} candidates exist, all ln(1)=0
     row1 = out[out.doc_id == 1].iloc[0]
     assert int(row1.pitch_k) == 1 and int(row1.hps_log_e6) == 0
+
+
+def test_doc_hps_array_fold_matches_window_rank(spark):
+    """The array_sort fold must reproduce the (tf desc, term asc) rank
+    order the old row_number window produced — re-derive doc_hps with an
+    explicit window formulation and compare values."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.window import Window
+
+    got = eq.queries()["doc_hps"](spark, SF_SMALL).toPandas()
+
+    tf = eq._doc_tf(spark, SF_SMALL).select(
+        "doc_id", "term", F.col("tf").cast("double").alias("s")
+    )
+    w = Window.partitionBy("doc_id").orderBy(F.desc("s"), "term")
+    ranked = tf.withColumn("r", F.row_number().over(w))
+    sp = ranked.groupBy("doc_id").agg(
+        F.array_sort(
+            F.collect_list(F.struct(F.col("r"), F.log("s").alias("ls")))
+        ).alias("sp")
+    )
+    ls = lambda k: F.element_at(F.col("sp"), k)["ls"]  # noqa: E731
+    cand = F.sequence(F.lit(1), (F.size("sp") / 3).cast("int"))
+    hps = F.transform(
+        cand,
+        lambda k: F.struct(
+            F.round((ls(k) + ls(k * 2) + ls(k * 3)) * 1e6)
+            .cast("long")
+            .alias("L"),
+            (-k).alias("negk"),
+        ),
+    )
+    best = F.array_max(hps)
+    want = (
+        sp.filter(F.size("sp") >= 3)
+        .select(
+            "doc_id",
+            (-best["negk"]).cast("long").alias("pitch_k"),
+            best["L"].alias("hps_log_e6"),
+        )
+        .orderBy("doc_id")
+        .toPandas()
+    )
+    assert got.reset_index(drop=True).equals(want.reset_index(drop=True))
 
 
 def test_analyzer_axes_jvm_pandas_parity(spark):
