@@ -68,55 +68,114 @@ def _e6(col) -> F.Column:
     return F.round(col * F.lit(1000000.0)).cast("long")
 
 
-def _session_cached(cache: dict, spark: SparkSession, sf_dir: str, build):
-    """Materialize-once cache keyed by (owning session, corpus dir, corpus
-    fingerprint).
+# ------------------------------------------------------------ artifact cache
 
-    A cached DataFrame's plan is bound to the SparkSession that created it;
-    if that session was stopped and a new one created in the same process
-    (multi-fixture test runs, driver re-init), replaying the cached plan
-    fails against a dead session. Entries therefore record their owner and
-    are rebuilt (old persist evicted best-effort) whenever the caller's
-    session differs — and, r6, whenever the corpus fingerprint changes
-    (documents.parquet size+mtime): regenerating a corpus dir in place
-    mid-session would otherwise keep serving the old corpus's persisted
-    rows. One os.stat per lookup; entries for a stale fingerprint are
-    evicted, so the cache stays bounded by live (dir, fingerprint) pairs."""
-    key = f"{sf_dir}|{_corpus_fp(sf_dir)}"
-    ent = cache.get(key)
+_MAT_ROOT = "/tmp/afspark_entry_idx"
+
+# (sf_dir, artifact name) -> (owning session, source fingerprint, value)
+_ARTIFACTS: dict[tuple[str, str], tuple[SparkSession, str, object]] = {}
+
+
+def _source_fp(sf_dir: str, table: str) -> str:
+    """Size and st_mtime_ns of every file under sf_dir/table: regenerating
+    the table in place changes it. Not cryptographic."""
+    root = os.path.join(sf_dir, table)
+    files = [root] if os.path.isfile(root) else sorted(
+        os.path.join(d, f) for d, _, fs in os.walk(root) for f in fs
+    )
+    return ";".join(
+        f"{st.st_size}:{st.st_mtime_ns}" for st in map(os.stat, files)
+    ) or "absent"
+
+
+def _cached(
+    spark: SparkSession, sf_dir: str, name: str, build,
+    source: str = "documents.parquet", params: str = "",
+):
+    """The registry's one artifact cache. An entry hits only while its
+    owning session and the fingerprint of its own source table both match:
+    a cached plan is bound to the session that made it, and a corpus
+    regenerated in place must never serve the old rows. On a miss the
+    entry's old persist is dropped (a replaced session's died with it) and
+    `build(path)` runs; `path` is the entry's on-disk home
+    `_MAT_ROOT/<name>_<md5(sf_dir, params, fingerprint)>`, so a new corpus
+    gets a new directory and a new process with the same corpus finds the
+    old one. A DataFrame the layer caches is persisted MEMORY_AND_DISK."""
+    from pyspark import StorageLevel
+
+    fp = _source_fp(sf_dir, source)
+    ent = _ARTIFACTS.get((sf_dir, name))
     if ent is not None and ent[0] is spark:
-        return ent[1]
-    stale = [k for k in cache if k.startswith(f"{sf_dir}|")]
-    for k in stale:
-        try:
-            cache.pop(k)[1].unpersist()
-        except Exception:
-            pass  # previous session already stopped; its cache died with it
-    df = build()
-    cache[key] = (spark, df)
-    return df
+        if ent[1] == fp:
+            return ent[2]
+        if isinstance(ent[2], DataFrame):
+            ent[2].unpersist()
+    tag = hashlib.md5(f"{sf_dir}:{params}:{fp}".encode()).hexdigest()[:10]
+    value = build(os.path.join(_MAT_ROOT, f"{name}_{tag}"))
+    if isinstance(value, DataFrame):
+        value = value.persist(StorageLevel.MEMORY_AND_DISK)
+    _ARTIFACTS[(sf_dir, name)] = (spark, fp, value)
+    return value
 
 
-_READERS: dict[str, tuple[SparkSession, IndexReader]] = {}
+def _publish_table(path: str, write, manifest: dict) -> str:
+    """Publish a table artifact at `path` once and return its data dir.
+    `write(dir)` fills a uniquely named temp directory, the manifest goes
+    in beside it, and the whole directory is renamed into place, so `path`
+    exists only complete. When two writers race, the rename of the second
+    fails on the first's directory: it drops its own and reads the
+    winner's."""
+    import json
+    import shutil
+    import uuid
+
+    data = os.path.join(path, "data")
+    if os.path.isdir(path):
+        return data
+    tmp = f"{path}.tmp-{uuid.uuid4().hex}"
+    try:
+        write(os.path.join(tmp, "data"))
+        with open(os.path.join(tmp, "manifest.json"), "w") as f:
+            json.dump(manifest, f)
+        os.rename(tmp, path)
+    except OSError:
+        if not os.path.isdir(path):
+            raise
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    return data
+
+
+def _table(spark: SparkSession, sf_dir: str, name: str, params: str, compute) -> DataFrame:
+    """A shared subtree of the registry as an on-disk per-corpus parquet
+    artifact (the segments/IVF discipline), computed once and read back by
+    every later session and process, then persisted in this one. `params`
+    joins the path tag, so changing the subtree's parameters never serves
+    an old artifact."""
+
+    def build(path: str) -> DataFrame:
+        data = _publish_table(
+            path, lambda d: compute().write.parquet(d),
+            {"name": name, "source": sf_dir, "params": params},
+        )
+        return spark.read.parquet(data)
+
+    return _cached(spark, sf_dir, f"mat_{name}", build, params=params)
 
 
 _ENTRY_CFG = EngineConfig(index=IndexConfig(store_positions=True))
 
 
 def _reader(spark: SparkSession, sf_dir: str) -> IndexReader:
-    """Build (once per sf_dir, resumable) a POSITIONAL index over documents-
-    as-transcripts; cached across queries in the same session (re-opened if
-    the owning session was replaced — the on-disk index itself is reused)."""
-    ent = _READERS.get(sf_dir)
-    if ent is not None and ent[0] is spark:
-        return ent[1]
-    tag = hashlib.md5(f"{sf_dir}:fmt5pos".encode()).hexdigest()[:10]
-    idx = os.path.join("/tmp/afspark_entry_idx", tag)
-    t = documents_as_transcripts(spark, sf_dir)
-    build_index(spark, t, idx, cfg=_ENTRY_CFG, resume=True)
-    reader = IndexReader(spark, idx)
-    _READERS[sf_dir] = (spark, reader)
-    return reader
+    """A POSITIONAL index over documents-as-transcripts, built once per
+    corpus (resumable) and opened once per session."""
+
+    def build(path: str) -> IndexReader:
+        t = documents_as_transcripts(spark, sf_dir)
+        build_index(spark, t, path, cfg=_ENTRY_CFG, resume=True)
+        return IndexReader(spark, path)
+
+    return _cached(spark, sf_dir, "bm25", build, params="fmt5pos")
 
 
 def _topk_to_docids(df: DataFrame) -> DataFrame:
@@ -212,21 +271,14 @@ def q_bm25_topk_lang_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_INCR_READERS: dict[str, tuple[SparkSession, IndexReader, IndexReader]] = {}
-
-
 def _incr_readers(spark: SparkSession, sf_dir: str) -> tuple[IndexReader, IndexReader]:
     """(two-generation reader, compacted reader) over the documents corpus
     split in half by doc_id — the incremental-maintenance correctness rig:
     generations and compaction must both answer EXACTLY like a one-shot
-    build (and therefore like the SQL oracle on the full corpus). Cached per
-    (session, sf_dir); the on-disk index is reused across sessions."""
-    ent = _INCR_READERS.get(sf_dir)
-    if ent is None or ent[0] is not spark:
-        from audioflux_spark.streaming.incremental import add_generation, compact_index
+    build (and therefore like the SQL oracle on the full corpus)."""
+    from audioflux_spark.streaming.incremental import add_generation, compact_index
 
-        tag = hashlib.md5(f"{sf_dir}:incr-fmt6".encode()).hexdigest()[:10]
-        base = os.path.join("/tmp/afspark_entry_idx", f"incr_{tag}")
+    def build(base: str) -> tuple[IndexReader, IndexReader]:
         compacted = base + "_compacted"
         first = documents_as_transcripts(spark, sf_dir, where="doc_id % 2 = 0")
         second = documents_as_transcripts(spark, sf_dir, where="doc_id % 2 = 1")
@@ -251,8 +303,9 @@ def _incr_readers(spark: SparkSession, sf_dir: str) -> tuple[IndexReader, IndexR
             comp = compact_index(spark, base, compacted, cfg=_ENTRY_CFG)
         else:
             comp = IndexReader(spark, compacted)
-        _INCR_READERS[sf_dir] = (spark, multi, comp)
-    return _INCR_READERS[sf_dir][1], _INCR_READERS[sf_dir][2]
+        return multi, comp
+
+    return _cached(spark, sf_dir, "incr", build, params="incr-fmt6")
 
 
 def q_bm25_topk_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -463,10 +516,6 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DTOK_CACHE: dict[str, tuple[SparkSession, DataFrame]] = {}
-_DOC_TF_CACHE: dict[str, tuple[SparkSession, DataFrame]] = {}
-
-
 def _doc_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document term frequencies (doc_id, term, tf) — the shared input
     of the tf-spectrum family (doc_hps, term_entropy, term_doc_freqs) and,
@@ -475,21 +524,12 @@ def _doc_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
     discipline): each consumer otherwise re-runs the full tokenize +
     explode + aggregate corpus pass. At 100 TB this is the canonical
     token-count table a corpus snapshot ships alongside the index."""
-    from pyspark import StorageLevel
-
-    def compute() -> DataFrame:
-        return _doc_tokens(spark, sf_dir).groupBy("doc_id", "term").agg(
+    return _table(
+        spark, sf_dir, "doc_tf", "v1",
+        lambda: _doc_tokens(spark, sf_dir).groupBy("doc_id", "term").agg(
             F.count(F.lit(1)).alias("tf")
-        )
-
-    def build() -> DataFrame:
-        art = _materialized_table(spark, sf_dir, "doc_tf", "v1", compute)
-        return art.persist(StorageLevel.MEMORY_AND_DISK)
-
-    return _session_cached(_DOC_TF_CACHE, spark, sf_dir, build)
-
-
-_DLEN_CACHE: dict[str, tuple[SparkSession, DataFrame]] = {}
+        ),
+    )
 
 
 def _doc_lens(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -502,9 +542,8 @@ def _doc_lens(spark: SparkSession, sf_dir: str) -> DataFrame:
     pack/stratified/source-mix trio each paid 1-2 full tokenize scans).
     Session-cached like the sibling _distinct_tokens spine — pack_windows
     alone executes it twice per call (bucket totals + cumsum passes)."""
-    from pyspark import StorageLevel
 
-    def build() -> DataFrame:
+    def build(_path: str) -> DataFrame:
         lens = _doc_tf(spark, sf_dir).groupBy("doc_id").agg(
             F.sum("tf").alias("len")
         )
@@ -516,23 +555,18 @@ def _doc_lens(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "doc_id",
                 F.coalesce(F.col("len"), F.lit(0)).cast("long").alias("len"),
             )
-            .persist(StorageLevel.MEMORY_AND_DISK)
         )
 
-    return _session_cached(_DLEN_CACHE, spark, sf_dir, build)
+    return _cached(spark, sf_dir, "doc_lens", build)
 
 
 def _distinct_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct (doc_id, term) pairs — the tf artifact's key set (the
     novelty query's consecutive-doc Jaccard references this table four
     times: two join sides + sizes)."""
-    from pyspark import StorageLevel
-
-    return _session_cached(
-        _DTOK_CACHE, spark, sf_dir,
-        lambda: _doc_tf(spark, sf_dir)
-        .select("doc_id", "term")
-        .persist(StorageLevel.MEMORY_AND_DISK),
+    return _cached(
+        spark, sf_dir, "distinct_tokens",
+        lambda _path: _doc_tf(spark, sf_dir).select("doc_id", "term"),
     )
 
 
@@ -653,9 +687,6 @@ def q_doc_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_LM_DK_CACHE: dict[str, tuple[SparkSession, DataFrame]] = {}
-
-
 def _lm_dk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, w1, w2, k): per-doc bigram counts — the ONE corpus pass the
     whole bigram-LM family derives from (on-disk artifact + session
@@ -663,7 +694,6 @@ def _lm_dk(spark: SparkSession, sf_dir: str) -> DataFrame:
     out of this table, so an unpersisted plan would re-run the
     tokenize+explode scan once per model branch — 3 corpus scans, counted
     via `.explain`)."""
-    from pyspark import StorageLevel
 
     def compute() -> DataFrame:
         toks = _docs(spark, sf_dir).select(
@@ -687,11 +717,7 @@ def _lm_dk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("k")
         )
 
-    def build() -> DataFrame:
-        art = _materialized_table(spark, sf_dir, "lm_dk", "bigram", compute)
-        return art.persist(StorageLevel.MEMORY_AND_DISK)
-
-    return _session_cached(_LM_DK_CACHE, spark, sf_dir, build)
+    return _table(spark, sf_dir, "lm_dk", "bigram", compute)
 
 
 def q_doc_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -802,9 +828,6 @@ def q_doc_ccnet_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
 DSIR_B = 256            # hashed feature buckets (model size bound)
 DSIR_TARGET_LANG = "en"  # the 'target distribution' split
 
-_DSIR_CACHE: dict[str, tuple[SparkSession, DataFrame]] = {}
-
-
 def _dsir_doc_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, lang, b, k): per-doc hashed-feature bucket counts — the ONE
     corpus pass every DSIR branch (raw model, target model, doc scoring)
@@ -812,9 +835,8 @@ def _dsir_doc_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     it Catalyst re-runs tokenize+explode+hash once per branch — 10 corpus
     scans in the un-persisted plan. Size ≈ docs × min(doc feats, B), far
     smaller than the exploded feature stream."""
-    from pyspark import StorageLevel
 
-    def build() -> DataFrame:
+    def build(_path: str) -> DataFrame:
         toks = _docs(spark, sf_dir).select(
             "doc_id", "lang", tokens_col("text").alias("toks")
         )
@@ -845,10 +867,9 @@ def _dsir_doc_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
             + F.ascii(F.substring(m, 3, 1))
         ) % DSIR_B
         fb = feats.select("doc_id", "lang", bucket.cast("long").alias("b"))
-        dk = fb.groupBy("doc_id", "lang", "b").agg(F.count(F.lit(1)).alias("k"))
-        return dk.persist(StorageLevel.MEMORY_AND_DISK)
+        return fb.groupBy("doc_id", "lang", "b").agg(F.count(F.lit(1)).alias("k"))
 
-    return _session_cached(_DSIR_CACHE, spark, sf_dir, build)
+    return _cached(spark, sf_dir, "dsir_doc_buckets", build)
 
 
 def q_doc_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1055,63 +1076,6 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MAT_VERSION = 1
-_MAT_ROOT = "/tmp/afspark_entry_idx"
-
-
-def _corpus_fp(sf_dir: str) -> str:
-    """Cheap content fingerprint of the corpus dir: size+mtime of
-    documents.parquet (the table every materialized artifact derives from).
-    Not cryptographic — it exists so an in-place regeneration of sf_dir
-    changes every artifact path tag."""
-    p = os.path.join(sf_dir, "documents.parquet")
-    try:
-        st = os.stat(p)
-        return f"{st.st_size}:{int(st.st_mtime)}"
-    except OSError:
-        return "absent"
-
-
-def _materialized_table(
-    spark: SparkSession, sf_dir: str, name: str, params: str, build
-) -> DataFrame:
-    """On-disk per-corpus artifact for a shared subtree (the segments/IVF
-    discipline): computed once, written as parquet + a manifest, and read
-    back by every later session — dedup-family speedups survive across
-    processes instead of living only in one session's persist cache.
-
-    The manifest is the LAST write (same resume rule as the index builder):
-    its absence marks a half-built artifact, which is rebuilt. `params`
-    participates in the path tag so changing shingling/LSH parameters can
-    never serve a stale artifact, and so does a cheap corpus fingerprint
-    (documents.parquet size+mtime — ADVICE r5): regenerating the data at
-    sf_dir in place now invalidates every derived artifact instead of
-    silently serving the old corpus's rows."""
-    import json as _json
-
-    tag = hashlib.md5(
-        f"{sf_dir}:{name}:{params}:v{_MAT_VERSION}:{_corpus_fp(sf_dir)}".encode()
-    ).hexdigest()[:10]
-    path = os.path.join(_MAT_ROOT, f"mat_{name}_{tag}")
-    manifest = os.path.join(path, "manifest.json")
-    data = os.path.join(path, "data")
-    if not os.path.exists(manifest):
-        df = build()
-        df.write.mode("overwrite").parquet(data)
-        n = spark.read.parquet(data).count()
-        with open(manifest + ".tmp", "w") as f:
-            _json.dump(
-                {"name": name, "source": sf_dir, "params": params,
-                 "rows": n, "version": _MAT_VERSION},
-                f,
-            )
-        os.replace(manifest + ".tmp", manifest)
-    return spark.read.parquet(data)
-
-
-_SHINGLE_CACHE: dict[str, tuple[SparkSession, DataFrame]] = {}
-
-
 def _shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct 3-token shingles per doc, built JVM-side (no Python).
 
@@ -1122,7 +1086,6 @@ def _shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     At corpus scale this table is written once per snapshot (the segments /
     IVF-artifact discipline); here MEMORY_AND_DISK persistence is the
     in-process equivalent."""
-    from pyspark import StorageLevel
 
     def compute() -> DataFrame:
         toks = _docs(spark, sf_dir).select(
@@ -1142,11 +1105,7 @@ def _shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
         )
 
-    def build() -> DataFrame:
-        art = _materialized_table(spark, sf_dir, "shingles", "w3", compute)
-        return art.persist(StorageLevel.MEMORY_AND_DISK)
-
-    return _session_cached(_SHINGLE_CACHE, spark, sf_dir, build)
+    return _table(spark, sf_dir, "shingles", "w3", compute)
 
 
 N_MINHASH = 8
@@ -1236,9 +1195,6 @@ def _jaccard_on_pairs(spark: SparkSession, sf_dir: str, pairs: DataFrame) -> Dat
     )
 
 
-_SCORED_PAIRS_CACHE: dict[str, tuple[SparkSession, DataFrame]] = {}
-
-
 def _scored_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The shared LSH-candidate → exact-Jaccard table, materialized once per
     corpus dir: three queries (top-k ranking, full pair list, canonicalize)
@@ -1246,20 +1202,10 @@ def _scored_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     `scored` CTE, and without persistence the Spark side re-ran the banding
     self-join + verify once per downstream branch (6x inside
     dedup_canonical's label propagation)."""
-    from pyspark import StorageLevel
-
-    def compute() -> DataFrame:
-        pairs = _lsh_candidate_pairs(spark, sf_dir)
-        return _jaccard_on_pairs(spark, sf_dir, pairs)
-
-    def build() -> DataFrame:
-        art = _materialized_table(
-            spark, sf_dir, "scored_pairs",
-            f"mh{N_MINHASH}b{N_BANDS}cap{MAX_BUCKET}", compute,
-        )
-        return art.persist(StorageLevel.MEMORY_AND_DISK)
-
-    return _session_cached(_SCORED_PAIRS_CACHE, spark, sf_dir, build)
+    return _table(
+        spark, sf_dir, "scored_pairs", f"mh{N_MINHASH}b{N_BANDS}cap{MAX_BUCKET}",
+        lambda: _jaccard_on_pairs(spark, sf_dir, _lsh_candidate_pairs(spark, sf_dir)),
+    )
 
 
 def q_dedup_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1368,9 +1314,6 @@ SIMHASH_BANDS = 4            # 4 bands × 16 bits
 SIMHASH_HAMMING_MAX = 3      # ≤3 bit flips leave ≥1 band intact (pigeonhole)
 
 
-_SIMHASH_CACHE: dict[str, tuple[SparkSession, DataFrame]] = {}
-
-
 def _simhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """64-bit SimHash per doc as FOUR 16-bit band values (sim0..sim3): bit b
     = sign of Σ_tokens (±1 by parity of an md5 hex char; bits 0-31 from
@@ -1382,9 +1325,8 @@ def _simhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     Materialized per corpus dir: the pairs query references the signature
     table three times (band self-join sides + Hamming verify), which
     re-tokenized the corpus once per reference before persistence."""
-    from pyspark import StorageLevel
 
-    def build() -> DataFrame:
+    def build(_path: str) -> DataFrame:
         # tf-weighted bit sums from the _doc_tf artifact: Σ_occurrences ±1
         # == Σ_distinct-terms tf·(±1) exactly (integer arithmetic), so the
         # two md5s are computed once per DISTINCT (doc, term) instead of
@@ -1415,9 +1357,9 @@ def _simhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
                 bit = F.when(F.col(f"s{b}") > 0, F.lit(1 << i)).otherwise(F.lit(0))
                 v = bit if v is None else v + bit
             bands.append(v.cast("long").alias(f"sim{j}"))
-        return agg.select("doc_id", *bands).persist(StorageLevel.MEMORY_AND_DISK)
+        return agg.select("doc_id", *bands)
 
-    return _session_cached(_SIMHASH_CACHE, spark, sf_dir, build)
+    return _cached(spark, sf_dir, "simhash_bands", build)
 
 
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1511,12 +1453,6 @@ EMB_NEAR_DUP_TAU = 0.30
 # can shrink it below real bucket sizes; production value bounds task
 # memory at blk·|bucket| doubles)
 _GRAM_BLK = 1024
-
-# semdedup's two shared subtrees, cached per (session, corpus dir) — see
-# _session_cached (ADVICE r5: per-invocation persists accumulated entries)
-_SEMDEDUP_PAIRS_CACHE: dict[str, tuple[SparkSession, DataFrame]] = {}
-_SEMDEDUP_SCORED_CACHE: dict[str, tuple[SparkSession, DataFrame]] = {}
-
 
 def q_dedup_embedding_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup candidate pairs: self-join WITHIN the
@@ -1624,19 +1560,13 @@ def q_dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Centroid cosines are e6-rounded BEFORE comparison so the precedence
     order — hence the keep decision — is integer-deterministic across
     engines (ties broken by vec_id)."""
-    from pyspark import StorageLevel
-
     reader = _ivf_reader(spark, sf_dir)
     # the pair subtree feeds BOTH the precedence join and the member set —
-    # persisted so the per-bucket pair kernel runs once, not twice. Cached
-    # per (session, sf_dir) via _session_cached (ADVICE r5): the previous
-    # per-invocation persist accumulated a new MEMORY_AND_DISK entry on
-    # every call in a long-lived session.
-    pairs = _session_cached(
-        _SEMDEDUP_PAIRS_CACHE, spark, sf_dir,
-        lambda: _emb_dup_pairs(spark, sf_dir)
-        .select("vec_id_a", "vec_id_b")
-        .persist(StorageLevel.MEMORY_AND_DISK),
+    # cached so the per-bucket pair kernel runs once, not twice
+    pairs = _cached(
+        spark, sf_dir, "semdedup_pairs",
+        lambda _path: _emb_dup_pairs(spark, sf_dir).select("vec_id_a", "vec_id_b"),
+        source="embeddings.parquet",
     )
     sym = pairs.select(
         F.col("vec_id_a").alias("x"), F.col("vec_id_b").alias("y")
@@ -1652,17 +1582,15 @@ def q_dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         * F.sqrt(_dot(F.col("centroid"), F.col("centroid")))
     )
     # scored is referenced three times (both precedence sides + the final
-    # member join) — persist the 3-column projection so the vectors
-    # artifact is scanned once, not three times; session-cached like the
-    # pair subtree above (no per-invocation cache accumulation)
-    scored = _session_cached(
-        _SEMDEDUP_SCORED_CACHE, spark, sf_dir,
-        lambda: v.join(F.broadcast(cents), "bucket")
-        .select(
+    # member join) — cache the 3-column projection so the vectors artifact
+    # is scanned once, not three times
+    scored = _cached(
+        spark, sf_dir, "semdedup_scored",
+        lambda _path: v.join(F.broadcast(cents), "bucket").select(
             "vec_id", F.col("bucket").cast("long").alias("bucket"),
             _e6(cos).alias("cent_cos_e6"),
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK),
+        ),
+        source="embeddings.parquet",
     )
     cx = scored.select(F.col("vec_id").alias("x"), F.col("cent_cos_e6").alias("ccx"))
     cy = scored.select(F.col("vec_id").alias("y"), F.col("cent_cos_e6").alias("ccy"))
@@ -1706,30 +1634,25 @@ ANN_NPROBE = 2
 ANN_TRAIN_SAMPLE = 2048  # deterministic bounded trainer sample (vec_id < n)
 
 
-_IVF_READERS: dict[str, tuple[SparkSession, object]] = {}
-
-
 def _ivf_reader(spark: SparkSession, sf_dir: str):
     """Build-once/query-many: the IVF index (centroids + bucket-partitioned
     vectors) is a persisted artifact, like segments/docstore for BM25 —
     queries open the artifact instead of retraining k-means or re-collecting
-    a sample per call. Cached per (session, sf_dir); the artifact is reused
-    across sessions."""
-    ent = _IVF_READERS.get(sf_dir)
-    if ent is None or ent[0] is not spark:
-        from audioflux_spark.operators.ann import IVFReader, build_ivf_index
+    a sample per call. meta.json is the build's last write."""
+    from audioflux_spark.operators.ann import IVFReader, build_ivf_index
 
-        tag = hashlib.md5(
-            f"{sf_dir}:ivf1:{ANN_K_CENTROIDS}:{ANN_TRAIN_SAMPLE}".encode()
-        ).hexdigest()[:10]
-        path = os.path.join("/tmp/afspark_entry_idx", f"ivf_{tag}")
+    def build(path: str) -> IVFReader:
         if not os.path.exists(os.path.join(path, "meta.json")):
             build_ivf_index(
                 spark, _emb(spark, sf_dir), path,
                 k=ANN_K_CENTROIDS, train_sample=ANN_TRAIN_SAMPLE,
             )
-        _IVF_READERS[sf_dir] = (spark, IVFReader(spark, path))
-    return _IVF_READERS[sf_dir][1]
+        return IVFReader(spark, path)
+
+    return _cached(
+        spark, sf_dir, "ivf", build, source="embeddings.parquet",
+        params=f"ivf1:{ANN_K_CENTROIDS}:{ANN_TRAIN_SAMPLE}",
+    )
 
 
 def q_ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2048,19 +1971,15 @@ def q_nmf_topics(spark: SparkSession, sf_dir: str) -> DataFrame:
     (/root/reference/src/classic/nmf.c analog). Sparse multiplicative updates
     (COO + bincount — no dense V); deterministic accumulation order, so the
     single-node oracle referee hash-matches exactly."""
-    from pyspark import StorageLevel
-
     from audioflux_spark.operators.sequence import nmf_topics
 
-    # persisted: the operator references this matrix twice (nnz sizing +
-    # the bounded join), which re-ran the tokenize scan per reference;
-    # Spark's CacheManager dedupes the identical plan across repeat calls.
-    # The tf side now reads the shared _doc_tf artifact (r6 rotation plan).
-    tf = (
-        _doc_tf(spark, sf_dir)
+    # cached: the operator references this matrix twice (nnz sizing + the
+    # bounded join); the tf side reads the shared _doc_tf artifact
+    tf = _cached(
+        spark, sf_dir, "nmf_tf",
+        lambda _path: _doc_tf(spark, sf_dir)
         .select("doc_id", "term", F.col("tf").cast("double").alias("tf"))
-        .join(_docs(spark, sf_dir).select("doc_id", "source"), "doc_id")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .join(_docs(spark, sf_dir).select("doc_id", "source"), "doc_id"),
     )
     return (
         nmf_topics(tf, "source", "doc_id", "term", "tf", k=3)
@@ -4272,7 +4191,7 @@ def _materialized_oracles() -> dict[str, str]:
         try:
             path = oe.materialize(name, fn(ORACLE_SF_DIR))
             out[name] = f"SELECT * FROM read_parquet('{path}') ORDER BY {order}"
-        except Exception:  # noqa: BLE001 — missing tier dir etc.: fall back to rows-only
+        except OSError:  # no tier dir or unwritable expected dir: rows-only
             pass
     # IVF: only TRAINING+ASSIGNMENT are materialized (shared deterministic
     # routines); DuckDB still performs the probe-pruned cosine search itself
@@ -4356,7 +4275,7 @@ FROM mem m JOIN cc ON m.vec_id = cc.vec_id
 LEFT JOIN drp d ON d.vec_id = m.vec_id
 ORDER BY m.vec_id
 """
-    except Exception:  # noqa: BLE001
+    except OSError:  # as above
         pass
     return out
 

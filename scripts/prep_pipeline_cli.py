@@ -19,7 +19,7 @@ the pipeline only composes their per-doc decisions with doc_id joins, so
 each drop is attributed to the FIRST stage that rejected it and the whole
 job stays a handful of joins over per-doc flag tables — no new corpus
 passes beyond the stages' own (shared subtrees are materialized once, see
-entry_queries._materialized_table).
+entry_queries._table and the artifact cache `_cached` under it).
 """
 
 from __future__ import annotations

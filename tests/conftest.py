@@ -13,6 +13,17 @@ POS_CFG = EngineConfig(
 )
 
 
+@pytest.fixture(scope="session", autouse=True)
+def artifact_root(tmp_path_factory):
+    """The registry's artifacts go to a fresh directory per test session,
+    never to whatever an earlier run left under the default root."""
+    import audioflux_spark.entry_queries as eq
+
+    default, eq._MAT_ROOT = eq._MAT_ROOT, str(tmp_path_factory.mktemp("artifacts"))
+    yield eq._MAT_ROOT
+    eq._MAT_ROOT = default
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("afspark-tests", cores=8, shuffle_partitions=8)

@@ -5,6 +5,7 @@ column names, and order-insensitive values — the driver's own gate."""
 from __future__ import annotations
 
 import os
+import time
 
 import duckdb
 import numpy as np
@@ -124,9 +125,9 @@ def test_driver_window_composition():
 
 def test_materialized_artifact_reuse(spark):
     """The shingle/scored-pair subtrees are ON-DISK per-corpus artifacts
-    (manifest written last): a second invocation — even with the in-session
-    persist caches dropped — must reuse the artifact (manifest untouched)
-    and return identical values."""
+    (published whole, manifest inside): a second invocation — even with the
+    in-session artifact cache dropped — must reuse the artifact (manifest
+    untouched) and return identical values."""
     import glob
 
     q = entry_mod.queries()["dedup_shingle_jaccard"]
@@ -136,12 +137,30 @@ def test_materialized_artifact_reuse(spark):
     ]
     assert manifests, "no materialization manifest written"
     mtimes = {m: os.path.getmtime(m) for m in manifests}
-    eq._SHINGLE_CACHE.clear()
-    eq._SCORED_PAIRS_CACHE.clear()
+    eq._ARTIFACTS.clear()
     second = _normalize(q(spark, SF_DIR).toPandas())
     assert first.equals(second)
     for m, t in mtimes.items():
         assert os.path.getmtime(m) == t, f"artifact rebuilt instead of reused: {m}"
+
+
+def test_materialized_oracles_only_skip_missing_tier(monkeypatch, tmp_path):
+    """A missing correctness tier leaves the NumPy-referee entries out (those
+    queries then get the rows-only check); a referee that fails any other
+    way must fail oracle_sql() instead of silently downgrading its check."""
+    from audioflux_spark import oracle_expected as oe
+
+    monkeypatch.setattr(eq, "ORACLE_SF_DIR", str(tmp_path / "missing"))
+    assert eq._materialized_oracles() == {}
+
+    def broken(*args, **kwargs):
+        raise ValueError("referee bug")
+
+    for kernel in ("viterbi_expected", "nmf_expected", "hmm_expected", "ann_assign_expected"):
+        with monkeypatch.context() as m:
+            m.setattr(oe, kernel, broken)
+            with pytest.raises(ValueError, match="referee bug"):
+                eq._materialized_oracles()
 
 
 def test_dsir_separates_target_from_raw(spark):
@@ -468,22 +487,253 @@ def test_simhash_tf_weighting_matches_occurrences(spark):
     assert got.reset_index(drop=True).equals(want.reset_index(drop=True))
 
 
-def test_session_cache_evicts_on_corpus_change(spark, tmp_path):
-    """Regenerating a corpus dir in place must invalidate the in-session
-    cached subtrees (the r6 corpus-fingerprint key), not serve stale rows."""
+def _duck(sf: str, sql: str) -> pd.DataFrame:
+    con = duckdb.connect()
+    for t in ("documents", "embeddings"):
+        p = os.path.join(sf, f"{t}.parquet")
+        con.sql(f"CREATE VIEW {t} AS FROM read_parquet('{p}')")
+    return con.sql(sql).df()
+
+
+def _cut_docs(path):
+    pdf = pd.read_parquet(path)
+    pdf[pdf.doc_id < 125].to_parquet(path, index=False)
+
+
+def _halve(path):
+    pdf = pd.read_parquet(path)
+    pdf.iloc[: len(pdf) // 2].to_parquet(path, index=False)
+
+
+_HOT_SQL = eq._bm25_sql(["join", "hash", "row"], 20)
+
+# case -> (table rewritten in place, rewrite, engine result, DuckDB twin)
+STALE_CASES = {
+    "doc_lens": (
+        "documents.parquet", _cut_docs,
+        lambda spark, sf: eq._doc_lens(spark, sf),
+        "SELECT d.doc_id, count(t.term) AS len FROM documents d "
+        f"LEFT JOIN ({eq._TOK_SQL}) t USING (doc_id) GROUP BY d.doc_id",
+    ),
+    "reader": (
+        "documents.parquet", _cut_docs, eq.q_bm25_topk_hot, _HOT_SQL,
+    ),
+    "ivf_reader": (
+        "embeddings.parquet", _halve,
+        lambda spark, sf: eq._ivf_reader(spark, sf).vectors.select("vec_id"),
+        "SELECT vec_id FROM embeddings",
+    ),
+    "incr_readers": (
+        "documents.parquet", _cut_docs, eq.q_bm25_topk_incremental, _HOT_SQL,
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(STALE_CASES))
+def test_session_cache_evicts_on_corpus_change(spark, tmp_path, case):
+    """Regenerating a corpus table in place must invalidate every cached
+    artifact derived from it — in-session DataFrames and on-disk indexes
+    alike — in the same session and in a new process (an empty cache)."""
     import shutil
 
+    table, rewrite, run, sql = STALE_CASES[case]
     d = tmp_path / "corpus"
     d.mkdir()
-    shutil.copy(f"{SF_SMALL}/documents.parquet", d / "documents.parquet")
+    for t in ("documents.parquet", "embeddings.parquet"):
+        shutil.copy(f"{SF_SMALL}/{t}", d / t)
     sf = str(d)
-    first = eq._doc_lens(spark, sf)
-    n1 = first.count()
-    again = eq._doc_lens(spark, sf)
-    assert again is first  # cache hit while the corpus is unchanged
-    # regenerate in place: halve the corpus (different size => new fingerprint)
-    pdf = pd.read_parquet(d / "documents.parquet")
-    pdf.iloc[: len(pdf) // 2].to_parquet(d / "documents.parquet", index=False)
-    rebuilt = eq._doc_lens(spark, sf)
-    assert rebuilt is not first
-    assert rebuilt.count() == len(pdf) // 2 != n1
+
+    def got():
+        return _normalize(run(spark, sf).toPandas())
+
+    before = got()
+    assert before.equals(_normalize(_duck(sf, sql)))
+    mine = {k: v[2] for k, v in eq._ARTIFACTS.items() if k[0] == sf}
+    got()
+    assert mine and all(eq._ARTIFACTS[k][2] is v for k, v in mine.items())  # hits
+    rewrite(d / table)
+    want = _normalize(_duck(sf, sql))
+    assert not want.equals(before), "the rewrite must change the answer"
+    assert got().equals(want)  # same session
+    eq._ARTIFACTS.clear()
+    assert got().equals(want)  # a new process: on-disk artifacts only
+
+
+def _race_write(payload: str):
+    def write(d):
+        os.makedirs(d)
+        with open(os.path.join(d, "payload"), "w") as f:
+            f.write(payload)
+        time.sleep(0.3)  # both writers hold a finished temp dir before either renames
+
+    return write
+
+
+def _race_publish(path, payload, barrier, out):
+    barrier.wait()
+    data = eq._publish_table(path, _race_write(payload), {"payload": payload})
+    with open(os.path.join(data, "payload")) as f:
+        out.put((payload, f.read()))
+
+
+def test_publish_table_race(tmp_path):
+    """Two processes publishing the same table artifact at once: one
+    complete payload ends up at the path, both callers read it, and the
+    loser's temp directory is gone."""
+    import glob
+    import json
+    import multiprocessing
+
+    ctx = multiprocessing.get_context("spawn")
+    path = str(tmp_path / "mat_t_0123456789")
+    barrier, out = ctx.Barrier(2), ctx.Queue()
+    procs = [
+        ctx.Process(target=_race_publish, args=(path, p, barrier, out))
+        for p in ("first-writer", "second-writer")
+    ]
+    for p in procs:
+        p.start()
+    got = dict(out.get(timeout=120) for _ in procs)
+    for p in procs:
+        p.join(timeout=60)
+        assert p.exitcode == 0
+    with open(os.path.join(path, "data", "payload")) as f:
+        winner = f.read()
+    with open(os.path.join(path, "manifest.json")) as f:
+        assert json.load(f) == {"payload": winner}
+    assert winner in got and set(got.values()) == {winner}
+    assert sorted(os.listdir(path)) == ["data", "manifest.json"]
+    assert glob.glob(path + ".tmp-*") == []
+
+
+# ------------------------------------------- dedup and ANN on planted data
+
+
+def test_lsh_pairs_find_planted_dup(spark, tmp_path_factory):
+    from audioflux_spark.entry_queries import q_dedup_lsh_pairs
+
+    d = str(tmp_path_factory.mktemp("lsh"))
+    base = "the quick brown fox jumps over the lazy dog again and again"
+    rows = [(0, base), (1, base), (2, base + " extra tail tokens here")]
+    rows += [(i, f"unrelated document number {i} with words w{i} x{i} y{i} z{i}")
+             for i in range(3, 30)]
+    pd.DataFrame(rows, columns=["doc_id", "text"]).to_parquet(
+        os.path.join(d, "documents.parquet")
+    )
+    got = q_dedup_lsh_pairs(spark, d).toPandas()
+    pairs = set(zip(got["doc_a"], got["doc_b"]))
+    assert (0, 1) in pairs
+    exact = got[(got.doc_a == 0) & (got.doc_b == 1)]["jaccard_e6"].iloc[0]
+    assert exact == 1_000_000
+
+
+def test_simhash_pairs_find_planted_near_dup(spark, tmp_path_factory):
+    """Identical docs → hamming 0; one-token-changed doc → small hamming;
+    unrelated docs must NOT pair at hamming ≤ 3."""
+    from audioflux_spark.entry_queries import q_dedup_simhash, q_dedup_simhash_pairs
+
+    d = str(tmp_path_factory.mktemp("simhash"))
+    base = (
+        "the quick brown fox jumps over the lazy dog and keeps running "
+        "through the quiet forest until the morning light arrives"
+    )
+    rows = [(0, base), (1, base), (2, base.replace("morning", "evening"))]
+    rows += [
+        (i, f"totally different subject matter {i} covering wq{i} xq{i} yq{i} zq{i} aq{i} bq{i}")
+        for i in range(3, 40)
+    ]
+    pd.DataFrame(rows, columns=["doc_id", "text"]).to_parquet(
+        os.path.join(d, "documents.parquet")
+    )
+    sig = q_dedup_simhash(spark, d).toPandas()
+    assert list(sig.columns) == ["doc_id", "sim0", "sim1", "sim2", "sim3"]
+    bands = sig[["sim0", "sim1", "sim2", "sim3"]].to_numpy()
+    assert ((bands >= 0) & (bands < 1 << 16)).all(), "band values must be 16-bit"
+    got = q_dedup_simhash_pairs(spark, d).toPandas()
+    pairs = {(a, b): h for a, b, h in zip(got.doc_a, got.doc_b, got.hamming)}
+    assert pairs.get((0, 1)) == 0, f"identical docs must pair at hamming 0: {pairs}"
+    for a, b in pairs:
+        assert {a, b} <= {0, 1, 2}, f"unrelated docs paired: {(a, b)}"
+
+
+def test_kmeans_deterministic_and_clusters():
+    from audioflux_spark.operators.ann import ivf_assign_np, kmeans_train
+
+    rng = np.random.default_rng(5)
+    centers = rng.normal(size=(4, 16)) * 4
+    X = np.concatenate([c + rng.normal(scale=0.2, size=(50, 16)) for c in centers])
+    C1 = kmeans_train(X, 4)
+    C2 = kmeans_train(X, 4)
+    np.testing.assert_array_equal(C1, C2)  # no RNG anywhere
+    a = ivf_assign_np(X, C1)
+    # planted clusters must be pure: every group of 50 maps to one bucket
+    for g in range(4):
+        assert len(set(a[g * 50 : (g + 1) * 50].tolist())) == 1
+    assert len(set(a.tolist())) == 4
+
+
+def test_ivf_probe_recall(spark):
+    """nprobe=2 of 8 buckets must recover the brute-force top-10 for a query
+    inside a planted cluster (the IVF recall contract on clustered data)."""
+    from audioflux_spark.operators.ann import (
+        ivf_assign_np,
+        ivf_probe_buckets,
+        kmeans_train,
+    )
+
+    rng = np.random.default_rng(9)
+    centers = rng.normal(size=(8, 32)) * 5
+    X = np.concatenate([c + rng.normal(scale=0.3, size=(64, 32)) for c in centers])
+    C = kmeans_train(X[:256], 8)
+    a = ivf_assign_np(X, C)
+    q = X[0]
+    cos = (X @ q) / (np.linalg.norm(X, axis=1) * np.linalg.norm(q))
+    brute = set(np.argsort(-cos)[:10].tolist())
+    probes = ivf_probe_buckets(q, C, 2)
+    cand = np.flatnonzero(np.isin(a, probes))
+    got = set(cand[np.argsort(-cos[cand])[:10]].tolist())
+    assert got == brute
+
+
+def test_ivf_index_artifact_recall(spark, tmp_path_factory):
+    """Persisted IVF artifact: build once, query many — recall@10 vs brute
+    force is monotone in nprobe and exact at nprobe=k on clustered data."""
+    import numpy as np
+
+    from audioflux_spark.operators.ann import IVFReader, build_ivf_index
+
+    rng = np.random.default_rng(11)
+    centers = rng.normal(size=(8, 32)) * 5
+    X = np.concatenate([c + rng.normal(scale=0.3, size=(64, 32)) for c in centers])
+    src = str(tmp_path_factory.mktemp("ivf_src"))
+    pd.DataFrame(
+        {"vec_id": np.arange(len(X)), "embedding": [row.astype(np.float32).tolist() for row in X]}
+    ).to_parquet(os.path.join(src, "embeddings.parquet"))
+    emb = spark.read.parquet(os.path.join(src, "embeddings.parquet"))
+
+    art = str(tmp_path_factory.mktemp("ivf_art") / "ivf")
+    build_ivf_index(spark, emb, art, k=8, train_sample=256)
+    reader = IVFReader(spark, art)
+    assert reader.C.shape == (8, 32)
+    assert reader.meta["k"] == 8
+
+    q = X[0]
+    cos = (X @ q) / (np.linalg.norm(X, axis=1) * np.linalg.norm(q))
+    brute = set(np.argsort(-cos)[:10].tolist())
+    recalls = []
+    for nprobe in (1, 2, 4, 8):
+        got = set(
+            r["vec_id"]
+            for r in reader.search_cosine(q, k=10, nprobe=nprobe).collect()
+        )
+        recalls.append(len(got & brute) / 10.0)
+    assert recalls == sorted(recalls), f"recall not monotone in nprobe: {recalls}"
+    assert recalls[0] >= 0.9, f"clustered query should mostly live in 1 bucket: {recalls}"
+    assert recalls[-1] == 1.0, f"nprobe=k must equal brute force: {recalls}"
+
+    # the artifact is self-contained: a second reader answers without the
+    # source table, retraining, or any driver-side sample collect
+    reader2 = IVFReader(spark, art)
+    got2 = [r["vec_id"] for r in reader2.search_cosine(q, k=10, nprobe=2).collect()]
+    got1 = [r["vec_id"] for r in reader.search_cosine(q, k=10, nprobe=2).collect()]
+    assert got1 == got2

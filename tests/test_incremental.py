@@ -171,3 +171,31 @@ def test_compaction_rank_identity(spark, transcripts_pdf, tmp_path_factory, orac
         json.dump(dict(raw, offsets=[], encode_avgdl=raw["avgdl"]), f)
     with pytest.raises(RuntimeError, match="compact again"):
         IndexReader(spark, out2)
+
+
+def test_incomplete_generation_is_resumed(spark, transcripts_pdf, tmp_path_factory):
+    """A crash between a generation's segment write and its meta.json must be
+    detected (meta.json is the build's last write) and the generation's build
+    resumed, not silently served half-built."""
+    from audioflux_spark.streaming.incremental import add_generation
+
+    base = str(tmp_path_factory.mktemp("halfgen") / "idx")
+    keys = sorted(transcripts_pdf["conv_id"].unique())
+    half = len(keys) // 2
+    first = transcripts_pdf[transcripts_pdf.conv_id.isin(keys[:half])]
+    second = transcripts_pdf[transcripts_pdf.conv_id.isin(keys[half:])]
+    build_index(spark, spark.createDataFrame(first), base, cfg=CFG, resume=False)
+    multi = add_generation(spark, spark.createDataFrame(second), base, cfg=CFG)
+    gen_dir = multi.generations[-1].dir
+    os.remove(os.path.join(gen_dir, "meta.json"))  # simulate the crash
+
+    # the reader contract: meta.json missing == generation incomplete
+    with pytest.raises(FileNotFoundError):
+        IndexReader(spark, base)
+
+    # a resumed build of that generation completes it without rebuilding
+    # finished partitions (manifest fingerprints all match)
+    build_index(spark, spark.createDataFrame(second), gen_dir, cfg=CFG, resume=True)
+    r = IndexReader(spark, base)
+    assert len(r.generations) == 2
+    assert r.n_docs == len(transcripts_pdf)

@@ -23,7 +23,9 @@ from audioflux_spark.operators.wand import (
     _top_with_ties,
     bm25_topk_indexed,
     bm25_topk_many,
+    wand_topk_kernel,
 )
+from audioflux_spark.oracle import BM25Oracle
 from audioflux_spark.plans.checkpoint import load_manifest, save_manifest
 from audioflux_spark.sources.segments import IndexReader
 from tests.test_topk_exhaustive import assert_rank_identical
@@ -922,3 +924,137 @@ def test_fresh_build_job_count(spark, transcripts_sdf, exchange_build, tmp_path_
     assert split.rdd.getNumPartitions() == CFG.index.build_partitions
     d = str(tmp_path_factory.mktemp("jobs_split") / "idx")
     assert len(_build_jobs(spark, split, d)) == SCAN_SPLIT_BUILD_JOBS
+
+
+# ------------------------------------- sharded WAND, byte skipping, resume
+
+CFG4 = EngineConfig(index=IndexConfig(block_size=32, build_partitions=4))
+
+
+def test_sharded_wand_rank_identity(pos_reader, oracle, queries):
+    """Tiny shard size forces many doc-range shards per query; the k-way
+    merge must still be rank-identical to the oracle."""
+    batch = [(q.query_id, q.query_text, q.k) for q in queries[:6]]
+    res = bm25_topk_many(pos_reader, batch, shard_docs=200).toPandas()
+    for qid, text, k in batch:
+        got = (
+            res[res.query_id == qid]
+            .sort_values("rank")[["conv_id", "turn_idx", "score"]]
+            .reset_index(drop=True)
+        )
+        want = oracle.topk(text, k)
+        assert_rank_identical(got, want, context=f"sharded {qid} '{text}'")
+
+
+def test_byte_skipping_decodes_fewer_blocks(pos_reader):
+    """k=1 on a hot+selective query must leave most blocks undecoded —
+    the point of per-block byte offsets (BMW byte skipping)."""
+    rows = pos_reader.segments.filter(
+        pos_reader.segments.term.isin(["hotterm", "needle_unique_0"])
+    ).collect()
+    assert rows
+    stats: dict = {}
+    wand_topk_kernel(
+        rows,
+        pos_reader.meta.n_docs,
+        pos_reader.meta.avgdl,
+        pos_reader.meta.k1,
+        pos_reader.meta.b,
+        k=1,
+        stats_out=stats,
+    )
+    assert stats["blocks_total"] > 8
+    assert stats["blocks_decoded"] < stats["blocks_total"]
+
+
+def test_lazy_block_decode_equals_full(pos_reader):
+    """_TermBlocks lazy decode over the full range == the phrase module's
+    full decode (two independent decode paths, same postings)."""
+    from audioflux_spark.operators.phrase import _decode_full
+    from audioflux_spark.operators.wand import _TermBlocks
+
+    row = pos_reader.segments.filter(pos_reader.segments.term == "hotterm").collect()[0]
+    want_docs, want_tf, _dl, _pos = _decode_full(row)
+    tb = _TermBlocks(row, pos_reader.meta.avgdl, 1.2, 0.75, 1.0, 1.0)
+    ds, _cs = tb.candidates(0, int(row["last_doc"]) + 1)
+    got = np.concatenate(ds)
+    np.testing.assert_array_equal(got, want_docs)
+
+
+def test_resume_cleans_ghost_partitions(spark, transcripts_sdf, tmp_path_factory, oracle, queries):
+    """Same index_dir, DIFFERENT partition layout across runs: stale seg_id
+    dirs from the first layout must be deleted, not merged as ghosts."""
+    d = str(tmp_path_factory.mktemp("ghost") / "idx")
+    cfg8 = EngineConfig(index=IndexConfig(block_size=32, build_partitions=8))
+    cfg4 = EngineConfig(index=IndexConfig(block_size=32, build_partitions=4))
+    build_index(spark, transcripts_sdf.repartition(8, "conv_id"), d, cfg=cfg8)
+    build_index(spark, transcripts_sdf.repartition(4, "conv_id"), d, cfg=cfg4, resume=True)
+
+    seg_dirs = {
+        int(n.split("=")[1])
+        for n in os.listdir(os.path.join(d, "segments_partial"))
+        if n.startswith("seg_id=")
+    }
+    assert seg_dirs == set(range(4)), f"ghost partials survived: {seg_dirs}"
+    r = IndexReader(spark, d)
+    assert r.docstore.count() == oracle.N  # no duplicated ghost docs
+    q = queries[0]
+    got = bm25_topk_indexed(r, q.query_text, q.k).toPandas()
+    assert_rank_identical(got, oracle.topk(q.query_text, q.k), context="ghost")
+
+
+def test_resume_rebuilds_only_changed_partition(
+    spark, transcripts_pdf, queries, tmp_path_factory
+):
+    """A resumed build where an EARLIER partition's doc count changes
+    rewrites that partition's files only: every partition is encoded with
+    partition-local docIDs, so the offsets that move for the later ones are
+    applied by the merge, not stored in their files. The docstore stays a
+    dense docID permutation and the results equal the oracle's over the new
+    corpus."""
+    d = str(tmp_path_factory.mktemp("offset_shift") / "idx")
+    sdf1 = spark.createDataFrame(transcripts_pdf).repartition(4, "conv_id")
+    build_index(spark, sdf1, d, cfg=CFG4, resume=False)
+    m1 = load_manifest(d)
+
+    def stamps():
+        return {
+            (sub, pid): os.stat(os.path.join(d, sub, f"seg_id={pid}", "part-00000.parquet")).st_mtime_ns
+            for pid in m1.entries
+            for sub in ("segments_partial", "docstore")
+        }
+
+    before = stamps()
+
+    # add one turn to the first conv — exactly one partition's count changes,
+    # which shifts the offset of every partition ordered after it
+    conv0 = sorted(transcripts_pdf["conv_id"].unique())[0]
+    extra = transcripts_pdf[transcripts_pdf.conv_id == conv0].iloc[[0]].copy()
+    extra["turn_idx"] = int(transcripts_pdf[transcripts_pdf.conv_id == conv0]["turn_idx"].max()) + 1
+    extra["text"] = "freshly appended resumed turn"
+    # the same column types, or every row would hash differently
+    pdf2 = pd.concat([transcripts_pdf, extra], ignore_index=True).astype(transcripts_pdf.dtypes)
+    sdf2 = spark.createDataFrame(pdf2).repartition(4, "conv_id")
+    build_index(spark, sdf2, d, cfg=CFG4, resume=True)
+
+    m2 = load_manifest(d)
+    changed = [p for p in m1.entries if m1.entries[p].input_fingerprint != m2.entries[p].input_fingerprint]
+    assert len(changed) == 1 and m2.entries[changed[0]].n == m1.entries[changed[0]].n + 1
+    later = [p for p in m2.entries if p > changed[0]]
+    assert later, "fixture did not shift any later partition's offset"
+    for p in later:
+        assert m2.entries[p].doc_offset == m1.entries[p].doc_offset + 1
+    after = stamps()
+    rewritten = {key for key in before if after[key] != before[key]}
+    assert rewritten == {(sub, changed[0]) for sub in ("segments_partial", "docstore")}
+
+    # docstore must be a dense permutation — no colliding docIDs
+    r = IndexReader(spark, d)
+    ids = np.sort(
+        np.array([row["doc_id"] for row in r.docstore.select("doc_id").collect()])
+    )
+    assert ids.size == len(pdf2)
+    assert (ids == np.arange(len(pdf2))).all(), "docID collision after resumed offset shift"
+
+    # and results must equal a from-scratch build over the new corpus
+    assert_indexed_matches_oracle(r, BM25Oracle(pdf2), queries[:6])

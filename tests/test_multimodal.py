@@ -3,6 +3,9 @@ schema round-trips."""
 
 from __future__ import annotations
 
+import sys
+import types
+
 import numpy as np
 import pytest
 
@@ -172,3 +175,47 @@ def test_ppm_through_spark_path(spark):
         [img.mean(axis=(0, 1)), img.std(axis=(0, 1)), [8, 6]]
     ).astype(np.float32)
     np.testing.assert_allclose(feats, want, rtol=1e-6)
+
+
+# ----------------------------------------------- real decoder when present
+
+
+def test_multimodal_uses_real_pil_when_present(monkeypatch):
+    """A present decoder library must be USED, not crashed on."""
+    from audioflux_spark.sources import multimodal
+
+    decoded = np.arange(12, dtype=np.uint8).reshape(2, 2, 3)
+
+    class _FakeImg:
+        def convert(self, mode):
+            return decoded
+
+    fake_pil = types.ModuleType("PIL")
+    fake_image_mod = types.ModuleType("PIL.Image")
+    fake_image_mod.open = lambda buf: _FakeImg()
+    fake_pil.Image = fake_image_mod
+    monkeypatch.setitem(sys.modules, "PIL", fake_pil)
+    monkeypatch.setitem(sys.modules, "PIL.Image", fake_image_mod)
+
+    out = multimodal._decode_image(b"\x89PNG...", 2, 2, 3)
+    np.testing.assert_array_equal(out, decoded)
+
+
+def test_multimodal_fake_fallback_warns_on_bad_payload(monkeypatch):
+    from audioflux_spark.sources import multimodal
+
+    class _Raises:
+        @staticmethod
+        def open(buf):
+            raise ValueError("not an image")
+
+    fake_pil = types.ModuleType("PIL")
+    fake_image_mod = types.ModuleType("PIL.Image")
+    fake_image_mod.open = _Raises.open
+    fake_pil.Image = fake_image_mod
+    monkeypatch.setitem(sys.modules, "PIL", fake_pil)
+    monkeypatch.setitem(sys.modules, "PIL.Image", fake_image_mod)
+
+    with pytest.warns(UserWarning):
+        out = multimodal._decode_image(b"junk", 4, 3, 3)
+    assert out.shape == (3, 4, 3)  # deterministic fake with metadata shape

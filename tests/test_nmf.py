@@ -60,3 +60,37 @@ def test_nmf_distributed_matches_local(spark):
         want_topic = np.argmax(W, axis=1)
         sub = got[got.group == g].sort_values("row_id")
         np.testing.assert_array_equal(sub["topic"].to_numpy(), want_topic)
+
+
+def test_nmf_nnz_cap_bounds_group(spark):
+    """A group above max_nnz is deterministically row-sampled before the
+    group shuffle; an under-cap group is untouched. Two runs agree exactly."""
+    from audioflux_spark.operators.sequence import nmf_topics
+
+    rows = []
+    for r in range(60):           # big group: 60 rows x 10 cols = 600 nnz
+        for c in range(10):
+            rows.append(("big", r, f"t{c}", float(1 + (r * 7 + c) % 5)))
+    for r in range(5):            # small group: 50 nnz, under any cap
+        for c in range(10):
+            rows.append(("small", r, f"t{c}", float(1 + (r + c) % 3)))
+    df = spark.createDataFrame(
+        rows, "src string, doc_id long, term string, tf double"
+    )
+    capped = nmf_topics(df, "src", "doc_id", "term", "tf", k=2, max_nnz=200).toPandas()
+    full = nmf_topics(df, "src", "doc_id", "term", "tf", k=2, max_nnz=10**9).toPandas()
+
+    big_capped = capped[capped.group == "big"]
+    assert 0 < len(big_capped) < 60, "oversized group must be row-sampled"
+    assert len(big_capped) * 10 <= 2 * 200, "sampled nnz should be near the cap"
+    # under-cap group identical with and without the cap
+    pd.testing.assert_frame_equal(
+        capped[capped.group == "small"].sort_values("row_id").reset_index(drop=True),
+        full[full.group == "small"].sort_values("row_id").reset_index(drop=True),
+    )
+    # determinism: the sample is a pure function of the data
+    again = nmf_topics(df, "src", "doc_id", "term", "tf", k=2, max_nnz=200).toPandas()
+    pd.testing.assert_frame_equal(
+        capped.sort_values(["group", "row_id"]).reset_index(drop=True),
+        again.sort_values(["group", "row_id"]).reset_index(drop=True),
+    )
